@@ -6,8 +6,9 @@ Architecture (see SURVEY.md §7):
     reference's JSON-LD document / RDF triple views are serializations
     produced at the edges.
   - Everything expressible as native Spark SQL expressions stays JVM-side
-    (whole-stage codegen); Pandas UDFs only for genuinely non-relational
-    work (multimodal decode plumbing).
+    (whole-stage codegen); Arrow-batched pandas functions only for
+    genuinely non-relational work (audio decode, per-block vector
+    scoring, custom streaming state).
   - Declared-schema sources with a constraint layer (regex / CV / decode /
     nullability / dup-PK / dangling-FK) returning violation DataFrames.
   - Query layer registered in `gtec_etl_spark.plans` — each query ships a

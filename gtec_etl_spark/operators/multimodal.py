@@ -1,22 +1,15 @@
-"""Multimodal (image/audio/video) column operators — charter M6.
+"""Audio column operators over opaque media blobs — the part of the
+multimodal charter (M6) that is still registered.
 
 Model: media are opaque `binary` columns with a typed metadata struct,
-processed by Arrow-batched pandas iterators (mapInPandas). The Spark-side
-plumbing — schemas, batch iteration, partitioning, output shapes — is real
-and tested; the codec layer is dependency-free pure Python/numpy, built
-out frontier by frontier (r6 netpbm, r6 PNG, r7 palette PNG, r8
-16-bit/Adam7 PNG + baseline JPEG in operators/jpeg.py):
-
-- `decode_image` understands the deterministic FAKEIMG test container,
-  netpbm P2/P3/P5/P6, PNG (1/2/4/8/16-bit, gray/RGB/palette/alpha,
-  none/Adam7 interlace), baseline JPEG (SOF0, any DHT/DQT,
-  4:4:4/4:2:0, restart markers), and progressive JPEG (SOF2, spectral
-  selection + successive approximation), falling back to PIL when
-  importable; what remains beyond the boundary raises
-  NotImplementedError (arithmetic/hierarchical JPEG; PNG is fully
-  covered; 12-bit baseline JPEG decodes natively too).
-- `byte_histogram_features` is a REAL feature extractor (numpy over raw
-  bytes) producing an embedding column that feeds the similarity operators.
+processed by Arrow-batched pandas iterators (mapInPandas). The codec is
+dependency-free pure Python/numpy: `_decode_wav` walks RIFF/WAVE chunks
+and decodes integer PCM (8/16/24/32-bit), IEEE float32/float64, G.711
+a-law/mu-law and IMA/MS ADPCM; anything else raises NotImplementedError.
+On top of it sit exact-integer passes — amplitude stats (`decode_audio`),
+tumbling-window RMS (`audio_rms_windows`), gain/clip augmentation
+(`augment_audio`) and a Walsh-Hadamard envelope fingerprint
+(`audio_fingerprint`) joined by `banded_hamming_pairs`.
 
 Scale notes: mapInPandas streams Arrow batches (bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch), so executor memory is
@@ -40,807 +33,6 @@ MEDIA_SCHEMA = (
     " meta struct<mime:string, source:string>"
 )
 
-FAKEIMG_MAGIC = b"FAKEIMG"
-
-
-def fake_image(width: int, height: int, seed: int) -> bytes:
-    """Deterministic test payload: FAKEIMG | w | h | pixel bytes (an LCG
-    keyed by seed). Stands in for a real encoded image."""
-    n = width * height
-    x = (seed * 2654435761) % (2**32)
-    pix = bytearray()
-    for _ in range(n):
-        x = (1103515245 * x + 12345) % (2**31)
-        pix.append(x % 256)
-    return FAKEIMG_MAGIC + struct.pack("<II", width, height) + bytes(pix)
-
-
-NETPBM_MAGICS = (b"P2", b"P3", b"P5", b"P6")
-
-
-def _npbm_token(buf: bytes, pos: int) -> tuple[int, int]:
-    """Next ASCII integer token at/after `pos`, skipping whitespace and
-    '#'-to-end-of-line comments (netpbm header grammar)."""
-    n = len(buf)
-    while pos < n:
-        c = buf[pos]
-        if c == 0x23:  # '#'
-            while pos < n and buf[pos] not in (0x0A, 0x0D):
-                pos += 1
-        elif chr(c).isspace():
-            pos += 1
-        else:
-            break
-    start = pos
-    while pos < n and not chr(buf[pos]).isspace() and buf[pos] != 0x23:
-        pos += 1
-    if start == pos:
-        raise ValueError("truncated netpbm header")
-    return int(buf[start:pos]), pos
-
-
-def _decode_netpbm(content: bytes) -> tuple[int, int, bytes]:
-    """Pure-Python decoder for the uncompressed public netpbm formats —
-    P5/P2 grayscale (PGM) and P6/P3 RGB (PPM), binary and ASCII rasters —
-    the round-6 closure of the codec stub (no external image library
-    needed for a REAL public format). Deterministic integer pipeline:
-    values scale to 0-255 by (v*255 + maxval//2) // maxval when
-    maxval < 255, and RGB collapses to luma (299R + 587G + 114B) // 1000
-    (BT.601 weights, truncating — PIL convert('L') semantics). 16-bit
-    rasters (maxval > 255) stay beyond the boundary."""
-    magic = content[:2]
-    _, pos = 0, 2
-    w, pos = _npbm_token(content, pos)
-    h, pos = _npbm_token(content, pos)
-    maxval, pos = _npbm_token(content, pos)
-    if not (0 < maxval <= 255):
-        raise NotImplementedError(
-            f"netpbm maxval {maxval}: 16-bit rasters are outside the"
-            " pure-Python decode boundary"
-        )
-    nch = 3 if magic in (b"P3", b"P6") else 1
-    n_vals = w * h * nch
-    if magic in (b"P5", b"P6"):
-        pos += 1  # spec: exactly ONE whitespace byte after maxval
-        raster = content[pos : pos + n_vals]
-        if len(raster) != n_vals:
-            raise ValueError("truncated netpbm raster")
-        vals = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-    else:
-        import re
-
-        body = re.sub(rb"#[^\n\r]*", b"", content[pos:])
-        toks = body.split()
-        if len(toks) < n_vals:
-            raise ValueError("truncated netpbm ASCII raster")
-        vals = np.array([int(t) for t in toks[:n_vals]], dtype=np.int64)
-    if maxval != 255:
-        vals = (vals * 255 + maxval // 2) // maxval
-    if nch == 3:
-        rgb = vals.reshape(-1, 3)
-        vals = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-    return w, h, vals.astype(np.uint8).tobytes()
-
-
-# (fmt, maxval) per media_id % 4 — covers binary/ASCII x RGB/gray and the
-# maxval-rescale path. Shared by netpbm_media_table and the golden fixture.
-NETPBM_CYCLE = (("P6", 255), ("P5", 255), ("P3", 100), ("P2", 99))
-
-
-def netpbm_values(width: int, height: int, seed: int, nch: int, maxval: int) -> list[int]:
-    """The deterministic LCG sample stream for synthetic netpbm payloads —
-    same recurrence as fake_image, values in [0, maxval]."""
-    n = width * height * nch
-    x = (seed * 2654435761) % (2**32)
-    vals = []
-    for _ in range(n):
-        x = (1103515245 * x + 12345) % (2**31)
-        vals.append(x % (maxval + 1))
-    return vals
-
-
-def fake_netpbm(
-    width: int, height: int, seed: int, fmt: str = "P6", maxval: int = 255
-) -> bytes:
-    """Deterministic REAL netpbm file (PGM/PPM): proper header with a
-    comment line (exercises the tokenizer), then a binary or ASCII
-    raster."""
-    nch = 3 if fmt in ("P6", "P3") else 1
-    vals = netpbm_values(width, height, seed, nch, maxval)
-    header = (
-        f"{fmt}\n# synthetic netpbm test image seed={seed}\n"
-        f"{width} {height}\n{maxval}\n"
-    ).encode()
-    if fmt in ("P5", "P6"):
-        return header + bytes(vals)
-    return header + " ".join(str(v) for v in vals).encode()
-
-
-def netpbm_media_table(
-    spark, n: int = 12, width: int = 31, height: int = 17
-) -> DataFrame:
-    """Deterministic media table whose payloads are REAL netpbm files,
-    cycling through NETPBM_CYCLE formats by media_id."""
-    rows = []
-    for i in range(n):
-        fmt, maxval = NETPBM_CYCLE[i % len(NETPBM_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(fake_netpbm(width, height, seed=i, fmt=fmt, maxval=maxval)),
-                (f"image/x-portable-{'pixmap' if fmt in ('P6', 'P3') else 'graymap'}",
-                 f"mem://netpbm/{i}.{fmt}"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def _decode_one(content: bytes) -> tuple[int, int, bytes]:
-    """Decode bytes -> (width, height, grayscale pixels). FAKEIMG is the
-    deterministic test container; netpbm (PGM/PPM) is the REAL
-    dependency-free path; PIL is the optional richer-codec path; anything
-    else is beyond the stub boundary."""
-    if content[: len(FAKEIMG_MAGIC)] == FAKEIMG_MAGIC:
-        w, h = struct.unpack("<II", content[7:15])
-        return w, h, content[15 : 15 + w * h]
-    if content[:2] in NETPBM_MAGICS:
-        return _decode_netpbm(content)
-    if content[:8] == PNG_MAGIC:
-        return _decode_png(content)
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(content)
-    if content[:2] == b"BM":
-        return _decode_bmp(content)
-    if content[:2] in (b"II", b"MM") and len(content) >= 4 and content[2:4] in (b"*\x00", b"\x00*"):
-        return _decode_tiff(content)
-    if content[:2] == b"\xff\xd8":
-        from gtec_etl_spark.operators.jpeg import decode_jpeg
-
-        try:
-            return decode_jpeg(content)
-        except (NotImplementedError, ValueError):
-            # Spec-legal JPEGs outside the pure decoder's boundary
-            # (arithmetic/12-bit/hierarchical, fill bytes between
-            # segments) fall through to PIL when it is importable; the
-            # except ImportError below re-raises the honest frontier
-            # message when it is not.
-            pass
-    try:
-        import io
-
-        from PIL import Image  # noqa: F401  (absent in this container)
-
-        img = Image.open(io.BytesIO(content)).convert("L")
-        return img.width, img.height, img.tobytes()
-    except ImportError:
-        raise NotImplementedError(
-            "decoding this format requires PIL (not in this container); "
-            "supported without dependencies: FAKEIMG, netpbm P2/P3/P5/P6, "
-            "PNG (1/2/4/8/16-bit, Adam7), GIF (LZW, interlace), BMP (8/24-bit), TIFF (uncompressed), "
-            "baseline/progressive/12-bit JPEG"
-        )
-
-
-DECODED_SCHEMA = "media_id long, width int, height int, n_pixels long, mean_intensity double"
-
-
-def decode_image(media: DataFrame) -> DataFrame:
-    """Decode pass: binary -> image dimensions + intensity summary.
-    One Arrow round-trip; output is small per row regardless of blob size."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, pix = _decode_one(bytes(content))
-                arr = np.frombuffer(pix, dtype=np.uint8)
-                out.append((mid, w, h, len(arr), float(arr.mean()) if len(arr) else None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "n_pixels", "mean_intensity"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = "media_id long, width int, height int, content binary"
-
-
-def resize_image(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize pass (nearest-neighbor on the decoded grid) — re-encodes into
-    the FAKEIMG container so passes compose. Real codecs swap in at the
-    _decode_one boundary."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, pix = _decode_one(bytes(content))
-                arr = np.frombuffer(pix, dtype=np.uint8).reshape(h, w)
-                yi = (np.arange(target_h) * h // target_h).astype(int)
-                xi = (np.arange(target_w) * w // target_w).astype(int)
-                small = arr[np.ix_(yi, xi)]
-                payload = (
-                    FAKEIMG_MAGIC
-                    + struct.pack("<II", target_w, target_h)
-                    + small.tobytes()
-                )
-                rows.append((mid, target_w, target_h, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "content"])
-
-    return media.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def byte_histogram_features(media: DataFrame, bins: int = 16) -> DataFrame:
-    """REAL feature extractor: normalized byte-value histogram of the blob
-    as an array<float> embedding — content-based similarity without any
-    codec. Feeds operators/similarity.py directly."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = np.frombuffer(bytes(content), dtype=np.uint8)
-                hist, _ = np.histogram(arr, bins=bins, range=(0, 256))
-                total = hist.sum() or 1
-                rows.append((mid, (hist / total).astype(float).tolist()))
-            yield pd.DataFrame(rows, columns=["media_id", "embedding"])
-
-    return media.select("media_id", "content").mapInPandas(
-        run, "media_id long, embedding array<double>"
-    )
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """Frame-sampling plumbing (video stand-in): emit one row per sampled
-    offset — a 1:N mapInPandas demonstrating row-expanding media ops.
-    Real frame extraction (ffmpeg/av) sits behind the same signature."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                blob = bytes(content)
-                for k, off in enumerate(range(0, len(blob), every_n_bytes)):
-                    chunk = blob[off : off + every_n_bytes]
-                    rows.append((mid, k, off, len(chunk), float(np.frombuffer(chunk, dtype=np.uint8).mean())))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_no", "offset", "n_bytes", "mean_byte"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        run, "media_id long, frame_no int, offset long, n_bytes int, mean_byte double"
-    )
-
-
-def media_table(spark, n: int = 12, width: int = 32, height: int = 24) -> DataFrame:
-    """Deterministic in-memory media table for tests/demos."""
-    rows = [
-        (i, "image", bytearray(fake_image(width, height, seed=i)), ("image/fake", f"mem://{i}"))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# PNG (pure stdlib: zlib) — round-6 extension of the dependency-free codec
-# boundary beyond the uncompressed netpbm family.
-# ---------------------------------------------------------------------------
-
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_PNG_NCH = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-# Adam7 pass geometry: (x_start, y_start, x_step, y_step). Passes whose
-# sub-image is empty for a given (w, h) contribute zero raster bytes.
-ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _unfilter(raw: bytes, p: int, nrow: int, hp: int, bpp: int):
-    """Unfilter `hp` scanlines of `nrow` bytes each from `raw[p:]`
-    (PNG filters operate BYTEWISE with pixel offset `bpp` = bytes per
-    pixel, which is what makes the same loop serve 8- and 16-bit
-    rasters). Returns (rows ndarray (hp, nrow) uint8, new position)."""
-    out = np.empty((hp, nrow), dtype=np.uint8)
-    prev = [0] * nrow
-    for y in range(hp):
-        f = raw[p]
-        p += 1
-        line = raw[p : p + nrow]
-        p += nrow
-        cur = [0] * nrow
-        for i in range(nrow):
-            a = cur[i - bpp] if i >= bpp else 0
-            b = prev[i]
-            c = prev[i - bpp] if i >= bpp else 0
-            x = line[i]
-            if f == 0:
-                v = x
-            elif f == 1:
-                v = x + a
-            elif f == 2:
-                v = x + b
-            elif f == 3:
-                v = x + (a + b) // 2
-            elif f == 4:
-                v = x + _paeth(a, b, c)
-            else:
-                raise ValueError(f"PNG filter {f}")
-            cur[i] = v & 0xFF
-        out[y] = cur
-        prev = cur
-    return out, p
-
-
-def _rows_to_luma(rows, wp: int, hp: int, nch: int, depth: int, ctype: int, plte):
-    """Collapse unfiltered raster rows (hp, wp*nch*depth/8 bytes) to an
-    (hp, wp) uint8 luma grid: BT.601 integer luma for color, palette
-    lookup for indexed, high-byte collapse for 16-bit (luma computed at
-    full 16-bit precision first)."""
-    if depth == 16:
-        s = rows.reshape(hp, wp, nch, 2).astype(np.int64)
-        px = (s[..., 0] << 8) | s[..., 1]
-    elif depth < 8:
-        # MSB-first bit groups; trailing pad bits of each row drop.
-        bits = np.unpackbits(rows, axis=1)[:, : wp * depth]
-        weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.int64)
-        px = (bits.reshape(hp, wp, depth).astype(np.int64) * weights).sum(axis=2)
-        if ctype == 0:
-            # v/(2^d-1) fraction scaled to 8 bits: 255/(2^d-1) is integral.
-            px = px * (255 // ((1 << depth) - 1))
-        px = px.reshape(hp, wp, 1)
-    else:
-        px = rows.reshape(hp, wp, nch).astype(np.int64)
-    if ctype == 3:
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        idx = px[..., 0]
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("palette index out of PLTE range")
-        rgb = pal[idx]
-        g = (299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]) // 1000
-    elif ctype in (0, 4):
-        g = px[..., 0]
-    else:
-        g = (299 * px[..., 0] + 587 * px[..., 1] + 114 * px[..., 2]) // 1000
-    if depth == 16:
-        g >>= 8
-    return g.astype(np.uint8)
-
-
-def _decode_png(content: bytes) -> tuple[int, int, bytes]:
-    """Pure-Python PNG decoder on stdlib zlib — no PIL: 8- and 16-bit
-    depth, color types 0 (gray), 2 (RGB), 3 (palette, via the PLTE
-    chunk), 4 (gray+alpha), 6 (RGBA), non-interlaced AND Adam7
-    interlaced, all five scanline filters (None/Sub/Up/Average/Paeth).
-    Alpha drops; RGB — direct or through the palette lookup — collapses
-    with the same BT.601 integer luma as the netpbm path (16-bit luma is
-    computed at full precision, then high-byte collapsed). Round 9
-    moved sub-byte depths (1/2/4-bit gray + palette) INSIDE the
-    boundary: packed rows unfilter bytewise (bpp=1 per spec), then
-    np.unpackbits expands MSB-first bit groups.
-    The per-pixel unfilter loop is Python — fine for fixture-scale
-    images; a PIL deployment takes the fast path in _decode_one first."""
-    import zlib
-
-    if content[:8] != PNG_MAGIC:
-        raise ValueError("not a PNG")
-    pos, w, h, depth, ctype, interlace = 8, None, None, None, None, None
-    idat = bytearray()
-    plte = None
-    while pos + 8 <= len(content):
-        ln = int.from_bytes(content[pos : pos + 4], "big")
-        typ = content[pos + 4 : pos + 8]
-        data = content[pos + 8 : pos + 8 + ln]
-        pos += 12 + ln  # length + type + data + CRC
-        if typ == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-        elif typ == b"PLTE":
-            plte = data
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-    if w is None:
-        raise ValueError("PNG missing IHDR")
-    full_byte_ok = depth in (8, 16) and (
-        (ctype in _PNG_NCH or ctype == 3) and not (ctype == 3 and depth == 16)
-    )
-    subbyte_ok = depth in (1, 2, 4) and ctype in (0, 3)  # spec-legal sub-byte
-    if interlace not in (0, 1) or not (full_byte_ok or subbyte_ok):
-        raise NotImplementedError(
-            f"PNG depth={depth} colortype={ctype} interlace={interlace}:"
-            " outside the pure-Python boundary (1/2/4-bit gray+palette,"
-            " 8/16-bit gray/RGB/palette/alpha, none/Adam7 interlace)"
-        )
-    if ctype == 3:
-        if plte is None or len(plte) % 3:
-            raise ValueError("palette PNG missing/malformed PLTE chunk")
-        nch = 1  # each raster byte is a palette index
-    else:
-        nch = _PNG_NCH[ctype]
-    # Filters operate bytewise with pixel offset bpp = ceil for sub-byte (1).
-    bpp = max(1, nch * depth // 8)
-    raw = zlib.decompress(bytes(idat))
-    if interlace == 0:
-        nrow = (w * nch * depth + 7) // 8
-        if len(raw) != h * (nrow + 1):
-            raise ValueError("PNG raster size mismatch")
-        rows, _ = _unfilter(raw, 0, nrow, h, bpp)
-        g = _rows_to_luma(rows, w, h, nch, depth, ctype, plte)
-    else:
-        g = np.zeros((h, w), dtype=np.uint8)
-        p = 0
-        for x0, y0, xs, ys in ADAM7:
-            wp = (w - x0 + xs - 1) // xs
-            hp = (h - y0 + ys - 1) // ys
-            if wp <= 0 or hp <= 0:
-                continue
-            rows, p = _unfilter(raw, p, (wp * nch * depth + 7) // 8, hp, bpp)
-            g[y0:h:ys, x0:w:xs] = _rows_to_luma(
-                rows, wp, hp, nch, depth, ctype, plte
-            )
-        if p != len(raw):
-            raise ValueError("PNG raster size mismatch")
-    return w, h, g.tobytes()
-
-
-# Color type per media_id % 5: gray, RGB, gray+alpha, RGBA, palette.
-PNG_CYCLE = (0, 2, 4, 6, 3)
-
-# Palette PNGs use a deterministic 64-entry palette whose RGB bytes come
-# from the same LCG stream at seed+PNG_PAL_SEED_OFF (so golden fixtures
-# can regenerate it without the encoder).
-PNG_PAL_SIZE = 64
-PNG_PAL_SEED_OFF = 9973
-
-
-def fake_png(
-    width: int,
-    height: int,
-    seed: int,
-    ctype: int = 2,
-    depth: int = 8,
-    interlace: int = 0,
-    perturb: int = 0,
-    perturb_delta: int = 32,
-) -> bytes:
-    """Deterministic REAL PNG file from the shared LCG value stream. Rows
-    cycle through all five filter types (y % 5) so every unfilter branch
-    is exercised; chunks carry correct CRCs, so any PNG reader opens
-    these. ctype 3 emits an indexed-color image with a {PNG_PAL_SIZE}-
-    entry PLTE chunk. depth=16 draws two LCG bytes per sample
-    (big-endian); interlace=1 emits the Adam7 pass order, each pass
-    independently filtered (filter cycling restarts per pass). Default
-    (8, 0) output is byte-identical to the pre-r8 encoder — golden
-    fixtures do not move."""
-    import zlib
-
-    if depth in (1, 2, 4):
-        if ctype not in (0, 3):
-            raise ValueError(f"fake_png: sub-byte depth={depth} needs ctype 0/3")
-        return _fake_png_subbyte(width, height, seed, ctype, depth, interlace)
-    if depth not in (8, 16) or (ctype == 3 and depth != 8):
-        raise ValueError(f"fake_png: unsupported depth={depth} ctype={ctype}")
-    bps = depth // 8
-    plte = b""
-    if ctype == 3:
-        nch = 1
-        vals = netpbm_values(width, height, seed, 1, PNG_PAL_SIZE - 1)
-        plte = bytes(
-            netpbm_values(PNG_PAL_SIZE, 1, seed + PNG_PAL_SEED_OFF, 3, 255)
-        )
-    else:
-        nch = _PNG_NCH[ctype]
-        vals = netpbm_values(width, height * nch * bps, seed, 1, 255)
-    if perturb:
-        # Near-duplicate fixture hook: bump `perturb` deterministic
-        # positions by perturb_delta (mod 256) — a "re-encoded with
-        # slight noise" copy for perceptual-hash tests. Grayscale only
-        # so the luma change is direct and analyzable.
-        if ctype != 0 or depth != 8:
-            raise ValueError("fake_png: perturb needs ctype=0 depth=8")
-        vals = list(vals)
-        for j in range(perturb):
-            pos = (seed * 48271 + j * 40503 + 12345) % len(vals)
-            vals[pos] = (vals[pos] + perturb_delta) % 256
-    bpp = nch * bps
-    stride = width * bpp
-    rowsrc = [vals[y * stride : (y + 1) * stride] for y in range(height)]
-
-    def filter_rows(rows: list) -> bytearray:
-        out = bytearray()
-        prev = [0] * len(rows[0])
-        for y, row in enumerate(rows):
-            f = y % 5
-            out.append(f)
-            for i in range(len(row)):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                x = row[i]
-                if f == 0:
-                    v = x
-                elif f == 1:
-                    v = x - a
-                elif f == 2:
-                    v = x - b
-                elif f == 3:
-                    v = x - (a + b) // 2
-                else:
-                    v = x - _paeth(a, b, c)
-                out.append(v & 0xFF)
-            prev = row
-        return out
-
-    if interlace == 0:
-        filtered = filter_rows(rowsrc)
-    else:
-        filtered = bytearray()
-        for x0, y0, xs, ys in ADAM7:
-            sub = []
-            for y in range(y0, height, ys):
-                r = []
-                for x in range(x0, width, xs):
-                    r.extend(rowsrc[y][x * bpp : (x + 1) * bpp])
-                if r:
-                    sub.append(r)
-            if sub:
-                filtered += filter_rows(sub)
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(typ + data) & 0xFFFFFFFF
-        return struct.pack(">I", len(data)) + typ + data + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, ctype, 0, 0, interlace)
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + (chunk(b"PLTE", plte) if ctype == 3 else b"")
-        + chunk(b"IDAT", zlib.compress(bytes(filtered)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _fake_png_subbyte(
-    width: int, height: int, seed: int, ctype: int, depth: int, interlace: int
-) -> bytes:
-    """Sub-byte (1/2/4-bit) branch of fake_png: gray (ctype 0) or indexed
-    (ctype 3, 2^depth-entry PLTE). Samples pack MSB-first into
-    ceil(w*depth/8)-byte rows (per Adam7 pass when interlaced — each pass
-    packs and filters independently, bpp=1), same y%5 filter cycling."""
-    import zlib
-
-    maxv = (1 << depth) - 1
-    vals = netpbm_values(width, height, seed, 1, maxv)
-    plte = b""
-    if ctype == 3:
-        plte = bytes(
-            netpbm_values(1 << depth, 1, seed + PNG_PAL_SEED_OFF, 3, 255)
-        )
-    grid = [vals[y * width : (y + 1) * width] for y in range(height)]
-
-    def pack(samples: list) -> list:
-        out, acc, nbits = [], 0, 0
-        for s in samples:
-            acc = (acc << depth) | s
-            nbits += depth
-            if nbits == 8:
-                out.append(acc)
-                acc, nbits = 0, 0
-        if nbits:
-            out.append(acc << (8 - nbits))
-        return out
-
-    def filter_rows(rows: list) -> bytearray:
-        out = bytearray()
-        prev = [0] * len(rows[0])
-        for y, row in enumerate(rows):
-            f = y % 5
-            out.append(f)
-            for i in range(len(row)):
-                a = row[i - 1] if i >= 1 else 0
-                b = prev[i]
-                c = prev[i - 1] if i >= 1 else 0
-                x = row[i]
-                if f == 0:
-                    v = x
-                elif f == 1:
-                    v = x - a
-                elif f == 2:
-                    v = x - b
-                elif f == 3:
-                    v = x - (a + b) // 2
-                else:
-                    v = x - _paeth(a, b, c)
-                out.append(v & 0xFF)
-            prev = row
-        return out
-
-    if interlace == 0:
-        filtered = filter_rows([pack(r) for r in grid])
-    else:
-        filtered = bytearray()
-        for x0, y0, xs, ys in ADAM7:
-            sub = [
-                pack([grid[y][x] for x in range(x0, width, xs)])
-                for y in range(y0, height, ys)
-                if range(x0, width, xs)
-            ]
-            sub = [r for r in sub if r]
-            if sub:
-                filtered += filter_rows(sub)
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(typ + data) & 0xFFFFFFFF
-        return struct.pack(">I", len(data)) + typ + data + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, ctype, 0, 0, interlace)
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + (chunk(b"PLTE", plte) if ctype == 3 else b"")
-        + chunk(b"IDAT", zlib.compress(bytes(filtered)))
-        + chunk(b"IEND", b"")
-    )
-
-
-# (ctype, depth, interlace) — every spec-legal sub-byte layout, plain+Adam7.
-PNG_SUBBYTE_CYCLE = (
-    (0, 1, 0), (0, 2, 0), (0, 4, 0), (3, 1, 0), (3, 2, 0), (3, 4, 0),
-    (0, 1, 1), (0, 2, 1), (0, 4, 1), (3, 1, 1), (3, 2, 1), (3, 4, 1),
-)
-
-
-def png_subbyte_media_table(
-    spark, n: int = 12, width: int = 23, height: int = 19
-) -> DataFrame:
-    """Deterministic media table of REAL sub-byte PNG payloads cycling
-    through PNG_SUBBYTE_CYCLE layouts by media_id."""
-    rows = []
-    for i in range(n):
-        ctype, depth, il = PNG_SUBBYTE_CYCLE[i % len(PNG_SUBBYTE_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(
-                    fake_png(width, height, seed=i, ctype=ctype, depth=depth, interlace=il)
-                ),
-                ("image/png", f"mem://pngsub/{i}.png"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def png_media_table(
-    spark, n: int = 12, width: int = 23, height: int = 19
-) -> DataFrame:
-    """Deterministic media table of REAL PNG payloads cycling through
-    PNG_CYCLE color types by media_id."""
-    rows = []
-    for i in range(n):
-        ctype = PNG_CYCLE[i % len(PNG_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(fake_png(width, height, seed=i, ctype=ctype)),
-                ("image/png", f"mem://png/{i}.png"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# JPEG layout per media_id % 4: gray, 4:4:4, 4:2:0, 4:2:0 + restart
-# markers every 2 MCUs.
-JPEG_CYCLE = (
-    {"gray": True},
-    {"subsample": 1},
-    {"subsample": 2},
-    {"subsample": 2, "restart_interval": 2},
-)
-
-
-def jpeg_media_table(
-    spark, n: int = 12, width: int = 24, height: int = 17
-) -> DataFrame:
-    """Deterministic media table of REAL baseline JPEG payloads cycling
-    through JPEG_CYCLE layouts by media_id (operators/jpeg.py)."""
-    from gtec_etl_spark.operators.jpeg import fake_jpeg
-
-    rows = []
-    for i in range(n):
-        kw = JPEG_CYCLE[i % len(JPEG_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(fake_jpeg(width, height, seed=i, **kw)),
-                ("image/jpeg", f"mem://jpeg/{i}.jpg"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# 12-bit baseline layout per media_id % 4: gray, gray+restart markers,
-# 4:4:4, 4:2:0 — the extended-precision mode medical/scientific JPEGs use.
-JPEG12_CYCLE = (
-    {"gray": True},
-    {"gray": True, "q": 3, "restart_interval": 2},
-    {"subsample": 1},
-    {"subsample": 2},
-)
-
-
-def jpeg12_media_table(
-    spark, n: int = 12, width: int = 24, height: int = 17
-) -> DataFrame:
-    """Deterministic media table of REAL 12-bit baseline JPEG payloads
-    cycling through JPEG12_CYCLE layouts by media_id."""
-    from gtec_etl_spark.operators.jpeg import fake_jpeg
-
-    rows = []
-    for i in range(n):
-        kw = JPEG12_CYCLE[i % len(JPEG12_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(fake_jpeg(width, height, seed=i, precision=12, **kw)),
-                ("image/jpeg", f"mem://jpeg12/{i}.jpg"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# Progressive (SOF2) layout per media_id % 4: gray, gray coarse-quant
-# (sparse bands -> EOB-run heavy), 4:4:4, 4:2:0.
-JPEG_PROG_CYCLE = (
-    {"gray": True},
-    {"gray": True, "q": 8},
-    {"subsample": 1},
-    {"subsample": 2},
-)
-
-
-def jpeg_prog_media_table(
-    spark, n: int = 12, width: int = 24, height: int = 17
-) -> DataFrame:
-    """Deterministic media table of REAL progressive JPEG payloads cycling
-    through JPEG_PROG_CYCLE layouts by media_id (operators/jpeg.py)."""
-    from gtec_etl_spark.operators.jpeg import fake_jpeg_progressive
-
-    rows = []
-    for i in range(n):
-        kw = JPEG_PROG_CYCLE[i % len(JPEG_PROG_CYCLE)]
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(fake_jpeg_progressive(width, height, seed=i, **kw)),
-                ("image/jpeg", f"mem://jpegprog/{i}.jpg"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
 
 # ---------------------------------------------------------------------------
 # WAV (RIFF PCM) — the audio modality through the same Arrow boundary, with
@@ -852,7 +44,7 @@ WAV_CYCLE = ((16, 1), (16, 2), (8, 1), (8, 2))
 
 
 def wav_values(n_values: int, seed: int, bits: int) -> list[int]:
-    """Deterministic LCG PCM sample stream (same recurrence as fake_image):
+    """Deterministic LCG PCM sample stream:
     16-bit yields signed values in [-32768, 32767], 8-bit the RAW unsigned
     container bytes in [0, 255] (WAV stores 8-bit PCM unsigned; logical
     amplitude is value-128), 24/32-bit signed values spanning their full
@@ -1200,8 +392,8 @@ def audio_rms_windows(media: DataFrame, window_frames: int = 160) -> DataFrame:
     windows per clip -> exact integer energy (sum of squared samples
     across channels), peak, and RMS scaled by 1e3 via math.isqrt
     (integer square root — exact, engine-independent, no float sqrt).
-    The audio analogue of frame_sample: one Arrow round-trip, output
-    rows ~ clip_length/window, the raster never leaves the executor."""
+    One Arrow round-trip, output rows ~ clip_length/window, the raster
+    never leaves the executor."""
     import math
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1240,27 +432,6 @@ def audio_rms_windows(media: DataFrame, window_frames: int = 160) -> DataFrame:
             )
 
     return media.select("media_id", "content").mapInPandas(run, AUDIO_WIN_SCHEMA)
-
-
-def byte_histogram_counts(media: DataFrame, bins: int = 16) -> DataFrame:
-    """Integer byte-value histogram of the raw blob (counts, not
-    normalized) — the exact-arithmetic twin of byte_histogram_features
-    for oracle-checked similarity over media (cosine on int counts needs
-    no float normalization; equal-width bins are value // (256/bins))."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        width = 256 // bins
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = np.frombuffer(bytes(content), dtype=np.uint8)
-                hist = np.bincount(arr // width, minlength=bins)
-                rows.append((mid, [int(x) for x in hist]))
-            yield pd.DataFrame(rows, columns=["media_id", "hist"])
-
-    return media.select("media_id", "content").mapInPandas(
-        run, "media_id long, hist array<long>"
-    )
 
 
 # IMA ADPCM (WAV format 17) — the 4-bit differential codec. Both tables
@@ -1604,82 +775,6 @@ def wav_adpcm_media_table(
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def wht_phash64(pix: bytes, w: int, h: int) -> int:
-    """Integer perceptual hash of a decoded grayscale image: box-average
-    to an 8x8 grid (exact truncating integer mean — w and h must be
-    multiples of 8), 2-D Walsh-Hadamard transform (pure integer
-    butterflies — chosen over the classic DCT precisely because every
-    step is exact integer arithmetic, so Spark, the golden tool, and any
-    reimplementation agree bit-for-bit), then one bit per AC coefficient:
-    1 iff the coefficient strictly exceeds the median of the 63 AC
-    coefficients (the 32nd smallest — an exact integer order statistic).
-    Returns a 63-bit int (bit i = AC coefficient i in row-major order)."""
-    if w % 8 or h % 8:
-        raise ValueError(f"wht_phash64 needs w,h multiples of 8 (got {w}x{h})")
-    a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64).reshape(h, w)
-    bh, bw = h // 8, w // 8
-    # exact integer box means: sum within each cell, truncate-divide
-    g = a.reshape(8, bh, 8, bw).sum(axis=(1, 3)) // (bh * bw)
-
-    def wht8(v: np.ndarray) -> np.ndarray:
-        v = v.copy()
-        size = 1
-        while size < 8:
-            for i in range(0, 8, size * 2):
-                for j in range(i, i + size):
-                    x, y = v[j], v[j + size]
-                    v[j], v[j + size] = x + y, x - y
-            size *= 2
-        return v
-
-    rows = np.stack([wht8(g[r]) for r in range(8)])
-    full = np.stack([wht8(rows[:, c]) for c in range(8)], axis=1)
-    flat = [int(full[r, c]) for r in range(8) for c in range(8)][1:]  # drop DC
-    med = sorted(flat)[31]
-    return sum(1 << i for i, v in enumerate(flat) if v > med)
-
-
-PHASH_SCHEMA = "media_id long, phash long"
-
-
-def image_phash(media: DataFrame) -> DataFrame:
-    """Perceptual-hash pass: binary image -> 63-bit integer WHT hash,
-    through the same Arrow-batched mapInPandas boundary as the decoders
-    (real codec decode per blob, tiny fixed-size output per row)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, pix = _decode_one(bytes(content))
-                rows.append((mid, wht_phash64(pix, w, h)))
-            yield pd.DataFrame(rows, columns=["media_id", "phash"])
-
-    return media.select("media_id", "content").mapInPandas(run, PHASH_SCHEMA)
-
-
-def phash_media_table(
-    spark, n_base: int = 12, width: int = 24, height: int = 24
-) -> DataFrame:
-    """Near-duplicate image fixture: n_base grayscale PNG originals
-    (media_id 0..n_base-1) plus one perturbed re-encode of each
-    (media_id 100+i: 3 pixels bumped by 32 — the 'same image, slight
-    noise' class a perceptual dedup pass must catch)."""
-    rows = []
-    for i in range(n_base):
-        rows.append(
-            (i, "image", bytearray(fake_png(width, height, seed=i, ctype=0)),
-             ("image/png", f"mem://phash/{i}.png"))
-        )
-        rows.append(
-            (100 + i, "image",
-             bytearray(fake_png(width, height, seed=i, ctype=0,
-                                perturb=3, perturb_delta=32)),
-             ("image/png", f"mem://phash/{100 + i}.png"))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def _wht_pow2(v: list) -> list:
     """In-place integer Walsh-Hadamard butterflies for any power-of-two
     length (natural/Hadamard coefficient order)."""
@@ -1758,8 +853,7 @@ def banded_hamming_pairs(
     value) — pigeonhole guarantees every pair within Hamming distance
     n_bands-1 is generated, and the join NEVER goes all-pairs — then
     exact bit_count(xor) verification. Returns (a_id, b_id, hamming),
-    a_id < b_id. The shared blocking engine behind mm_phash_neardup and
-    mm_audio_fingerprint."""
+    a_id < b_id. The blocking engine behind mm_audio_fingerprint."""
     mask = (1 << band_bits) - 1
     bands = hashes.select(
         "media_id",
@@ -1784,822 +878,6 @@ def banded_hamming_pairs(
         cand.withColumn("hamming", F.expr("bit_count(a_hash ^ b_hash)"))
         .filter(F.col("hamming") <= max_hamming)
         .select("a_id", "b_id", F.col("hamming").cast("long").alias("hamming"))
-    )
-
-
-def fake_avi_mjpeg(
-    n_frames: int, width: int, height: int, fps: int, seed: int,
-    scene_len: int = 1,
-) -> bytes:
-    """Deterministic REAL AVI container (RIFF 'AVI ') carrying an MJPEG
-    video stream: hdrl (avih + strl/strh 'vids'/'MJPG' + strf
-    BITMAPINFOHEADER) then a movi LIST with one '00dc' chunk per frame,
-    each a REAL baseline grayscale JPEG (operators/jpeg.py:fake_jpeg,
-    q=1) of the per-frame LCG plane (frame f uses seed*1000+f); frames
-    with f % 4 == 2 carry a DRI restart interval (RSTn every 2 MCUs) —
-    real MJPEG encoders emit restart markers for error resilience, and
-    the decode-side stride-2 sampling lands on these frames, so the
-    restart path is exercised through the video pipeline, not just the
-    still-image one. Restart coding is lossless (it only resets the DC
-    predictor), so the frame's decoded pixels — and the golden, which
-    recomputes them from the LCG plane + quant math without touching the
-    bitstream — are unchanged. fps is
-    carried as strh dwRate/dwScale = fps/1 (exact) and avih
-    dwMicroSecPerFrame = 1000000//fps (truncated, informational). No
-    idx1 index — streaming parsers (and ours) walk movi directly."""
-    from gtec_etl_spark.operators.jpeg import fake_jpeg
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(subtype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", subtype + body)
-
-    # scene_len > 1 groups consecutive frames into SCENES sharing one LCG
-    # plane (frame seed keys on f // scene_len): within a scene decoded
-    # frames are identical, across scenes BOTH the pixels and the luma
-    # RANGE jump (alternating maxval 255 / 95) — two full-range noise
-    # planes have near-identical histograms, so a histogram detector
-    # needs the distribution itself to move at a cut. This is the ground
-    # truth mm_video_shot_detect must recover exactly.
-    frames = [
-        fake_jpeg(
-            width,
-            height,
-            seed=seed * 1000 + f // scene_len,
-            gray=True,
-            q=1,
-            restart_interval=2 if f % 4 == 2 else 0,
-            maxval=None
-            if scene_len == 1
-            else (255 if (f // scene_len) % 2 == 0 else 95),
-        )
-        for f in range(n_frames)
-    ]
-    avih = struct.pack(
-        "<14I", 1000000 // fps, 0, 0, 0, n_frames, 0, 1, 0, width, height,
-        0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIII", 0, 0, 0, 0, 1, fps, 0, n_frames, 0, 0)
-        + struct.pack("<I", 0)  # sampleSize
-        + struct.pack("<4H", 0, 0, width, height)
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _decode_avi(content: bytes) -> tuple[int, int, int, int, list[bytes]]:
-    """Pure-stdlib RIFF/AVI walker -> (width, height, fps, n_frames,
-    frame payloads). Walks the chunk tree (unknown chunks skipped, word
-    alignment honored — the same contract as the WAV walker), reads
-    dimensions + declared frame count from avih, exact fps from the
-    first 'vids' strh's dwRate/dwScale, and collects '00dc'/'00db'
-    bodies from the movi LIST in stream order."""
-    if content[:4] != b"RIFF" or content[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI file")
-    avih = strh = None
-    frames: list[bytes] = []
-
-    def walk(buf: bytes) -> None:
-        nonlocal avih, strh
-        pos = 0
-        while pos + 8 <= len(buf):
-            tag = buf[pos : pos + 4]
-            ln = int.from_bytes(buf[pos + 4 : pos + 8], "little")
-            body = buf[pos + 8 : pos + 8 + ln]
-            pos += 8 + ln + (ln & 1)
-            if tag == b"LIST":
-                walk(body[4:])
-            elif tag == b"avih" and avih is None:
-                avih = body
-            elif tag == b"strh" and strh is None and body[:4] == b"vids":
-                strh = body
-            elif tag in (b"00dc", b"00db"):
-                frames.append(body)
-
-    walk(content[12:])
-    if avih is None or strh is None:
-        raise ValueError("AVI missing avih/strh headers")
-    n_declared = int.from_bytes(avih[16:20], "little")
-    width, height = struct.unpack("<II", avih[32:40])
-    scale, rate = struct.unpack("<II", strh[20:28])
-    if scale == 0:
-        raise ValueError("AVI strh dwScale is zero")
-    return width, height, rate // scale, n_declared, frames
-
-
-VIDEO_SCHEMA = (
-    "media_id long, width long, height long, fps long,"
-    " n_frames long, frames_decoded long, total_luma long"
-)
-
-
-def decode_video(media: DataFrame, frame_stride: int = 2) -> DataFrame:
-    """Video decode pass: AVI/MJPEG binary -> container metadata + exact
-    integer luma total over every frame_stride-th frame, each decoded by
-    the REAL baseline JPEG decoder — the decode/frame-sample pattern a
-    video pipeline runs (sample, don't exhaust). One Arrow round-trip;
-    per-row output is fixed-size regardless of clip length."""
-    from gtec_etl_spark.operators.jpeg import decode_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, fps, n_frames, frames = _decode_avi(bytes(content))
-                total = 0
-                decoded = 0
-                for fr in frames[::frame_stride]:
-                    fw, fh, gray = decode_jpeg(fr)
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            f"frame {decoded}: {fw}x{fh} != container {w}x{h}"
-                        )
-                    total += int(np.frombuffer(gray, dtype=np.uint8).astype(np.int64).sum())
-                    decoded += 1
-                rows.append((mid, w, h, fps, n_frames, decoded, total))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "fps",
-                    "n_frames", "frames_decoded", "total_luma",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, VIDEO_SCHEMA)
-
-
-# (n_frames, width, height, fps) AVI layout cycle
-AVI_CYCLE = ((6, 16, 16, 10), (4, 24, 16, 15), (8, 16, 8, 30), (5, 8, 8, 25))
-
-
-def avi_media_table(spark, n: int = 8) -> DataFrame:
-    """Deterministic media table of REAL AVI/MJPEG payloads cycling
-    through AVI_CYCLE layouts by media_id."""
-    rows = []
-    for i in range(n):
-        nf, w, h, fps = AVI_CYCLE[i % len(AVI_CYCLE)]
-        rows.append(
-            (i, "video", bytearray(fake_avi_mjpeg(nf, w, h, fps, seed=i)),
-             ("video/x-msvideo", f"mem://avi/{i}.avi"))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# (n_frames, width, height, fps) scene-structured AVI cycle; scenes of
-# SHOT_SCENE_LEN consecutive identical frames.
-SCENE_CYCLE = ((9, 16, 16, 10), (6, 24, 16, 15), (8, 16, 8, 30), (12, 8, 8, 25))
-SHOT_SCENE_LEN = 3
-SHOT_BINS = 16
-
-
-def scene_avi_media_table(spark, n: int = 8) -> DataFrame:
-    """Deterministic media table of scene-structured AVI/MJPEG payloads
-    (runs of SHOT_SCENE_LEN identical frames, hard cuts between runs)."""
-    rows = []
-    for i in range(n):
-        nf, w, h, fps = SCENE_CYCLE[i % len(SCENE_CYCLE)]
-        rows.append(
-            (
-                i,
-                "video",
-                bytearray(
-                    fake_avi_mjpeg(nf, w, h, fps, seed=i, scene_len=SHOT_SCENE_LEN)
-                ),
-                ("video/x-msvideo", f"mem://scene/{i}.avi"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def detect_shots(media: DataFrame, bins: int = SHOT_BINS) -> DataFrame:
-    """SHOT-BOUNDARY detection — the first video-analysis pass a training
-    pipeline runs before frame sampling (sample per shot, not per clip):
-    decode EVERY frame, build a `bins`-bin luma histogram (bin =
-    byte >> 4 for 16 bins — exact integer binning), L1-distance between
-    consecutive frames' histograms, and declare a cut when
-    L1 > n_pixels/2 (identical frames give L1 = 0; a hard cut between
-    independent planes moves most mass). One Arrow pass; per-clip output
-    is fixed-size (counts + L1 extrema), never per-frame rows."""
-    from gtec_etl_spark.operators.jpeg import decode_jpeg
-
-    if bins < 2 or bins > 256 or bins & (bins - 1):
-        raise ValueError(
-            f"bins must be a power of two in [2, 256], got {bins}"
-        )
-    shift = 8 - (bins - 1).bit_length()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, fps, n_frames, frames = _decode_avi(bytes(content))
-                npix = w * h
-                prev = None
-                n_cuts = 0
-                max_l1 = 0
-                total_l1 = 0
-                for fr in frames:
-                    fw, fh, gray = decode_jpeg(fr)
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            f"frame size {fw}x{fh} != container {w}x{h}"
-                        )
-                    g = np.frombuffer(gray, dtype=np.uint8)
-                    hist = np.bincount(g >> shift, minlength=bins).astype(
-                        np.int64
-                    )
-                    if prev is not None:
-                        l1 = int(np.abs(hist - prev).sum())
-                        total_l1 += l1
-                        max_l1 = max(max_l1, l1)
-                        if 2 * l1 > npix:
-                            n_cuts += 1
-                    prev = hist
-                rows.append(
-                    (mid, w, h, len(frames), n_cuts, max_l1, total_l1)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_frames",
-                    "n_shot_cuts", "max_l1", "total_l1",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        run,
-        "media_id long, width long, height long, n_frames long,"
-        " n_shot_cuts long, max_l1 long, total_l1 long",
-    )
-
-
-# ---------------------------------------------------------------------------
-# GIF (LZW) — header/palette/descriptor walker + variable-width LZW in
-# pure stdlib. GIF's LZW is LOSSLESS, so the golden recomputes the index
-# stream straight from the LCG without touching the codec.
-# ---------------------------------------------------------------------------
-
-
-class _LSBBitWriter:
-    """LSB-first bit packer (GIF's LZW bit order — the opposite of
-    JPEG's MSB-first entropy stream)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-        return bytes(self.out)
-
-
-def _gif_lzw_encode(indices: list, mcs: int) -> bytes:
-    """GIF LZW: emit an initial clear code, build the string table
-    greedily, grow the code width when next_free exceeds the current
-    width's range ((1 << width) + 1 — the encoder-side twin of the
-    decoder's next_free == 1 << width rule, offset by one because the
-    decoder's table add lags the encoder's by one code), and finish with
-    EOI. Dictionary resets at 4096 entries (the 12-bit ceiling)."""
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    bw = _LSBBitWriter()
-    width = mcs + 1
-    table: dict = {}
-    next_free = eoi + 1
-    bw.write(clear, width)
-    w = (indices[0],)
-    for k in indices[1:]:
-        wk = w + (k,)
-        if wk in table:
-            w = wk
-            continue
-        bw.write(w[0] if len(w) == 1 else table[w], width)
-        table[wk] = next_free
-        next_free += 1
-        if next_free == (1 << width) + 1 and width < 12:
-            width += 1
-        if next_free == 4096:  # 12-bit ceiling: code 4095 was the last
-            bw.write(clear, width)  # decoder reads this at width 12 too
-            table.clear()
-            next_free = eoi + 1
-            width = mcs + 1
-        w = (k,)
-    bw.write(w[0] if len(w) == 1 else table[w], width)
-    bw.write(eoi, width)
-    return bw.finish()
-
-
-def _gif_lzw_decode(data: bytes, mcs: int, n_expected: int) -> list:
-    """GIF LZW decode: variable width starting at mcs+1, clear/EOI
-    handling, the KwKwK self-reference case, width growth at
-    next_free == 1 << width (capped at 12 bits)."""
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    pos = nbits = acc = 0
-    width = mcs + 1
-    table: dict = {}
-    next_free = eoi + 1
-    prev = None
-    out: list = []
-
-    def read() -> int:
-        nonlocal pos, nbits, acc
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated before EOI")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        return code
-
-    roots = {i: (i,) for i in range(1 << mcs)}
-    while len(out) < n_expected:
-        code = read()
-        if code == clear:
-            table.clear()
-            next_free = eoi + 1
-            width = mcs + 1
-            prev = None
-            continue
-        if code == eoi:
-            raise ValueError(
-                f"GIF LZW EOI after {len(out)} of {n_expected} pixels"
-            )
-        if prev is None:
-            if code >= (1 << mcs):
-                raise ValueError(f"GIF LZW first code {code} is not a root")
-            out.extend(roots[code])
-            prev = roots[code]
-            continue
-        if code < (1 << mcs):
-            entry = roots[code]
-        elif code in table:
-            entry = table[code]
-        elif code == next_free:
-            entry = prev + prev[:1]  # KwKwK
-        else:
-            raise ValueError(f"GIF LZW code {code} beyond table ({next_free})")
-        if next_free < 4096:  # 12-bit ceiling: freeze adds until clear
-            table[next_free] = prev + entry[:1]
-            next_free += 1
-            if next_free == (1 << width) and width < 12:
-                width += 1
-        out.extend(entry)
-        prev = entry
-    return out[:n_expected]
-
-
-GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-GIF_PAL_SEED_OFF = 7717
-
-
-def fake_gif(
-    width: int, height: int, seed: int, depth: int = 8, interlace: bool = False
-) -> bytes:
-    """Deterministic REAL GIF89a: logical screen descriptor, 2^depth-entry
-    global color table from the LCG palette stream, a graphic-control
-    extension block (exercises the extension-skipping walker), one image
-    descriptor (optionally interlaced), and the REAL variable-width LZW
-    encoding of the LCG index stream."""
-    if depth not in (2, 4, 8):
-        raise ValueError("fake_gif: depth must be 2, 4, or 8")
-    n_colors = 1 << depth
-    pal = bytes(netpbm_values(n_colors, 1, seed + GIF_PAL_SEED_OFF, 3, 255))
-    idx = netpbm_values(width, height, seed, 1, n_colors - 1)
-    if interlace:
-        rows = [idx[y * width : (y + 1) * width] for y in range(height)]
-        ordered: list = []
-        for start, step in GIF_INTERLACE_PASSES:
-            for y in range(start, height, step):
-                ordered.extend(rows[y])
-        idx = ordered
-    mcs = max(2, depth)
-    lzw = _gif_lzw_encode(idx, mcs)
-    sub = bytearray()
-    for i in range(0, len(lzw), 255):
-        blockb = lzw[i : i + 255]
-        sub.append(len(blockb))
-        sub += blockb
-    sub.append(0)
-    lsd_flags = 0x80 | ((depth - 1) << 4) | (depth - 1)  # global table, size bits
-    gce = bytes([0x21, 0xF9, 4, 0, 0, 0, 0, 0])  # ext the walker must skip
-    img_flags = 0x40 if interlace else 0
-    desc = struct.pack("<BHHHHB", 0x2C, 0, 0, width, height, img_flags)
-    return (
-        b"GIF89a"
-        + struct.pack("<HHBBB", width, height, lsd_flags, 0, 0)
-        + pal
-        + gce
-        + desc
-        + bytes([mcs])
-        + bytes(sub)
-        + b"\x3b"
-    )
-
-
-def _decode_gif(content: bytes) -> tuple[int, int, bytes]:
-    """Pure-stdlib GIF decoder -> (width, height, BT.601 luma bytes of
-    the FIRST image). Walks the block list (extensions skipped by their
-    sub-block chains), honors local color tables over the global one,
-    de-interlaces the four-pass row order, and inflates the real
-    variable-width LZW stream (_gif_lzw_decode)."""
-    if content[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF file")
-    w, h, flags, _bg, _ar = struct.unpack("<HHBBB", content[6:13])
-    pos = 13
-    gpal = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gpal = content[pos : pos + 3 * n]
-        pos += 3 * n
-    while pos < len(content):
-        b = content[pos]
-        pos += 1
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while pos < len(content) and content[pos]:
-                pos += 1 + content[pos]
-            if pos >= len(content):
-                raise ValueError("GIF block stream truncated")
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"GIF: unexpected block 0x{b:02x}")
-        _l, _t, iw, ih, iflags = struct.unpack("<HHHHB", content[pos : pos + 9])
-        pos += 9
-        pal = gpal
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            pal = content[pos : pos + 3 * n]
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image has no color table")
-        mcs = content[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(content) and content[pos]:
-            ln = content[pos]
-            lzw += content[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        if pos >= len(content):
-            raise ValueError("GIF block stream truncated")
-        pos += 1
-        idx = _gif_lzw_decode(bytes(lzw), mcs, iw * ih)
-        if iflags & 0x40:  # de-interlace
-            rows: list = [None] * ih
-            src = 0
-            for start, step in GIF_INTERLACE_PASSES:
-                for y in range(start, ih, step):
-                    rows[y] = idx[src * iw : (src + 1) * iw]
-                    src += 1
-            idx = [v for row in rows for v in row]
-        arr = np.array(idx, dtype=np.int64)
-        pal_arr = np.frombuffer(pal, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
-        rgb = pal_arr[arr]
-        luma = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        return iw, ih, bytes(luma.astype(np.uint8))
-    raise ValueError("GIF contains no image block")
-
-
-# (depth, interlace) GIF layout cycle
-GIF_CYCLE = ((8, False), (8, True), (4, False), (2, True))
-
-
-def gif_media_table(
-    spark, n: int = 12, width: int = 23, height: int = 19
-) -> DataFrame:
-    """Deterministic media table of REAL GIF payloads cycling through
-    GIF_CYCLE (depth, interlace) layouts by media_id."""
-    rows = []
-    for i in range(n):
-        depth, il = GIF_CYCLE[i % len(GIF_CYCLE)]
-        rows.append(
-            (i, "image",
-             bytearray(fake_gif(width, height, seed=i, depth=depth, interlace=il)),
-             ("image/gif", f"mem://gif/{i}.gif"))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def fake_bmp(width: int, height: int, seed: int, bpp: int = 24) -> bytes:
-    """Deterministic REAL Windows BMP (BITMAPINFOHEADER): bottom-up rows
-    padded to 4 bytes, 24-bit BGR or 8-bit indexed with a 256-entry BGRA
-    palette — the two classic uncompressed layouts."""
-    if bpp not in (8, 24):
-        raise ValueError("fake_bmp: bpp must be 8 or 24")
-    if bpp == 24:
-        vals = netpbm_values(width, height * 3, seed, 1, 255)
-        rows = []
-        for y in range(height):
-            row = bytearray()
-            for x in range(width):
-                r, g, b = vals[(y * width + x) * 3 : (y * width + x) * 3 + 3]
-                row += bytes((b, g, r))  # BMP stores BGR
-            row += b"\x00" * ((-len(row)) % 4)
-            rows.append(bytes(row))
-        palette = b""
-    else:
-        pal = netpbm_values(256, 1, seed + GIF_PAL_SEED_OFF, 3, 255)
-        palette = b"".join(
-            bytes((pal[3 * i + 2], pal[3 * i + 1], pal[3 * i], 0))
-            for i in range(256)
-        )
-        idx = netpbm_values(width, height, seed, 1, 255)
-        rows = []
-        for y in range(height):
-            row = bytes(idx[y * width : (y + 1) * width])
-            rows.append(row + b"\x00" * ((-len(row)) % 4))
-    raster = b"".join(reversed(rows))  # bottom-up
-    offset = 14 + 40 + len(palette)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, bpp, 0, len(raster), 0, 0,
-        256 if bpp == 8 else 0, 0,
-    )
-    hdr = b"BM" + struct.pack("<IHHI", offset + len(raster), 0, 0, offset)
-    return hdr + info + palette + raster
-
-
-def _decode_bmp(content: bytes) -> tuple[int, int, bytes]:
-    """Pure-stdlib BMP decoder -> (width, height, BT.601 luma). Handles
-    the BITMAPINFOHEADER uncompressed layouts: 8-bit indexed (BGRA
-    palette) and 24-bit BGR, bottom-up or top-down row order, 4-byte row
-    padding."""
-    if content[:2] != b"BM":
-        raise ValueError("not a BMP file")
-    offset = int.from_bytes(content[10:14], "little")
-    hsize = int.from_bytes(content[14:18], "little")
-    if hsize < 40:
-        raise NotImplementedError(f"BMP header size {hsize} (core/OS2) unsupported")
-    width = int.from_bytes(content[18:22], "little", signed=True)
-    height = int.from_bytes(content[22:26], "little", signed=True)
-    bpp = int.from_bytes(content[28:30], "little")
-    compression = int.from_bytes(content[30:34], "little")
-    if compression != 0 or bpp not in (8, 24):
-        raise NotImplementedError(
-            f"BMP bpp={bpp} compression={compression}: only uncompressed"
-            " 8-bit indexed and 24-bit BGR are inside the boundary"
-        )
-    top_down = height < 0
-    height = abs(height)
-    stride = (width * bpp // 8 + 3) & ~3
-    raster = content[offset : offset + stride * height]
-    if len(raster) < stride * height:
-        raise ValueError("BMP raster truncated")
-    rows = [raster[y * stride : y * stride + width * bpp // 8] for y in range(height)]
-    if not top_down:
-        rows.reverse()
-    flat = np.frombuffer(b"".join(rows), dtype=np.uint8).astype(np.int64)
-    if bpp == 24:
-        bgr = flat.reshape(-1, 3)
-        luma = (299 * bgr[:, 2] + 587 * bgr[:, 1] + 114 * bgr[:, 0]) // 1000
-    else:
-        ncol = (offset - 14 - hsize) // 4
-        pal = np.frombuffer(
-            content[14 + hsize : 14 + hsize + 4 * ncol], dtype=np.uint8
-        ).astype(np.int64).reshape(-1, 4)
-        bgr = pal[flat]
-        luma = (299 * bgr[:, 2] + 587 * bgr[:, 1] + 114 * bgr[:, 0]) // 1000
-    return width, height, bytes(luma.astype(np.uint8))
-
-
-# (bpp,) BMP layout cycle
-BMP_CYCLE = (24, 8)
-
-
-def bmp_media_table(
-    spark, n: int = 8, width: int = 23, height: int = 19
-) -> DataFrame:
-    """Deterministic media table of REAL BMP payloads alternating 24-bit
-    BGR and 8-bit indexed layouts by media_id."""
-    rows = []
-    for i in range(n):
-        bpp = BMP_CYCLE[i % len(BMP_CYCLE)]
-        rows.append(
-            (i, "image", bytearray(fake_bmp(width, height, seed=i, bpp=bpp)),
-             ("image/bmp", f"mem://bmp/{i}.bmp"))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def fake_tiff(
-    width: int, height: int, seed: int, rgb: bool = False,
-    big_endian: bool = False, rows_per_strip: int = 7,
-) -> bytes:
-    """Deterministic REAL baseline TIFF: header in either byte order
-    ('II' little / 'MM' big), one IFD with the baseline tag set, and
-    UNCOMPRESSED strip-organized raster (multiple strips so the strip
-    walk is exercised). Grayscale (photometric 1) or RGB (photometric
-    2), 8 bits per sample, from the shared LCG stream."""
-    bo = ">" if big_endian else "<"
-    spp = 3 if rgb else 1
-    vals = bytes(netpbm_values(width, height * spp, seed, 1, 255))
-    stride = width * spp
-    strips = [
-        vals[y * stride : min(y + rows_per_strip, height) * stride]
-        for y in range(0, height, rows_per_strip)
-    ]
-    n = len(strips)
-    # layout: 8-byte header | raster strips | IFD | out-of-line arrays
-    offsets, pos = [], 8
-    for st in strips:
-        offsets.append(pos)
-        pos += len(st)
-    ifd_off = pos
-
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        if typ == 3 and count == 1:  # SHORT packs into the first 2 bytes
-            return struct.pack(f"{bo}HHI", tag, typ, count) + struct.pack(
-                f"{bo}HH", value, 0
-            )
-        return struct.pack(f"{bo}HHII", tag, typ, count, value)
-
-    n_entries = 9
-    arrays_off = ifd_off + 2 + 12 * n_entries + 4
-    extra = b""
-    if n == 1:
-        so_entry = entry(273, 4, 1, offsets[0])
-        sc_entry = entry(279, 4, 1, len(strips[0]))
-    else:
-        so_entry = entry(273, 4, n, arrays_off)
-        sc_entry = entry(279, 4, n, arrays_off + 4 * n)
-        extra = b"".join(struct.pack(f"{bo}I", o) for o in offsets) + b"".join(
-            struct.pack(f"{bo}I", len(s)) for s in strips
-        )
-    entries = [
-        entry(256, 3, 1, width),
-        entry(257, 3, 1, height),
-        entry(258, 3, 1, 8) if spp == 1 else entry(258, 3, 3, arrays_off + len(extra)),
-        entry(259, 3, 1, 1),  # no compression
-        entry(262, 3, 1, 2 if rgb else 1),
-        so_entry,
-        entry(277, 3, 1, spp),
-        entry(278, 3, 1, rows_per_strip),
-        sc_entry,
-    ]
-    if spp == 3:
-        extra += struct.pack(f"{bo}HHH", 8, 8, 8)
-    ifd = struct.pack(f"{bo}H", n_entries) + b"".join(entries) + struct.pack(f"{bo}I", 0)
-    magic = (b"MM" if big_endian else b"II") + struct.pack(f"{bo}H", 42)
-    return magic + struct.pack(f"{bo}I", ifd_off) + b"".join(strips) + ifd + extra
-
-
-def _decode_tiff(content: bytes) -> tuple[int, int, bytes]:
-    """Pure-stdlib baseline TIFF decoder -> (width, height, BT.601 luma).
-    Handles both byte orders, inline and out-of-line tag values,
-    multi-strip uncompressed rasters, 8-bit grayscale and RGB."""
-    if content[:2] == b"II":
-        bo = "<"
-    elif content[:2] == b"MM":
-        bo = ">"
-    else:
-        raise ValueError("not a TIFF file")
-    if struct.unpack(f"{bo}H", content[2:4])[0] != 42:
-        raise ValueError("bad TIFF magic number")
-    (ifd_off,) = struct.unpack(f"{bo}I", content[4:8])
-    (n_entries,) = struct.unpack(f"{bo}H", content[ifd_off : ifd_off + 2])
-    tags: dict[int, tuple[int, int, bytes]] = {}
-    for i in range(n_entries):
-        at = ifd_off + 2 + 12 * i
-        tag, typ, count = struct.unpack(f"{bo}HHI", content[at : at + 8])
-        tags[tag] = (typ, count, content[at + 8 : at + 12])
-
-    sizes = {1: 1, 3: 2, 4: 4}
-
-    def values(tag: int, default=None) -> list:
-        if tag not in tags:
-            if default is None:
-                raise ValueError(f"TIFF missing required tag {tag}")
-            return default
-        typ, count, raw = tags[tag]
-        if typ not in sizes:
-            raise NotImplementedError(f"TIFF tag {tag} type {typ} unsupported")
-        total = sizes[typ] * count
-        buf = raw[:total] if total <= 4 else content[
-            struct.unpack(f"{bo}I", raw)[0] :
-        ][:total]
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        return list(struct.unpack(f"{bo}{count}{fmt}", buf))
-
-    width, height = values(256)[0], values(257)[0]
-    compression = values(259, [1])[0]
-    spp = values(277, [1])[0]
-    bps = values(258, [8])
-    if compression != 1 or spp not in (1, 3) or any(b != 8 for b in bps):
-        raise NotImplementedError(
-            f"TIFF compression={compression} spp={spp} bits={bps}: only"
-            " uncompressed 8-bit gray/RGB baseline is inside the boundary"
-        )
-    raster = b"".join(
-        content[o : o + c] for o, c in zip(values(273), values(279))
-    )
-    if len(raster) < width * height * spp:
-        raise ValueError("TIFF raster truncated")
-    arr = np.frombuffer(
-        raster[: width * height * spp], dtype=np.uint8
-    ).astype(np.int64)
-    if spp == 3:
-        rgb = arr.reshape(-1, 3)
-        arr = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-    return width, height, bytes(arr.astype(np.uint8))
-
-
-# (rgb, big_endian) TIFF layout cycle
-TIFF_CYCLE = ((False, False), (True, False), (False, True), (True, True))
-
-
-def tiff_media_table(
-    spark, n: int = 8, width: int = 23, height: int = 19
-) -> DataFrame:
-    """Deterministic media table of REAL TIFF payloads cycling through
-    TIFF_CYCLE (rgb, byte order) layouts by media_id."""
-    rows = []
-    for i in range(n):
-        rgb, be = TIFF_CYCLE[i % len(TIFF_CYCLE)]
-        rows.append(
-            (i, "image",
-             bytearray(fake_tiff(width, height, seed=i, rgb=rgb, big_endian=be)),
-             ("image/tiff", f"mem://tiff/{i}.tif"))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def augment_images(
-    media: DataFrame, crop_margin: int = 2, brightness: int = 20
-) -> DataFrame:
-    """Deterministic AUGMENTATION pipeline — the transform pass a vision
-    training pipeline runs between decode and batching: horizontal flip,
-    center crop (crop_margin pixels off each side), brightness shift
-    clamped at 255. All integer ops on the decoded luma grid, one Arrow
-    pass, fixed-size output per row. The positional checksum
-    sum(pixel * ((r*W + c) % 97 + 1)) is ORDER-sensitive, so a wrong
-    flip axis, off-by-one crop, or transposed raster changes it even
-    when the plain sum survives (flips preserve sums)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, pix = _decode_netpbm(bytes(content))
-                a = (
-                    np.frombuffer(pix, dtype=np.uint8)
-                    .reshape(h, w)
-                    .astype(np.int64)
-                )
-                a = a[:, ::-1]  # horizontal flip
-                a = a[
-                    crop_margin : h - crop_margin, crop_margin : w - crop_margin
-                ]  # center crop
-                a = np.minimum(a + brightness, 255)  # brightness, clamped
-                oh, ow = a.shape
-                weights = (
-                    np.arange(oh * ow, dtype=np.int64).reshape(oh, ow) % 97 + 1
-                )
-                rows.append(
-                    (
-                        mid,
-                        ow,
-                        oh,
-                        int(a.sum()),
-                        int(a.sum() * 10000 // (oh * ow)),
-                        int((a * weights).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "out_w", "out_h", "aug_sum",
-                    "aug_mean_e4", "pos_checksum",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        run,
-        "media_id long, out_w long, out_h long, aug_sum long,"
-        " aug_mean_e4 long, pos_checksum long",
     )
 
 
@@ -2649,80 +927,6 @@ def augment_audio(media: DataFrame, gain_num: int = 5, gain_den: int = 4) -> Dat
         run,
         "media_id long, sample_rate long, n_channels long, n_frames long,"
         " n_clipped long, peak_abs long, mean_abs_e3 long, pos_checksum long",
-    )
-
-
-def tile_images(media: DataFrame, tile: int = 8) -> DataFrame:
-    """ViT-style PATCH extraction — the tiling pass a vision training
-    pipeline runs between decode and the patch-embedding matmul: the
-    decoded luma grid splits into non-overlapping tile x tile patches on
-    a floor grid (h//tile rows x w//tile cols; remainder rows/columns
-    are DROPPED, the standard crop-to-multiple convention, and the
-    dropped margins are reported so a lossy config is visible). One row
-    per tile with integer stats and an order-SENSITIVE positional
-    checksum over LOCAL tile coordinates, sum(pixel * ((r*tile + c) % 97
-    + 1)) — a transposed raster, a row/col-swapped grid index, or a
-    tile read in the wrong scan order each changes it even when the
-    plain sum survives. One Arrow pass; output rows per image =
-    (h//tile)*(w//tile), fixed by the geometry, never by content.
-    Images smaller than one tile in either dimension contribute zero
-    rows (the floor grid is empty)."""
-    if tile < 1:
-        raise ValueError(f"tile must be a positive integer, got {tile}")
-
-    # Constant tile-local weight matrix — hoisted out of the per-image
-    # loop (it depends only on `tile`).
-    weights = (
-        np.arange(tile * tile, dtype=np.int64).reshape(tile, tile) % 97 + 1
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                # Full format dispatch (FAKEIMG/netpbm/PNG/GIF/BMP/TIFF/
-                # JPEG), same as the sibling decode operators — not the
-                # netpbm-only parser, whose header error on a PNG blob
-                # would be misleading.
-                w, h, pix = _decode_one(bytes(content))
-                a = (
-                    np.frombuffer(pix, dtype=np.uint8)
-                    .reshape(h, w)
-                    .astype(np.int64)
-                )
-                nr, nc = h // tile, w // tile
-                for tr in range(nr):
-                    for tc in range(nc):
-                        t = a[
-                            tr * tile : (tr + 1) * tile,
-                            tc * tile : (tc + 1) * tile,
-                        ]
-                        rows.append(
-                            (
-                                mid,
-                                tr,
-                                tc,
-                                int(t.sum()),
-                                int(t.sum() * 10000 // (tile * tile)),
-                                int((t * weights).sum()),
-                                h - nr * tile,
-                                w - nc * tile,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "tile_row", "tile_col", "tile_sum",
-                    "tile_mean_e4", "pos_checksum", "dropped_rows",
-                    "dropped_cols",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        run,
-        "media_id long, tile_row long, tile_col long, tile_sum long,"
-        " tile_mean_e4 long, pos_checksum long, dropped_rows long,"
-        " dropped_cols long",
     )
 
 

@@ -1,16 +1,21 @@
-"""Registry entries that exercise the streaming and multimodal surfaces
+"""Registry entries that exercise the streaming and audio surfaces
 through the driver's correctness gate.
 
-- stream_tumbling_hourly runs a REAL Structured Streaming job
-  (readStream → watermark → window → memory sink, Trigger.AvailableNow)
-  and returns the materialized result; its oracle is plain SQL because a
-  finite replayed stream must agree exactly with the batch computation.
-- mm_* run the multimodal mapInPandas pipelines over the deterministic
-  in-memory media table. The FAKEIMG codec is not expressible in SQL, but
-  it IS deterministic, so the oracles read golden-fixture parquet
-  precomputed by an independent pure-numpy implementation
-  (tools/make_multimodal_golden.py) — full hash-matched rows, not
-  rows-only checks.
+Every stream_* entry runs a REAL Structured Streaming job (readStream →
+watermark / state → sink, Trigger.AvailableNow) over replayed events or
+documents files and returns the materialized result. Its oracle is
+plain SQL, because a finite replayed stream must agree exactly with the
+batch computation: windowed and session aggregates, watermark
+dedup, stateful per-key totals, stream-stream and stream-static joins,
+the dedup admission filter, CDC snapshots, lateness accounting, and the
+HLL / CMS / PSI sketches maintained as bounded streaming state.
+
+Every mm_* entry runs the audio mapInPandas pipelines
+(operators/multimodal.py) over deterministic in-memory WAV tables. The
+codec is not expressible in SQL, but it IS deterministic, so the oracles
+read golden-fixture parquet precomputed by an independent pure-numpy
+implementation (tools/make_multimodal_golden.py) — full hash-matched
+rows, not rows-only checks.
 """
 
 from __future__ import annotations
@@ -18,10 +23,6 @@ from __future__ import annotations
 import os
 
 from gtec_etl_spark.plans.registry import query
-
-_MM_GOLDEN = os.path.abspath(
-    os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "multimodal")
-)
 
 
 @query(
@@ -150,114 +151,6 @@ def stream_stateful_user_totals(spark, sf_dir):
             F.expr("max_by(total_value, n_events)").alias("total_value"),
         )
         .orderBy("user_id")
-    )
-
-
-@query(
-    "mm_decode_features",
-    oracle=f"""
-    SELECT media_id, width, height, n_pixels, mean_intensity, embedding_mass
-    FROM '{_MM_GOLDEN}/mm_decode_features.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_features(spark, sf_dir):
-    """Multimodal pipeline: deterministic media table → decode (FAKEIMG
-    stub codec) → byte-histogram embedding; joined summary per media row.
-    Plumbing (Arrow batches, schemas, 1:1 and 1:N shapes) is the real
-    engine surface; the codec alone is stubbed. Oracle = golden fixture
-    recomputed independently in numpy (tools/make_multimodal_golden.py)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.media_table(spark, n=16, width=32, height=24)
-    decoded = M.decode_image(media)
-    emb = M.byte_histogram_features(media, bins=8)
-    return (
-        decoded.join(emb, "media_id")
-        .select(
-            "media_id", "width", "height", "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-            F.round(F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x), 4).alias(
-                "embedding_mass"
-            ),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_resize_frame_sample",
-    oracle=f"""
-    SELECT media_id, n_frames, total_bytes, avg_frame_intensity
-    FROM '{_MM_GOLDEN}/mm_resize_frame_sample.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_resize_frame_sample(spark, sf_dir):
-    """Composed media pipeline: resize (decode → nearest-neighbor grid →
-    re-encode, 1:1 mapInPandas) then frame-sampling (1:N row expansion —
-    the video stand-in), summarized per media row. Exercises that media
-    passes COMPOSE: the re-encoded container from one Arrow-batched pass
-    is the direct input of the next, with no driver round-trip. Oracle =
-    golden fixture recomputed independently in numpy
-    (tools/make_multimodal_golden.py)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.media_table(spark, n=12, width=64, height=48)
-    small = M.resize_image(media, 16, 12)
-    frames = M.frame_sample(small, every_n_bytes=64)
-    return (
-        frames.groupBy("media_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_frames"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.round(F.avg("mean_byte"), 4).alias("avg_frame_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_ppm",
-    oracle=f"""
-    SELECT media_id, fmt, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_ppm.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_ppm(spark, sf_dir):
-    """REAL public image format through the media pipeline: deterministic
-    netpbm files (binary/ASCII x RGB/gray, including a maxval-rescale
-    case) decoded by the dependency-free pure-Python decoder
-    (operators/multimodal.py:_decode_netpbm) — the round-6 closure of the
-    codec stub: NotImplementedError is now reachable only for genuinely
-    compressed formats (PNG/JPEG need PIL). Oracle = golden fixture
-    recomputed independently from the LCG value stream WITHOUT the parser
-    (tools/make_multimodal_golden.py:decode_ppm_golden)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.netpbm_media_table(spark, n=12, width=31, height=17)
-    fmts = F.array(*[F.lit(f) for f, _ in M.NETPBM_CYCLE])
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(fmts, (F.col("media_id") % 4 + 1).cast("int")).alias("fmt"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
     )
 
 
@@ -496,581 +389,6 @@ def stream_dedup_admission(spark, sf_dir):
     return out.distinct().orderBy("doc_id")
 
 
-@query(
-    "mm_decode_jpeg",
-    oracle=f"""
-    SELECT media_id, layout, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_jpeg.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_jpeg(spark, sf_dir):
-    """DCT-compressed real image format through the media pipeline with
-    no image library: deterministic baseline JPEG files (grayscale /
-    4:4:4 / 4:2:0 / 4:2:0-with-restart-markers, cycling by media_id)
-    decoded by the pure numpy/stdlib SOF0 decoder (operators/jpeg.py:
-    segment parse, canonical Huffman from the file's own DHT,
-    byte-unstuffed entropy runs, dequant + IDCT) inside the Arrow-
-    batched mapInPandas pass — round 8 closes the last declared codec
-    frontier (r6 netpbm -> r6 PNG -> r7 palette -> r8 16-bit/Adam7 PNG
-    + JPEG). Round 9 closed SOF2 too (see
-    mm_decode_jpeg_progressive) and 12-bit precision
-    (mm_decode_jpeg_12bit); the remaining boundary is arithmetic /
-    hierarchical JPEG. Oracle = golden
-    fixture recomputing the lossy DCT math in pure numpy WITHOUT the
-    codec's bitstream layer (tools/make_multimodal_golden.py:
-    decode_jpeg_golden), so Huffman/stuffing/restart handling is what
-    the hash gate actually checks."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.jpeg_media_table(spark, n=12, width=24, height=17)
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            (F.col("media_id") % len(M.JPEG_CYCLE)).cast("long").alias("layout"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_png",
-    oracle=f"""
-    SELECT media_id, color_type, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_png.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_png(spark, sf_dir):
-    """COMPRESSED real image format through the media pipeline with no
-    image library: deterministic PNG files (gray / RGB / gray+alpha /
-    RGBA / palette-PLTE, rows cycling all five scanline filters) decoded
-    by the pure-stdlib zlib decoder
-    (operators/multimodal.py:_decode_png) inside the Arrow-batched
-    mapInPandas pass — round-6 extended the codec boundary past the
-    uncompressed netpbm family, round-7 past indexed color, round-8
-    past 16-bit depth and Adam7 interlacing (and past JPEG entirely,
-    see mm_decode_jpeg), round-9 past sub-byte depths (see
-    mm_decode_png_subbyte) — for PNG only spec-ILLEGAL combinations
-    remain outside. Oracle = golden fixture recomputed independently
-    from the LCG value stream WITHOUT the encoder or decoder
-    (tools/make_multimodal_golden.py:decode_png_golden)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.png_media_table(spark, n=12, width=23, height=19)
-    ctypes = F.array(*[F.lit(c) for c in M.PNG_CYCLE])
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(
-                ctypes,
-                (F.col("media_id") % len(M.PNG_CYCLE) + 1).cast("int"),
-            )
-            .cast("long")
-            .alias("color_type"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_jpeg_12bit",
-    oracle=f"""
-    SELECT media_id, layout, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_jpeg12.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_jpeg_12bit(spark, sf_dir):
-    """EXTENDED-PRECISION (12-bit) baseline JPEG — the mode scientific and
-    medical imagery uses — through the same pure-numpy decoder: level
-    shift 2048, sample range 0-4095, file-carried extended Huffman tables
-    (DC diff categories to 15, AC size categories to 14 per spec Table
-    F.2), luma collapsed to 8 bits by clip-then->>4 for the mm_*
-    pipeline. Layout cycle: gray, gray+restart markers, 4:4:4, 4:2:0.
-    With this the JPEG NotImplementedError boundary shrinks to arithmetic
-    coding and hierarchical/lossless SOF variants. Oracle = golden
-    recomputing the 12-bit lossy math codec-free
-    (tools/make_multimodal_golden.py:decode_jpeg12_golden)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.jpeg12_media_table(spark, n=12, width=24, height=17)
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            (F.col("media_id") % 4).cast("long").alias("layout"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_jpeg_progressive",
-    oracle=f"""
-    SELECT media_id, layout, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_jpeg_prog.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_jpeg_progressive(spark, sf_dir):
-    """PROGRESSIVE JPEG (SOF2) through the media pipeline — the last
-    declared codec frontier, closed dependency-free: the spec G.1.2
-    scan machinery (interleaved DC first scan, per-component spectral-
-    selection AC bands, successive-approximation refinement with EOB-run
-    accumulation and buffered correction bits) decoded into per-block
-    coefficient state, then the SAME dequant + IDCT as baseline
-    (operators/jpeg.py:_decode_progressive). Layout cycle: gray, gray
-    coarse-quant (sparse bands — EOB-run heavy), 4:4:4, 4:2:0; the
-    matching fixture encoder emits a libjpeg-style 2+4n scan script;
-    tests/test_multimodal.py::test_jpeg_progressive_roundtrip_exact pins
-    encoder/decoder exactness against the codec-free DCT math across
-    gray/4:4:4/4:2:0, dense and EOB-run-heavy sparse quants, and
-    non-MCU-multiple sizes (a wider 210-combo dev sweep passed before
-    commit; the suite keeps the 6 boundary-heavy cases). The remaining JPEG
-    boundary: arithmetic coding and hierarchical/lossless SOF variants
-    (12-bit closed by mm_decode_jpeg_12bit). Oracle = golden recomputing the lossy math only
-    (tools/make_multimodal_golden.py:decode_jpeg_prog_golden) — the
-    bitstream layer is exactly what the hash gate checks."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.jpeg_prog_media_table(spark, n=12, width=24, height=17)
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            (F.col("media_id") % 4).cast("long").alias("layout"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_png_subbyte",
-    oracle=f"""
-    SELECT media_id, color_type, bit_depth, interlace, width, height,
-           n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_png_subbyte.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_png_subbyte(spark, sf_dir):
-    """Sub-byte PNG through the same pure-stdlib decoder: every spec-legal
-    1/2/4-bit layout (gray + indexed, plain + Adam7) — closing the LAST
-    declared PNG frontier (the r8 boundary stopped at 8-bit). Packed
-    MSB-first bit groups unfilter BYTEWISE with pixel offset 1 (the spec's
-    sub-byte rule), then unpack vectorized (np.unpackbits) with the
-    integral 255/(2^d-1) gray scale or the 2^d-entry PLTE lookup. The PNG
-    NotImplementedError boundary is now empty except spec-ILLEGAL
-    combinations. Oracle = golden fixture recomputed from the LCG stream
-    WITHOUT the encoder or decoder
-    (tools/make_multimodal_golden.py:decode_png_subbyte_golden)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.png_subbyte_media_table(spark, n=12, width=23, height=19)
-    cyc = M.PNG_SUBBYTE_CYCLE
-    ctypes = F.array(*[F.lit(c) for c, _, _ in cyc])
-    depths = F.array(*[F.lit(d) for _, d, _ in cyc])
-    ils = F.array(*[F.lit(i) for _, _, i in cyc])
-    pos = (F.col("media_id") % len(cyc) + 1).cast("int")
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(ctypes, pos).cast("long").alias("color_type"),
-            F.element_at(depths, pos).cast("long").alias("bit_depth"),
-            F.element_at(ils, pos).cast("long").alias("interlace"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_wav",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav(spark, sf_dir):
-    """AUDIO through the media pipeline with a REAL dependency-free codec:
-    deterministic RIFF/WAVE PCM clips (8/16-bit x mono/stereo, canonical
-    headers any WAV reader opens — tests cross-check against stdlib
-    `wave`) parsed by the pure-struct chunk walker
-    (operators/multimodal.py:_decode_wav) inside the same Arrow-batched
-    mapInPandas boundary as the image decoders; emitted stats are exact
-    integers (peak, 1000x mean |amplitude|), so no float parity games.
-    The audio NotImplementedError boundary now covers only ADPCM
-    (mm_decode_wav_deep exercises the wide 24/32-bit and float32
-    layouts; mm_decode_wav_g711 the companded and float64 ones). Oracle = golden fixture recomputed straight
-    from the LCG sample stream WITHOUT the RIFF writer or parser
-    (tools/make_multimodal_golden.py:decode_wav_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_g711",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_g711.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_g711(spark, sf_dir):
-    """TELEPHONY audio through the chunk walker: G.711 a-law and mu-law
-    companded clips (format 6/7 — the classic 8 kHz codecs, expanded by
-    the exact integer segment formulas, sign conventions and all: a-law's
-    set sign bit means POSITIVE, mu-law's means negative) plus IEEE
-    float64 (format 3, 64-bit), mono/stereo. The WAV NotImplementedError
-    boundary is now ADPCM only. Oracle = golden recomputing compress +
-    expand from the LCG stream with INDEPENDENT G.711 implementations
-    (tools/make_multimodal_golden.py:decode_wav_g711_golden), so the
-    formulas are cross-checked, not self-certified."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_g711_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-def _banded_hamming_oracle(src: str, n_bands: int, band_bits: int, max_h: int) -> str:
-    """DuckDB twin of operators/multimodal.py:banded_hamming_pairs."""
-    mask = (1 << band_bits) - 1
-    return f"""
-    WITH ph AS (SELECT media_id, phash FROM {src}),
-    bands AS (
-      SELECT media_id, phash, b, (phash >> ({band_bits} * b)) & {mask} AS band
-      FROM ph, range(0, {n_bands}) t(b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.media_id AS a_id, b.media_id AS b_id,
-             a.phash AS a_hash, b.phash AS b_hash
-      FROM bands a JOIN bands b ON a.b = b.b AND a.band = b.band
-       AND a.media_id < b.media_id
-    )
-    SELECT a_id, b_id, CAST(bit_count(xor(a_hash, b_hash)) AS BIGINT) AS hamming
-    FROM cand WHERE bit_count(xor(a_hash, b_hash)) <= {max_h}
-    ORDER BY a_id, b_id
-    """
-
-
-@query(
-    "mm_phash_neardup",
-    oracle=_banded_hamming_oracle(f"'{_MM_GOLDEN}/mm_phash.parquet'", 8, 8, 6),
-    tags=("multimodal", "dedup"),
-)
-def mm_phash_neardup(spark, sf_dir):
-    """PERCEPTUAL near-duplicate image detection — the multimodal twin of
-    dedup_simhash: every image (real PNGs through the real decoder) maps
-    to a 63-bit integer Walsh-Hadamard perceptual hash
-    (operators/multimodal.py:wht_phash64 — WHT instead of the classic
-    DCT so every step is EXACT integer arithmetic and both engines agree
-    bit-for-bit), candidate pairs come from an 8x8-bit BAND equi-join
-    (pigeonhole: any pair within Hamming distance 7 shares at least one
-    of 8 bands — never all-pairs, the same blocking shape that makes
-    SimHash scale), and candidates verify with bit_count(xor) <= 6.
-    Fixture: 12 grayscale originals + 12 slightly-perturbed re-encodes;
-    the measured margin is dup pairs <= 6 vs cross pairs >= 16. At 100 TB
-    the band join shuffles on (band_idx, band_value) — bounded bucket
-    sizes for non-adversarial corpora; wider bands + multiprobe are the
-    pressure valve. Oracle = the same banded SQL over a golden hash
-    table recomputed with an INDEPENDENT Hadamard-matrix-product
-    implementation (tools/make_multimodal_golden.py:decode_phash_golden
-    — never imports the operator module)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.phash_media_table(spark, n_base=12, width=24, height=24)
-    return M.banded_hamming_pairs(
-        M.image_phash(media), n_bands=8, band_bits=8, max_hamming=6
-    ).orderBy("a_id", "b_id")
-
-
-@query(
-    "mm_audio_fingerprint",
-    oracle=_banded_hamming_oracle(f"'{_MM_GOLDEN}/mm_audio_fp.parquet'", 8, 8, 6),
-    tags=("multimodal", "dedup"),
-)
-def mm_audio_fingerprint(spark, sf_dir):
-    """AUDIO near-duplicate detection — the acoustic sibling of
-    mm_phash_neardup: every clip (real WAVs through the real chunk-walker
-    decoder) maps to a 63-bit integer envelope fingerprint
-    (operators/multimodal.py:audio_wht_fp64 — absolute-amplitude sums
-    over 64 windows, integer Walsh-Hadamard, strict-median sign bits;
-    window sums over hundreds of samples make it robust to sample-level
-    noise while staying EXACT integer arithmetic), then the same shared
-    8x8-bit banded Hamming join (banded_hamming_pairs — pigeonhole
-    covers distance <= 7, never all-pairs) verifies bit_count(xor) <= 6.
-    Fixture: 12 originals + 12 noise-perturbed re-encodes; measured
-    margin dup <= 2 vs cross >= 20. Oracle = the same banded SQL over a
-    golden fingerprint table recomputed with an INDEPENDENT
-    Hadamard-matrix-product implementation
-    (tools/make_multimodal_golden.py:audio_fp_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.audio_fp_media_table(spark, n_base=12, n_frames=1920)
-    return M.banded_hamming_pairs(
-        M.audio_fingerprint(media), n_bands=8, band_bits=8, max_hamming=6
-    ).orderBy("a_id", "b_id")
-
-
-@query(
-    "mm_decode_tiff",
-    oracle=f"""
-    SELECT media_id, rgb, big_endian, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_tiff.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_tiff(spark, sf_dir):
-    """TIFF through the media pipeline: baseline uncompressed layouts in
-    BOTH byte orders ('II' little / 'MM' big — the tag-directory walker
-    must honor the header's endianness for every field), 8-bit gray and
-    RGB, multi-strip rasters with out-of-line offset/count arrays,
-    decoded by a pure-stdlib IFD walker
-    (operators/multimodal.py:_decode_tiff) to the shared BT.601 luma.
-    Compression/16-bit raise NotImplementedError. Oracle = golden
-    recomputing the LCG streams (uncompressed = lossless, so the
-    IFD/strip logic is exactly what the hash gate tests)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.tiff_media_table(spark, n=8, width=23, height=19)
-    rgbs = F.array(*[F.lit(int(r)) for r, _ in M.TIFF_CYCLE])
-    bes = F.array(*[F.lit(int(b)) for _, b in M.TIFF_CYCLE])
-    pos = (F.col("media_id") % len(M.TIFF_CYCLE) + 1).cast("int")
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(rgbs, pos).cast("long").alias("rgb"),
-            F.element_at(bes, pos).cast("long").alias("big_endian"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_bmp",
-    oracle=f"""
-    SELECT media_id, bpp, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_bmp.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_bmp(spark, sf_dir):
-    """BMP through the media pipeline: the classic uncompressed Windows
-    layouts (24-bit BGR and 8-bit indexed with a BGRA palette),
-    bottom-up row order, 4-byte stride padding, decoded by a pure-stdlib
-    walker (operators/multimodal.py:_decode_bmp) to the shared BT.601
-    luma. Oracle = golden recomputing the LCG BGR/palette streams
-    (uncompressed = lossless, so the header/stride logic is exactly what
-    the hash gate tests)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.bmp_media_table(spark, n=8, width=23, height=19)
-    bpps = F.array(*[F.lit(b) for b in M.BMP_CYCLE])
-    pos = (F.col("media_id") % len(M.BMP_CYCLE) + 1).cast("int")
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(bpps, pos).cast("long").alias("bpp"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_gif",
-    oracle=f"""
-    SELECT media_id, depth, interlace, width, height, n_pixels, mean_intensity
-    FROM '{_MM_GOLDEN}/mm_decode_gif.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_gif(spark, sf_dir):
-    """GIF through the media pipeline with a REAL dependency-free codec:
-    deterministic GIF89a files (logical screen descriptor, 2^depth global
-    color tables, a graphic-control extension the walker must skip,
-    four-pass interlacing) inflated by a pure-stdlib variable-width LZW
-    decoder (operators/multimodal.py:_gif_lzw_decode — clear/EOI codes,
-    the KwKwK self-reference, width growth at next_free == 1 << width,
-    12-bit table freeze) and projected through the palette to the same
-    BT.601 luma as the PNG path. The fixture encoder is a REAL LZW
-    compressor (dictionary growth + 12-bit reset, hand-checked against a
-    spec vector in tests). Oracle = golden recomputing palette + indices
-    straight from the LCG (LZW is lossless, so the coder is exactly what
-    the hash gate tests)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.gif_media_table(spark, n=12, width=23, height=19)
-    cyc = M.GIF_CYCLE
-    depths = F.array(*[F.lit(d) for d, _ in cyc])
-    ils = F.array(*[F.lit(int(i)) for _, i in cyc])
-    pos = (F.col("media_id") % len(cyc) + 1).cast("int")
-    return (
-        M.decode_image(media)
-        .select(
-            "media_id",
-            F.element_at(depths, pos).cast("long").alias("depth"),
-            F.element_at(ils, pos).cast("long").alias("interlace"),
-            "width",
-            "height",
-            "n_pixels",
-            F.round("mean_intensity", 4).alias("mean_intensity"),
-        )
-        .orderBy("media_id")
-    )
-
-
-@query(
-    "mm_decode_video_mjpeg",
-    oracle=f"""
-    SELECT media_id, width, height, fps, n_frames, frames_decoded, total_luma
-    FROM '{_MM_GOLDEN}/mm_video.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_video_mjpeg(spark, sf_dir):
-    """VIDEO through the media pipeline with a REAL container + REAL
-    codec: deterministic AVI files (RIFF 'AVI ' — hdrl/avih/strh/strf
-    headers, movi LIST of '00dc' chunks) each carrying an MJPEG stream
-    of real baseline JPEGs, parsed by a pure-stdlib chunk-tree walker
-    (operators/multimodal.py:_decode_avi — the WAV walker's contract
-    lifted to nested LISTs) with every SECOND frame decoded by the
-    proven JPEG decoder (frame-sample, don't exhaust — the video
-    pipeline's first rule). Exact fps from strh dwRate/dwScale; emitted
-    stats are exact integers (declared vs decoded frame counts, total
-    luma over sampled frames). Oracle = golden recomputing the sampled
-    frames with the codec-free flat-quant DCT math — byte-exact against
-    the real entropy decode (tools/make_multimodal_golden.py:
-    decode_video_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.avi_media_table(spark, n=8)
-    return M.decode_video(media, frame_stride=2).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_adpcm",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_adpcm.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_adpcm(spark, sf_dir):
-    """COMPRESSED audio through the chunk walker: IMA-ADPCM (format 17,
-    4-byte per-channel block headers + low-nibble-first codes, step-index
-    carried across blocks) and MS-ADPCM (format 2, seven standard 8.8
-    fixed-point predictor pairs, high-nibble-first round-robin codes,
-    sample2-then-sample1 block seeds), mono/stereo, several block sizes.
-    This closes the WAV NotImplementedError boundary to genuinely
-    library-grade formats (MP3, extensible). Oracle = golden recomputing
-    both codecs' quantize+reconstruct loops from spec tables alone
-    (tools/make_multimodal_golden.py:decode_wav_adpcm_golden — never
-    imports the operator module), exploiting that ADPCM decoder state
-    mirrors encoder state, so the decoded stream IS the encoder's
-    reconstruction track."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_adpcm_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_deep",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_deep.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_deep(spark, sf_dir):
-    """The WIDE audio layouts through the same pure-struct WAV chunk
-    walker: 24-bit and 32-bit integer PCM plus IEEE float32 (format 3),
-    mono/stereo — closing the round-8 boundary that stopped at 8/16-bit.
-    Float samples are v/32768 values (exactly representable), decoded by
-    *32768 truncation into the same integer amplitude domain as the
-    16-bit clips, so the stats stay exact integers; 24-bit rasters are
-    3-byte two's-complement triplets reassembled vectorized (numpy
-    byte-shift, no per-sample Python). The remaining NotImplementedError
-    boundary is ADPCM, a-law/mu-law, and float64. Oracle = golden fixture
-    recomputed straight from the LCG stream WITHOUT the RIFF writer or
-    parser (tools/make_multimodal_golden.py:decode_wav_deep_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_deep_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
 from gtec_etl_spark.plans.incremental_queries import CDC_ORACLE_SQL
 
 
@@ -1139,139 +457,7 @@ def stream_cdc_snapshot(spark, sf_dir):
 
 
 
-@query(
-    "mm_audio_rms_windows",
-    oracle=f"""
-    SELECT media_id, window_idx, n_frames, energy, peak_abs, rms_e3
-    FROM '{_MM_GOLDEN}/mm_audio_rms_windows.parquet'
-    ORDER BY media_id, window_idx
-    """,
-    tags=("multimodal",),
-)
-def mm_audio_rms_windows(spark, sf_dir):
-    """Windowed audio feature extraction over real WAV clips: tumbling
-    160-frame windows -> exact integer energy, peak, and isqrt-based
-    RMS (no float sqrt, engine-independent) through the Arrow-batched
-    codec boundary — the audio counterpart of the image byte-histogram
-    features. Oracle = golden fixture recomputed from the LCG sample
-    stream without the RIFF writer, parser, or windowing code
-    (tools/make_multimodal_golden.py:audio_rms_windows_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.audio_rms_windows(media, window_frames=160).orderBy(
-        "media_id", "window_idx"
-    )
-
-
 NEARDUP_COS_E6_MIN = 999_990
-
-
-@query(
-    "mm_image_neardup",
-    oracle=f"""
-    WITH h AS (
-      SELECT media_id, hist,
-             list_reduce(list_transform(generate_series(1, 16),
-                         i -> hist[i] * hist[i]), (x, y) -> x + y) AS n2
-      FROM '{_MM_GOLDEN}/mm_image_hist.parquet'
-    )
-    SELECT a.media_id AS a_id, b.media_id AS b_id,
-           CAST(floor(
-             CAST(list_reduce(list_transform(generate_series(1, 16),
-                  i -> a.hist[i] * b.hist[i]), (x, y) -> x + y) AS DOUBLE)
-             / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE))
-             * 1000000 + 0.5
-           ) AS BIGINT) AS cos_e6
-    FROM h a JOIN h b ON a.media_id < b.media_id
-    WHERE CAST(list_reduce(list_transform(generate_series(1, 16),
-               i -> a.hist[i] * b.hist[i]), (x, y) -> x + y) AS DOUBLE)
-          / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE))
-          * 1000000 + 0.5 >= {NEARDUP_COS_E6_MIN}
-    ORDER BY a_id, b_id
-    """,
-    tags=("multimodal", "dedup"),
-)
-def mm_image_neardup(spark, sf_dir):
-    """Multimodal near-duplicate detection END TO END: binary images ->
-    integer byte-histogram signatures (Arrow codec boundary) -> pairwise
-    integer-cosine >= {NEARDUP_COS_E6_MIN}/1e6 — the operators/multimodal
-    x operators/similarity composition an image-dedup pipeline runs. The
-    16-row media table plants four EXACT duplicates (ids 12-15 reuse
-    seeds 0-3), which must surface at cos_e6 = 1000000; each seed's bytes
-    are skewed onto a distinct support (bins 0..seed), so non-duplicate
-    pairs cap at cos ~ 0.96 — comfortably under the threshold on both
-    engines (identical int dot + one IEEE divide/sqrt).
-
-    At scale the pairwise stage is never all-pairs: the histogram
-    signature feeds the blocked/banded candidate generators
-    (dedup_embedding_cosine's gram kernel, LSH buckets); the fixture
-    size here keeps the oracle exact. Oracle = pair SQL over the golden
-    histograms recomputed with an independent binning formulation
-    (tools/make_multimodal_golden.py:image_hist_golden)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-    from gtec_etl_spark.operators import similarity as S
-
-    import numpy as np
-
-    rows = []
-    for i in range(16):
-        seed = i % 12
-        raw = M.fake_image(32, 24, seed=seed)
-        # Skew each seed's byte distribution to a distinct support
-        # (mod 16*(seed+1) -> histogram bins 0..seed): duplicates stay
-        # bit-identical, distinct seeds land well under the threshold
-        # (adjacent supports cos ~ sqrt(k/(k+1)) <= 0.96) — uniform LCG
-        # noise alone is NOT discriminative (all histograms converge).
-        pix = np.frombuffer(raw[15:], dtype=np.uint8) % (16 * (seed + 1))
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(raw[:15] + pix.astype(np.uint8).tobytes()),
-                ("image/x-fake", f"mem://img/{i}"),
-            )
-        )
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    # Materialize the tiny signature table ONCE on one partition: without
-    # this, the self-join's two sides each re-run the Arrow decode per
-    # task and Catalyst plans a CartesianProduct over 32x32 partitions
-    # (1024 tasks, each paying Python-worker startup — 35 s for 16 rows).
-    # After repartition(1)+eager localCheckpoint+broadcast the plan is a
-    # single-task BroadcastNestedLoopJoin over the cached 16 rows.
-    # repartition, NOT coalesce: coalesce(1) pulls the Python stage's 32
-    # parent partitions into one task that sets up a PythonRunner PER
-    # PARENT (~5 s of sequential handshakes); the tiny shuffle keeps the
-    # Arrow stage 32-way parallel (measured 5.1 s -> 1.1 s warm).
-    h = (
-        M.byte_histogram_counts(media, bins=16)
-        .withColumn("n2", S.dot_int(F.col("hist"), F.col("hist")))
-        .repartition(1)
-        .localCheckpoint(eager=True)
-    )
-    a = h.select(
-        F.col("media_id").alias("a_id"),
-        F.col("hist").alias("a_h"),
-        F.col("n2").alias("a_n2"),
-    )
-    b = h.select(
-        F.col("media_id").alias("b_id"),
-        F.col("hist").alias("b_h"),
-        F.col("n2").alias("b_n2"),
-    )
-    cos_scaled = S.dot_int(F.col("a_h"), F.col("b_h")).cast("double") / F.sqrt(
-        F.col("a_n2").cast("double") * F.col("b_n2").cast("double")
-    ) * F.lit(1000000) + F.lit(0.5)
-    return (
-        a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
-        .filter(cos_scaled >= F.lit(NEARDUP_COS_E6_MIN))
-        .select(
-            "a_id", "b_id", F.floor(cos_scaled).cast("long").alias("cos_e6")
-        )
-        .orderBy("a_id", "b_id")
-    )
 
 
 def _stream_hll_oracle() -> str:
@@ -1610,126 +796,6 @@ def stream_lateness_report(spark, sf_dir):
     ).orderBy("batch_id")
 
 
-@query(
-    "mm_video_shot_detect",
-    oracle=f"""
-    SELECT media_id, width, height, n_frames, n_shot_cuts, max_l1, total_l1
-    FROM '{_MM_GOLDEN}/mm_video_shots.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_video_shot_detect(spark, sf_dir):
-    """SHOT-BOUNDARY detection over scene-structured MJPEG video — the
-    first video-analysis pass a training pipeline runs before frame
-    sampling (sample per SHOT, not per clip, or a 2-hour static scene
-    contributes 7200 near-identical frames). Clips are runs of 3
-    identical frames with hard cuts between runs, where a cut moves the
-    luma DISTRIBUTION (alternating value ranges) — deliberately so,
-    because two independent full-range noise planes have near-identical
-    histograms and a histogram detector that 'passed' on them would be
-    vacuous. Detector: per-frame 16-bin luma histogram (byte >> 4, exact
-    integers), L1 distance between consecutive frames, cut when
-    2*L1 > n_pixels; per-clip output is (cuts, L1 extrema) — fixed-size
-    regardless of clip length, computed in one Arrow pass
-    (operators/multimodal.py:detect_shots). Oracle = golden recomputing
-    every frame with the codec-free flat-quant DCT math
-    (tools/make_multimodal_golden.py:video_shot_golden — container, JPEG
-    bitstream, and operator module never touched)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.scene_avi_media_table(spark, n=8)
-    return M.detect_shots(media).orderBy("media_id")
-
-
-@query(
-    "mm_image_augment",
-    oracle=f"""
-    SELECT media_id, out_w, out_h, aug_sum, aug_mean_e4, pos_checksum
-    FROM '{_MM_GOLDEN}/mm_image_augment.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_image_augment(spark, sf_dir):
-    """Deterministic image AUGMENTATION — the transform pass a vision
-    training pipeline runs between decode and batching: horizontal flip,
-    center crop (2 px each side), brightness +20 clamped at 255, over the
-    real netpbm media table (all four P2/P3/P5/P6 layouts through the
-    dependency-free decoder). All integer ops in one Arrow pass
-    (operators/multimodal.py:augment_images); the positional checksum
-    sum(pixel * ((r*W+c) % 97 + 1)) is order-SENSITIVE, so a wrong flip
-    axis, an off-by-one crop, or a transposed raster fails the gate even
-    though flips preserve plain sums. Oracle = golden recomputing the
-    same transforms from the LCG value stream without the parser
-    (tools/make_multimodal_golden.py:image_augment_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.netpbm_media_table(spark, n=12, width=31, height=17)
-    return M.augment_images(media).orderBy("media_id")
-
-
-@query(
-    "mm_audio_augment",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, n_frames, n_clipped,
-           peak_abs, mean_abs_e3, pos_checksum
-    FROM '{_MM_GOLDEN}/mm_audio_augment.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_audio_augment(spark, sf_dir):
-    """Deterministic AUDIO augmentation — gain 5/4 with truncate-toward-
-    zero integer scaling, int16 clipping (clipped-sample count reported —
-    the distortion metric an augmentation pass monitors), post-gain
-    amplitude stats, and an order-sensitive positional checksum over the
-    interleaved sample stream (a channel swap or reorder fails the gate
-    even when amplitude stats survive), over the real 8/16-bit
-    mono/stereo WAV clips through the RIFF chunk walker. One Arrow pass
-    (operators/multimodal.py:augment_audio). Oracle = golden recomputing
-    the transforms from the LCG sample stream without the parser
-    (tools/make_multimodal_golden.py:audio_augment_golden). Note
-    |clip(-32768)| = 32768: the int16 floor's absolute value exceeds the
-    ceiling — both sides state it identically."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.augment_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_image_tiles",
-    oracle=f"""
-    SELECT media_id, tile_row, tile_col, tile_sum, tile_mean_e4,
-           pos_checksum, dropped_rows, dropped_cols
-    FROM '{_MM_GOLDEN}/mm_image_tiles.parquet'
-    ORDER BY media_id, tile_row, tile_col
-    """,
-    tags=("multimodal",),
-)
-def mm_image_tiles(spark, sf_dir):
-    """ViT-style PATCH extraction over the real netpbm media table — the
-    tiling pass between decode and the patch-embedding matmul: each
-    decoded luma grid splits into non-overlapping 8x8 tiles on a floor
-    grid (remainder rows/cols dropped and REPORTED — a silently lossy
-    crop config is the kind of data bug a curation pipeline must
-    surface). Per tile: integer sum/mean and a positional checksum over
-    LOCAL tile coordinates, so a transposed raster, a swapped grid
-    index, or a wrong scan order fails the gate even when plain sums
-    survive. One Arrow pass (operators/multimodal.py:tile_images);
-    output cardinality is fixed by geometry (6 tiles x 12 images), not
-    content. Oracle = golden recomputing every tile from the LCG value
-    stream without the parser
-    (tools/make_multimodal_golden.py:image_tiles_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.netpbm_media_table(spark, n=12, width=31, height=17)
-    return M.tile_images(media, tile=8).orderBy(
-        "media_id", "tile_row", "tile_col"
-    )
-
-
 def _stream_cms_oracle() -> str:
     from gtec_etl_spark.functions.hashing import MINHASH_P, hash60_sql
     from gtec_etl_spark.plans.sketch_queries import (
@@ -1862,6 +928,298 @@ def stream_cms_heavy(spark, sf_dir):
     )
 
 
+def _stream_psi_oracle() -> str:
+    from gtec_etl_spark.plans.profile_queries import _psi_oracle_sql
+
+    return _psi_oracle_sql()
+
+
+@query(
+    "stream_psi_drift",
+    oracle=_stream_psi_oracle(),
+    tags=("streaming", "live", "quality"),
+)
+def stream_psi_drift(spark, sf_dir):
+    """PSI drift monitoring MAINTAINED BY A REAL STREAMING JOB — the
+    third bounded-state streaming topology after the HLL registers and
+    the CMS cells, and the smallest: events replay through readStream,
+    each maps to its (value bucket, reference/current window) cell, and
+    a streaming groupBy keeps the bucket-count grid (state = bucket x
+    window cells — ~20 rows forever, the
+    dashboard-counter a drift monitor actually maintains between model
+    refreshes). Finalization — add-one smoothing, micro-nat ln
+    decomposition, e9 probabilities — is the EXACT code path of
+    prof_drift_psi (psi_from_counts, shared function), so on a finite
+    replay the report equals the batch query and ONE oracle states
+    both; cell-count addition is a monoid, so any micro-batch split
+    reconciles."""
+    from pyspark.sql import functions as F
+
+    from gtec_etl_spark.plans.profile_queries import (
+        PSI_BUCKET_W,
+        PSI_NBUCKETS,
+        PSI_SPLIT_TS,
+        psi_from_counts,
+    )
+    from gtec_etl_spark.streaming import pipelines as P
+
+    with P.state_partitions(spark, 8):
+        cells = (
+            P.read_events_stream(spark, sf_dir)
+            .select(
+                F.least(
+                    F.floor(F.col("value") / PSI_BUCKET_W).cast("long"),
+                    F.lit(PSI_NBUCKETS - 1),
+                ).alias("bucket"),
+                F.when(
+                    F.col("ts") < F.lit(PSI_SPLIT_TS).cast("timestamp"), 0
+                )
+                .otherwise(1)
+                .alias("w"),
+            )
+            .groupBy("bucket", "w")
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        )
+        grid = P.run_to_memory(cells)
+    counts = grid.groupBy("bucket").agg(
+        F.sum(F.when(F.col("w") == 0, F.col("n")).otherwise(0))
+        .cast("long")
+        .alias("n_a"),
+        F.sum(F.when(F.col("w") == 1, F.col("n")).otherwise(0))
+        .cast("long")
+        .alias("n_b"),
+    )
+    return psi_from_counts(counts)
+
+
+# ---------------------------------------------------------------------------
+# Audio (mm_*): the RIFF/WAVE codec of operators/multimodal.py through the
+# Arrow-batched mapInPandas boundary. The oracles read golden parquet that
+# tools/make_multimodal_golden.py recomputes from the LCG sample stream
+# without the operator module.
+# ---------------------------------------------------------------------------
+
+_MM_GOLDEN = os.path.abspath(
+    os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "multimodal")
+)
+
+
+def _banded_hamming_oracle(src: str, n_bands: int, band_bits: int, max_h: int) -> str:
+    """DuckDB twin of operators/multimodal.py:banded_hamming_pairs."""
+    mask = (1 << band_bits) - 1
+    return f"""
+    WITH ph AS (SELECT media_id, phash FROM {src}),
+    bands AS (
+      SELECT media_id, phash, b, (phash >> ({band_bits} * b)) & {mask} AS band
+      FROM ph, range(0, {n_bands}) t(b)
+    ),
+    cand AS (
+      SELECT DISTINCT a.media_id AS a_id, b.media_id AS b_id,
+             a.phash AS a_hash, b.phash AS b_hash
+      FROM bands a JOIN bands b ON a.b = b.b AND a.band = b.band
+       AND a.media_id < b.media_id
+    )
+    SELECT a_id, b_id, CAST(bit_count(xor(a_hash, b_hash)) AS BIGINT) AS hamming
+    FROM cand WHERE bit_count(xor(a_hash, b_hash)) <= {max_h}
+    ORDER BY a_id, b_id
+    """
+
+
+@query(
+    "mm_decode_wav",
+    oracle=f"""
+    SELECT media_id, sample_rate, n_channels, bits, n_frames,
+           peak_abs, mean_abs_e3
+    FROM '{_MM_GOLDEN}/mm_decode_wav.parquet'
+    ORDER BY media_id
+    """,
+    tags=("multimodal",),
+)
+def mm_decode_wav(spark, sf_dir):
+    """AUDIO through the media pipeline with a REAL dependency-free codec:
+    deterministic RIFF/WAVE PCM clips (8/16-bit x mono/stereo, canonical
+    headers any WAV reader opens — tests cross-check against stdlib
+    `wave`) parsed by the pure-struct chunk walker
+    (operators/multimodal.py:_decode_wav) inside an Arrow-batched
+    mapInPandas boundary; emitted stats are exact
+    integers (peak, 1000x mean |amplitude|), so no float parity games.
+    The audio NotImplementedError boundary now covers only ADPCM
+    (mm_decode_wav_deep exercises the wide 24/32-bit and float32
+    layouts; mm_decode_wav_g711 the companded and float64 ones). Oracle = golden fixture recomputed straight
+    from the LCG sample stream WITHOUT the RIFF writer or parser
+    (tools/make_multimodal_golden.py:decode_wav_golden)."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.decode_audio(media).orderBy("media_id")
+
+
+@query(
+    "mm_decode_wav_g711",
+    oracle=f"""
+    SELECT media_id, sample_rate, n_channels, bits, n_frames,
+           peak_abs, mean_abs_e3
+    FROM '{_MM_GOLDEN}/mm_decode_wav_g711.parquet'
+    ORDER BY media_id
+    """,
+    tags=("multimodal",),
+)
+def mm_decode_wav_g711(spark, sf_dir):
+    """TELEPHONY audio through the chunk walker: G.711 a-law and mu-law
+    companded clips (format 6/7 — the classic 8 kHz codecs, expanded by
+    the exact integer segment formulas, sign conventions and all: a-law's
+    set sign bit means POSITIVE, mu-law's means negative) plus IEEE
+    float64 (format 3, 64-bit), mono/stereo. The WAV NotImplementedError
+    boundary is now ADPCM only. Oracle = golden recomputing compress +
+    expand from the LCG stream with INDEPENDENT G.711 implementations
+    (tools/make_multimodal_golden.py:decode_wav_g711_golden), so the
+    formulas are cross-checked, not self-certified."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_g711_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.decode_audio(media).orderBy("media_id")
+
+
+@query(
+    "mm_decode_wav_deep",
+    oracle=f"""
+    SELECT media_id, sample_rate, n_channels, bits, n_frames,
+           peak_abs, mean_abs_e3
+    FROM '{_MM_GOLDEN}/mm_decode_wav_deep.parquet'
+    ORDER BY media_id
+    """,
+    tags=("multimodal",),
+)
+def mm_decode_wav_deep(spark, sf_dir):
+    """The WIDE audio layouts through the same pure-struct WAV chunk
+    walker: 24-bit and 32-bit integer PCM plus IEEE float32 (format 3),
+    mono/stereo — closing the round-8 boundary that stopped at 8/16-bit.
+    Float samples are v/32768 values (exactly representable), decoded by
+    *32768 truncation into the same integer amplitude domain as the
+    16-bit clips, so the stats stay exact integers; 24-bit rasters are
+    3-byte two's-complement triplets reassembled vectorized (numpy
+    byte-shift, no per-sample Python). The remaining NotImplementedError
+    boundary is ADPCM, a-law/mu-law, and float64. Oracle = golden fixture
+    recomputed straight from the LCG stream WITHOUT the RIFF writer or
+    parser (tools/make_multimodal_golden.py:decode_wav_deep_golden)."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_deep_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.decode_audio(media).orderBy("media_id")
+
+
+@query(
+    "mm_decode_wav_adpcm",
+    oracle=f"""
+    SELECT media_id, sample_rate, n_channels, bits, n_frames,
+           peak_abs, mean_abs_e3
+    FROM '{_MM_GOLDEN}/mm_decode_wav_adpcm.parquet'
+    ORDER BY media_id
+    """,
+    tags=("multimodal",),
+)
+def mm_decode_wav_adpcm(spark, sf_dir):
+    """COMPRESSED audio through the chunk walker: IMA-ADPCM (format 17,
+    4-byte per-channel block headers + low-nibble-first codes, step-index
+    carried across blocks) and MS-ADPCM (format 2, seven standard 8.8
+    fixed-point predictor pairs, high-nibble-first round-robin codes,
+    sample2-then-sample1 block seeds), mono/stereo, several block sizes.
+    This closes the WAV NotImplementedError boundary to genuinely
+    library-grade formats (MP3, extensible). Oracle = golden recomputing
+    both codecs' quantize+reconstruct loops from spec tables alone
+    (tools/make_multimodal_golden.py:decode_wav_adpcm_golden — never
+    imports the operator module), exploiting that ADPCM decoder state
+    mirrors encoder state, so the decoded stream IS the encoder's
+    reconstruction track."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_adpcm_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.decode_audio(media).orderBy("media_id")
+
+
+@query(
+    "mm_audio_rms_windows",
+    oracle=f"""
+    SELECT media_id, window_idx, n_frames, energy, peak_abs, rms_e3
+    FROM '{_MM_GOLDEN}/mm_audio_rms_windows.parquet'
+    ORDER BY media_id, window_idx
+    """,
+    tags=("multimodal",),
+)
+def mm_audio_rms_windows(spark, sf_dir):
+    """Windowed audio feature extraction over real WAV clips: tumbling
+    160-frame windows -> exact integer energy, peak, and isqrt-based
+    RMS (no float sqrt, engine-independent) through the Arrow-batched
+    codec boundary. Oracle = golden fixture recomputed from the LCG sample
+    stream without the RIFF writer, parser, or windowing code
+    (tools/make_multimodal_golden.py:audio_rms_windows_golden)."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.audio_rms_windows(media, window_frames=160).orderBy(
+        "media_id", "window_idx"
+    )
+
+
+NEARDUP_COS_E6_MIN = 999_990
+
+
+@query(
+    "mm_audio_augment",
+    oracle=f"""
+    SELECT media_id, sample_rate, n_channels, n_frames, n_clipped,
+           peak_abs, mean_abs_e3, pos_checksum
+    FROM '{_MM_GOLDEN}/mm_audio_augment.parquet'
+    ORDER BY media_id
+    """,
+    tags=("multimodal",),
+)
+def mm_audio_augment(spark, sf_dir):
+    """Deterministic AUDIO augmentation — gain 5/4 with truncate-toward-
+    zero integer scaling, int16 clipping (clipped-sample count reported —
+    the distortion metric an augmentation pass monitors), post-gain
+    amplitude stats, and an order-sensitive positional checksum over the
+    interleaved sample stream (a channel swap or reorder fails the gate
+    even when amplitude stats survive), over the real 8/16-bit
+    mono/stereo WAV clips through the RIFF chunk walker. One Arrow pass
+    (operators/multimodal.py:augment_audio). Oracle = golden recomputing
+    the transforms from the LCG sample stream without the parser
+    (tools/make_multimodal_golden.py:audio_augment_golden). Note
+    |clip(-32768)| = 32768: the int16 floor's absolute value exceeds the
+    ceiling — both sides state it identically."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
+    return M.augment_audio(media).orderBy("media_id")
+
+
+@query(
+    "mm_audio_fingerprint",
+    oracle=_banded_hamming_oracle(f"'{_MM_GOLDEN}/mm_audio_fp.parquet'", 8, 8, 6),
+    tags=("multimodal", "dedup"),
+)
+def mm_audio_fingerprint(spark, sf_dir):
+    """AUDIO near-duplicate detection: every clip (real WAVs through the
+    real chunk-walker decoder) maps to a 63-bit integer envelope
+    fingerprint (operators/multimodal.py:audio_wht_fp64 —
+    absolute-amplitude sums over 64 windows, integer Walsh-Hadamard,
+    strict-median sign bits; window sums over hundreds of samples make it
+    robust to sample-level noise while staying EXACT integer arithmetic),
+    then an 8x8-bit banded Hamming join (banded_hamming_pairs — pigeonhole
+    covers distance <= 7, never all-pairs) verifies bit_count(xor) <= 6.
+    Fixture: 12 originals + 12 noise-perturbed re-encodes; measured
+    margin dup <= 2 vs cross >= 20. Oracle = the same banded SQL over a
+    golden fingerprint table recomputed with an INDEPENDENT
+    Hadamard-matrix-product implementation
+    (tools/make_multimodal_golden.py:audio_fp_golden)."""
+    from gtec_etl_spark.operators import multimodal as M
+
+    media = M.audio_fp_media_table(spark, n_base=12, n_frames=1920)
+    return M.banded_hamming_pairs(
+        M.audio_fingerprint(media), n_bands=8, band_bits=8, max_hamming=6
+    ).orderBy("a_id", "b_id")
+
+
 VAD_THR_E3 = 6_000_000  # RMS gate: full-scale noise ~19e6, attenuated ~1.2e6
 
 
@@ -1926,67 +1284,3 @@ def mm_audio_vad(spark, sf_dir):
         .drop("island")
         .orderBy("media_id", "seg_start")
     )
-
-
-def _stream_psi_oracle() -> str:
-    from gtec_etl_spark.plans.profile_queries import _psi_oracle_sql
-
-    return _psi_oracle_sql()
-
-
-@query(
-    "stream_psi_drift",
-    oracle=_stream_psi_oracle(),
-    tags=("streaming", "live", "quality"),
-)
-def stream_psi_drift(spark, sf_dir):
-    """PSI drift monitoring MAINTAINED BY A REAL STREAMING JOB — the
-    third bounded-state streaming topology after the HLL registers and
-    the CMS cells, and the smallest: events replay through readStream,
-    each maps to its (value bucket, reference/current window) cell, and
-    a streaming groupBy keeps the bucket-count grid (state = bucket x
-    window cells — ~20 rows forever, the
-    dashboard-counter a drift monitor actually maintains between model
-    refreshes). Finalization — add-one smoothing, micro-nat ln
-    decomposition, e9 probabilities — is the EXACT code path of
-    prof_drift_psi (psi_from_counts, shared function), so on a finite
-    replay the report equals the batch query and ONE oracle states
-    both; cell-count addition is a monoid, so any micro-batch split
-    reconciles."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.plans.profile_queries import (
-        PSI_BUCKET_W,
-        PSI_NBUCKETS,
-        PSI_SPLIT_TS,
-        psi_from_counts,
-    )
-    from gtec_etl_spark.streaming import pipelines as P
-
-    with P.state_partitions(spark, 8):
-        cells = (
-            P.read_events_stream(spark, sf_dir)
-            .select(
-                F.least(
-                    F.floor(F.col("value") / PSI_BUCKET_W).cast("long"),
-                    F.lit(PSI_NBUCKETS - 1),
-                ).alias("bucket"),
-                F.when(
-                    F.col("ts") < F.lit(PSI_SPLIT_TS).cast("timestamp"), 0
-                )
-                .otherwise(1)
-                .alias("w"),
-            )
-            .groupBy("bucket", "w")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        grid = P.run_to_memory(cells)
-    counts = grid.groupBy("bucket").agg(
-        F.sum(F.when(F.col("w") == 0, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("w") == 1, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
-    )
-    return psi_from_counts(counts)

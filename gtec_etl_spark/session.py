@@ -13,6 +13,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """`spark.driver.memory` for this host: SPARK_GRAFT_DRIVER_MEM when set,
+    else 5/8 of /proc/meminfo MemTotal capped at 48g. In local mode the
+    driver JVM holds every executor, and a heap near or above physical
+    memory lets it grow until the kernel OOM-kills it. `meminfo` is the
+    text of /proc/meminfo (read from the host when None); without a
+    MemTotal line the cap is used."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    mb = _DRIVER_MEM_CAP_MB
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            mb = min(mb, int(line.split()[1]) * 5 // 8 // 1024)
+    return f"{mb}m"
+
 
 def get_spark(app_name: str = "gtec_etl_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -51,7 +76,7 @@ def get_spark(app_name: str = "gtec_etl_spark", cpus: int | None = None) -> Spar
         # reader and DuckDB identically.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo tree.
         .config(

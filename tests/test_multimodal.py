@@ -1,338 +1,13 @@
-"""Multimodal plumbing tests: schema, Arrow batch shapes, determinism, and
-the stub boundary (NotImplementedError on non-FAKEIMG payloads).
+"""Audio codec and pipeline tests: WAV round-trips against stdlib `wave`,
+the decode boundary, ADPCM/G.711 expansion, windowed RMS, the envelope
+fingerprint, and the Arrow-batched Spark passes over them.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
-
 from gtec_etl_spark.operators import multimodal as M
-
-
-def test_decode_image_shapes_and_determinism(spark):
-    media = M.media_table(spark, n=8, width=32, height=24)
-    out = M.decode_image(media)
-    assert out.columns == ["media_id", "width", "height", "n_pixels", "mean_intensity"]
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 8
-    assert all(r["width"] == 32 and r["height"] == 24 and r["n_pixels"] == 768 for r in rows.values())
-    again = {r["media_id"]: r for r in M.decode_image(media).collect()}
-    assert {k: v["mean_intensity"] for k, v in rows.items()} == {
-        k: v["mean_intensity"] for k, v in again.items()
-    }
-
-
-def test_resize_composes_with_decode(spark):
-    media = M.media_table(spark, n=4, width=32, height=24)
-    small = M.resize_image(media, 8, 6)
-    decoded = M.decode_image(small)
-    rows = decoded.collect()
-    assert all(r["width"] == 8 and r["height"] == 6 and r["n_pixels"] == 48 for r in rows)
-
-
-def test_byte_histogram_features_feed_similarity(spark):
-    media = M.media_table(spark, n=6)
-    emb = M.byte_histogram_features(media, bins=16)
-    rows = emb.collect()
-    assert all(len(r["embedding"]) == 16 for r in rows)
-    assert all(abs(sum(r["embedding"]) - 1.0) < 1e-9 for r in rows)
-
-
-def test_frame_sample_expands_rows(spark):
-    media = M.media_table(spark, n=2, width=32, height=32)  # 1024 px + 15B header
-    frames = M.frame_sample(media, every_n_bytes=256)
-    per = frames.groupBy("media_id").count().collect()
-    # 1039 bytes -> 5 chunks (4 full + tail)
-    assert all(r["count"] == 5 for r in per)
-    offs = [r["offset"] for r in frames.filter(F.col("media_id") == 0).orderBy("frame_no").collect()]
-    assert offs == [0, 256, 512, 768, 1024]
-
-
-def test_stub_boundary_raises_on_real_formats(spark):
-    # r9: progressive (SOF2) decodes dependency-free too; ARITHMETIC
-    # coding (SOF9) is the boundary now and must surface the
-    # NotImplementedError through the Arrow pipeline, not garbage pixels.
-    import struct
-
-    sof9 = bytearray(
-        b"\xff\xd8\xff\xe0\x00\x10JFIF\x00" + b"\x00" * 9
-        + b"\xff\xc9" + struct.pack(">H", 11) + bytes([8])
-        + struct.pack(">HH", 4, 4) + bytes([1, 1, 0x11, 0])
-    )
-    media = spark.createDataFrame(
-        [(1, "image", sof9, ("image/jpeg", "mem://x"))], M.MEDIA_SCHEMA
-    )
-    with pytest.raises(PythonException, match="NotImplementedError|SOF9"):
-        M.decode_image(media).collect()
-
-
-def test_netpbm_binary_and_ascii_decode_identically():
-    """P5 (binary) and P2 (ASCII) carrying the same values must decode to
-    identical pixels; same for P6/P3 through the luma path."""
-    vals = M.netpbm_values(5, 3, seed=7, nch=1, maxval=255)
-    p5 = b"P5\n5 3\n255\n" + bytes(vals)
-    p2 = ("P2\n5 3\n255\n" + " ".join(map(str, vals))).encode()
-    assert M._decode_netpbm(p5) == M._decode_netpbm(p2) == (5, 3, bytes(vals))
-
-
-def test_netpbm_luma_and_rescale_exact():
-    # One RGB pixel (200, 100, 50) at maxval=200: rescale each channel by
-    # (v*255 + 100) // 200 -> (255, 128, 64), then BT.601 truncating luma.
-    p3 = b"P3\n# comment mid-header\n1 1\n200\n200 100 50"
-    w, h, pix = M._decode_netpbm(p3)
-    expected = (299 * 255 + 587 * 128 + 114 * 64) // 1000
-    assert (w, h, pix) == (1, 1, bytes([expected]))
-
-
-def test_netpbm_header_comments_and_errors():
-    with pytest.raises(ValueError, match="truncated netpbm raster"):
-        M._decode_netpbm(b"P5\n4 4\n255\n\x00\x01")
-    with pytest.raises(NotImplementedError, match="16-bit"):
-        M._decode_netpbm(b"P5\n2 2\n65535\n" + b"\x00" * 8)
-    # comments may appear between any header tokens
-    p2 = b"P2 # fmt\n2 # w\n1 # h\n255 # maxval\n9 200"
-    assert M._decode_netpbm(p2) == (2, 1, bytes([9, 200]))
-
-
-def test_netpbm_through_spark_pipeline(spark):
-    media = M.netpbm_media_table(spark, n=8, width=9, height=4)
-    rows = M.decode_image(media).orderBy("media_id").collect()
-    assert [r["width"] for r in rows] == [9] * 8
-    assert [r["n_pixels"] for r in rows] == [36] * 8
-    # deterministic: a second run produces identical means
-    again = M.decode_image(media).orderBy("media_id").collect()
-    assert [r["mean_intensity"] for r in rows] == [
-        r["mean_intensity"] for r in again
-    ]
-
-
-def test_png_roundtrip_all_color_types_and_filters():
-    """fake_png encodes with rows cycling ALL five scanline filters; the
-    pure-stdlib decoder must invert every one for every color type, and
-    the grayscale projection must equal the raw LCG stream's projection
-    computed without any codec."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    for ctype in (0, 2, 4, 6):
-        w, h, seed = 23, 19, ctype + 3
-        dw, dh, gray = M._decode_png(M.fake_png(w, h, seed, ctype))
-        assert (dw, dh) == (w, h)
-        nch = M._PNG_NCH[ctype]
-        vals = np.array(
-            M.netpbm_values(w, h * nch, seed, 1, 255), dtype=np.int64
-        ).reshape(h * w, nch)
-        want = (
-            vals[:, 0]
-            if ctype in (0, 4)
-            else (299 * vals[:, 0] + 587 * vals[:, 1] + 114 * vals[:, 2]) // 1000
-        )
-        got = np.frombuffer(gray, dtype=np.uint8).astype(np.int64)
-        assert (got == want).all()
-
-
-def test_png_palette_roundtrip():
-    """Palette (color type 3) PNGs: the decoder must route each index
-    byte through the PLTE chunk and collapse the looked-up RGB with the
-    shared BT.601 luma — verified against the raw LCG index + palette
-    streams computed without any codec."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    w, h, seed = 23, 19, 11
-    dw, dh, gray = M._decode_png(M.fake_png(w, h, seed, ctype=3))
-    assert (dw, dh) == (w, h)
-    idx = np.array(
-        M.netpbm_values(w, h, seed, 1, M.PNG_PAL_SIZE - 1), dtype=np.int64
-    )
-    pal = np.array(
-        M.netpbm_values(M.PNG_PAL_SIZE, 1, seed + M.PNG_PAL_SEED_OFF, 3, 255),
-        dtype=np.int64,
-    ).reshape(-1, 3)
-    rgb = pal[idx]
-    want = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-    got = np.frombuffer(gray, dtype=np.uint8).astype(np.int64)
-    assert (got == want).all()
-
-
-def test_png_boundary_rejects_unsupported():
-    import struct
-    import zlib
-
-    import pytest
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    def png_with_ihdr(depth, ctype, interlace):
-        ihdr = struct.pack(">IIBBBBB", 4, 4, depth, ctype, 0, 0, interlace)
-        crc = zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF
-        return (
-            M.PNG_MAGIC
-            + struct.pack(">I", len(ihdr))
-            + b"IHDR"
-            + ihdr
-            + struct.pack(">I", crc)
-        )
-
-    # r8 moved 16-bit and Adam7 inside the boundary, r9 sub-byte
-    # gray/palette; what remains out is spec-ILLEGAL: sub-byte with a
-    # color/alpha ctype, 16-bit palette, unknown interlace.
-    for depth, ctype, interlace in ((4, 2, 0), (1, 6, 0), (16, 3, 0), (8, 2, 2)):
-        with pytest.raises(NotImplementedError):
-            M._decode_png(png_with_ihdr(depth, ctype, interlace))
-    # Palette is INSIDE the boundary — but a palette image without
-    # its PLTE chunk is malformed, not unsupported.
-    with pytest.raises(ValueError):
-        M._decode_png(png_with_ihdr(8, 3, 0))
-
-
-def test_png_16bit_roundtrip():
-    """16-bit rasters: filters operate BYTEWISE with the doubled pixel
-    stride; luma is computed at full 16-bit precision then high-byte
-    collapsed — verified against the raw LCG byte stream without any
-    codec."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    for ctype in (0, 2, 4, 6):
-        w, h, seed = 21, 17, 50 + ctype
-        dw, dh, gray = M._decode_png(
-            M.fake_png(w, h, seed, ctype, depth=16)
-        )
-        assert (dw, dh) == (w, h)
-        nch = M._PNG_NCH[ctype]
-        raw = np.array(
-            M.netpbm_values(w, h * nch * 2, seed, 1, 255), dtype=np.int64
-        ).reshape(h * w, nch, 2)
-        v16 = (raw[:, :, 0] << 8) | raw[:, :, 1]
-        want = (
-            v16[:, 0]
-            if ctype in (0, 4)
-            else (299 * v16[:, 0] + 587 * v16[:, 1] + 114 * v16[:, 2]) // 1000
-        ) >> 8
-        got = np.frombuffer(gray, dtype=np.uint8).astype(np.int64)
-        assert (got == want).all()
-
-
-def test_png_adam7_interlace_roundtrip():
-    """Adam7: seven independently-filtered passes scattered back into
-    the full grid must reproduce exactly the image the non-interlaced
-    encoding of the SAME pixel stream decodes to — including edge sizes
-    where some passes are empty (1x1, 3x2, 8x8, 9x10)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    for w, h in ((1, 1), (3, 2), (8, 8), (9, 10), (23, 19)):
-        for ctype in (0, 2, 3, 6):
-            seed = 7 * w + h + ctype
-            plain = M._decode_png(M.fake_png(w, h, seed, ctype))
-            inter = M._decode_png(M.fake_png(w, h, seed, ctype, interlace=1))
-            assert plain == inter, (w, h, ctype)
-
-
-def test_png_16bit_adam7_combined():
-    """Depth 16 AND interlace together (the stride math compounds)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    for w, h in ((5, 3), (16, 11)):
-        plain = M._decode_png(M.fake_png(w, h, 9, 2, depth=16))
-        inter = M._decode_png(M.fake_png(w, h, 9, 2, depth=16, interlace=1))
-        assert plain == inter
-
-
-def test_jpeg_roundtrip_near_lossless_all_layouts():
-    """q=1 (flat DC 1 / AC 2 quant) keeps the DCT round-trip within +-2
-    of the source LCG plane for every layout — gray, 4:4:4, 4:2:0, and
-    4:2:0 with restart markers (which also exercises DC-predictor
-    resets and run resplitting)."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import jpeg as J
-    from gtec_etl_spark.operators import multimodal as M
-
-    w, h, seed = 24, 17, 42
-    want = np.array(
-        M.netpbm_values(w, h, seed, 1, 255), dtype=np.int64
-    ).reshape(h, w)
-    for kw in M.JPEG_CYCLE:
-        dw, dh, luma = J.decode_jpeg(J.fake_jpeg(w, h, seed, **kw))
-        assert (dw, dh) == (w, h)
-        got = np.frombuffer(luma, dtype=np.uint8).astype(np.int64).reshape(h, w)
-        assert np.abs(got - want).max() <= 2, kw
-
-
-def test_jpeg_lossy_quality_degrades_gracefully():
-    """Higher quant scale stays decodable and close-ish (sanity that the
-    size-category/entropy paths hold for larger coefficients too)."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import jpeg as J
-    from gtec_etl_spark.operators import multimodal as M
-
-    w, h, seed = 16, 16, 7
-    want = np.array(
-        M.netpbm_values(w, h, seed, 1, 255), dtype=np.int64
-    ).reshape(h, w)
-    _, _, luma = J.decode_jpeg(J.fake_jpeg(w, h, seed, gray=True, q=8))
-    got = np.frombuffer(luma, dtype=np.uint8).astype(np.int64).reshape(h, w)
-    assert np.abs(got - want).mean() < 16
-
-
-def test_jpeg_boundary_rejects_arithmetic():
-    """SOF9 (arithmetic) raises NotImplementedError, not garbage; a
-    truncated SOF2 header (no SOS) is malformed, not unsupported."""
-    import struct
-
-    import pytest
-
-    from gtec_etl_spark.operators import jpeg as J
-
-    def sof_only(marker):
-        return (
-            b"\xff\xd8"
-            + bytes([0xFF, marker])
-            + struct.pack(">H", 11)
-            + bytes([8])
-            + struct.pack(">HH", 4, 4)
-            + bytes([1, 1, 0x11, 0])
-        )
-
-    with pytest.raises(NotImplementedError):
-        J.decode_jpeg(sof_only(0xC9))
-    with pytest.raises(ValueError):
-        J.decode_jpeg(sof_only(0xC2))  # SOF2 without any SOS/EOI
-    with pytest.raises(ValueError):
-        J.decode_jpeg(b"\x00\x01not a jpeg")
-
-
-def test_jpeg_odd_sizes_and_edge_padding():
-    """Non-multiple-of-8 (and of-16 for 4:2:0) dimensions: the decoder
-    crops the padded MCU grid back to the declared size, and in-crop
-    pixels of edge blocks (whose DCT saw replicated padding) still
-    round-trip within the q=1 bound."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import jpeg as J
-    from gtec_etl_spark.operators import multimodal as M
-
-    for w, h in ((1, 1), (7, 5), (9, 9), (17, 23)):
-        want = np.array(
-            M.netpbm_values(w, h, 3, 1, 255), dtype=np.int64
-        ).reshape(h, w)
-        for kw in ({"gray": True}, {"subsample": 2}):
-            dw, dh, luma = J.decode_jpeg(J.fake_jpeg(w, h, 3, **kw))
-            assert (dw, dh) == (w, h)
-            got = (
-                np.frombuffer(luma, dtype=np.uint8)
-                .astype(np.int64)
-                .reshape(h, w)
-            )
-            assert np.abs(got - want).max() <= 2, (w, h, kw)
 
 
 def test_wav_roundtrip_vs_stdlib_wave():
@@ -517,124 +192,6 @@ def test_wav_decode_boundary_rejects_adpcm():
         M._decode_wav(bytes(blob))
 
 
-def test_png_subbyte_roundtrip_all_layouts():
-    """Every spec-legal sub-byte layout (1/2/4-bit gray + palette, plain +
-    Adam7): decoded pixels must equal the LCG expectation computed without
-    any codec — gray scales by the integral 255/(2^d-1), palette routes
-    through the 2^d-entry PLTE."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    for ctype, depth, il in M.PNG_SUBBYTE_CYCLE:
-        w, h, seed = 23, 19, ctype * 10 + depth
-        dw, dh, gray = M._decode_png(
-            M.fake_png(w, h, seed, ctype=ctype, depth=depth, interlace=il)
-        )
-        assert (dw, dh) == (w, h)
-        maxv = (1 << depth) - 1
-        vals = np.array(M.netpbm_values(w, h, seed, 1, maxv), dtype=np.int64)
-        if ctype == 0:
-            want = vals * (255 // maxv)
-        else:
-            pal = np.array(
-                M.netpbm_values(1 << depth, 1, seed + M.PNG_PAL_SEED_OFF, 3, 255),
-                dtype=np.int64,
-            ).reshape(-1, 3)
-            rgb = pal[vals]
-            want = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        got = np.frombuffer(gray, dtype=np.uint8).astype(np.int64)
-        assert (got == want).all(), (ctype, depth, il)
-
-
-def test_jpeg_progressive_roundtrip_exact():
-    """Progressive (SOF2) encode/decode must reproduce EXACTLY the same
-    pixels as the codec-free flat-quant DCT round-trip — across gray /
-    4:4:4 / 4:2:0, dense (q=1) and sparse EOB-run-heavy (q=16/64)
-    coefficient regimes, and non-multiple-of-MCU sizes."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import jpeg as J
-
-    def expected(w, h, seed, q):
-        qtab, _ = J._quant_tables(q)
-        mcux, mcuy = -(-w // 8), -(-h // 8)
-        p = J._plane_from_lcg(w, h, seed)
-        pad = np.zeros((mcuy * 8, mcux * 8))
-        pad[:h, :w] = p
-        if w < mcux * 8:
-            pad[:h, w:] = p[:, -1:]
-        if h < mcuy * 8:
-            pad[h:, :] = pad[h - 1 : h, :]
-        out = np.zeros_like(pad)
-        for by in range(mcuy):
-            for bx in range(mcux):
-                b = pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                coef = np.rint((J._T @ b @ J._T.T) / qtab).astype(np.int64)
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    J._T.T @ (coef * qtab) @ J._T + 128.0
-                )
-        return np.clip(np.rint(out[:h, :w]), 0, 255).astype(np.uint8)
-
-    cases = [
-        (True, 1, 1, 23, 19, 5),
-        (True, 1, 16, 57, 15, 8),
-        (True, 1, 64, 24, 24, 2),
-        (False, 1, 1, 23, 19, 3),
-        (False, 2, 1, 25, 21, 9),
-        (False, 2, 4, 40, 24, 11),
-    ]
-    for gray, sub, q, w, h, seed in cases:
-        blob = J.fake_jpeg_progressive(w, h, seed, gray=gray, subsample=sub, q=q)
-        dw, dh, luma = J.decode_jpeg(blob)
-        got = np.frombuffer(luma, dtype=np.uint8).reshape(dh, dw)
-        assert (dw, dh) == (w, h)
-        assert (got == expected(w, h, seed, q)).all(), (gray, sub, q, w, h)
-
-
-def test_jpeg_12bit_roundtrip_exact():
-    """12-bit baseline encode/decode must reproduce exactly the codec-free
-    12-bit DCT round-trip (level shift 2048, clip 0-4095, >>4 collapse),
-    across gray / color / 4:2:0 / restart-marker layouts."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import jpeg as J
-
-    def expected(w, h, seed, q, tile):
-        qtab, _ = J._quant_tables(q)
-        pw, ph = -(-w // tile) * tile, -(-h // tile) * tile
-        p = J._plane_from_lcg(w, h, seed, 4095)
-        pad = np.zeros((ph, pw))
-        pad[:h, :w] = p
-        if w < pw:
-            pad[:h, w:] = p[:, -1:]
-        if h < ph:
-            pad[h:, :] = pad[h - 1 : h, :]
-        out = np.zeros_like(pad)
-        for by in range(ph // 8):
-            for bx in range(pw // 8):
-                b = pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 2048.0
-                coef = np.rint((J._T @ b @ J._T.T) / qtab).astype(np.int64)
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    J._T.T @ (coef * qtab) @ J._T + 2048.0
-                )
-        full = np.clip(np.rint(out[:h, :w]), 0, 4095).astype(np.int64)
-        return (full >> 4).astype(np.uint8)
-
-    cases = [
-        (dict(gray=True), 8, 1, 23, 19, 5),
-        (dict(gray=True, q=3, restart_interval=2), 8, 3, 24, 17, 7),
-        (dict(subsample=1), 8, 1, 23, 19, 3),
-        (dict(subsample=2), 16, 1, 25, 21, 9),
-    ]
-    for kw, tile, q, w, h, seed in cases:
-        blob = J.fake_jpeg(w, h, seed, precision=12, **kw)
-        dw, dh, luma = J.decode_jpeg(blob)
-        got = np.frombuffer(luma, dtype=np.uint8).reshape(dh, dw)
-        assert (dw, dh) == (w, h)
-        assert (got == expected(w, h, seed, q, tile)).all(), kw
-
-
 def test_wav_g711_expand_reference_points():
     """The G.711 expansion formulas hit the published reference values and
     the companding error stays within the top-segment quantization bound."""
@@ -713,31 +270,6 @@ def test_decode_audio_adpcm_distributed(spark):
         assert r["mean_abs_e3"] == int(np.abs(s).sum()) * 1000 // len(s)
 
 
-def test_wht_phash_properties():
-    """pHash invariants: 63-bit range, exact separation on the fixture
-    classes (perturbed copies within Hamming 6, distinct originals far),
-    and dimension validation."""
-    hashes = []
-    for i in range(6):
-        _, _, p0 = M._decode_png(M.fake_png(24, 24, seed=i, ctype=0))
-        _, _, p1 = M._decode_png(
-            M.fake_png(24, 24, seed=i, ctype=0, perturb=3, perturb_delta=32)
-        )
-        h0 = M.wht_phash64(p0, 24, 24)
-        h1 = M.wht_phash64(p1, 24, 24)
-        assert 0 <= h0 < (1 << 63) and 0 <= h1 < (1 << 63)
-        assert bin(h0 ^ h1).count("1") <= 6
-        hashes.append(h0)
-    for i in range(6):
-        for j in range(i + 1, 6):
-            assert bin(hashes[i] ^ hashes[j]).count("1") > 6
-    with pytest.raises(ValueError, match="multiples of 8"):
-        M.wht_phash64(b"\x00" * 100, 10, 10)
-    # perturb hook is grayscale-only
-    with pytest.raises(ValueError, match="perturb"):
-        M.fake_png(24, 24, seed=0, ctype=2, perturb=1)
-
-
 def test_audio_wht_fp_properties():
     """Audio fingerprint invariants: perturbed copies within Hamming 6,
     distinct clips far, minimum-length validation."""
@@ -760,248 +292,3 @@ def test_audio_wht_fp_properties():
         M.audio_wht_fp64(np.zeros(10, dtype=np.int64))
     with pytest.raises(ValueError, match="16-bit PCM"):
         M.fake_wav(64, 8000, seed=0, bits=8, perturb=1)
-
-
-def test_avi_mjpeg_container_contract():
-    """AVI walker: exact header round-trip, frame collection in order,
-    word alignment with odd-length JPEG frames, malformed rejection."""
-    for i, (nf, w, h, fps) in enumerate(M.AVI_CYCLE):
-        blob = M.fake_avi_mjpeg(nf, w, h, fps, seed=i)
-        pw, ph, pfps, pn, frames = M._decode_avi(blob)
-        assert (pw, ph, pfps, pn, len(frames)) == (w, h, fps, nf, nf)
-        # every frame is a standalone JPEG the real decoder opens
-        from gtec_etl_spark.operators.jpeg import decode_jpeg
-
-        for fr in frames:
-            fw, fh, gray = decode_jpeg(fr)
-            assert (fw, fh) == (w, h) and len(gray) == w * h
-    with pytest.raises(ValueError, match="RIFF/AVI"):
-        M._decode_avi(b"RIFF\x04\x00\x00\x00WAVE")
-    # headerless movi-only file is malformed
-    import struct as st
-
-    movi = b"LIST" + st.pack("<I", 4) + b"movi"
-    with pytest.raises(ValueError, match="avih/strh"):
-        M._decode_avi(b"RIFF" + st.pack("<I", 4 + len(movi)) + b"AVI " + movi)
-
-
-def test_decode_video_distributed(spark):
-    """decode_video through the real mapInPandas path matches the direct
-    per-clip parse+decode, including the frame stride."""
-    import numpy as np
-
-    from gtec_etl_spark.operators.jpeg import decode_jpeg
-
-    media = M.avi_media_table(spark, n=4)
-    rows = {r["media_id"]: r for r in M.decode_video(media, frame_stride=2).collect()}
-    for i in range(4):
-        nf, w, h, fps = M.AVI_CYCLE[i]
-        _, _, _, _, frames = M._decode_avi(M.fake_avi_mjpeg(nf, w, h, fps, seed=i))
-        total = sum(
-            int(np.frombuffer(decode_jpeg(fr)[2], dtype=np.uint8).astype(np.int64).sum())
-            for fr in frames[::2]
-        )
-        r = rows[i]
-        assert (r["width"], r["height"], r["fps"], r["n_frames"]) == (w, h, fps, nf)
-        assert r["frames_decoded"] == len(frames[::2])
-        assert r["total_luma"] == total
-
-
-def test_gif_lzw_spec_vectors():
-    """Hand-derived GIF LZW vectors: [1,1,1] at mcs=2 encodes as codes
-    4(clear),1,6(KwKwK),5(EOI) in 3-bit LSB-first packing; decoder
-    inverts, including width growth and the 12-bit ceiling on a
-    high-entropy stream."""
-    import hashlib
-
-    enc = M._gif_lzw_encode([1, 1, 1], 2)
-    bits = [(byte >> b) & 1 for byte in enc for b in range(8)]
-
-    def take(w):
-        nonlocal bits
-        v = sum(bit << i for i, bit in enumerate(bits[:w]))
-        bits = bits[w:]
-        return v
-
-    assert [take(3) for _ in range(4)] == [4, 1, 6, 5]
-    assert M._gif_lzw_decode(enc, 2, 3) == [1, 1, 1]
-    # 12-bit dictionary ceiling: ~12000 md5 bytes force >4096 entries,
-    # an encoder reset, and a decoder freeze — round-trip stays exact
-    idx, i = [], 0
-    while len(idx) < 12000:
-        idx.extend(hashlib.md5(str(i).encode()).digest())
-        i += 1
-    idx = list(idx[:12000])
-    assert M._gif_lzw_decode(M._gif_lzw_encode(idx, 8), 8, len(idx)) == idx
-
-
-def test_gif_roundtrip_all_layouts():
-    """Every GIF_CYCLE layout decodes to the exact LCG palette+index luma
-    (LZW lossless), including interlaced row order; malformed and
-    truncated streams raise descriptively."""
-    import numpy as np
-
-    for depth, il in M.GIF_CYCLE:
-        for seed in (0, 5):
-            w, h = 23, 19
-            dw, dh, luma = M._decode_gif(M.fake_gif(w, h, seed, depth=depth, interlace=il))
-            assert (dw, dh) == (w, h)
-            n = 1 << depth
-            pal = np.array(
-                M.netpbm_values(n, 1, seed + M.GIF_PAL_SEED_OFF, 3, 255),
-                dtype=np.int64,
-            ).reshape(-1, 3)
-            idx = np.array(M.netpbm_values(w, h, seed, 1, n - 1), dtype=np.int64)
-            rgb = pal[idx]
-            want = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-            assert (np.frombuffer(luma, dtype=np.uint8).astype(np.int64) == want).all()
-    with pytest.raises(ValueError, match="not a GIF"):
-        M._decode_gif(b"GIF90a" + b"\x00" * 16)
-    blob = bytearray(M.fake_gif(23, 19, 0))
-    with pytest.raises(ValueError, match="truncated"):
-        M._decode_gif(bytes(blob[:-5]))  # cut trailer + sub-block tail
-
-
-def test_gif_through_spark_pipeline(spark):
-    media = M.gif_media_table(spark, n=8, width=23, height=19)
-    rows = M.decode_image(media).orderBy("media_id").collect()
-    assert [r["width"] for r in rows] == [23] * 8
-    assert [r["n_pixels"] for r in rows] == [23 * 19] * 8
-
-
-def test_bmp_roundtrip_and_boundary():
-    """BMP: both layouts decode to the exact LCG luma, top-down rows
-    honored, RLE/16-bit rejected as NotImplementedError."""
-    import numpy as np
-    import struct as st
-
-    for bpp in M.BMP_CYCLE:
-        blob = M.fake_bmp(23, 19, seed=2, bpp=bpp)
-        dw, dh, luma = M._decode_bmp(blob)
-        assert (dw, dh) == (23, 19) and len(luma) == 23 * 19
-    # top-down variant (negative height) must equal reversed bottom-up
-    blob = bytearray(M.fake_bmp(8, 4, seed=1, bpp=24))
-    _, _, up = M._decode_bmp(bytes(blob))
-    blob[22:26] = st.pack("<i", -4)
-    offset = int.from_bytes(blob[10:14], "little")
-    stride = (8 * 3 + 3) & ~3
-    rows = [bytes(blob[offset + y * stride : offset + (y + 1) * stride]) for y in range(4)]
-    blob[offset:] = b"".join(reversed(rows))
-    _, _, down = M._decode_bmp(bytes(blob))
-    assert up == down
-    # compressed/16-bit out of boundary
-    bad = bytearray(M.fake_bmp(8, 4, seed=1, bpp=24))
-    bad[30:34] = st.pack("<I", 1)  # BI_RLE8
-    with pytest.raises(NotImplementedError, match="compression"):
-        M._decode_bmp(bytes(bad))
-
-
-def test_codec_properties_hypothesis():
-    """Property tests for the round-10 codecs: GIF LZW round-trips any
-    index stream at any legal code size; ADPCM decoders track any input
-    within quantizer error bounds at block seams; BMP round-trips any
-    small dimensions."""
-    from hypothesis import given, settings, strategies as st
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(min_value=2, max_value=8).flatmap(
-            lambda mcs: st.tuples(
-                st.just(mcs),
-                st.lists(
-                    st.integers(min_value=0, max_value=(1 << mcs) - 1),
-                    min_size=1,
-                    max_size=400,
-                ),
-            )
-        )
-    )
-    def lzw_roundtrip(case):
-        mcs, idx = case
-        assert M._gif_lzw_decode(M._gif_lzw_encode(idx, mcs), mcs, len(idx)) == idx
-
-    lzw_roundtrip()
-
-    @settings(max_examples=20, deadline=None)
-    @given(st.integers(min_value=1, max_value=40), st.integers(min_value=1, max_value=30))
-    def bmp_roundtrip(w, h):
-        for bpp in (8, 24):
-            dw, dh, luma = M._decode_bmp(M.fake_bmp(w, h, seed=w * 31 + h, bpp=bpp))
-            assert (dw, dh, len(luma)) == (w, h, w * h)
-
-    bmp_roundtrip()
-
-    @settings(max_examples=15, deadline=None)
-    @given(st.integers(min_value=0, max_value=10000))
-    def adpcm_seeds(seed):
-        # IMA: block-seam samples exact (header carries them); MS: two
-        # seeds per block exact; decoded length always spb-aligned
-        blob = M.fake_wav_ima_adpcm(18, 8000, seed=seed, samples_per_block=9)
-        _, _, _, s = M._decode_wav(blob)
-        assert len(s) == 18
-        vals = M.wav_values(18, seed, 16)
-        assert s[0] == vals[0] and s[9] == vals[9]
-        blob = M.fake_wav_ms_adpcm(16, 8000, seed=seed, samples_per_block=8)
-        _, _, _, s = M._decode_wav(blob)
-        assert len(s) == 16
-        assert s[0] == vals[0] and s[1] == vals[1]
-
-    adpcm_seeds()
-
-
-def test_tiff_roundtrip_and_boundary():
-    """TIFF: all four layout/endianness combos decode to the exact LCG
-    luma; compressed and 16-bit rejected; bad magic rejected."""
-    import struct as st
-
-    for rgb, be in M.TIFF_CYCLE:
-        dw, dh, luma = M._decode_tiff(M.fake_tiff(23, 19, seed=1, rgb=rgb, big_endian=be))
-        assert (dw, dh, len(luma)) == (23, 19, 23 * 19)
-    with pytest.raises(ValueError, match="not a TIFF"):
-        M._decode_tiff(b"XX\x2a\x00" + b"\x00" * 8)
-    blob = bytearray(M.fake_tiff(8, 8, seed=0))
-    # flip the compression tag (259) value to 5 (LZW) in the IFD
-    at = blob.find(st.pack("<HHI", 259, 3, 1))
-    assert at > 0
-    blob[at + 8 : at + 10] = st.pack("<H", 5)
-    with pytest.raises(NotImplementedError, match="compression=5"):
-        M._decode_tiff(bytes(blob))
-
-
-def test_avi_mjpeg_sampled_frames_carry_restart_markers():
-    """The stride-2-sampled frames at f % 4 == 2 must contain a DRI
-    segment and at least one RST marker, proving the video pipeline
-    exercises the restart decode path (r10 verdict #8)."""
-    from gtec_etl_spark.operators.multimodal import fake_avi_mjpeg, _decode_avi
-
-    avi = fake_avi_mjpeg(n_frames=8, width=24, height=17, fps=10, seed=3)
-    *_, frames = _decode_avi(avi)
-    assert len(frames) == 8
-    for f, fr in enumerate(frames):
-        has_dri = b"\xff\xdd" in fr
-        has_rst = any(bytes([0xFF, 0xD0 + k]) in fr for k in range(8))
-        if f % 4 == 2:
-            assert has_dri and has_rst, f"frame {f} missing restart coding"
-        else:
-            assert not has_dri, f"frame {f} unexpectedly has DRI"
-
-
-def test_detect_shots_recovers_scene_structure(spark):
-    """detect_shots must find exactly (n_scenes - 1) cuts on the
-    scene-structured fixture: within-scene frames are identical (L1 = 0),
-    cuts move the luma range. Checks every clip in the media table."""
-    from gtec_etl_spark.operators.multimodal import (
-        SCENE_CYCLE,
-        SHOT_SCENE_LEN,
-        detect_shots,
-        scene_avi_media_table,
-    )
-
-    media = scene_avi_media_table(spark, n=8)
-    got = {r["media_id"]: r for r in detect_shots(media).collect()}
-    for i in range(8):
-        nf = SCENE_CYCLE[i % len(SCENE_CYCLE)][0]
-        n_scenes = -(-nf // SHOT_SCENE_LEN)
-        assert got[i]["n_shot_cuts"] == n_scenes - 1, (i, dict(got[i].asDict()))
-        assert got[i]["n_frames"] == nf
-        assert got[i]["max_l1"] > 0

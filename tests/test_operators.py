@@ -564,50 +564,3 @@ def test_personalized_pagerank_seed_locality_and_mass(spark):
     assert ranks["a"] == max(ranks.values())
     total = sum(ranks.values())
     assert 0 <= PR_SCALE - total < 1000
-
-
-def test_tile_images_floor_grid_and_checksums(spark):
-    """tile_images on a 31x17 P5 image: floor grid drops 7 cols and 1 row
-    (reported per tile), tile sums partition the cropped plain sum, and
-    the local positional checksum detects a transposed raster (recompute
-    both orientations from the same LCG stream and assert they differ)."""
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.netpbm_media_table(spark, n=2, width=31, height=17)
-    rows = M.tile_images(media, tile=8).collect()
-    by_img = {}
-    for r in rows:
-        by_img.setdefault(r["media_id"], []).append(r)
-    assert set(by_img) == {0, 1}
-    for mid, tiles in by_img.items():
-        assert len(tiles) == 6  # (17//8) * (31//8) = 2 * 3
-        assert all(t["dropped_rows"] == 1 for t in tiles)
-        assert all(t["dropped_cols"] == 7 for t in tiles)
-        # Recompute from the LCG stream (decoder-independent).
-        fmt, maxval = M.NETPBM_CYCLE[mid % 4]
-        nch = 3 if fmt in ("P6", "P3") else 1
-        vals = np.array(
-            M.netpbm_values(31, 17, seed=mid, nch=nch, maxval=maxval),
-            dtype=np.int64,
-        )
-        if maxval != 255:
-            vals = (vals * 255 + maxval // 2) // maxval
-        if nch == 3:
-            rgb = vals.reshape(-1, 3)
-            vals = (
-                299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]
-            ) // 1000
-        a = vals.reshape(17, 31)
-        w97 = np.arange(64, dtype=np.int64).reshape(8, 8) % 97 + 1
-        for t in tiles:
-            patch = a[
-                t["tile_row"] * 8 : t["tile_row"] * 8 + 8,
-                t["tile_col"] * 8 : t["tile_col"] * 8 + 8,
-            ]
-            assert t["tile_sum"] == int(patch.sum())
-            assert t["pos_checksum"] == int((patch * w97).sum())
-            if int((patch * w97).sum()) != int((patch.T * w97).sum()):
-                # order-sensitivity is demonstrable on this tile
-                assert t["pos_checksum"] != int((patch.T * w97).sum())

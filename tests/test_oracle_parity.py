@@ -34,9 +34,10 @@ def spec_ids():
 
 # Full-registry plan guard (VERDICT r6 #3): no registered query may plan a
 # CartesianProduct — the per-name guards in test_plans.py only covered an
-# enumerated list, which is how mm_image_neardup shipped a 1024-task
-# cartesian in round 6. Any deliberate tiny-fixture exception must be
-# allowlisted HERE with a justification; currently there are none.
+# enumerated list, which is how a since-deleted image near-dup query
+# shipped a 1024-task cartesian in round 6. Any deliberate tiny-fixture
+# exception must be allowlisted HERE with a justification; currently
+# there are none.
 # Limitation: queries returning an eagerly-materialized result (graph
 # iterations, localCheckpoint paths) expose only the post-materialization
 # plan — their internal shapes are pinned by dedicated tests instead.

@@ -1,16 +1,12 @@
-"""Generate golden-fixture parquet for the multimodal queries.
+"""Generate golden-fixture parquet for the audio (mm_*) queries.
 
-The FAKEIMG codec is fully deterministic (operators/multimodal.py:40-49), so
-the expected outputs of `mm_decode_features` and `mm_resize_frame_sample`
-are computable OUTSIDE Spark. This script recomputes them in pure
-numpy/stdlib — an independent implementation of the LCG pixel stream,
-byte-histogram embedding, nearest-neighbor resize, and frame sampling —
-and writes fixtures/multimodal/*.parquet. The registered DuckDB oracles
-read these files, turning both queries from rows-only checks into full
-hash-matched correctness rows.
-
-Rounding matches Spark's F.round(double, n): HALF_UP on the shortest
-decimal representation (java.math.BigDecimal.valueOf semantics).
+The WAV fixtures are built from a deterministic LCG sample stream
+(operators/multimodal.py:wav_values), so the expected outputs of the
+mm_decode_wav*, mm_audio_* queries are computable OUTSIDE Spark. This
+script recomputes them in plain numpy/stdlib — never importing the
+operator module, never touching the RIFF writer or parser — and writes
+fixtures/multimodal/*.parquet. The registered DuckDB oracles read these
+files, so each query is a full hash-matched correctness row.
 
 Usage: python tools/make_multimodal_golden.py
 """
@@ -18,354 +14,14 @@ Usage: python tools/make_multimodal_golden.py
 from __future__ import annotations
 
 import os
-import struct
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-FAKEIMG_MAGIC = b"FAKEIMG"
 OUT_DIR = os.path.abspath(
     os.path.join(os.path.dirname(__file__), "..", "fixtures", "multimodal")
 )
-
-
-def spark_round(v: float, n: int) -> float:
-    """Spark F.round(double, n): BigDecimal.valueOf(v).setScale(n, HALF_UP)."""
-    return float(Decimal(repr(v)).quantize(Decimal(1).scaleb(-n), ROUND_HALF_UP))
-
-
-def lcg_pixels(width: int, height: int, seed: int) -> np.ndarray:
-    """Independent recomputation of fake_image's pixel stream."""
-    n = width * height
-    x = (seed * 2654435761) % (2**32)
-    pix = np.empty(n, dtype=np.uint8)
-    for i in range(n):
-        x = (1103515245 * x + 12345) % (2**31)
-        pix[i] = x % 256
-    return pix
-
-
-def container(width: int, height: int, pix: np.ndarray) -> bytes:
-    return FAKEIMG_MAGIC + struct.pack("<II", width, height) + pix.tobytes()
-
-
-def decode_features_golden(n: int = 16, width: int = 32, height: int = 24,
-                           bins: int = 8) -> pa.Table:
-    """Expected output of mm_decode_features: decode summary + histogram
-    embedding mass per media row (media_table(n=16, 32x24), bins=8)."""
-    rows = []
-    for mid in range(n):
-        pix = lcg_pixels(width, height, seed=mid)
-        blob = np.frombuffer(container(width, height, pix), dtype=np.uint8)
-        hist, _ = np.histogram(blob, bins=bins, range=(0, 256))
-        total = hist.sum() or 1
-        emb = hist / total
-        # Spark's F.aggregate folds left-to-right; replicate that order.
-        mass = 0.0
-        for v in emb:
-            mass += float(v)
-        rows.append(
-            {
-                "media_id": mid,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(pix.mean()), 4),
-                "embedding_mass": spark_round(mass, 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def resize_frame_sample_golden(n: int = 12, width: int = 64, height: int = 48,
-                               tw: int = 16, th: int = 12,
-                               every_n_bytes: int = 64) -> pa.Table:
-    """Expected output of mm_resize_frame_sample: resize 64x48 -> 16x12,
-    re-encode, sample frames every 64 bytes, summarize per media row."""
-    rows = []
-    for mid in range(n):
-        arr = lcg_pixels(width, height, seed=mid).reshape(height, width)
-        yi = (np.arange(th) * height // th).astype(int)
-        xi = (np.arange(tw) * width // tw).astype(int)
-        small = arr[np.ix_(yi, xi)]
-        blob = container(tw, th, small.ravel())
-        means = []
-        total_bytes = 0
-        for off in range(0, len(blob), every_n_bytes):
-            chunk = np.frombuffer(blob[off : off + every_n_bytes], dtype=np.uint8)
-            means.append(float(chunk.mean()))
-            total_bytes += len(chunk)
-        rows.append(
-            {
-                "media_id": mid,
-                "n_frames": len(means),
-                "total_bytes": total_bytes,
-                "avg_frame_intensity": spark_round(sum(means) / len(means), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_ppm_golden(n: int = 12, width: int = 31, height: int = 17) -> pa.Table:
-    """Expected output of mm_decode_ppm. Independent recomputation: the
-    LCG value stream is regenerated directly (mod maxval+1) and the decode
-    result — 0-255 rescale, BT.601 integer luma, mean intensity — is
-    computed from the VALUES, never going through the engine's netpbm
-    parser (which is exactly what the query is testing)."""
-    cycle = (("P6", 255), ("P5", 255), ("P3", 100), ("P2", 99))
-    rows = []
-    for mid in range(n):
-        fmt, maxval = cycle[mid % 4]
-        nch = 3 if fmt in ("P6", "P3") else 1
-        x = (mid * 2654435761) % (2**32)
-        vals = np.empty(width * height * nch, dtype=np.int64)
-        for i in range(len(vals)):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % (maxval + 1)
-        if maxval != 255:
-            vals = (vals * 255 + maxval // 2) // maxval
-        if nch == 3:
-            rgb = vals.reshape(-1, 3)
-            vals = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        rows.append(
-            {
-                "media_id": mid,
-                "fmt": fmt,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(vals.mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_png_golden(n: int = 12, width: int = 23, height: int = 19) -> pa.Table:
-    """Expected output of mm_decode_png. Independent recomputation: the LCG
-    byte stream is regenerated directly and projected to grayscale (channel
-    0 for gray/gray+alpha, BT.601 integer luma for RGB/RGBA) WITHOUT going
-    through the engine's PNG encoder/decoder (the zlib round-trip is
-    exactly what the query is testing)."""
-    cycle = (0, 2, 4, 6, 3)  # PNG_CYCLE incl. palette, independently
-    nch_of = {0: 1, 2: 3, 4: 2, 6: 4, 3: 1}
-    pal_size, pal_seed_off = 64, 9973  # PNG_PAL_* constants, independently
-
-    def lcg(seed: int, count: int, mod: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.int64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % mod
-        return vals
-
-    rows = []
-    for mid in range(n):
-        ctype = cycle[mid % len(cycle)]
-        nch = nch_of[ctype]
-        if ctype == 3:
-            idx = lcg(mid, width * height, pal_size)
-            pal = lcg(mid + pal_seed_off, pal_size * 3, 256).reshape(-1, 3)
-            rgb = pal[idx]
-            g = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        else:
-            vals = lcg(mid, width * height * nch, 256)
-            px = vals.reshape(width * height, nch)
-            if ctype in (0, 4):
-                g = px[:, 0]
-            else:
-                g = (299 * px[:, 0] + 587 * px[:, 1] + 114 * px[:, 2]) // 1000
-        rows.append(
-            {
-                "media_id": mid,
-                "color_type": ctype,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(g.mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_jpeg_golden(n: int = 12, width: int = 24, height: int = 17) -> pa.Table:
-    """Expected output of mm_decode_jpeg. The entropy layer (markers,
-    Huffman, byte stuffing, restart intervals) is what the query tests,
-    so the golden recomputes the LOSSY math only — LCG luma plane ->
-    edge-replicated pad to the MCU grid -> per-block orthonormal DCT ->
-    flat quant round-trip (rint(c/q)*q, DC 1 / AC 2) -> IDCT -> crop ->
-    rint+clip — without touching the codec module's bitstream reader or
-    writer. Layout cycle mirrors JPEG_CYCLE: gray, 4:4:4, 4:2:0,
-    4:2:0+DRI — chroma never reaches the luma output, so only the MCU
-    geometry (8 vs 16) differs across layouts."""
-    T = np.zeros((8, 8))
-    for k in range(8):
-        for m in range(8):
-            c = (1 / np.sqrt(2)) if k == 0 else 1.0
-            T[k, m] = 0.5 * c * np.cos((2 * m + 1) * k * np.pi / 16)
-    qtab = np.full((8, 8), 2.0)
-    qtab[0, 0] = 1.0
-    # mcu luma tile size per JPEG_CYCLE index: gray/444 -> 8, 4:2:0 -> 16
-    tile_of = (8, 8, 16, 16)
-
-    def lcg(seed: int, count: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.float64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % 256
-        return vals
-
-    rows = []
-    for mid in range(n):
-        tile = tile_of[mid % 4]
-        pw = -(-width // tile) * tile
-        ph = -(-height // tile) * tile
-        plane = lcg(mid, width * height).reshape(height, width)
-        pad = np.zeros((ph, pw))
-        pad[:height, :width] = plane
-        if width < pw:
-            pad[:height, width:] = plane[:, -1:]
-        if height < ph:
-            pad[height:, :] = pad[height - 1 : height, :]
-        recon = np.zeros_like(pad)
-        for r0 in range(0, ph, 8):
-            for c0 in range(0, pw, 8):
-                blk = pad[r0 : r0 + 8, c0 : c0 + 8] - 128.0
-                coef = np.rint((T @ blk @ T.T) / qtab) * qtab
-                recon[r0 : r0 + 8, c0 : c0 + 8] = T.T @ coef @ T + 128.0
-        g = np.clip(np.rint(recon[:height, :width]), 0, 255).astype(np.uint8)
-        rows.append(
-            {
-                "media_id": mid,
-                "layout": mid % 4,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(g.reshape(-1).mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_jpeg12_golden(
-    n: int = 12, width: int = 24, height: int = 17
-) -> pa.Table:
-    """Expected output of mm_decode_jpeg_12bit: the extended-precision
-    baseline mode. Same codec-free flat-quant DCT recompute as the 8-bit
-    golden but on 12-bit LCG planes (values mod 4096, level shift 2048)
-    with the decoder's clip-to-4095-then->>4 luma collapse.
-    JPEG12_CYCLE: gray q=1, gray q=3 + DRI, 4:4:4 q=1, 4:2:0 q=1."""
-    T = np.zeros((8, 8))
-    for k in range(8):
-        for m in range(8):
-            c = (1 / np.sqrt(2)) if k == 0 else 1.0
-            T[k, m] = 0.5 * c * np.cos((2 * m + 1) * k * np.pi / 16)
-    layout_of = ((8, 1), (8, 3), (8, 1), (16, 1))  # (luma tile, q)
-
-    def lcg12(seed: int, count: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.float64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % 4096
-        return vals
-
-    rows = []
-    for mid in range(n):
-        tile, q = layout_of[mid % 4]
-        qtab = np.full((8, 8), 2.0 * q)
-        qtab[0, 0] = float(q)
-        pw = -(-width // tile) * tile
-        ph = -(-height // tile) * tile
-        plane = lcg12(mid, width * height).reshape(height, width)
-        pad = np.zeros((ph, pw))
-        pad[:height, :width] = plane
-        if width < pw:
-            pad[:height, width:] = plane[:, -1:]
-        if height < ph:
-            pad[height:, :] = pad[height - 1 : height, :]
-        recon = np.zeros_like(pad)
-        for r0 in range(0, ph, 8):
-            for c0 in range(0, pw, 8):
-                blk = pad[r0 : r0 + 8, c0 : c0 + 8] - 2048.0
-                coef = np.rint((T @ blk @ T.T) / qtab) * qtab
-                recon[r0 : r0 + 8, c0 : c0 + 8] = T.T @ coef @ T + 2048.0
-        full = np.clip(
-            np.rint(recon[:height, :width]), 0, 4095
-        ).astype(np.int64)
-        g = (full >> 4).astype(np.uint8)
-        rows.append(
-            {
-                "media_id": mid,
-                "layout": mid % 4,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(g.reshape(-1).mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_jpeg_prog_golden(
-    n: int = 12, width: int = 24, height: int = 17
-) -> pa.Table:
-    """Expected output of mm_decode_jpeg_progressive. The progressive
-    entropy layer (scan script, spectral selection, successive
-    approximation, EOB runs, correction bits) is what the query tests; the
-    lossy DCT math is IDENTICAL to baseline, so the golden recomputes the
-    same flat-quant round-trip per layout (JPEG_PROG_CYCLE: gray q=1,
-    gray q=8, 4:4:4 q=1, 4:2:0 q=1) without touching the codec module."""
-    T = np.zeros((8, 8))
-    for k in range(8):
-        for m in range(8):
-            c = (1 / np.sqrt(2)) if k == 0 else 1.0
-            T[k, m] = 0.5 * c * np.cos((2 * m + 1) * k * np.pi / 16)
-    # (luma tile, q) per JPEG_PROG_CYCLE index
-    layout_of = ((8, 1), (8, 8), (8, 1), (16, 1))
-
-    def lcg(seed: int, count: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.float64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % 256
-        return vals
-
-    rows = []
-    for mid in range(n):
-        tile, q = layout_of[mid % 4]
-        qtab = np.full((8, 8), 2.0 * q)
-        qtab[0, 0] = float(q)
-        pw = -(-width // tile) * tile
-        ph = -(-height // tile) * tile
-        plane = lcg(mid, width * height).reshape(height, width)
-        pad = np.zeros((ph, pw))
-        pad[:height, :width] = plane
-        if width < pw:
-            pad[:height, width:] = plane[:, -1:]
-        if height < ph:
-            pad[height:, :] = pad[height - 1 : height, :]
-        recon = np.zeros_like(pad)
-        for r0 in range(0, ph, 8):
-            for c0 in range(0, pw, 8):
-                blk = pad[r0 : r0 + 8, c0 : c0 + 8] - 128.0
-                coef = np.rint((T @ blk @ T.T) / qtab) * qtab
-                recon[r0 : r0 + 8, c0 : c0 + 8] = T.T @ coef @ T + 128.0
-        g = np.clip(np.rint(recon[:height, :width]), 0, 255).astype(np.uint8)
-        rows.append(
-            {
-                "media_id": mid,
-                "layout": mid % 4,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(g.reshape(-1).mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
 
 
 def decode_wav_g711_golden(
@@ -429,54 +85,6 @@ def decode_wav_g711_golden(
                 "n_frames": n_frames,
                 "peak_abs": int(np.abs(s).max()),
                 "mean_abs_e3": int(np.abs(s).sum()) * 1000 // len(s),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_png_subbyte_golden(
-    n: int = 12, width: int = 23, height: int = 19
-) -> pa.Table:
-    """Expected output of mm_decode_png_subbyte: 1/2/4-bit gray and
-    palette layouts (plain + Adam7 — interlace only reorders bytes, the
-    pixel grid is identical), recomputed from the LCG stream WITHOUT the
-    encoder/decoder. Gray samples scale by the integral 255/(2^d-1);
-    palette indices look up a 2^d-entry LCG palette."""
-    cycle = (
-        (0, 1, 0), (0, 2, 0), (0, 4, 0), (3, 1, 0), (3, 2, 0), (3, 4, 0),
-        (0, 1, 1), (0, 2, 1), (0, 4, 1), (3, 1, 1), (3, 2, 1), (3, 4, 1),
-    )
-    pal_seed_off = 9973
-
-    def lcg(seed: int, count: int, mod: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.int64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % mod
-        return vals
-
-    rows = []
-    for mid in range(n):
-        ctype, depth, il = cycle[mid % len(cycle)]
-        maxv = (1 << depth) - 1
-        vals = lcg(mid, width * height, maxv + 1)
-        if ctype == 3:
-            pal = lcg(mid + pal_seed_off, (1 << depth) * 3, 256).reshape(-1, 3)
-            rgb = pal[vals]
-            g = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        else:
-            g = vals * (255 // maxv)
-        rows.append(
-            {
-                "media_id": mid,
-                "color_type": ctype,
-                "bit_depth": depth,
-                "interlace": il,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(g.mean()), 4),
             }
         )
     return pa.Table.from_pylist(rows)
@@ -584,27 +192,6 @@ def audio_rms_windows_golden(
                     "rms_e3": math.isqrt(energy * 1_000_000 // len(seg)),
                 }
             )
-    return pa.Table.from_pylist(rows)
-
-
-def image_hist_golden(
-    n: int = 16, n_base: int = 12, width: int = 32, height: int = 24,
-    bins: int = 16,
-) -> pa.Table:
-    """Expected (media_id, hist) for mm_image_neardup's 16-row media
-    table (ids >= n_base duplicate seed id % n_base): integer byte
-    histograms of the FULL container blob (header + raster), recomputed
-    here with a different binning formulation (floor-divide bincount)
-    than the operator."""
-    rows = []
-    for mid in range(n):
-        seed = mid % n_base
-        pix = lcg_pixels(width, height, seed=seed) % (16 * (seed + 1))
-        blob = np.frombuffer(
-            container(width, height, pix.astype(np.uint8)), dtype=np.uint8
-        )
-        hist = np.bincount(blob // (256 // bins), minlength=bins)
-        rows.append({"media_id": mid, "hist": [int(x) for x in hist]})
     return pa.Table.from_pylist(rows)
 
 
@@ -728,52 +315,6 @@ def decode_wav_adpcm_golden(
     return pa.Table.from_pylist(rows)
 
 
-def decode_phash_golden(n_base: int = 12, width: int = 24, height: int = 24) -> pa.Table:
-    """Expected (media_id, phash) for mm_phash_neardup's fixture:
-    recomputed from the LCG gray stream with an INDEPENDENT plain-Python
-    pipeline — perturbation, 8x8 truncating box means, recursive-definition
-    Walsh-Hadamard (H_2n = [[H_n, H_n], [H_n, -H_n]] expanded as an
-    explicit sign-matrix product rather than in-place butterflies), and
-    the strict-median sign bits. The operator module is never imported."""
-    # explicit 8x8 Hadamard sign matrix from the recursive definition
-    had = [[1]]
-    while len(had) < 8:
-        had = [r + r for r in had] + [r + [-x for x in r] for r in had]
-
-    def phash(vals):
-        cells = []
-        bh, bw = height // 8, width // 8
-        for r in range(8):
-            for c in range(8):
-                s = 0
-                for y in range(r * bh, (r + 1) * bh):
-                    for x in range(c * bw, (c + 1) * bw):
-                        s += vals[y * width + x]
-                cells.append(s // (bh * bw))
-        # 2-D WHT as H @ G @ H^T (H symmetric) in exact int arithmetic
-        g = [cells[r * 8 : r * 8 + 8] for r in range(8)]
-        hg = [[sum(had[i][k] * g[k][j] for k in range(8)) for j in range(8)] for i in range(8)]
-        full = [[sum(hg[i][k] * had[k][j] for k in range(8)) for j in range(8)] for i in range(8)]
-        flat = [full[r][c] for r in range(8) for c in range(8)][1:]
-        med = sorted(flat)[31]
-        return sum(1 << i for i, v in enumerate(flat) if v > med)
-
-    rows = []
-    for i in range(n_base):
-        x = (i * 2654435761) % (2**32)
-        vals = []
-        for _ in range(width * height):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals.append(x % 256)
-        rows.append({"media_id": i, "phash": phash(vals)})
-        pv = list(vals)
-        for j in range(3):
-            pos = (i * 48271 + j * 40503 + 12345) % len(pv)
-            pv[pos] = (pv[pos] + 32) % 256
-        rows.append({"media_id": 100 + i, "phash": phash(pv)})
-    return pa.Table.from_pylist(sorted(rows, key=lambda r: r["media_id"]))
-
-
 def audio_fp_golden(n_base: int = 12, n_frames: int = 1920, n_win: int = 64) -> pa.Table:
     """Expected (media_id, phash) for mm_audio_fingerprint's fixture:
     recomputed from the 16-bit LCG sample stream with an INDEPENDENT
@@ -806,375 +347,6 @@ def audio_fp_golden(n_base: int = 12, n_frames: int = 1920, n_win: int = 64) -> 
             pv[pos] = ((pv[pos] + 32768 + 3000) % 65536) - 32768
         rows.append({"media_id": 100 + i, "phash": fp(pv)})
     return pa.Table.from_pylist(sorted(rows, key=lambda r: r["media_id"]))
-
-
-def decode_video_golden(n: int = 8, frame_stride: int = 2) -> pa.Table:
-    """Expected output of mm_decode_video_mjpeg: AVI/MJPEG clips whose
-    sampled frames are recomputed with the SAME codec-free flat-quant
-    DCT math as decode_jpeg_golden (LCG luma plane -> orthonormal DCT ->
-    rint quant round-trip -> IDCT -> rint+clip) — the container walker,
-    JPEG bitstream, and operator module are never touched. Frame f of
-    video mid uses LCG seed mid*1000+f; the cycle mirrors AVI_CYCLE."""
-    cycle = ((6, 16, 16, 10), (4, 24, 16, 15), (8, 16, 8, 30), (5, 8, 8, 25))
-    T = np.zeros((8, 8))
-    for k in range(8):
-        for m in range(8):
-            c = (1 / np.sqrt(2)) if k == 0 else 1.0
-            T[k, m] = 0.5 * c * np.cos((2 * m + 1) * k * np.pi / 16)
-    qtab = np.full((8, 8), 2.0)
-    qtab[0, 0] = 1.0
-
-    def lcg(seed: int, count: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.float64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % 256
-        return vals
-
-    rows = []
-    for mid in range(n):
-        nf, w, h, fps = cycle[mid % 4]
-        total = decoded = 0
-        for f in range(0, nf, frame_stride):
-            plane = lcg(mid * 1000 + f, w * h).reshape(h, w)
-            recon = np.zeros_like(plane)
-            for r0 in range(0, h, 8):
-                for c0 in range(0, w, 8):
-                    blk = plane[r0 : r0 + 8, c0 : c0 + 8] - 128.0
-                    coef = np.rint((T @ blk @ T.T) / qtab) * qtab
-                    recon[r0 : r0 + 8, c0 : c0 + 8] = T.T @ coef @ T + 128.0
-            g = np.clip(np.rint(recon), 0, 255).astype(np.uint8)
-            total += int(g.astype(np.int64).sum())
-            decoded += 1
-        rows.append(
-            {
-                "media_id": mid, "width": w, "height": h, "fps": fps,
-                "n_frames": nf, "frames_decoded": decoded, "total_luma": total,
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_gif_golden(n: int = 12, width: int = 23, height: int = 19) -> pa.Table:
-    """Expected output of mm_decode_gif. GIF's LZW is LOSSLESS, so the
-    golden recomputes palette + index streams straight from the LCG and
-    projects BT.601 luma — the LZW coder, interlace reorder, and block
-    walker are exactly what the query tests and are never touched here.
-    Cycle mirrors GIF_CYCLE: (8, plain), (8, interlaced), (4, plain),
-    (2, interlaced)."""
-    cycle = ((8, 0), (8, 1), (4, 0), (2, 1))
-    pal_off = 7717
-
-    def lcg_vals(count, seed, maxval):
-        x = (seed * 2654435761) % (2**32)
-        out = []
-        for _ in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            out.append(x % (maxval + 1))
-        return out
-
-    rows = []
-    for mid in range(n):
-        depth, il = cycle[mid % 4]
-        ncol = 1 << depth
-        pal = np.array(
-            lcg_vals(ncol * 3, mid + pal_off, 255), dtype=np.int64
-        ).reshape(-1, 3)
-        idx = np.array(lcg_vals(width * height, mid, ncol - 1), dtype=np.int64)
-        rgb = pal[idx]
-        luma = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        rows.append(
-            {
-                "media_id": mid,
-                "depth": depth,
-                "interlace": il,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(luma.mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_bmp_golden(n: int = 8, width: int = 23, height: int = 19) -> pa.Table:
-    """Expected output of mm_decode_bmp: uncompressed BMP is lossless,
-    so the golden recomputes the LCG BGR/palette streams and projects
-    BT.601 luma — the header/stride/bottom-up walker is what the query
-    tests. Cycle mirrors BMP_CYCLE: 24-bit, 8-bit indexed."""
-    pal_off = 7717
-
-    def lcg_vals(count, seed, maxval):
-        x = (seed * 2654435761) % (2**32)
-        out = []
-        for _ in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            out.append(x % (maxval + 1))
-        return out
-
-    rows = []
-    for mid in range(n):
-        bpp = (24, 8)[mid % 2]
-        if bpp == 24:
-            vals = np.array(
-                lcg_vals(width * height * 3, mid, 255), dtype=np.int64
-            ).reshape(-1, 3)
-            luma = (299 * vals[:, 0] + 587 * vals[:, 1] + 114 * vals[:, 2]) // 1000
-        else:
-            pal = np.array(
-                lcg_vals(256 * 3, mid + pal_off, 255), dtype=np.int64
-            ).reshape(-1, 3)
-            idx = np.array(lcg_vals(width * height, mid, 255), dtype=np.int64)
-            rgb = pal[idx]
-            luma = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        rows.append(
-            {
-                "media_id": mid,
-                "bpp": bpp,
-                "width": width,
-                "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(luma.mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def decode_tiff_golden(n: int = 8, width: int = 23, height: int = 19) -> pa.Table:
-    """Expected output of mm_decode_tiff: uncompressed TIFF is lossless,
-    so the golden recomputes the LCG gray/RGB streams and projects
-    BT.601 luma — the IFD/strip/byte-order walker is what the query
-    tests. Cycle mirrors TIFF_CYCLE."""
-    cycle = ((0, 0), (1, 0), (0, 1), (1, 1))
-
-    def lcg_vals(count, seed):
-        x = (seed * 2654435761) % (2**32)
-        out = []
-        for _ in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            out.append(x % 256)
-        return out
-
-    rows = []
-    for mid in range(n):
-        rgb, be = cycle[mid % 4]
-        if rgb:
-            v = np.array(lcg_vals(width * height * 3, mid), dtype=np.int64).reshape(-1, 3)
-            luma = (299 * v[:, 0] + 587 * v[:, 1] + 114 * v[:, 2]) // 1000
-        else:
-            luma = np.array(lcg_vals(width * height, mid), dtype=np.int64)
-        rows.append(
-            {
-                "media_id": mid, "rgb": rgb, "big_endian": be,
-                "width": width, "height": height,
-                "n_pixels": width * height,
-                "mean_intensity": spark_round(float(luma.mean()), 4),
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def main() -> None:
-    os.makedirs(OUT_DIR, exist_ok=True)
-    pq.write_table(
-        decode_features_golden(), os.path.join(OUT_DIR, "mm_decode_features.parquet")
-    )
-    pq.write_table(
-        resize_frame_sample_golden(),
-        os.path.join(OUT_DIR, "mm_resize_frame_sample.parquet"),
-    )
-    pq.write_table(
-        decode_ppm_golden(), os.path.join(OUT_DIR, "mm_decode_ppm.parquet")
-    )
-    pq.write_table(
-        decode_png_golden(), os.path.join(OUT_DIR, "mm_decode_png.parquet")
-    )
-    pq.write_table(
-        decode_jpeg_golden(), os.path.join(OUT_DIR, "mm_decode_jpeg.parquet")
-    )
-    pq.write_table(
-        decode_wav_g711_golden(),
-        os.path.join(OUT_DIR, "mm_decode_wav_g711.parquet"),
-    )
-    pq.write_table(
-        decode_wav_adpcm_golden(),
-        os.path.join(OUT_DIR, "mm_decode_wav_adpcm.parquet"),
-    )
-    pq.write_table(
-        decode_phash_golden(),
-        os.path.join(OUT_DIR, "mm_phash.parquet"),
-    )
-    pq.write_table(
-        audio_fp_golden(),
-        os.path.join(OUT_DIR, "mm_audio_fp.parquet"),
-    )
-    pq.write_table(
-        decode_video_golden(),
-        os.path.join(OUT_DIR, "mm_video.parquet"),
-    )
-    pq.write_table(
-        video_shot_golden(),
-        os.path.join(OUT_DIR, "mm_video_shots.parquet"),
-    )
-    pq.write_table(
-        image_augment_golden(),
-        os.path.join(OUT_DIR, "mm_image_augment.parquet"),
-    )
-    pq.write_table(
-        audio_augment_golden(),
-        os.path.join(OUT_DIR, "mm_audio_augment.parquet"),
-    )
-    pq.write_table(
-        image_tiles_golden(),
-        os.path.join(OUT_DIR, "mm_image_tiles.parquet"),
-    )
-    pq.write_table(
-        audio_vad_rms_golden(),
-        os.path.join(OUT_DIR, "mm_audio_vad_rms.parquet"),
-    )
-    pq.write_table(
-        decode_gif_golden(),
-        os.path.join(OUT_DIR, "mm_decode_gif.parquet"),
-    )
-    pq.write_table(
-        decode_bmp_golden(),
-        os.path.join(OUT_DIR, "mm_decode_bmp.parquet"),
-    )
-    pq.write_table(
-        decode_tiff_golden(),
-        os.path.join(OUT_DIR, "mm_decode_tiff.parquet"),
-    )
-    pq.write_table(
-        decode_jpeg12_golden(),
-        os.path.join(OUT_DIR, "mm_decode_jpeg12.parquet"),
-    )
-    pq.write_table(
-        decode_jpeg_prog_golden(),
-        os.path.join(OUT_DIR, "mm_decode_jpeg_prog.parquet"),
-    )
-    pq.write_table(
-        decode_png_subbyte_golden(),
-        os.path.join(OUT_DIR, "mm_decode_png_subbyte.parquet"),
-    )
-    pq.write_table(
-        decode_wav_golden(), os.path.join(OUT_DIR, "mm_decode_wav.parquet")
-    )
-    pq.write_table(
-        decode_wav_deep_golden(),
-        os.path.join(OUT_DIR, "mm_decode_wav_deep.parquet"),
-    )
-    pq.write_table(
-        audio_rms_windows_golden(),
-        os.path.join(OUT_DIR, "mm_audio_rms_windows.parquet"),
-    )
-    pq.write_table(
-        image_hist_golden(), os.path.join(OUT_DIR, "mm_image_hist.parquet")
-    )
-    print(f"wrote golden fixtures to {OUT_DIR}")
-
-
-
-
-def video_shot_golden(n: int = 8) -> pa.Table:
-    """Expected output of mm_video_shot_detect: scene-structured AVI clips
-    (SCENE_CYCLE, scenes of 3 identical frames) whose per-frame decoded
-    luma is recomputed with the codec-free flat-quant DCT math (see
-    decode_video_golden) — then 16-bin histograms (byte >> 4), consecutive
-    L1 distances, and cuts where 2*L1 > n_pixels. Container, JPEG
-    bitstream, and the operator module are never touched."""
-    cycle = ((9, 16, 16, 10), (6, 24, 16, 15), (8, 16, 8, 30), (12, 8, 8, 25))
-    scene_len = 3
-    T = np.zeros((8, 8))
-    for k in range(8):
-        for m in range(8):
-            c = (1 / np.sqrt(2)) if k == 0 else 1.0
-            T[k, m] = 0.5 * c * np.cos((2 * m + 1) * k * np.pi / 16)
-    qtab = np.full((8, 8), 2.0)
-    qtab[0, 0] = 1.0
-
-    def lcg(seed: int, count: int, maxval: int) -> np.ndarray:
-        x = (seed * 2654435761) % (2**32)
-        vals = np.empty(count, dtype=np.float64)
-        for i in range(count):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % (maxval + 1)
-        return vals
-
-    rows = []
-    for mid in range(n):
-        nf, w, h, fps = cycle[mid % 4]
-        npix = w * h
-        prev = None
-        n_cuts = 0
-        max_l1 = 0
-        total_l1 = 0
-        for f in range(nf):
-            scene = f // scene_len
-            mv = 255 if scene % 2 == 0 else 95  # alternating luma range
-            plane = lcg(mid * 1000 + scene, npix, mv).reshape(h, w)
-            recon = np.zeros_like(plane)
-            for r0 in range(0, h, 8):
-                for c0 in range(0, w, 8):
-                    blk = plane[r0 : r0 + 8, c0 : c0 + 8] - 128.0
-                    coef = np.rint((T @ blk @ T.T) / qtab) * qtab
-                    recon[r0 : r0 + 8, c0 : c0 + 8] = T.T @ coef @ T + 128.0
-            g = np.clip(np.rint(recon), 0, 255).astype(np.uint8)
-            hist = np.bincount(g.reshape(-1) >> 4, minlength=16).astype(np.int64)
-            if prev is not None:
-                l1 = int(np.abs(hist - prev).sum())
-                total_l1 += l1
-                max_l1 = max(max_l1, l1)
-                if 2 * l1 > npix:
-                    n_cuts += 1
-            prev = hist
-        rows.append(
-            {
-                "media_id": mid, "width": w, "height": h, "n_frames": nf,
-                "n_shot_cuts": n_cuts, "max_l1": max_l1, "total_l1": total_l1,
-            }
-        )
-    return pa.Table.from_pylist(rows)
-
-
-def image_augment_golden(
-    n: int = 12, width: int = 31, height: int = 17,
-    crop_margin: int = 2, brightness: int = 20,
-) -> pa.Table:
-    """Expected output of mm_image_augment: the netpbm LCG value stream
-    (decode_ppm_golden's recomputation — parser never touched) pushed
-    through flip / center-crop / brightness-clamp / positional checksum
-    in plain numpy."""
-    cycle = (("P6", 255), ("P5", 255), ("P3", 100), ("P2", 99))
-    rows = []
-    for mid in range(n):
-        fmt, maxval = cycle[mid % 4]
-        nch = 3 if fmt in ("P6", "P3") else 1
-        x = (mid * 2654435761) % (2**32)
-        vals = np.empty(width * height * nch, dtype=np.int64)
-        for i in range(len(vals)):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % (maxval + 1)
-        if maxval != 255:
-            vals = (vals * 255 + maxval // 2) // maxval
-        if nch == 3:
-            rgb = vals.reshape(-1, 3)
-            vals = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        a = vals.reshape(height, width)
-        a = a[:, ::-1]
-        a = a[crop_margin : height - crop_margin, crop_margin : width - crop_margin]
-        a = np.minimum(a + brightness, 255)
-        oh, ow = a.shape
-        weights = np.arange(oh * ow, dtype=np.int64).reshape(oh, ow) % 97 + 1
-        rows.append(
-            {
-                "media_id": mid, "out_w": ow, "out_h": oh,
-                "aug_sum": int(a.sum()),
-                "aug_mean_e4": int(a.sum() * 10000 // (oh * ow)),
-                "pos_checksum": int((a * weights).sum()),
-            }
-        )
-    return pa.Table.from_pylist(rows)
 
 
 def audio_augment_golden(
@@ -1213,50 +385,6 @@ def audio_augment_golden(
     return pa.Table.from_pylist(rows)
 
 
-
-
-def image_tiles_golden(
-    n: int = 12, width: int = 31, height: int = 17, tile: int = 8
-) -> pa.Table:
-    """Expected output of mm_image_tiles: the netpbm LCG value stream
-    (parser never touched) tiled on the floor grid with per-tile stats
-    and the local-coordinate positional checksum in plain numpy."""
-    cycle = (("P6", 255), ("P5", 255), ("P3", 100), ("P2", 99))
-    rows = []
-    for mid in range(n):
-        fmt, maxval = cycle[mid % 4]
-        nch = 3 if fmt in ("P6", "P3") else 1
-        x = (mid * 2654435761) % (2**32)
-        vals = np.empty(width * height * nch, dtype=np.int64)
-        for i in range(len(vals)):
-            x = (1103515245 * x + 12345) % (2**31)
-            vals[i] = x % (maxval + 1)
-        if maxval != 255:
-            vals = (vals * 255 + maxval // 2) // maxval
-        if nch == 3:
-            rgb = vals.reshape(-1, 3)
-            vals = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
-        a = vals.reshape(height, width)
-        nr, nc = height // tile, width // tile
-        weights = (
-            np.arange(tile * tile, dtype=np.int64).reshape(tile, tile) % 97 + 1
-        )
-        for tr in range(nr):
-            for tc in range(nc):
-                t = a[tr * tile : (tr + 1) * tile, tc * tile : (tc + 1) * tile]
-                rows.append(
-                    {
-                        "media_id": mid, "tile_row": tr, "tile_col": tc,
-                        "tile_sum": int(t.sum()),
-                        "tile_mean_e4": int(t.sum() * 10000 // (tile * tile)),
-                        "pos_checksum": int((t * weights).sum()),
-                        "dropped_rows": height - nr * tile,
-                        "dropped_cols": width - nc * tile,
-                    }
-                )
-    return pa.Table.from_pylist(rows)
-
-
 def audio_vad_rms_golden(
     n: int = 8, n_frames: int = 960, block: int = 80,
     mod: int = 6, loud_lt: int = 3,
@@ -1291,6 +419,25 @@ def audio_vad_rms_golden(
                 }
             )
     return pa.Table.from_pylist(rows)
+
+
+GOLDENS = {
+    "mm_decode_wav": decode_wav_golden,
+    "mm_decode_wav_g711": decode_wav_g711_golden,
+    "mm_decode_wav_deep": decode_wav_deep_golden,
+    "mm_decode_wav_adpcm": decode_wav_adpcm_golden,
+    "mm_audio_rms_windows": audio_rms_windows_golden,
+    "mm_audio_fp": audio_fp_golden,
+    "mm_audio_augment": audio_augment_golden,
+    "mm_audio_vad_rms": audio_vad_rms_golden,
+}
+
+
+def main() -> None:
+    os.makedirs(OUT_DIR, exist_ok=True)
+    for name, fn in GOLDENS.items():
+        pq.write_table(fn(), os.path.join(OUT_DIR, f"{name}.parquet"))
+    print(f"wrote golden fixtures to {OUT_DIR}")
 
 
 if __name__ == "__main__":
