@@ -1,4 +1,4 @@
-"""Driver-side filesystem metadata through the Hadoop FileSystem API.
+"""Driver-side filesystem access through the Hadoop FileSystem API.
 
 Maintenance passes (small-file compaction, versioned-snapshot discovery)
 need O(#files) listings of the SINK's filesystem — which in production is
@@ -7,7 +7,9 @@ silently list nothing for `s3a://...` or `hdfs://...` URIs (a compaction
 would see total=0 bytes, a CDC restart would see no prior snapshot), so
 every listing here goes through `Path.getFileSystem(hadoopConf)`: the
 same resolution Spark's own readers use, scheme-dispatched per-path, and
-identical on local paths (tests run against file://).
+identical on local paths (tests run against file://). The same holds for
+reading a source file's first line, the header check validated readers
+run before their schema'd read.
 """
 
 from __future__ import annotations
@@ -95,6 +97,34 @@ def delete_checksum_sidecars(spark: SparkSession, path: str) -> None:
         name = st.getPath().getName()
         if name.startswith(".") and name.endswith(".crc"):
             raw.delete(st.getPath(), False)
+
+
+def first_line(spark: SparkSession, path: str, comment: str | None = None) -> str | None:
+    """First line of the file at `path` that is neither blank nor starts
+    with `comment`, without its line terminator; None if there is none.
+    Streams only the head of the file on the driver (decompressing by
+    file extension, as Spark's text readers do), so a header check
+    costs no Spark job."""
+    fs, jpath = _fs_and_path(spark, path)
+    jvm = spark._jvm
+    stream = fs.open(jpath)
+    try:
+        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+            spark._jsc.hadoopConfiguration()
+        ).getCodec(jpath)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        )
+        while True:
+            line = reader.readLine()
+            if line is None:
+                return None
+            if line.strip() and not (comment and line.startswith(comment)):
+                return line
+    finally:
+        stream.close()
 
 
 def list_child_dirs(spark: SparkSession, path: str) -> list[str]:

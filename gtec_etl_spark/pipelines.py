@@ -7,9 +7,13 @@ lifecycle (SURVEY.md §3.1) composed from the engine's building blocks:
   reconciliation (A2) → JSON-LD document emission (K1) → TSV dump (K3)
   → checksummed bag (K4).
 
-Everything before the final writes is lazy DataFrame lineage — the "plan"
-the reference encodes as a Python call graph (SURVEY.md §3) is here a
-single Catalyst plan per output.
+The "plan" the reference encodes as a Python call graph (SURVEY.md §3) is
+DataFrame lineage here, cut at two points in run_gtex_like_etl: one eager
+fail-fast validation pass over all sources, and a local checkpoint of the
+per-group documents, which their first action materializes once so that
+the reconciliation, release validation and document writer do not re-run
+ingest. Linkage, the dangling and conflict audits and the TSV dump stay
+lazy, one Catalyst plan per output.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ SUBJECT_SPEC = validated.TableSpec(
         validated.ColumnSpec("AGE", cv=["20-29", "30-39", "40-49", "50-59", "60-69"]),
     ],
     primary_key=["SUBJID"],
+    name="subjects",
 )
 
 SAMPLE_SPEC = validated.TableSpec(
@@ -41,6 +46,7 @@ SAMPLE_SPEC = validated.TableSpec(
         validated.ColumnSpec("SMRIN", dtype="double"),
     ],
     primary_key=["SAMPID"],
+    name="samples",
 )
 
 RESTRICTED_SPEC = validated.TableSpec(
@@ -50,6 +56,7 @@ RESTRICTED_SPEC = validated.TableSpec(
         validated.ColumnSpec("AGE", cv=["20-29", "30-39", "40-49", "50-59", "60-69"]),
     ],
     primary_key=["SUBJID"],
+    name="restricted",
 )
 
 
@@ -71,77 +78,63 @@ def run_gtex_like_etl(
     expected_group_sizes: dict[str, int] | None = None,
 ) -> EtlResult:
     """Extract + transform. Raises ValidationError on any source-constraint
-    violation (the reference's mid-parse fatal, SURVEY.md §7.4)."""
-    subjects = validated.read_tsv(spark, subjects_tsv, SUBJECT_SPEC)
-    validated.assert_valid(subjects, SUBJECT_SPEC)
-    subjects = validated.apply_mappings(subjects, SUBJECT_SPEC)
+    violation (the reference's mid-parse fatal, SURVEY.md §7.4), checked
+    over all sources in one pass."""
+    sources = [
+        (validated.read_tsv(spark, subjects_tsv, SUBJECT_SPEC), SUBJECT_SPEC),
+        (validated.read_tsv(spark, samples_tsv, SAMPLE_SPEC), SAMPLE_SPEC),
+    ]
+    if restricted_tsv is not None:
+        sources.append(
+            (validated.read_tsv(spark, restricted_tsv, RESTRICTED_SPEC), RESTRICTED_SPEC)
+        )
+    validated.assert_valid(sources)
+    subjects, samples, *restricted = [
+        validated.apply_mappings(df, spec) for df, spec in sources
+    ]
 
-    samples = validated.read_tsv(spark, samples_tsv, SAMPLE_SPEC)
-    validated.assert_valid(samples, SAMPLE_SPEC)
-    samples = validated.apply_mappings(samples, SAMPLE_SPEC)
-
-    # J1: derive the subject key from the sample id; audit dangling FKs.
+    # J1: derive the subject key from the sample id. One left join against
+    # the PRE-merge subjects yields both the linked samples and the
+    # dangling-FK audit, so the dump's SEX/AGE come from subjects.tsv.
     samples = samples.withColumn(
         "SUBJID", F.regexp_extract("SAMPID", r"^(GTEX-[A-Z0-9]+)", 1)
     )
-    dangling = J.dangling_keys(samples, subjects.select("SUBJID"), "SUBJID")
-    linked = samples.join(F.broadcast(subjects), "SUBJID")
+    probe = samples.join(
+        F.broadcast(subjects.withColumn("__found", F.lit(True))), "SUBJID", "left"
+    )
+    dangling = probe.filter(F.col("__found").isNull()).select(*samples.columns)
+    linked = probe.filter(F.col("__found")).drop("__found")
 
-    conflicts = None
-    if restricted_tsv is not None:
-        restricted = validated.read_tsv(spark, restricted_tsv, RESTRICTED_SPEC)
-        validated.assert_valid(restricted, RESTRICTED_SPEC)
-        restricted = validated.apply_mappings(restricted, RESTRICTED_SPEC)
-        subjects, conflicts = J.conflict_checked_merge(subjects, restricted, "SUBJID")
-    if conflicts is None:
+    if restricted:
+        subjects, conflicts = J.conflict_checked_merge(subjects, restricted[0], "SUBJID")
+    else:
         conflicts = spark.createDataFrame(
             [], "SUBJID string, column string, base_value string, extra_value string"
         )
 
-    # A1 consent StudyGroups with sorted member lists; A2 reconciliation.
-    group_key = "CONSENT" if restricted_tsv is not None else "SEX"
-    groups = subjects.groupBy(group_key).agg(
-        F.count(F.lit(1)).alias("size"),
-        F.concat_ws(",", F.sort_array(F.collect_list("SUBJID"))).alias("members"),
-    )
-    if expected_group_sizes:
-        expected = spark.createDataFrame(
-            list(expected_group_sizes.items()), f"{group_key} string, expected long"
-        )
-        # Expectations are EXHAUSTIVE (the reference's per-file count check):
-        # full_outer so all three failure modes surface — wrong size,
-        # expected-but-absent group (size NULL), and computed-but-unexpected
-        # group (expected NULL).
-        bad = (
-            groups.join(expected, group_key, "full_outer")
-            .filter(
-                F.coalesce(F.col("size"), F.lit(-1))
-                != F.coalesce(F.col("expected"), F.lit(-2))
-            )
-        )
-        if bad.take(1):
-            raise ValueError(
-                f"consent-group size reconciliation failed: {bad.collect()}"
-            )
-
-    # K1: one JSON-LD document per study group (deterministic ids, sorted
-    # members as @id refs).
+    # A1 consent StudyGroups and K1 one JSON-LD document per group
+    # (deterministic ids, members sorted by SUBJID as embedded Materials)
+    # from one aggregate, checkpointed: the first action materializes it,
+    # and the A2 reconciliation, release validation and the document
+    # writer all read that one copy.
+    group_key = "CONSENT" if restricted else "SEX"
     subj_struct = F.struct(
         jsonld.content_id("Material", "SUBJID").alias("@id"),
         F.lit("Material").alias("@type"),
         F.col("SUBJID").alias("name"),
     )
-    per_subject = subjects.select(group_key, "SUBJID", subj_struct.alias("s"))
-    documents = (
-        per_subject.groupBy(group_key)
+    groups = (
+        subjects.groupBy(group_key)
         .agg(
             jsonld.children_array(
-                F.collect_list(jsonld.sorted_children(F.col("SUBJID"), F.col("s")))
+                F.collect_list(jsonld.sorted_children(F.col("SUBJID"), subj_struct))
             ).alias("members"),
             F.count(F.lit(1)).alias("size"),
         )
         .select(
             F.col(group_key).alias("group"),
+            "size",
+            F.concat_ws(",", F.col("members.name")).alias("member_ids"),
             jsonld.to_document(
                 F.struct(
                     jsonld.content_id("StudyGroup", group_key).alias("@id"),
@@ -152,15 +145,30 @@ def run_gtex_like_etl(
                 )
             ).alias("doc"),
         )
+        .localCheckpoint(eager=False)
     )
+    if expected_group_sizes:
+        # Expectations are EXHAUSTIVE (the reference's per-file count
+        # check): a wrong size, an expected-but-absent group and a
+        # computed-but-unexpected group all fail.
+        sizes = {r["group"]: r["size"] for r in groups.select("group", "size").collect()}
+        bad = {
+            g: {"size": sizes.get(g), "expected": expected_group_sizes.get(g)}
+            for g in sizes.keys() | expected_group_sizes.keys()
+            if sizes.get(g) != expected_group_sizes.get(g)
+        }
+        if bad:
+            raise ValueError(f"consent-group size reconciliation failed: {bad}")
 
     return EtlResult(
         subjects=subjects,
         samples=linked,
-        study_groups=groups,
+        study_groups=groups.select(
+            F.col("group").alias(group_key), "size", F.col("member_ids").alias("members")
+        ),
         conflicts=conflicts,
         dangling_samples=dangling,
-        documents=documents,
+        documents=groups.select("group", "doc"),
     )
 
 

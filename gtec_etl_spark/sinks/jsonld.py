@@ -138,6 +138,17 @@ RELEASE_DOC_SCHEMA = (
 _ID_RE = "^dats:[A-Za-z]+/[0-9a-f]{32}$"
 
 
+def _occurrence(kind: str, oid: Column, typ: Column) -> Column:
+    return F.struct(
+        F.lit(kind).alias("kind"),
+        oid.cast("string").alias("id"),
+        typ.cast("string").alias("typ"),
+    )
+
+
+_OCCURRENCES = "array<struct<kind:string,id:string,typ:string>>"
+
+
 def validate_release(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
     """K8 schema-contract validation — the reference validates every
     release against the datatagsuite DATS JSON schemas before bagging
@@ -174,119 +185,94 @@ def validate_release(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
     same entity embedded full in two different documents is correct —
     each document must be self-contained).
 
-    Plan: one parse + three regexp extract/explodes, a conditional
-    aggregate, a per-(doc, id) dup check, and a ref-vs-full left-anti
-    join — every intermediate is release-sized (documents, not source
-    data), so validation costs one scan of the release at any scale.
-    Healthy releases report all-zero counters."""
-    base = docs.select(
-        F.col(doc_col).alias("__doc"),
-        F.monotonically_increasing_id().alias("__docno"),
-        # structural gate: malformed JSON aborts here (FAILFAST), before
-        # any counting
-        F.from_json(
-            F.col(doc_col), RELEASE_DOC_SCHEMA, {"mode": "FAILFAST"}
-        ).alias("p"),
-    ).localCheckpoint()  # release-sized; reused by all extractions
-
-    full_occ = base.select(
-        "__docno",
-        F.explode(
+    Plan: each document is parsed once and all its entity occurrences
+    (full, id-less, ref) are exploded from one concatenated array, plus
+    one marker row per document. One shuffle by @id then serves both
+    scopes: an aggregate per (@id, document) for the duplicate-full check,
+    then one per @id on the same partitioning for dangling refs, before a
+    one-row global sum. Every intermediate is release-sized (documents,
+    not source data), so validation costs one scan of the release at any
+    scale. Healthy releases report all-zero counters, and so does an
+    empty one."""
+    doc = F.col(doc_col)
+    none = F.lit(None)
+    full_re = F.lit(r'\{"@id":"([^"]+)","@type":"([^"]+)"')
+    occurrences = F.concat(
+        F.transform(
             F.arrays_zip(
-                F.regexp_extract_all(
-                    "__doc", F.lit(r'\{"@id":"([^"]+)","@type":"([^"]+)"'), 1
-                ).alias("id"),
-                F.regexp_extract_all(
-                    "__doc", F.lit(r'\{"@id":"([^"]+)","@type":"([^"]+)"'), 2
-                ).alias("typ"),
-            )
-        ).alias("e"),
-    ).select(
-        "__docno",
-        F.col("e.id").alias("id"),
-        F.col("e.typ").alias("typ"),
-        F.lit(True).alias("is_full"),
+                F.regexp_extract_all(doc, full_re, 1).alias("id"),
+                F.regexp_extract_all(doc, full_re, 2).alias("typ"),
+            ),
+            lambda e: _occurrence("full", e["id"], e["typ"]),
+        ),
+        # full objects whose @id is missing (nulled ids are DROPPED by the
+        # serializer, so the object starts with @type)
+        F.transform(
+            F.regexp_extract_all(doc, F.lit(r'\{"@type":"[^"]+"'), 0),
+            lambda _: _occurrence("full", none, none),
+        ),
+        F.transform(
+            F.regexp_extract_all(doc, F.lit(r'\{"@id":"([^"]+)"\}'), 1),
+            lambda i: _occurrence("ref", i, none),
+        ),
     )
-    # full objects whose @id is missing (nulled ids are DROPPED by the
-    # serializer, so the object starts with @type)
-    noid_occ = base.select(
-        "__docno",
-        F.explode(
-            F.regexp_extract_all("__doc", F.lit(r'\{("@type"):"[^"]+"'), 1)
-        ).alias("marker"),
-    ).select(
-        "__docno",
-        F.lit(None).cast("string").alias("id"),
-        F.lit(None).cast("string").alias("typ"),
-        F.lit(True).alias("is_full"),
+    # The marker's typ is the FAILFAST parse's root @type. No counter reads
+    # a marker's typ, but referencing the parse keeps it in the plan:
+    # pruned, malformed JSON would pass instead of aborting the release.
+    parsed = F.from_json(doc, RELEASE_DOC_SCHEMA, {"mode": "FAILFAST"})
+    marker = F.array(_occurrence("doc", none, parsed["@type"]))
+    # docno is numbered before the explode: in the same select, Spark
+    # would number the exploded rows instead of the documents.
+    occ = (
+        docs.select(F.monotonically_increasing_id().alias("docno"), doc)
+        .select(
+            "docno",
+            F.explode(
+                F.concat(marker, F.coalesce(occurrences, F.array().cast(_OCCURRENCES)))
+            ).alias("o"),
+        )
+        .select("docno", "o.*")
     )
-    ref_occ = base.select(
-        "__docno",
-        F.explode(
-            F.regexp_extract_all("__doc", F.lit(r'\{"@id":"([^"]+)"\}'), 1)
-        ).alias("id"),
-    ).select(
-        "__docno",
-        F.col("id"),
-        F.lit(None).cast("string").alias("typ"),
-        F.lit(False).alias("is_full"),
-    )
-    ents = full_occ.unionByName(noid_occ).unionByName(ref_occ).localCheckpoint()
 
-    allowed = sorted(DATS_TYPES)
-    counters = ents.agg(
-        F.sum(F.col("is_full").cast("long")).alias("n_full"),
-        F.sum((~F.col("is_full")).cast("long")).alias("n_refs"),
-        F.sum(
-            (
-                F.col("is_full")
-                & F.col("typ").isNotNull()
-                & ~F.col("typ").isin(allowed)
-            ).cast("long")
-        ).alias("n_unknown_type"),
-        F.sum(
-            (
-                F.col("id").isNull()
-                | ~F.col("id").rlike(_ID_RE)
-                | (
-                    F.col("is_full")
-                    & (
-                        F.regexp_extract(F.col("id"), "^dats:([A-Za-z]+)/", 1)
-                        != F.col("typ")
-                    )
-                )
-            ).cast("long")
-        ).alias("n_bad_id"),
+    kind, oid, typ = F.col("kind"), F.col("id"), F.col("typ")
+    is_full = kind == "full"
+    bad_id = (kind != "doc") & (
+        oid.isNull()
+        | ~oid.rlike(_ID_RE)
+        | (is_full & (F.regexp_extract(oid, "^dats:([A-Za-z]+)/", 1) != typ))
     )
-    n_docs = base.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    full_ids = ents.filter(F.col("is_full") & F.col("id").isNotNull())
-    dup = (
+    # Hash-partitioned by @id alone, so neither aggregate below (per
+    # (@id, document), then per @id) needs a shuffle of its own.
+    per_doc = (
+        occ.repartition("id")
+        .groupBy("id", "docno")
+        .agg(
+            F.count_if(kind == "doc").alias("docs"),
+            F.count_if(is_full).alias("full"),
+            F.count_if(kind == "ref").alias("refs"),
+            F.count_if(
+                is_full & typ.isNotNull() & ~typ.isin(sorted(DATS_TYPES))
+            ).alias("unknown_type"),
+            F.count_if(bad_id).alias("bad_id"),
+        )
+    )
+    summed = ["docs", "full", "refs", "unknown_type", "bad_id"]
+    per_id = per_doc.groupBy("id").agg(
+        *[F.sum(c).alias(c) for c in summed],
         # per-document scope: the reference's DatsObjCache dedups within
         # one emitted document
-        full_ids.groupBy("__docno", "id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dup_full"))
+        F.count_if(oid.isNotNull() & (F.col("full") > 1)).alias("dup_full"),
     )
-    dangling = (
-        ents.filter(~F.col("is_full"))
-        .select("id")
-        .join(full_ids.select("id"), "id", "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dangling"))
+    # global scope: a ref is dangling when no document embeds its @id full
+    per_id = per_id.withColumn(
+        "dangling",
+        F.when(oid.isNotNull() & (F.col("full") == 0), F.col("refs")).otherwise(0),
     )
-    return (
-        n_docs.crossJoin(counters)  # all 1-row global aggregates
-        .crossJoin(dup)
-        .crossJoin(dangling)
-        .select(
-            "n_docs",
-            F.col("n_full").cast("long").alias("n_full"),
-            F.col("n_refs").cast("long").alias("n_refs"),
-            F.col("n_unknown_type").cast("long").alias("n_unknown_type"),
-            F.col("n_bad_id").cast("long").alias("n_bad_id"),
-            "n_dup_full",
-            "n_dangling",
-        )
+    return per_id.agg(
+        *[
+            F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(f"n_{c}")
+            for c in summed + ["dup_full", "dangling"]
+        ]
     )
 
 
@@ -302,10 +288,13 @@ def write_documents(
     sinks/bdbag.py)."""
     from gtec_etl_spark.sinks.tabular import finalize_deterministic_dir
 
-    # Global sort on the document text: row order within and across part
-    # files is then engine-deterministic, not shuffle-arrival order.
-    out = docs.select(doc_col).orderBy(doc_col)
+    # Sorted on the document text: row order within and across part files
+    # is then engine-deterministic, not shuffle-arrival order. One file
+    # needs only a local sort; more need a global (range-partitioned) one.
+    out = docs.select(doc_col)
     if single_file:
-        out = out.coalesce(1)
+        out = out.coalesce(1).sortWithinPartitions(doc_col)
+    else:
+        out = out.orderBy(doc_col)
     out.write.mode("overwrite").text(path)
     finalize_deterministic_dir(docs.sparkSession, path, "txt")

@@ -58,13 +58,15 @@ def write_tsv_dump(
 ) -> None:
     """Write a deterministically-ordered TSV (header per part file).
 
-    single_file=True coalesces to one partition — only for small exports
-    (the reference's behavior); leave False at scale. Output filenames are
-    finalized to stable names so repeated runs are byte-identical.
+    single_file=True writes one partition, sorted locally without a
+    range-partitioning shuffle — only for small exports (the reference's
+    behavior); leave False at scale. Output filenames are finalized to
+    stable names so repeated runs are byte-identical.
     """
-    out = df.orderBy(*order_cols)
     if single_file:
-        out = out.coalesce(1)
+        out = df.coalesce(1).sortWithinPartitions(*order_cols)
+    else:
+        out = df.orderBy(*order_cols)
     (
         out.write.mode("overwrite")
         .option("sep", "\t")

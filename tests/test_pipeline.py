@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import textwrap
+from pathlib import Path
 
 import pytest
 
@@ -131,6 +132,94 @@ def test_etl_count_reconciliation_fails(spark, fixture_files):
         pipelines.run_gtex_like_etl(
             spark, subjects, samples, restrictedf, expected_group_sizes={"1": 99}
         )
+
+
+def test_etl_reconciliation_catches_absent_group(spark, fixture_files):
+    # Exhaustive expectations: an EXPECTED group with no computed group
+    # (consent "9" has no subjects) fails, not silently drops out.
+    subjects, samples, restrictedf = fixture_files
+    with pytest.raises(ValueError, match="reconciliation"):
+        pipelines.run_gtex_like_etl(
+            spark, subjects, samples, restrictedf,
+            expected_group_sizes={"1": 2, "2": 1, "9": 4},
+        )
+
+
+@pytest.mark.parametrize(
+    "row",
+    ["GTEX-CD2-0002\tBlood\t7.0\tx\ty", "GTEX-CD2-0002\tBlood"],
+    ids=["two_extra_fields", "missing_SMRIN"],
+)
+def test_etl_fails_fast_on_ragged_row(spark, fixture_files, tmp_path, row):
+    # CSV PERMISSIVE mode would drop the extra fields or null the missing
+    # one; the validation pass reports the row instead, naming its table
+    # and file and carrying the raw line.
+    subjects, samples, restrictedf = fixture_files
+    ragged = tmp_path / "ragged_samples.tsv"
+    ragged.write_text(Path(samples).read_text() + row + "\n")
+    from gtec_etl_spark.sources.validated import ValidationError
+
+    with pytest.raises(ValidationError) as ei:
+        pipelines.run_gtex_like_etl(spark, subjects, str(ragged), restrictedf)
+    (v,) = ei.value.sample
+    assert (v["table"], v["column"], v["value"], v["check"]) == (
+        "samples", None, row, "row_shape"
+    )
+    assert v["row_key"].endswith("/ragged_samples.tsv")
+
+
+def test_dump_demographics_come_from_pre_merge_subjects(spark, fixture_files, tmp_path):
+    # GTEX-AB1 has no AGE in subjects.tsv but one in restricted.tsv: the
+    # merged subjects carry the restricted AGE, while the sample dump's
+    # linkage joins the PRE-merge subjects and so dumps an empty AGE.
+    _, samples, restrictedf = fixture_files
+    subjects = _w(
+        tmp_path / "subjects_no_age.tsv",
+        """\
+        SUBJID\tSEX\tAGE
+        GTEX-AB1\t1\t
+        GTEX-CD2\t2\t30-39
+        GTEX-EF3\t1\t40-49
+        """,
+    )
+    res = pipelines.run_gtex_like_etl(spark, subjects, samples, restrictedf)
+    merged = {r["SUBJID"]: r["AGE"] for r in res.subjects.collect()}
+    assert merged["GTEX-AB1"] == "20-29"
+    out = tmp_path / "release"
+    pipelines.export_release(res, str(out), str(tmp_path / "release.tgz"))
+    lines = (out / "samples_dump" / "part-00000.tsv").read_text().splitlines()
+    assert lines[0] == "SUBJID\tSAMPID\tSMTS\tSMRIN\tSEX\tAGE"
+    ab1 = [line.split("\t") for line in lines[1:] if line.startswith("GTEX-AB1\t")]
+    assert len(ab1) == 2 and all(f[5] == "" for f in ab1)
+
+
+#: Spark jobs of one release on the fixture, in the order a release runs
+#: them: run_gtex_like_etl, the dangling and conflict audit counts,
+#: validate_release(...).first() and export_release. Each action re-plans
+#: its lineage, so at release sizes the job count, not the row count, sets
+#: the cost; a change that adds a pass shows up here.
+RELEASE_JOB_BUDGET = 17
+
+
+def test_release_job_budget(spark, fixture_files, tmp_path):
+    from gtec_etl_spark.sinks.jsonld import validate_release
+
+    subjects, samples, restrictedf = fixture_files
+    sc = spark.sparkContext
+    sc.setJobGroup("release-job-budget", "one release")
+    try:
+        res = pipelines.run_gtex_like_etl(
+            spark, subjects, samples, restrictedf, expected_group_sizes={"1": 2, "2": 1}
+        )
+        assert res.dangling_samples.count() == 1
+        assert res.conflicts.count() == 0
+        assert validate_release(res.documents).first().n_docs == 2
+        pipelines.export_release(res, str(tmp_path / "release"), str(tmp_path / "r.tgz"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("release-job-budget"))
+    assert jobs <= RELEASE_JOB_BUDGET, f"{jobs} Spark jobs per release"
 
 
 @pytest.fixture()

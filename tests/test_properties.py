@@ -6,14 +6,18 @@ few but adversarially shrunk.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from collections import Counter
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
 from gtec_etl_spark.operators.aggregates import mode_pick
 from gtec_etl_spark.operators.scale import salted_join
+from gtec_etl_spark.sources import validated
 
 SLOW = settings(max_examples=8, deadline=None)
 
@@ -573,3 +577,40 @@ def test_markov_edge_explode_equals_three_branch_union(spark, events):
     )
     got = Counter((r["a"], r["b"]) for r in edges.collect())
     assert got == want
+
+
+_RAGGED_SPEC = validated.TableSpec(
+    columns=[
+        validated.ColumnSpec("ID", empty_ok=False),
+        validated.ColumnSpec("A"),
+        validated.ColumnSpec("B"),
+    ],
+    primary_key=["ID"],
+    name="t",
+)
+_cells = st.text(alphabet="abcXYZ019.-", min_size=1, max_size=6)
+
+
+@SLOW
+@given(
+    st.lists(_cells, min_size=1, max_size=7).filter(lambda f: len(f) != 3),
+    st.integers(min_value=0, max_value=3),
+)
+def test_ragged_row_always_fails_fast(spark, fields, at):
+    """A row with any field count other than the declared one, at any
+    position of an otherwise valid file, fails validation as exactly one
+    row_shape violation carrying the raw line — never a row the CSV reader
+    silently truncated or null-padded."""
+    ragged = "\t".join(fields)
+    rows = [f"id{i}\tx\ty" for i in range(3)]
+    rows.insert(at, ragged)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "t.tsv")
+        with open(path, "w") as f:
+            f.write("ID\tA\tB\n" + "\n".join(rows) + "\n")
+        df = validated.read_tsv(spark, path, _RAGGED_SPEC)
+        with pytest.raises(validated.ValidationError) as ei:
+            validated.assert_valid(df, _RAGGED_SPEC)
+    (v,) = ei.value.sample
+    assert (v["table"], v["value"], v["check"]) == ("t", ragged, "row_shape")
+    assert v["row_key"].endswith("/t.tsv")

@@ -319,12 +319,16 @@ def test_vacuum_snapshots_keeps_newest(spark, tmp_path):
 
 
 def test_validate_release_healthy_all_zero(spark):
-    """A well-formed two-document release (one full Material + one doc
-    referencing it) reports zero violations and the right counts."""
+    """A well-formed three-document release reports zero violations and the
+    right counts: one full Material, one doc referencing it (a ref resolved
+    by ANOTHER document's full embed is not dangling), and one doc that
+    embeds the same Material in full again (each document is
+    self-contained, so that is not a duplicate)."""
     from gtec_etl_spark.sinks.jsonld import validate_release
 
     mid = "dats:Material/" + "a" * 32
     did = "dats:Dataset/" + "b" * 32
+    did2 = "dats:Dataset/" + "c" * 32
     docs = spark.createDataFrame(
         [
             (
@@ -334,12 +338,17 @@ def test_validate_release_healthy_all_zero(spark):
                 '{"@id":"%s","@type":"Dataset","name":"d1",'
                 '"hasPart":[{"@id":"%s"}]}' % (did, mid),
             ),
+            (
+                '{"@id":"%s","@type":"Dataset","name":"d2",'
+                '"members":[{"@id":"%s","@type":"Material","name":"s1"}]}'
+                % (did2, mid),
+            ),
         ],
         "doc string",
     )
     row = validate_release(docs).first()
-    assert row.n_docs == 2
-    assert row.n_full == 2
+    assert row.n_docs == 3
+    assert row.n_full == 4
     assert row.n_refs == 1
     assert (
         row.n_unknown_type,

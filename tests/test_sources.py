@@ -57,6 +57,8 @@ def test_validated_tsv_catches_all_violation_kinds(spark, tmp_path):
         GTEX-AB1\t3\t99-100\t1.0
         badid\t2\t30-39\t2.0
         \t1\t20-29\t3.0
+        GTEX-EF3\t1\t20-29\t4.0\textra
+        GTEX-GH4\t1
         """,
     )
     df = validated.read_tsv(spark, path, SPEC)
@@ -69,6 +71,14 @@ def test_validated_tsv_catches_all_violation_kinds(spark, tmp_path):
     assert ("SUBJID", "not_null") in checks
     assert ("SEX", "integer_cv") in checks
     assert ("AGE", "cv") in checks
+    # ragged rows (an extra field, missing fields) are row_shape violations
+    assert (None, "row_shape") in checks
+    shapes = validated.validate(df, SPEC).filter("check = 'row_shape'").collect()
+    assert sorted(r["value"] for r in shapes) == [
+        "GTEX-EF3\t1\t20-29\t4.0\textra",
+        "GTEX-GH4\t1",
+    ]
+    assert all(r["row_key"].endswith("/bad.tsv") for r in shapes)
     with pytest.raises(validated.ValidationError):
         validated.assert_valid(df, SPEC)
 
@@ -77,6 +87,32 @@ def test_validated_tsv_header_mismatch_fails(spark, tmp_path):
     path = _write(tmp_path / "h.tsv", "WRONG\tSEX\tAGE\tWEIGHT\nx\t1\t20-29\t1\n")
     with pytest.raises(ValueError, match="header mismatch"):
         validated.read_tsv(spark, path, SPEC)
+
+
+def test_validated_tsv_comment_lines_and_jobless_header(spark, tmp_path):
+    """Comment lines before the header and between rows are skipped by the
+    header check and by the read, and the header check runs no Spark job."""
+    path = _write(
+        tmp_path / "c.tsv",
+        """\
+        # exported 2017-01-01
+
+        SUBJID\tSEX\tAGE\tWEIGHT
+        GTEX-AB1\t1\t20-29\t70.5
+        # a note
+        GTEX-CD2\t2\t30-39\t
+        """,
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("read-tsv-header", "header check")
+    try:
+        df = validated.read_tsv(spark, path, SPEC, comment="#")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("read-tsv-header")) == 0
+    validated.assert_valid(df, SPEC)
+    assert sorted(r["SUBJID"] for r in df.collect()) == ["GTEX-AB1", "GTEX-CD2"]
 
 
 # ---------------------------------------------------------------- S10 GFF3
