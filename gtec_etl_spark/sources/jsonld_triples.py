@@ -5,9 +5,10 @@ queries by triple scans (sparql/v0.7/rdflib_util.py:54-63,
 `rdflib.Graph().parse(data=..., format='json-ld')`). The engine's analog is
 schema-driven: `spark.read.json` (or `from_json` with a pinned schema)
 gives the document a concrete nested struct schema, and `jsonld_to_triples`
-walks that schema at PLAN BUILD TIME, emitting one declarative
-select/explode branch per (nesting level, field) — every triple is produced
-by Catalyst expressions, no Python UDFs, no recursion at row scope.
+walks that schema once at PLAN BUILD TIME into ONE SQL expression of type
+`array<struct<s, p, o>>` per document row, which `inline` turns into rows.
+Every triple is produced by Catalyst higher-order functions (`transform`,
+`flatten`) — no Python UDFs, no recursion at row scope.
 
 Triple semantics (matching rdflib's JSON-LD parsing for the subset the
 emitter produces):
@@ -19,154 +20,103 @@ emitter produces):
   first-occurrence-full-then-ref dedup, sinks/jsonld.py) yield ONLY the
   edge — their other fields are null and null literals are dropped, so a
   full+ref pair round-trips to the same graph as two fulls;
-- arrays fan out one triple per element (explode); an element that is
-  itself an array (JSON-LD @list nesting) flattens with list position
-  encoded in an indexed predicate (`grid[0]`, `paths[1][2]`, any depth);
+- arrays fan out one triple per element; an element that is itself an
+  array (JSON-LD @list nesting) flattens with list position encoded in an
+  indexed predicate (`grid[0]`, `paths[1][2]`, any depth);
 - an object with no `@id` field is a blank node: `_:` + sha256 of its JSON
   serialization — deterministic, unlike rdflib's per-parse bnode labels;
 - the result is DISTINCT (s, p, o): an RDF graph is a set of triples.
 
-Scale: one JSON scan per nesting branch with columns pruned to that
-branch's path, then a union — the flatten itself is shuffle-free; the
-final distinct is the one hash shuffle, on the triple key, exactly what
-materializing a 663k-triple (or 100 TB) graph costs at minimum.
+Scale: one scan of the input and one projection; the flatten is
+shuffle-free and row-local, and the final distinct is the one hash
+shuffle, on the triple key. The plan is built from SQL text in a single
+call, so its cost does not grow with py4j round trips per field.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql.types import ArrayType, DataType, StructType
 
 SKIP_FIELDS = ("@id", "@context")
+NO_TRIPLES = "cast(array() as array<struct<s:string,p:string,o:string>>)"
 
 
-def _bnode(node: Column) -> Column:
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _triple(s: str, p: str, o: str) -> str:
+    return f"named_struct('s', {s}, 'p', {p}, 'o', {o})"
+
+
+def _bnode(node: str) -> str:
     # Blank node: deterministic content-hash label (rdflib invents
     # per-parse labels; a distributed engine needs reproducible ones).
-    return F.concat(F.lit("_:"), F.substring(F.sha2(F.to_json(node), 256), 1, 16))
+    return f"concat('_:', substring(sha2(to_json({node}), 256), 1, 16))"
 
 
-def _subject(node: Column, schema: StructType) -> Column:
-    if "@id" in schema.fieldNames():
-        # Coalesce with a bnode label: after spark.read.json schema merge
-        # over a heterogeneous corpus, a document whose nested object omits
-        # @id while SIBLINGS at the same path have it gets @id=NULL — rdflib
-        # assigns that node a bnode, so the engine must too (a bare
-        # getField would drop the parent edge and emit s=NULL literals).
-        return F.coalesce(node.getField("@id"), _bnode(node))
-    return _bnode(node)
+def _node(subject: str, node: str, schema: StructType, depth: int, edge: tuple | None) -> str:
+    """Triples of the struct `node`: its subject is bound once (a
+    one-element `transform`, SQL has no `let`), then the optional edge
+    (parent, predicate, subject) and one part per field are concatenated.
+    Lambda variables are numbered by depth so nested lambdas never shadow
+    the ones their body still reads."""
+    b = f"__b{depth}"
+    parts = [f"array({_triple(*edge, f'{b}.s')})"] if edge else []
+    parts += [
+        _value(f"{b}.s", _lit(f.name), f"{b}.n.{_ident(f.name)}", f.dataType, depth + 1)
+        for f in schema.fields
+        if f.name not in SKIP_FIELDS
+    ]
+    bound = f"array(named_struct('s', {subject}, 'n', {node}))"
+    return f"flatten(transform({bound}, {b} -> concat({', '.join(parts)})))"
 
 
-def _emit_child(
-    df: DataFrame,
-    s: Column,
-    pred: Column | str,
-    child: Column,
-    cschema: StructType,
-    out: list[DataFrame],
-) -> None:
-    if isinstance(pred, str):
-        pred = F.lit(pred)
-    present = df.filter(child.isNotNull())
-    cs = _subject(child, cschema)
-    out.append(
-        present.select(
-            s.alias("s"), pred.alias("p"), cs.alias("o")
-        ).filter(F.col("o").isNotNull() & F.col("s").isNotNull())
-    )
-    cdf = present.select(cs.alias("__s"), child.alias("__node"))
-    _emit(
-        cdf,
-        F.col("__s"),
-        lambda n: F.col("__node").getField(n),
-        cschema,
-        out,
-    )
-
-
-def _emit_array(
-    df: DataFrame,
-    s: Column,
-    pred: Column,
-    arr: Column,
-    et,
-    out: list[DataFrame],
-) -> None:
-    """Fan an array value out to triples. A top-level array is the usual
-    JSON-LD unordered multi-value (predicate unchanged, one triple per
-    element). An element that is ITSELF an array (only expressible in
-    JSON-LD via @list nesting) flattens with list position encoded in an
-    indexed predicate — `grid[0]`, `paths[1][2]` — the standard
-    RDF-list-to-triples reification (position-as-predicate), recursing to
-    any depth. The reference accepts such documents through rdflib
-    (sparql/v0.7/rdflib_util.py:54-63); this replaces round-5's
-    NotImplementedError boundary."""
-    if isinstance(et, ArrayType):
-        ex = df.select(
-            s.alias("s"), pred.alias("__pp"), F.posexplode(arr).alias("__i", "__e")
-        )
-        npred = F.concat(
-            F.col("__pp"), F.lit("["), F.col("__i").cast("string"), F.lit("]")
-        )
-        _emit_array(ex, F.col("s"), npred, F.col("__e"), et.elementType, out)
-    elif isinstance(et, StructType):
-        ex = df.select(s.alias("s"), pred.alias("__pp"), F.explode(arr).alias("__e"))
-        _emit_child(ex, F.col("s"), F.col("__pp"), F.col("__e"), et, out)
-    else:
-        ex = df.select(s.alias("s"), pred.alias("__pp"), F.explode(arr).alias("__e"))
-        out.append(
-            ex.select(
-                "s",
-                F.col("__pp").alias("p"),
-                F.col("__e").cast("string").alias("o"),
-            ).filter(F.col("o").isNotNull() & F.col("s").isNotNull())
-        )
-
-
-def _emit(df, s, get, schema: StructType, out: list[DataFrame]) -> None:
-    for f in schema.fields:
-        if f.name in SKIP_FIELDS:
-            continue
-        v = get(f.name)
-        if isinstance(f.dataType, StructType):
-            _emit_child(df, s, f.name, v, f.dataType, out)
-        elif isinstance(f.dataType, ArrayType):
-            _emit_array(df, s, F.lit(f.name), v, f.dataType.elementType, out)
+def _value(s: str, p: str, v: str, dtype: DataType, depth: int) -> str:
+    """Triples of one field value `v` of subject `s` under predicate `p`.
+    Never null — a null array becomes no triples, so one missing field
+    cannot null the row's whole `concat`; null scalars and null objects
+    give null `o` and are filtered after the flatten."""
+    if isinstance(dtype, StructType):
+        if "@id" in dtype.fieldNames():
+            # Coalesce with a bnode label: after spark.read.json schema merge
+            # over a heterogeneous corpus, a document whose nested object omits
+            # @id while SIBLINGS at the same path have it gets @id=NULL — rdflib
+            # assigns that node a bnode, so the engine must too (a bare
+            # field read would drop the parent edge and emit s=NULL literals).
+            subject = f"coalesce({v}.`@id`, {_bnode(v)})"
         else:
-            out.append(
-                df.select(
-                    s.alias("s"),
-                    F.lit(f.name).alias("p"),
-                    v.cast("string").alias("o"),
-                ).filter(F.col("o").isNotNull() & F.col("s").isNotNull())
-            )
+            subject = _bnode(v)
+        return _node(subject, v, dtype, depth, (s, p))
+    if isinstance(dtype, ArrayType):
+        e, i = f"__e{depth}", f"__i{depth}"
+        args = e
+        if isinstance(dtype.elementType, ArrayType):
+            # @list nesting: position-as-predicate reification.
+            args, p = f"({e}, {i})", f"concat({p}, '[', cast({i} as string), ']')"
+        inner = _value(s, p, e, dtype.elementType, depth + 1)
+        return f"coalesce(flatten(transform({v}, {args} -> {inner})), {NO_TRIPLES})"
+    return f"array({_triple(s, p, f'cast({v} as string)')})"
 
 
 def jsonld_to_triples(docs: DataFrame) -> DataFrame:
     """Flatten a DataFrame of parsed JSON-LD documents (one nested row per
     top-level entity, e.g. from spark.read.json) into a distinct (s, p, o)
     triples DataFrame."""
-    out: list[DataFrame] = []
     schema = docs.schema
-    if "@id" in schema.fieldNames():
-        s = F.col("`@id`")
-    else:
-        s = F.concat(
-            F.lit("_:"),
-            F.substring(
-                F.sha2(F.to_json(F.struct(*[F.col(f"`{c}`") for c in docs.columns])), 256),
-                1,
-                16,
-            ),
-        )
-    _emit(docs, s, lambda n: F.col(f"`{n}`"), schema, out)
-    if not out:
+    if all(f.name in SKIP_FIELDS for f in schema.fields):
         raise ValueError("document schema has no flattenable fields")
-    triples = out[0]
-    for t in out[1:]:
-        triples = triples.unionByName(t)
-    return triples.distinct()
+    row = f"struct({', '.join(_ident(c) for c in docs.columns)})"
+    subject = "`@id`" if "@id" in schema.fieldNames() else _bnode(row)
+    expr = _node(subject, row, schema, 0, None)
+    return docs.selectExpr(f"inline({expr})").where("s IS NOT NULL AND o IS NOT NULL").distinct()
 
 
 def triples_from_json_strings(
@@ -186,6 +136,16 @@ def read_jsonld(spark: SparkSession, path: str, multiline: bool = True) -> DataF
     """Load foreign JSON-LD files into triples. spark.read.json merges the
     schema across heterogeneous documents (absent fields are null and drop
     out of the graph), which is what makes this work on documents the
-    engine did NOT emit — the reference capability this module supplies."""
-    raw = spark.read.option("multiLine", multiline).json(path)
+    engine did NOT emit — the reference capability this module supplies.
+    A malformed document raises ValueError naming `path` instead of
+    becoming a row with a null @id whose triples vanish. FAILFAST trips in
+    the schema-inference scan, which reads every record, so it adds no job."""
+    reader = spark.read.option("multiLine", multiline).option("mode", "FAILFAST")
+    try:
+        raw = reader.json(path)
+    except Py4JJavaError as err:
+        cause = str(err.java_exception)
+        if "MALFORMED_RECORD_IN_PARSING" not in cause:
+            raise
+        raise ValueError(f"malformed JSON-LD in {path}: {cause}") from err
     return jsonld_to_triples(raw)
