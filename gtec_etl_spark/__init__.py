@@ -7,7 +7,7 @@ Architecture (see SURVEY.md §7):
     produced at the edges.
   - Everything expressible as native Spark SQL expressions stays JVM-side
     (whole-stage codegen); Arrow-batched pandas functions only for
-    genuinely non-relational work (audio decode, per-block vector
+    genuinely non-relational work (tokenization, per-block vector
     scoring, custom streaming state).
   - Declared-schema sources with a constraint layer (regex / CV / decode /
     nullability / dup-PK / dangling-FK) returning violation DataFrames.

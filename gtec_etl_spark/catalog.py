@@ -26,8 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # The driver's events table has stored `ts` with different parquet logical
 # types across testdata generations: TIMESTAMP(NANOS) (which a default
 # session refuses to scan — PARQUET_TYPE_ILLEGAL) and TIMESTAMP(MICROS)

@@ -117,12 +117,16 @@ def first_line(spark: SparkSession, path: str, comment: str | None = None) -> st
         reader = jvm.java.io.BufferedReader(
             jvm.java.io.InputStreamReader(stream, "UTF-8")
         )
-        while True:
-            line = reader.readLine()
-            if line is None:
-                return None
+        line = reader.readLine()
+        # Hadoop's LineRecordReader drops a leading UTF-8 BOM from the
+        # file's first line; Spark's data read does too, so must the peek.
+        if line is not None and line.startswith("\ufeff"):
+            line = line[1:]
+        while line is not None:
             if line.strip() and not (comment and line.startswith(comment)):
                 return line
+            line = reader.readLine()
+        return None
     finally:
         stream.close()
 

@@ -52,11 +52,3 @@ def hash60_sql(expr: str) -> str:
     """DuckDB SQL text computing the same 60-bit hash."""
     return f"CAST(CONCAT('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
-
-def minhash_perm(hash_col: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation of a 60-bit base hash."""
-    return (F.lit(a) * (hash_col % F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def minhash_perm_sql(hash_expr: str, a: int, b: int) -> str:
-    return f"(({a} * ({hash_expr} % {MINHASH_P}) + {b}) % {MINHASH_P})"

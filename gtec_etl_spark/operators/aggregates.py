@@ -26,13 +26,6 @@ def mode_pick(df: DataFrame, group: str | list[str], value: str) -> DataFrame:
     )
 
 
-def median_pick(df: DataFrame, group: str | list[str], value: str) -> DataFrame:
-    """A4 numeric representative value: exact median (interpolated), the
-    oracle-matching path; `percentile_approx` is the 100 TB scale option."""
-    group = [group] if isinstance(group, str) else list(group)
-    return df.groupBy(*group).agg(F.median(value).alias("median_value"))
-
-
 def variable_profile(df: DataFrame, group: str | list[str], value: str) -> DataFrame:
     """A5 var_report statistics (ccmm/dbgap/public_metadata.py:43-58,94-127):
     n, nulls, mean, median, min, max, sd, distinct_vals per variable group.

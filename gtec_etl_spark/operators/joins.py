@@ -124,11 +124,6 @@ def conflict_checked_merge(
     return merged, conflicts
 
 
-def semi_filter(df: DataFrame, keep_if_in: DataFrame, key: str | list[str]) -> DataFrame:
-    """J10 referenced-samples filter (bin/topmed_to_dats.py:251-266)."""
-    return df.join(keep_if_in, key, "left_semi")
-
-
 def anti_filter(df: DataFrame, drop_if_in: DataFrame, key: str | list[str]) -> DataFrame:
     """P7 substudy exclusion (ccmm/dbgap/public_metadata.py:279-299)."""
     return df.join(drop_if_in, key, "left_anti")

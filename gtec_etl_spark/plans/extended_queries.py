@@ -841,7 +841,7 @@ def etl_incremental_agg(spark, sf_dir):
     stored side is a parquet table hash-partitioned on cust_id, making
     the refresh cost O(delta + |keys touched|), independent of history
     length. The same shape maintains any commutative-monoid aggregate
-    (sums, counts, min/max, sketches — see plans/sketch_queries.py)."""
+    (sums, counts, min/max)."""
     orders = catalog.table(spark, sf_dir, "orders").filter(
         F.col("o_custkey") < 500
     )

@@ -1,5 +1,5 @@
-"""Registry entries that exercise the streaming and audio surfaces
-through the driver's correctness gate.
+"""Registry entries that exercise the streaming surface through the
+driver's correctness gate.
 
 Every stream_* entry runs a REAL Structured Streaming job (readStream →
 watermark / state → sink, Trigger.AvailableNow) over replayed events or
@@ -8,14 +8,7 @@ plain SQL, because a finite replayed stream must agree exactly with the
 batch computation: windowed and session aggregates, watermark
 dedup, stateful per-key totals, stream-stream and stream-static joins,
 the dedup admission filter, CDC snapshots, lateness accounting, and the
-HLL / CMS / PSI sketches maintained as bounded streaming state.
-
-Every mm_* entry runs the audio mapInPandas pipelines
-(operators/multimodal.py) over deterministic in-memory WAV tables. The
-codec is not expressible in SQL, but it IS deterministic, so the oracles
-read golden-fixture parquet precomputed by an independent pure-numpy
-implementation (tools/make_multimodal_golden.py) — full hash-matched
-rows, not rows-only checks.
+PSI bucket grid maintained as bounded streaming state.
 """
 
 from __future__ import annotations
@@ -456,147 +449,6 @@ def stream_cdc_snapshot(spark, sf_dir):
         return out.orderBy("cust_id").localCheckpoint(eager=True)
 
 
-
-NEARDUP_COS_E6_MIN = 999_990
-
-
-def _stream_hll_oracle() -> str:
-    from gtec_etl_spark.functions.hashing import hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_SCALE,
-        HLL_W,
-    )
-
-    return f"""
-    WITH h AS (
-      SELECT {hash60_sql("CAST(user_id AS VARCHAR)")} AS h FROM events
-    ),
-    b AS (
-      SELECT h >> {HLL_W} AS bucket,
-             CASE WHEN (h & {(1 << HLL_W) - 1}) = 0 THEN {HLL_W + 1}
-                  ELSE {HLL_W} - length(bin(h & {(1 << HLL_W) - 1})) + 1
-             END AS rho
-      FROM h
-    ),
-    regs AS (
-      SELECT bucket, CAST(max(rho) AS BIGINT) AS mj FROM b GROUP BY bucket
-    ),
-    s AS (
-      SELECT CAST(sum(CAST(1 AS BIGINT) << CAST(53 - mj AS INTEGER))
-                  AS BIGINT) AS s_present,
-             CAST(count(*) AS BIGINT) AS n_present
-      FROM regs
-    ),
-    agg AS (
-      SELECT s_present + ({HLL_M} - n_present) * {1 << 53} AS s_int,
-             {HLL_M} - n_present AS n_zero
-      FROM s
-    ),
-    est AS (
-      SELECT s_int, CAST(n_zero AS BIGINT) AS n_zero,
-             {HLL_ALPHA!r} * {HLL_SCALE!r} / CAST(s_int AS DOUBLE) AS raw
-      FROM agg
-    ),
-    exact AS (
-      SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_n FROM events
-    )
-    SELECT e.exact_n AS exact_n, s.n_zero AS n_zero,
-           CAST(s.s_int AS BIGINT) AS s_int,
-           CAST(floor(CASE WHEN s.raw <= {2.5 * HLL_M} AND s.n_zero > 0
-                           THEN {HLL_M} * ln(CAST({HLL_M} AS DOUBLE)
-                                             / s.n_zero)
-                           ELSE s.raw END + 0.5) AS BIGINT) AS est_n
-    FROM exact e CROSS JOIN est s
-    """
-
-
-@query(
-    "stream_hll_distinct",
-    oracle=_stream_hll_oracle(),
-    tags=("streaming", "live", "sketch"),
-)
-def stream_hll_distinct(spark, sf_dir):
-    """A mergeable sketch MAINTAINED BY A REAL STREAMING JOB: the events
-    file replays through readStream and a streaming groupBy(bucket)
-    max(rho) keeps the HyperLogLog register vector — the production
-    "distinct users so far" counter whose state is a FIXED 256 rows
-    regardless of stream length (contrast stream_stateful_user_totals,
-    whose state grows with the key domain). Because register max is a
-    monoid, any micro-batch split must yield the SAME registers as the
-    batch pass — the reconcilability contract, stated by the oracle
-    recomputing the sketch in SQL. Finalization (integer-scaled harmonic
-    sum, one quantized ln in the linear-counting fallback) is identical
-    to sketch_hll_distinct, whose float guards cover the shared math;
-    the exact distinct rides alongside so the estimate is hash-checked."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.functions.hashing import hash60
-    from gtec_etl_spark.plans.sketch_queries import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_SCALE,
-        HLL_W,
-    )
-    from gtec_etl_spark.streaming import pipelines as P
-
-    h = hash60(F.col("user_id").cast("string"))
-    w = h.bitwiseAND(F.lit((1 << HLL_W) - 1))
-    with P.state_partitions(spark, 8):
-        regs_stream = (
-            P.read_events_stream(spark, sf_dir)
-            .select(
-                F.shiftright(h, HLL_W).alias("bucket"),
-                F.when(w == 0, F.lit(HLL_W + 1))
-                .otherwise(F.lit(HLL_W) - F.length(F.bin(w)) + 1)
-                .alias("rho"),
-            )
-            .groupBy("bucket")
-            .agg(F.max("rho").cast("long").alias("mj"))
-        )
-        regs = P.run_to_memory(regs_stream)
-    s = regs.agg(
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(53 - mj AS INT))"))
-        .cast("long")
-        .alias("s_present"),
-        F.count(F.lit(1)).alias("n_present"),
-    ).select(
-        (
-            F.col("s_present")
-            + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1 << 53)
-        ).alias("s_int"),
-        (F.lit(HLL_M) - F.col("n_present")).cast("long").alias("n_zero"),
-    )
-    est = s.select(
-        "s_int",
-        "n_zero",
-        (
-            F.lit(HLL_ALPHA) * F.lit(HLL_SCALE) / F.col("s_int").cast("double")
-        ).alias("raw"),
-    )
-    exact = (
-        catalog.table(spark, sf_dir, "events")
-        .agg(F.count_distinct("user_id").cast("long").alias("exact_n"))
-    )
-    return exact.crossJoin(F.broadcast(est)).select(
-        "exact_n",
-        "n_zero",
-        F.col("s_int").cast("long").alias("s_int"),
-        F.floor(
-            F.when(
-                (F.col("raw") <= F.lit(2.5 * HLL_M)) & (F.col("n_zero") > 0),
-                F.lit(HLL_M)
-                * F.log(F.lit(float(HLL_M)) / F.col("n_zero").cast("double")),
-            ).otherwise(F.col("raw"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("est_n"),
-    )
-
-
 @query(
     "stream_static_join",
     oracle="""
@@ -617,8 +469,7 @@ def stream_static_join(spark, sf_dir):
     stream-static inner joins stateless — the static side is simply read
     per micro-batch, broadcast when small; no watermark, no state store),
     then aggregates count + integer-micros value total per (segment,
-    event_type) — exact distincts are illegal on streams, which is
-    precisely why stream_hll_distinct exists as the sketch twin. On a
+    event_type) — exact distincts are illegal on streams. On a
     finite replay this equals the batch join, which is what the oracle
     states. At 100 TB the static side would be a compacted dimension
     snapshot; per-trigger cost tracks the batch, never the stream
@@ -796,138 +647,6 @@ def stream_lateness_report(spark, sf_dir):
     ).orderBy("batch_id")
 
 
-def _stream_cms_oracle() -> str:
-    from gtec_etl_spark.functions.hashing import MINHASH_P, hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import (
-        _CMS_VALUES,
-        CMS_TOPK,
-        CMS_W,
-    )
-
-    uid_hash = hash60_sql("CAST(user_id AS VARCHAR)")
-    return f"""
-    WITH uc AS (
-      SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM events
-      GROUP BY user_id
-    ),
-    base AS (SELECT user_id, n, {uid_hash} AS h FROM uc),
-    keyed AS (
-      SELECT d.di AS di,
-             ((d.a * (b.h % {MINHASH_P}) + d.b) % {MINHASH_P}) % {CMS_W}
-               AS col,
-             b.n AS n
-      FROM base b, (VALUES {_CMS_VALUES}) d(di, a, b)
-    ),
-    sketch AS (
-      SELECT di, col, CAST(sum(n) AS BIGINT) AS cnt
-      FROM keyed GROUP BY di, col
-    ),
-    exact AS (
-      SELECT user_id, n AS exact_n, h
-      FROM base ORDER BY n DESC, user_id LIMIT {CMS_TOPK}
-    )
-    SELECT e.user_id AS user_id, e.exact_n AS exact_n,
-           CAST(min(s.cnt) AS BIGINT) AS est_n,
-           CAST(min(s.cnt) - e.exact_n AS BIGINT) AS overcount
-    FROM exact e, (VALUES {_CMS_VALUES}) d(di, a, b)
-    JOIN sketch s
-      ON s.di = d.di
-     AND s.col = ((d.a * (e.h % {MINHASH_P}) + d.b) % {MINHASH_P})
-                 % {CMS_W}
-    GROUP BY e.user_id, e.exact_n
-    ORDER BY exact_n DESC, user_id
-    """
-
-
-@query(
-    "stream_cms_heavy",
-    oracle=_stream_cms_oracle(),
-    tags=("streaming", "live", "sketch"),
-)
-def stream_cms_heavy(spark, sf_dir):
-    """A count-min sketch MAINTAINED BY A REAL STREAMING JOB — the
-    second mergeable-sketch streaming twin (stream_hll_distinct proves
-    the register-max monoid; this proves the cell-ADDITION monoid): the
-    events file replays through readStream, every event fans into D
-    (row, universal-hash column) cells with weight 1, and a streaming
-    groupBy((di, col)).count() maintains the grid — state is the FIXED
-    D x W cell set regardless of stream length, the bounded-state
-    contract the steady-state bench measures for the HLL twin. Because
-    cell addition commutes with any micro-batch split, the finite
-    replay must equal the batch sketch — and because sketch_cms_heavy_
-    hitters ingests the WEIGHTED vocabulary aggregate while this job
-    ingests RAW weight-1 events, the pair is the pre-aggregation-
-    commutes-with-sketching claim made machine-checked. Probe: exact
-    top-K users (batch side) against min-over-rows estimates; hashes
-    are the deterministic hash60 family, so the error itself is
-    bit-identical cross-engine."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.functions.hashing import hash60, minhash_perm
-    from gtec_etl_spark.plans.sketch_queries import (
-        CMS_PARAMS,
-        CMS_TOPK,
-        CMS_W,
-    )
-    from gtec_etl_spark.streaming import pipelines as P
-
-    h = hash60(F.col("user_id").cast("string"))
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(di).alias("di"),
-                (minhash_perm(h, a, b) % CMS_W).alias("col"),
-            )
-            for di, (a, b) in enumerate(CMS_PARAMS)
-        ]
-    )
-    with P.state_partitions(spark, 8):
-        sketch_stream = (
-            P.read_events_stream(spark, sf_dir)
-            .select(F.explode(cells).alias("c"))
-            .select("c.di", "c.col")
-            .groupBy("di", "col")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        sketch = P.run_to_memory(sketch_stream)
-    ev = catalog.table(spark, sf_dir, "events")
-    uc = ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    base = uc.select("user_id", "n", hash60(F.col("user_id").cast("string")).alias("h"))
-    exact = (
-        base.orderBy(F.col("n").desc(), "user_id")
-        .limit(CMS_TOPK)
-        .select("user_id", F.col("n").alias("exact_n"), "h")
-    )
-    probes = exact.select(
-        "user_id",
-        "exact_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(di).alias("di"),
-                        (minhash_perm(F.col("h"), a, b) % CMS_W).alias("col"),
-                    )
-                    for di, (a, b) in enumerate(CMS_PARAMS)
-                ]
-            )
-        ).alias("c"),
-    ).select("user_id", "exact_n", "c.di", "c.col")
-    return (
-        probes.join(F.broadcast(sketch), ["di", "col"])
-        .groupBy("user_id", "exact_n")
-        .agg(F.min("cnt").cast("long").alias("est_n"))
-        .select(
-            "user_id",
-            "exact_n",
-            "est_n",
-            (F.col("est_n") - F.col("exact_n")).cast("long").alias("overcount"),
-        )
-        .orderBy(F.col("exact_n").desc(), "user_id")
-    )
-
-
 def _stream_psi_oracle() -> str:
     from gtec_etl_spark.plans.profile_queries import _psi_oracle_sql
 
@@ -940,9 +659,8 @@ def _stream_psi_oracle() -> str:
     tags=("streaming", "live", "quality"),
 )
 def stream_psi_drift(spark, sf_dir):
-    """PSI drift monitoring MAINTAINED BY A REAL STREAMING JOB — the
-    third bounded-state streaming topology after the HLL registers and
-    the CMS cells, and the smallest: events replay through readStream,
+    """PSI drift monitoring MAINTAINED BY A REAL STREAMING JOB — a
+    bounded-state streaming topology: events replay through readStream,
     each maps to its (value bucket, reference/current window) cell, and
     a streaming groupBy keeps the bucket-count grid (state = bucket x
     window cells — ~20 rows forever, the
@@ -990,297 +708,3 @@ def stream_psi_drift(spark, sf_dir):
         .alias("n_b"),
     )
     return psi_from_counts(counts)
-
-
-# ---------------------------------------------------------------------------
-# Audio (mm_*): the RIFF/WAVE codec of operators/multimodal.py through the
-# Arrow-batched mapInPandas boundary. The oracles read golden parquet that
-# tools/make_multimodal_golden.py recomputes from the LCG sample stream
-# without the operator module.
-# ---------------------------------------------------------------------------
-
-_MM_GOLDEN = os.path.abspath(
-    os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "multimodal")
-)
-
-
-def _banded_hamming_oracle(src: str, n_bands: int, band_bits: int, max_h: int) -> str:
-    """DuckDB twin of operators/multimodal.py:banded_hamming_pairs."""
-    mask = (1 << band_bits) - 1
-    return f"""
-    WITH ph AS (SELECT media_id, phash FROM {src}),
-    bands AS (
-      SELECT media_id, phash, b, (phash >> ({band_bits} * b)) & {mask} AS band
-      FROM ph, range(0, {n_bands}) t(b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.media_id AS a_id, b.media_id AS b_id,
-             a.phash AS a_hash, b.phash AS b_hash
-      FROM bands a JOIN bands b ON a.b = b.b AND a.band = b.band
-       AND a.media_id < b.media_id
-    )
-    SELECT a_id, b_id, CAST(bit_count(xor(a_hash, b_hash)) AS BIGINT) AS hamming
-    FROM cand WHERE bit_count(xor(a_hash, b_hash)) <= {max_h}
-    ORDER BY a_id, b_id
-    """
-
-
-@query(
-    "mm_decode_wav",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav(spark, sf_dir):
-    """AUDIO through the media pipeline with a REAL dependency-free codec:
-    deterministic RIFF/WAVE PCM clips (8/16-bit x mono/stereo, canonical
-    headers any WAV reader opens — tests cross-check against stdlib
-    `wave`) parsed by the pure-struct chunk walker
-    (operators/multimodal.py:_decode_wav) inside an Arrow-batched
-    mapInPandas boundary; emitted stats are exact
-    integers (peak, 1000x mean |amplitude|), so no float parity games.
-    The audio NotImplementedError boundary now covers only ADPCM
-    (mm_decode_wav_deep exercises the wide 24/32-bit and float32
-    layouts; mm_decode_wav_g711 the companded and float64 ones). Oracle = golden fixture recomputed straight
-    from the LCG sample stream WITHOUT the RIFF writer or parser
-    (tools/make_multimodal_golden.py:decode_wav_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_g711",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_g711.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_g711(spark, sf_dir):
-    """TELEPHONY audio through the chunk walker: G.711 a-law and mu-law
-    companded clips (format 6/7 — the classic 8 kHz codecs, expanded by
-    the exact integer segment formulas, sign conventions and all: a-law's
-    set sign bit means POSITIVE, mu-law's means negative) plus IEEE
-    float64 (format 3, 64-bit), mono/stereo. The WAV NotImplementedError
-    boundary is now ADPCM only. Oracle = golden recomputing compress +
-    expand from the LCG stream with INDEPENDENT G.711 implementations
-    (tools/make_multimodal_golden.py:decode_wav_g711_golden), so the
-    formulas are cross-checked, not self-certified."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_g711_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_deep",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_deep.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_deep(spark, sf_dir):
-    """The WIDE audio layouts through the same pure-struct WAV chunk
-    walker: 24-bit and 32-bit integer PCM plus IEEE float32 (format 3),
-    mono/stereo — closing the round-8 boundary that stopped at 8/16-bit.
-    Float samples are v/32768 values (exactly representable), decoded by
-    *32768 truncation into the same integer amplitude domain as the
-    16-bit clips, so the stats stay exact integers; 24-bit rasters are
-    3-byte two's-complement triplets reassembled vectorized (numpy
-    byte-shift, no per-sample Python). The remaining NotImplementedError
-    boundary is ADPCM, a-law/mu-law, and float64. Oracle = golden fixture
-    recomputed straight from the LCG stream WITHOUT the RIFF writer or
-    parser (tools/make_multimodal_golden.py:decode_wav_deep_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_deep_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_decode_wav_adpcm",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, bits, n_frames,
-           peak_abs, mean_abs_e3
-    FROM '{_MM_GOLDEN}/mm_decode_wav_adpcm.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_decode_wav_adpcm(spark, sf_dir):
-    """COMPRESSED audio through the chunk walker: IMA-ADPCM (format 17,
-    4-byte per-channel block headers + low-nibble-first codes, step-index
-    carried across blocks) and MS-ADPCM (format 2, seven standard 8.8
-    fixed-point predictor pairs, high-nibble-first round-robin codes,
-    sample2-then-sample1 block seeds), mono/stereo, several block sizes.
-    This closes the WAV NotImplementedError boundary to genuinely
-    library-grade formats (MP3, extensible). Oracle = golden recomputing
-    both codecs' quantize+reconstruct loops from spec tables alone
-    (tools/make_multimodal_golden.py:decode_wav_adpcm_golden — never
-    imports the operator module), exploiting that ADPCM decoder state
-    mirrors encoder state, so the decoded stream IS the encoder's
-    reconstruction track."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_adpcm_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.decode_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_audio_rms_windows",
-    oracle=f"""
-    SELECT media_id, window_idx, n_frames, energy, peak_abs, rms_e3
-    FROM '{_MM_GOLDEN}/mm_audio_rms_windows.parquet'
-    ORDER BY media_id, window_idx
-    """,
-    tags=("multimodal",),
-)
-def mm_audio_rms_windows(spark, sf_dir):
-    """Windowed audio feature extraction over real WAV clips: tumbling
-    160-frame windows -> exact integer energy, peak, and isqrt-based
-    RMS (no float sqrt, engine-independent) through the Arrow-batched
-    codec boundary. Oracle = golden fixture recomputed from the LCG sample
-    stream without the RIFF writer, parser, or windowing code
-    (tools/make_multimodal_golden.py:audio_rms_windows_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.audio_rms_windows(media, window_frames=160).orderBy(
-        "media_id", "window_idx"
-    )
-
-
-NEARDUP_COS_E6_MIN = 999_990
-
-
-@query(
-    "mm_audio_augment",
-    oracle=f"""
-    SELECT media_id, sample_rate, n_channels, n_frames, n_clipped,
-           peak_abs, mean_abs_e3, pos_checksum
-    FROM '{_MM_GOLDEN}/mm_audio_augment.parquet'
-    ORDER BY media_id
-    """,
-    tags=("multimodal",),
-)
-def mm_audio_augment(spark, sf_dir):
-    """Deterministic AUDIO augmentation — gain 5/4 with truncate-toward-
-    zero integer scaling, int16 clipping (clipped-sample count reported —
-    the distortion metric an augmentation pass monitors), post-gain
-    amplitude stats, and an order-sensitive positional checksum over the
-    interleaved sample stream (a channel swap or reorder fails the gate
-    even when amplitude stats survive), over the real 8/16-bit
-    mono/stereo WAV clips through the RIFF chunk walker. One Arrow pass
-    (operators/multimodal.py:augment_audio). Oracle = golden recomputing
-    the transforms from the LCG sample stream without the parser
-    (tools/make_multimodal_golden.py:audio_augment_golden). Note
-    |clip(-32768)| = 32768: the int16 floor's absolute value exceeds the
-    ceiling — both sides state it identically."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.wav_media_table(spark, n=12, n_frames=480, sample_rate=8000)
-    return M.augment_audio(media).orderBy("media_id")
-
-
-@query(
-    "mm_audio_fingerprint",
-    oracle=_banded_hamming_oracle(f"'{_MM_GOLDEN}/mm_audio_fp.parquet'", 8, 8, 6),
-    tags=("multimodal", "dedup"),
-)
-def mm_audio_fingerprint(spark, sf_dir):
-    """AUDIO near-duplicate detection: every clip (real WAVs through the
-    real chunk-walker decoder) maps to a 63-bit integer envelope
-    fingerprint (operators/multimodal.py:audio_wht_fp64 —
-    absolute-amplitude sums over 64 windows, integer Walsh-Hadamard,
-    strict-median sign bits; window sums over hundreds of samples make it
-    robust to sample-level noise while staying EXACT integer arithmetic),
-    then an 8x8-bit banded Hamming join (banded_hamming_pairs — pigeonhole
-    covers distance <= 7, never all-pairs) verifies bit_count(xor) <= 6.
-    Fixture: 12 originals + 12 noise-perturbed re-encodes; measured
-    margin dup <= 2 vs cross >= 20. Oracle = the same banded SQL over a
-    golden fingerprint table recomputed with an INDEPENDENT
-    Hadamard-matrix-product implementation
-    (tools/make_multimodal_golden.py:audio_fp_golden)."""
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.audio_fp_media_table(spark, n_base=12, n_frames=1920)
-    return M.banded_hamming_pairs(
-        M.audio_fingerprint(media), n_bands=8, band_bits=8, max_hamming=6
-    ).orderBy("a_id", "b_id")
-
-
-VAD_THR_E3 = 6_000_000  # RMS gate: full-scale noise ~19e6, attenuated ~1.2e6
-
-
-@query(
-    "mm_audio_vad",
-    oracle=f"""
-    WITH act AS (
-      SELECT media_id, window_idx, rms_e3,
-             window_idx - row_number() OVER (
-               PARTITION BY media_id ORDER BY window_idx
-             ) AS island
-      FROM '{_MM_GOLDEN}/mm_audio_vad_rms.parquet'
-      WHERE rms_e3 > {VAD_THR_E3}
-    )
-    SELECT media_id,
-           CAST(min(window_idx) AS BIGINT) AS seg_start,
-           CAST(max(window_idx) AS BIGINT) AS seg_end,
-           CAST(count(*) AS BIGINT) AS n_windows,
-           CAST(max(rms_e3) AS BIGINT) AS max_rms_e3
-    FROM act GROUP BY media_id, island
-    ORDER BY media_id, seg_start
-    """,
-    tags=("multimodal",),
-)
-def mm_audio_vad(spark, sf_dir):
-    """Voice-activity detection — the segmentation pass an audio training
-    pipeline runs before transcription/feature extraction (train on
-    speech segments, not the silence between them): decode REAL WAV
-    clips with loud/quiet gain-block structure through the RIFF walker,
-    window RMS in one Arrow pass (80-frame tumbling windows, exact
-    isqrt integers), gate at {VAD_THR_E3} (full-scale LCG noise sits at
-    ~19e6, the 16x-attenuated blocks at ~1.2e6), then merge consecutive
-    active windows into segments with the gaps-and-islands window trick
-    (window_idx - row_number per clip) IN SPARK — the relational half
-    stays native and shuffle-light (one window partition per clip).
-    Oracle: the SAME islands SQL over the golden per-window RMS table
-    recomputed from the LCG stream + gain rule without the parser
-    (tools/make_multimodal_golden.py:audio_vad_rms_golden), so codec,
-    windowing, and segmentation are all gated."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    media = M.vad_wav_media_table(spark, n=8, n_frames=960)
-    rms = M.audio_rms_windows(media, window_frames=M.VAD_BLOCK)
-    act = rms.filter(F.col("rms_e3") > VAD_THR_E3).withColumn(
-        "island",
-        F.col("window_idx")
-        - F.row_number().over(
-            Window.partitionBy("media_id").orderBy("window_idx")
-        ),
-    )
-    return (
-        act.groupBy("media_id", "island")
-        .agg(
-            F.min("window_idx").cast("long").alias("seg_start"),
-            F.max("window_idx").cast("long").alias("seg_end"),
-            F.count(F.lit(1)).cast("long").alias("n_windows"),
-            F.max("rms_e3").cast("long").alias("max_rms_e3"),
-        )
-        .drop("island")
-        .orderBy("media_id", "seg_start")
-    )

@@ -165,7 +165,6 @@ def _ensure_loaded() -> None:
         relational,
         similarity_queries,
         sink_queries,
-        sketch_queries,
         source_queries,
         sql_surface,
         streaming_batch,

@@ -230,14 +230,6 @@ def sim_lsh_buckets(spark, sf_dir):
 PQ_M, PQ_SUBDIM, PQ_K = 4, 16, 16
 
 
-def _sqdist_sql(a: str, b: str, n: int) -> str:
-    d = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-    return (
-        f"list_reduce(list_transform(generate_series(1, {n}),"
-        f" i -> {d} * {d}), (x, y) -> x + y)"
-    )
-
-
 def _quantize_sql(vec: str) -> str:
     # Mirror of operators.similarity.quantize_micros: floor(x*1e6 + 0.5)
     # elementwise — IEEE-exact, so DuckDB and Spark produce identical int64.

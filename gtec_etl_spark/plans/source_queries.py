@@ -619,7 +619,6 @@ def src_validated_violations(spark, sf_dir):
     )
 
 
-DATACITE_JSON = os.path.join(FIXTURES, "sources", "datacite_works.json")
 DATACITE_GLOB = os.path.join(FIXTURES, "sources", "datacite_works*.json")
 
 

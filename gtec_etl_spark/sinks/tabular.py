@@ -77,13 +77,6 @@ def write_tsv_dump(
     finalize_deterministic_dir(df.sparkSession, path, "tsv")
 
 
-def write_partitioned_json(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """K2 per-entity JSON writer: JSON-lines output partitioned by entity
-    key columns (the scale-safe form of one-file-per-sample,
-    ccmm/gtex/rna_extracts.py:167-191)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).json(path)
-
-
 def write_range_bucketed(
     df: DataFrame,
     path: str,

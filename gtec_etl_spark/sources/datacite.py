@@ -102,11 +102,6 @@ def duplicate_titles(works: DataFrame) -> DataFrame:
     )
 
 
-def title_to_doi(works: DataFrame) -> DataFrame:
-    """The title→DOI lookup dimension (broadcast-join it downstream)."""
-    return works.select("title", "doi")
-
-
 def version_anomalies(
     works: DataFrame, expected: str, exempt_prefixes: tuple[str, ...] = ()
 ) -> DataFrame:

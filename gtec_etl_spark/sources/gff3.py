@@ -14,10 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-GFF3_COLUMNS = [
-    "seqid", "source", "type", "start", "end", "score", "strand", "phase", "attributes",
-]
-
 GFF3_SCHEMA = (
     "seqid string, source string, type string, start long, end long,"
     " score string, strand string, phase string, attributes string"

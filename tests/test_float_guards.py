@@ -1,11 +1,10 @@
 """Ulp-boundary guards for the repo's single-transcendental parity paths
-(ADVICE r7): `floor(ln(x) * 1e6 + 0.5)` (and the linear-counting
-`floor(-m*ln(f) + 0.5)`) rely on DuckDB's and the JVM's libm agreeing on
-ln to well under the quantization step. IEEE does not require correctly
-rounded ln, so a 1-ulp divergence is possible — it only MATTERS if the
-pre-floor value sits essentially ON a rounding boundary, where a 1-ulp
-nudge flips the quantized integer and the ranked/hashed output becomes
-flaky rather than wrong.
+(ADVICE r7): `floor(ln(x) * 1e6 + 0.5)` relies on DuckDB's and the JVM's
+libm agreeing on ln to well under the quantization step. IEEE does not
+require correctly rounded ln, so a 1-ulp divergence is possible — it
+only MATTERS if the pre-floor value sits essentially ON a rounding
+boundary, where a 1-ulp nudge flips the quantized integer and the
+ranked/hashed output becomes flaky rather than wrong.
 
 These tests enumerate every ln argument the gated queries evaluate on
 the test corpora and assert the pre-floor value is not within EPS of an
@@ -68,130 +67,6 @@ def test_tfidf_idf_not_on_rounding_boundary(sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_hll_fallback_not_on_rounding_boundary(sf_dir):
-    """sketch_hll_distinct's only transcendental — the small-range
-    linear-counting fallback m*ln(m/n_zero) — must not sit on a flip
-    point when the corpus takes that branch (sf0.001 does; the raw
-    harmonic-mean branch is integer-exact by construction and needs no
-    guard)."""
-    from gtec_etl_spark.functions.hashing import hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_SCALE,
-        HLL_W,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'"
-    )
-    h = hash60_sql("CAST(l_partkey AS VARCHAR)")
-    mask = (1 << HLL_W) - 1
-    s_present, n_present = con.execute(
-        f"""
-        WITH b AS (
-          SELECT ({h}) >> {HLL_W} AS bucket,
-                 CASE WHEN (({h}) & {mask}) = 0 THEN {HLL_W + 1}
-                      ELSE {HLL_W} - length(bin(({h}) & {mask})) + 1
-                 END AS rho
-          FROM lineitem
-        ),
-        regs AS (SELECT bucket, max(rho) AS mj FROM b GROUP BY bucket)
-        SELECT CAST(sum(CAST(1 AS BIGINT) << CAST(53 - mj AS INTEGER))
-                    AS BIGINT),
-               count(*)
-        FROM regs
-        """
-    ).fetchone()
-    s_int = s_present + (HLL_M - n_present) * (1 << 53)
-    n_zero = HLL_M - n_present
-    raw = HLL_ALPHA * HLL_SCALE / float(s_int)
-    if raw <= 2.5 * HLL_M and n_zero > 0:
-        dist = boundary_distance(HLL_M * math.log(HLL_M / n_zero) + 0.5)
-        assert dist > EPS, (
-            f"HLL fallback flip-point distance {dist:.3e} at {sf_dir} "
-            f"(n_zero={n_zero})"
-        )
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_linear_counting_estimate_not_on_rounding_boundary(sf_dir):
-    """sketch_linear_distinct's single ln: est = floor(-m*ln((m-occ)/m)
-    + 0.5) must not sit on a flip point for the corpus's occupancy."""
-    from gtec_etl_spark.functions.hashing import hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import LC_M
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'"
-    )
-    occupied = con.execute(
-        f"""
-        SELECT count(DISTINCT ({hash60_sql('CAST(l_partkey AS VARCHAR)')})
-                     % {LC_M})
-        FROM lineitem
-        """
-    ).fetchone()[0]
-    f = (LC_M - min(occupied, LC_M - 1)) / LC_M
-    dist = boundary_distance(-LC_M * math.log(f) + 0.5)
-    assert dist > EPS, (
-        f"linear-counting flip-point distance {dist:.3e} at {sf_dir} "
-        f"(occupied={occupied}, m={LC_M})"
-    )
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_hll_grouped_fallback_not_on_rounding_boundary(sf_dir):
-    """sketch_hll_grouped: every GROUP that takes the linear-counting
-    fallback branch gets the same flip-point guard as the global sketch
-    (one ln per group instead of one per corpus)."""
-    from gtec_etl_spark.functions.hashing import hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_SCALE,
-        HLL_W,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'"
-    )
-    h = hash60_sql("CAST(l_partkey AS VARCHAR)")
-    mask = (1 << HLL_W) - 1
-    rows = con.execute(
-        f"""
-        WITH b AS (
-          SELECT l_returnflag AS grp, ({h}) >> {HLL_W} AS bucket,
-                 CASE WHEN (({h}) & {mask}) = 0 THEN {HLL_W + 1}
-                      ELSE {HLL_W} - length(bin(({h}) & {mask})) + 1
-                 END AS rho
-          FROM lineitem
-        ),
-        regs AS (
-          SELECT grp, bucket, max(rho) AS mj FROM b GROUP BY grp, bucket
-        )
-        SELECT grp,
-               CAST(sum(CAST(1 AS BIGINT) << CAST(53 - mj AS INTEGER))
-                    AS BIGINT),
-               count(*)
-        FROM regs GROUP BY grp
-        """
-    ).fetchall()
-    for grp, s_present, n_present in rows:
-        s_int = s_present + (HLL_M - n_present) * (1 << 53)
-        n_zero = HLL_M - n_present
-        raw = HLL_ALPHA * HLL_SCALE / float(s_int)
-        if raw <= 2.5 * HLL_M and n_zero > 0:
-            dist = boundary_distance(HLL_M * math.log(HLL_M / n_zero) + 0.5)
-            assert dist > EPS, (
-                f"grouped HLL fallback flip-point distance {dist:.3e} at "
-                f"{sf_dir} (grp={grp!r}, n_zero={n_zero})"
-            )
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_kl_drift_lns_not_on_rounding_boundary(sf_dir):
     """text_kl_mixture_drift quantizes ln over four integer-argument
     families: n_a+1, n_b+1, T_a+V, T_b+V. Every distinct argument's
@@ -249,47 +124,6 @@ def test_column_entropy_lns_not_on_rounding_boundary(sf_dir):
     assert args
     worst = min(boundary_distance(math.log(a) * 1_000_000 + 0.5) for a in args)
     assert worst > EPS, f"ln argument within {worst} of a flip point"
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_stream_hll_fallback_not_on_rounding_boundary(sf_dir):
-    """stream_hll_distinct shares sketch_hll_distinct's finalization but
-    sketches events.user_id — its fallback ln argument set is guarded
-    separately."""
-    from gtec_etl_spark.functions.hashing import hash60_sql
-    from gtec_etl_spark.plans.sketch_queries import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_SCALE,
-        HLL_W,
-    )
-
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
-    h = hash60_sql("CAST(user_id AS VARCHAR)")
-    mask = (1 << HLL_W) - 1
-    s_present, n_present = con.execute(
-        f"""
-        WITH b AS (
-          SELECT ({h}) >> {HLL_W} AS bucket,
-                 CASE WHEN (({h}) & {mask}) = 0 THEN {HLL_W + 1}
-                      ELSE {HLL_W} - length(bin(({h}) & {mask})) + 1
-                 END AS rho
-          FROM events
-        ),
-        regs AS (SELECT bucket, max(rho) AS mj FROM b GROUP BY bucket)
-        SELECT CAST(sum(CAST(1 AS BIGINT) << CAST(53 - mj AS INTEGER))
-                    AS BIGINT),
-               count(*)
-        FROM regs
-        """
-    ).fetchone()
-    s_int = s_present + (HLL_M - n_present) * (1 << 53)
-    n_zero = HLL_M - n_present
-    raw = HLL_ALPHA * HLL_SCALE / float(s_int)
-    if raw <= 2.5 * HLL_M and n_zero > 0:
-        dist = boundary_distance(HLL_M * math.log(HLL_M / n_zero) + 0.5)
-        assert dist > EPS, f"stream HLL fallback within {dist} of a flip point"
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)

@@ -74,9 +74,6 @@ BROADCAST_BOUNDED_BY_CONSTRUCTION: dict[str, str] = {
     "sim_ivf_probe": "K-row centroid table (fixed K) + single query vector",
     "sim_ivf_upsert": "K-row centroid table (fixed label enum) + 1-row added-total aggregate",
     "sim_ivf_multiprobe": "K-row centroid table (fixed K) + single query vector",
-    "sketch_bloom_join": "bitmap words keyed by position>>5 — fixed BLOOM_M/32 = 256 rows regardless of build-side size",
-    "sketch_cms_heavy_hitters": "CMS grid keyed by (row, col mod W) — fixed D*W cells",
-    "sketch_sampled_quantiles": "boundary set is an equi-join with the SQ_B-1-row index range — <=7 rows at any sf",
     "text_bm25_topk": "idf restricted to the fixed literal query-term set",
     "text_data_card": "per-source/lang summary — fixed enum key domain",
     "text_dsir_select": "importance weights keyed by hash bucket mod B — fixed B buckets",
@@ -190,3 +187,19 @@ def test_selfcheck_coverage_preflight():
         f"selfcheck/driver row: {missing} — run "
         f"`python selfcheck.py -k <name>` for each"
     )
+
+
+def test_exemptions_name_registered_queries():
+    """Every key of the three full-registry exemption tables names a
+    registered query. A key left behind by a deleted query would silently
+    exempt any future query that reuses the name."""
+    names = set(registry.specs())
+    stale = {
+        table: sorted(set(keys) - names)
+        for table, keys in (
+            ("CARTESIAN_ALLOWLIST", CARTESIAN_ALLOWLIST),
+            ("NONEMPTY_EXEMPT", NONEMPTY_EXEMPT),
+            ("BROADCAST_BOUNDED_BY_CONSTRUCTION", BROADCAST_BOUNDED_BY_CONSTRUCTION),
+        )
+    }
+    assert not any(stale.values()), f"exemptions for unregistered queries: {stale}"

@@ -249,42 +249,6 @@ def test_quantize_micros_matches_python_ieee(spark, xs):
 
 @SLOW
 @given(
-    st.integers(min_value=0, max_value=2**31 - 1),
-    st.sampled_from([(16, 1), (16, 2), (8, 1), (8, 2)]),
-    st.integers(min_value=1, max_value=200),
-    st.sampled_from([8000, 16000, 44100]),
-)
-def test_wav_codec_roundtrip_vs_stdlib(seed, layout, n_frames, rate):
-    """For any seed/layout/length: the pure-struct WAV parser and stdlib
-    `wave` (an independent RIFF implementation) agree on header fields and
-    every decoded sample of fake_wav's output."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from gtec_etl_spark.operators import multimodal as M
-
-    bits, nch = layout
-    blob = M.fake_wav(n_frames, rate, seed=seed, bits=bits, n_channels=nch)
-    got_rate, got_nch, got_bits, s = M._decode_wav(blob)
-    w = wave.open(io.BytesIO(blob))
-    assert (w.getframerate(), w.getnchannels(), w.getsampwidth() * 8) == (
-        got_rate,
-        got_nch,
-        got_bits,
-    ) == (rate, nch, bits)
-    raw = w.readframes(n_frames)
-    ref = (
-        np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        if bits == 16
-        else np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
-    )
-    assert len(s) == n_frames * nch and (ref == s).all()
-
-
-@SLOW
-@given(
     st.lists(
         st.lists(st.sampled_from("ab"), min_size=1, max_size=8).map("".join),
         min_size=1,

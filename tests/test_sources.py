@@ -115,6 +115,28 @@ def test_validated_tsv_comment_lines_and_jobless_header(spark, tmp_path):
     assert sorted(r["SUBJID"] for r in df.collect()) == ["GTEX-AB1", "GTEX-CD2"]
 
 
+def test_validated_tsv_utf8_bom_header(spark, tmp_path):
+    """A leading UTF-8 BOM is not part of the first header name: the
+    header check drops it as Spark's line reader does, so a BOM-prefixed
+    file reads the same rows as the plain one."""
+    from gtec_etl_spark.pipelines import SUBJECT_SPEC
+
+    text = "SUBJID\tSEX\tAGE\nGTEX-AB1\t1\t20-29\nGTEX-CD2\t2\t30-39\n"
+    plain = tmp_path / "plain.tsv"
+    plain.write_text(text, encoding="utf-8")
+    bom = tmp_path / "bom.tsv"
+    bom.write_text(text, encoding="utf-8-sig")
+    assert bom.read_bytes().startswith(b"\xef\xbb\xbf")
+
+    def rows(path):
+        df = validated.read_tsv(spark, str(path), SUBJECT_SPEC)
+        validated.assert_valid(df, SUBJECT_SPEC)
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    got = rows(bom)
+    assert got == rows(plain) and len(got[1]) == 2
+
+
 # ---------------------------------------------------------------- S10 GFF3
 
 GFF = """\

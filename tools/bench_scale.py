@@ -118,12 +118,9 @@ QUERIES = [
     "graph_triangle_count",
     "q43_spatial_grid_join",
     "sim_knn_graph",
-    # Round-7 second wave: constant-state sketches (curves should be
-    # ~scan-bound), the declarative quality contract (one agg per scan),
-    # the delta-refresh aggregate (cost ~ delta + keys), the
+    # Round-7 second wave: the declarative quality contract (one agg per
+    # scan), the delta-refresh aggregate (cost ~ delta + keys), the
     # candidate-then-verify LSH pipeline, and TF-IDF extraction.
-    "sketch_cms_heavy_hitters",
-    "sketch_linear_distinct",
     "q44_quality_expectations",
     "etl_incremental_agg",
     "dedup_lsh_verify",
@@ -145,19 +142,9 @@ QUERIES = [
     "sim_ivf_trained_rerank",
     "text_contamination_check",
     "text_dsir_select",
-    # Round-8: HyperLogLog distinct — constant 256-register state, the
-    # curve should be scan-bound like the other sketches.
-    "sketch_hll_distinct",
-    # Round-8: bloom semi-join pruning (256-word filter, one md5 per
-    # distinct key per side) and delta-join view maintenance (three
-    # partial-aggregate join terms; cost ~ deltas + one fact-side pass).
-    "sketch_bloom_join",
+    # Round-8: delta-join view maintenance (three partial-aggregate join
+    # terms; cost ~ deltas + one fact-side pass).
     "etl_incremental_join",
-    # Round-8: KMV set-ops sketch — 256-pair state, TakeOrdered top-k —
-    # and sampled range-boundary estimation (2% sample sort + one
-    # audited corpus pass).
-    "sketch_kmv_set_ops",
-    "sketch_sampled_quantiles",
     # Round-12 additions: fixpoints (ppr/hits), compression tiers (sq8,
     # ivf upsert), layout manifest, histogram-path profiling stats,
     # winnowing fingerprints, and the events-analytics pack (all
@@ -189,10 +176,6 @@ QUERIES = [
     # pick; allocation side is |sources|-row arithmetic).
     "dedup_ngram_containment",
     "text_quota_sample",
-    # Round-9: per-group HLL — register build is a map-side-combined
-    # groupBy over (group x 256 buckets); curve should be scan-bound
-    # like the global sketch.
-    "sketch_hll_grouped",
     # Streaming LAST: their sf1 state stores stay cached in the executor
     # JVM after the query stops (HDFSBackedStateStoreProvider unloads
     # lazily), and the residue measurably degrades whatever batch query

@@ -13,7 +13,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+QUERIES_MD = os.path.join(REPO, "QUERIES.md")
+
+sys.path.insert(0, REPO)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -25,7 +28,8 @@ def first_sentence(doc: str | None) -> str:
     return s.replace("|", "\\|")
 
 
-def main() -> None:
+def render() -> str:
+    """The QUERIES.md text for the current registry."""
     from gtec_etl_spark.plans import registry
 
     specs = registry.specs()
@@ -58,11 +62,17 @@ def main() -> None:
         *rows,
         "",
     ]
-    repo = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-    with open(os.path.join(repo, "QUERIES.md"), "w") as fh:
-        fh.write("\n".join(out))
+    return "\n".join(out)
+
+
+def main() -> None:
+    from gtec_etl_spark.plans import registry
+
+    with open(QUERIES_MD, "w") as fh:
+        fh.write(render())
+    specs = registry.specs()
     n_oracled = sum(1 for s in specs.values() if s.oracle)
-    print(f"QUERIES.md: {n} queries ({n_oracled} oracled)")
+    print(f"QUERIES.md: {len(specs)} queries ({n_oracled} oracled)")
 
 
 if __name__ == "__main__":

@@ -169,92 +169,10 @@ def run_tumbling(spark, replay_dir: str) -> dict:
         return progress_stats(q)
 
 
-def run_hll_registers(spark, replay_dir: str) -> dict:
-    """Steady-state of the streaming HyperLogLog register maintenance
-    (stream_hll_distinct's topology): per-trigger cost of a 256-row
-    bounded-state aggregation — THE fixed-state streaming sketch, so the
-    steady median should be flat and small regardless of stream length."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.functions.hashing import hash60
-    from gtec_etl_spark.plans.sketch_queries import HLL_W
-    from gtec_etl_spark.streaming import pipelines as P
-
-    h = hash60(F.col("user_id").cast("string"))
-    w = h.bitwiseAND(F.lit((1 << HLL_W) - 1))
-    with P.state_partitions(spark, 8):
-        ev = P.read_events_stream(spark, replay_dir, 1, path_glob="*.parquet")
-        regs = (
-            ev.select(
-                F.shiftright(h, HLL_W).alias("bucket"),
-                F.when(w == 0, F.lit(HLL_W + 1))
-                .otherwise(F.lit(HLL_W) - F.length(F.bin(w)) + 1)
-                .alias("rho"),
-            )
-            .groupBy("bucket")
-            .agg(F.max("rho").alias("mj"))
-        )
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(f"hll_{uuid.uuid4().hex[:12]}")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("hll replay did not finish")
-        return progress_stats(q)
-
-
-def run_cms_cells(spark, replay_dir: str) -> dict:
-    """Steady-state of the streaming count-min-sketch cell maintenance
-    (stream_cms_heavy's topology): per-trigger cost of a D x W
-    bounded-state aggregation — the cell-ADDITION monoid sketch, so like
-    the HLL registers the state row count must plateau at the fixed cell
-    set regardless of stream length."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.functions.hashing import hash60, minhash_perm
-    from gtec_etl_spark.plans.sketch_queries import CMS_PARAMS, CMS_W
-    from gtec_etl_spark.streaming import pipelines as P
-
-    h = hash60(F.col("user_id").cast("string"))
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(di).alias("di"),
-                (minhash_perm(h, a, b) % CMS_W).alias("col"),
-            )
-            for di, (a, b) in enumerate(CMS_PARAMS)
-        ]
-    )
-    with P.state_partitions(spark, 8):
-        ev = P.read_events_stream(spark, replay_dir, 1, path_glob="*.parquet")
-        sk = (
-            ev.select(F.explode(cells).alias("c"))
-            .select("c.di", "c.col")
-            .groupBy("di", "col")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        q = (
-            sk.writeStream.format("memory")
-            .queryName(f"cms_{uuid.uuid4().hex[:12]}")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("cms replay did not finish")
-        return progress_stats(q)
-
-
 def run_psi_cells(spark, replay_dir: str) -> dict:
     """Steady-state of the streaming PSI bucket-count maintenance
     (stream_psi_drift's topology): per-trigger cost of a ~20-row
-    bounded-state aggregation — the smallest fixed-state sketch in the
-    registry (buckets x reference/current windows)."""
+    bounded-state aggregation (buckets x reference/current windows)."""
     from pyspark.sql import functions as F
 
     from gtec_etl_spark.plans.profile_queries import (
@@ -633,8 +551,6 @@ def main() -> None:
                 spark, replay_dir
             ),
             "stream_tumbling_hourly": run_tumbling(spark, replay_dir),
-            "stream_hll_distinct": run_hll_registers(spark, replay_dir),
-            "stream_cms_heavy": run_cms_cells(spark, replay_dir),
             "stream_psi_drift": run_psi_cells(spark, replay_dir),
             "stream_static_join": run_static_join(
                 spark, args.sf_dir, replay_dir
