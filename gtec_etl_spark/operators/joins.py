@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.functions.sqltext import ident, lit
+
 
 def derived_key_join(
     fact: DataFrame,
@@ -78,49 +80,40 @@ def conflict_checked_merge(
     merged coalesces base-over-extra for overlapping columns; conflicts
     holds one row per (key, column) disagreement.
     """
-    overlap = [c for c in base.columns if c in extra.columns and c != key]
-    ext = extra.select(
-        key, *[F.col(c).alias(f"__x_{c}") for c in extra.columns if c != key]
-    )
+    k = ident(key)
+    rest = [c for c in extra.columns if c != key]
+    overlap = [c for c in base.columns if c in rest]
+    ext = extra.selectExpr(k, *[f"{ident(c)} AS {ident('__x_' + c)}" for c in rest])
     joined = base.join(ext, key, how)
 
     conflict_cols = []
     for c in overlap:
-        xc = f"__x_{c}"
-        bad = (
-            F.col(c).isNotNull()
-            & F.col(xc).isNotNull()
-            & (F.col(c).cast("string") != F.col(xc).cast("string"))
-        )
+        b, x = f"CAST({ident(c)} AS STRING)", f"CAST({ident('__x_' + c)} AS STRING)"
         conflict_cols.append(
-            F.when(
-                bad,
-                F.struct(
-                    F.lit(c).alias("column"),
-                    F.col(c).cast("string").alias("base_value"),
-                    F.col(xc).cast("string").alias("extra_value"),
-                ),
-            )
+            f"CASE WHEN {b} IS NOT NULL AND {x} IS NOT NULL AND {b} != {x} THEN"
+            f" named_struct('column', {lit(c)}, 'base_value', {b}, 'extra_value', {x})"
+            " END"
         )
     if conflict_cols:
-        conflicts = (
-            joined.select(key, F.array(*conflict_cols).alias("__conf"))
-            .select(key, F.explode("__conf").alias("c"))
-            .filter(F.col("c").isNotNull())
-            .select(key, "c.column", "c.base_value", "c.extra_value")
+        conflicts = joined.selectExpr(
+            k, f"inline(filter(array({', '.join(conflict_cols)}), c -> c IS NOT NULL))"
         )
     else:
         conflicts = joined.sparkSession.createDataFrame(
-            [], f"{key} string, column string, base_value string, extra_value string"
+            [], f"{k} string, column string, base_value string, extra_value string"
         )
 
-    merged = joined
-    for c in overlap:
-        merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__x_{c}")))
-    new_cols = [c for c in extra.columns if c not in base.columns and c != key]
-    for c in new_cols:
-        merged = merged.withColumn(c, F.col(f"__x_{c}"))
-    merged = merged.drop(*[f"__x_{c}" for c in extra.columns if c != key])
+    merged = joined.selectExpr(
+        k,
+        *[
+            f"coalesce({ident(c)}, {ident('__x_' + c)}) AS {ident(c)}"
+            if c in overlap
+            else ident(c)
+            for c in base.columns
+            if c != key
+        ],
+        *[f"{ident('__x_' + c)} AS {ident(c)}" for c in rest if c not in base.columns],
+    )
     return merged, conflicts
 
 

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.functions.sqltext import ident, lit
 from gtec_etl_spark.operators import joins as J
 from gtec_etl_spark.sinks import jsonld
 from gtec_etl_spark.sinks.bdbag import make_bag
@@ -96,14 +97,15 @@ def run_gtex_like_etl(
     # J1: derive the subject key from the sample id. One left join against
     # the PRE-merge subjects yields both the linked samples and the
     # dangling-FK audit, so the dump's SEX/AGE come from subjects.tsv.
-    samples = samples.withColumn(
-        "SUBJID", F.regexp_extract("SAMPID", r"^(GTEX-[A-Z0-9]+)", 1)
+    samples = samples.selectExpr(
+        "*", f"regexp_extract(SAMPID, {lit(r'^(GTEX-[A-Z0-9]+)')}, 1) AS SUBJID"
     )
-    probe = samples.join(
-        F.broadcast(subjects.withColumn("__found", F.lit(True))), "SUBJID", "left"
+    found = subjects.selectExpr("*", "true AS __found").hint("broadcast")
+    probe = samples.join(found, "SUBJID", "left")
+    dangling = probe.filter("__found IS NULL").selectExpr(
+        *[ident(c) for c in samples.columns]
     )
-    dangling = probe.filter(F.col("__found").isNull()).select(*samples.columns)
-    linked = probe.filter(F.col("__found")).drop("__found")
+    linked = probe.filter("__found").drop("__found")
 
     if restricted:
         subjects, conflicts = J.conflict_checked_merge(subjects, restricted[0], "SUBJID")
@@ -118,32 +120,25 @@ def run_gtex_like_etl(
     # and the A2 reconciliation, release validation and the document
     # writer all read that one copy.
     group_key = "CONSENT" if restricted else "SEX"
-    subj_struct = F.struct(
-        jsonld.content_id("Material", "SUBJID").alias("@id"),
-        F.lit("Material").alias("@type"),
-        F.col("SUBJID").alias("name"),
+    key = ident(group_key)
+    member = (
+        f"named_struct('@id', {jsonld.content_id_sql('Material', 'SUBJID')},"
+        " '@type', 'Material', 'name', SUBJID)"
     )
     groups = (
         subjects.groupBy(group_key)
         .agg(
-            jsonld.children_array(
-                F.collect_list(jsonld.sorted_children(F.col("SUBJID"), subj_struct))
-            ).alias("members"),
-            F.count(F.lit(1)).alias("size"),
+            jsonld.sorted_children("SUBJID", member).alias("members"),
+            F.expr("count(1) AS size"),
         )
-        .select(
-            F.col(group_key).alias("group"),
+        .selectExpr(
+            f"{key} AS `group`",
             "size",
-            F.concat_ws(",", F.col("members.name")).alias("member_ids"),
-            jsonld.to_document(
-                F.struct(
-                    jsonld.content_id("StudyGroup", group_key).alias("@id"),
-                    F.lit("StudyGroup").alias("@type"),
-                    F.col(group_key).alias("name"),
-                    F.col("size"),
-                    F.col("members"),
-                )
-            ).alias("doc"),
+            "concat_ws(',', members.name) AS member_ids",
+            "to_json(named_struct("
+            f"'@id', {jsonld.content_id_sql('StudyGroup', group_key)},"
+            f" '@type', 'StudyGroup', 'name', {key}, 'size', size,"
+            " 'members', members)) AS doc",
         )
         .localCheckpoint(eager=False)
     )
@@ -163,12 +158,12 @@ def run_gtex_like_etl(
     return EtlResult(
         subjects=subjects,
         samples=linked,
-        study_groups=groups.select(
-            F.col("group").alias(group_key), "size", F.col("member_ids").alias("members")
+        study_groups=groups.selectExpr(
+            f"`group` AS {key}", "size", "member_ids AS members"
         ),
         conflicts=conflicts,
         dangling_samples=dangling,
-        documents=groups.select("group", "doc"),
+        documents=groups.selectExpr("`group`", "doc"),
     )
 
 

@@ -50,32 +50,23 @@ def k1_jsonld_study_groups(spark, sf_dir):
     the reference's uuid4, ccmm/dats/datsobj.py:109-116), serialized with
     to_json. The oracle assembles the SAME bytes with sha256 || concat in
     SQL, so id scheme, member order and field order are all pinned."""
-    cust = catalog.table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 50)
-    member = F.struct(
-        jsonld.content_id("Material", "c_name").alias("@id"),
-        F.lit("Material").alias("@type"),
-        F.col("c_name").alias("name"),
+    cust = catalog.table(spark, sf_dir, "customer").filter("c_custkey < 50")
+    member = (
+        f"named_struct('@id', {jsonld.content_id_sql('Material', 'c_name')},"
+        " '@type', 'Material', 'name', c_name)"
     )
-    per = cust.select("c_mktsegment", "c_name", member.alias("s"))
     return (
-        per.groupBy("c_mktsegment")
+        cust.groupBy("c_mktsegment")
         .agg(
-            jsonld.children_array(
-                F.collect_list(jsonld.sorted_children(F.col("c_name"), F.col("s")))
-            ).alias("members"),
-            F.count(F.lit(1)).alias("size"),
+            jsonld.sorted_children("c_name", member).alias("members"),
+            F.expr("count(1) AS size"),
         )
-        .select(
-            F.col("c_mktsegment").alias("group"),
-            jsonld.to_document(
-                F.struct(
-                    jsonld.content_id("StudyGroup", "c_mktsegment").alias("@id"),
-                    F.lit("StudyGroup").alias("@type"),
-                    F.col("c_mktsegment").alias("name"),
-                    F.col("size"),
-                    F.col("members"),
-                )
-            ).alias("doc"),
+        .selectExpr(
+            "c_mktsegment AS `group`",
+            "to_json(named_struct("
+            f"'@id', {jsonld.content_id_sql('StudyGroup', 'c_mktsegment')},"
+            " '@type', 'StudyGroup', 'name', c_mktsegment, 'size', size,"
+            " 'members', members)) AS doc",
         )
         .orderBy("group")
     )
@@ -102,19 +93,12 @@ def k2_per_entity_docs(spark, sf_dir):
     sinks.jsonld.write_documents (sharded text); returning (path, doc)
     rows pins both the document bytes and the naming scheme to the
     oracle."""
-    cust = catalog.table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 100)
-    cid = jsonld.content_id("Material", "c_name")
-    doc_struct = F.struct(
-        cid.alias("@id"),
-        F.lit("Material").alias("@type"),
-        F.col("c_name").alias("name"),
-        F.col("c_custkey").alias("custkey"),
-    )
-    return cust.select(
-        F.concat(
-            F.regexp_replace(cid, "^dats:", ""), F.lit(".json")
-        ).alias("path"),
-        jsonld.to_document(doc_struct).alias("doc"),
+    cust = catalog.table(spark, sf_dir, "customer").filter("c_custkey <= 100")
+    cid = jsonld.content_id_sql("Material", "c_name")
+    return cust.selectExpr(
+        f"concat(regexp_replace({cid}, '^dats:', ''), '.json') AS path",
+        f"to_json(named_struct('@id', {cid}, '@type', 'Material', 'name', c_name,"
+        " 'custkey', c_custkey)) AS doc",
     ).orderBy("path")
 
 
@@ -393,26 +377,14 @@ def k8_release_validation(spark, sf_dir):
     documents."""
     groups = k1_jsonld_study_groups(spark, sf_dir)
 
-    gid = jsonld.content_id("StudyGroup", "group")
+    group_ref = f"named_struct('@id', {jsonld.content_id_sql('StudyGroup', 'group')})"
     root = (
-        groups.select(F.col("group"), F.struct(gid.alias("@id")).alias("r"))
-        .groupBy()
-        .agg(
-            jsonld.children_array(
-                F.collect_list(jsonld.sorted_children(F.col("group"), F.col("r")))
-            ).alias("hasPart")
-        )
-        .select(
-            jsonld.to_document(
-                F.struct(
-                    jsonld.content_id(
-                        "Study", F.lit("crosscut-release")
-                    ).alias("@id"),
-                    F.lit("Study").alias("@type"),
-                    F.lit("crosscut-release").alias("name"),
-                    F.col("hasPart"),
-                )
-            ).alias("doc")
+        groups.groupBy()
+        .agg(jsonld.sorted_children("`group`", group_ref).alias("hasPart"))
+        .selectExpr("'crosscut-release' AS name", "hasPart")
+        .selectExpr(
+            f"to_json(named_struct('@id', {jsonld.content_id_sql('Study', 'name')},"
+            " '@type', 'Study', 'name', name, 'hasPart', hasPart)) AS doc"
         )
     )
     release = groups.select("doc").unionByName(root)

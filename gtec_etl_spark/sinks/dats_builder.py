@@ -125,13 +125,8 @@ def build_program_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     files_per_subject = files.groupBy("subject_id").agg(
-        J.children_array(
-            F.collect_list(
-                J.sorted_children(
-                    F.concat_ws("|", F.lpad("sample_key", 12, "0"), F.lpad("line", 4, "0")),
-                    F.col("file_struct"),
-                )
-            )
+        J.sorted_children(
+            "concat_ws('|', lpad(sample_key, 12, '0'), lpad(line, 4, '0'))", "file_struct"
         ).alias("files")
     )
 
@@ -157,14 +152,7 @@ def build_program_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = (
         subj_full.groupBy("regionkey", "study", "c_mktsegment")
         .agg(
-            J.children_array(
-                F.collect_list(
-                    J.sorted_children(
-                        F.col("c_name"),
-                        F.struct(F.col("subject_id").alias("@id")),
-                    )
-                )
-            ).alias("members"),
+            J.sorted_children("c_name", "named_struct('@id', subject_id)").alias("members"),
             F.count(F.lit(1)).alias("size"),
         )
         .withColumn(
@@ -182,17 +170,11 @@ def build_program_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     studies = (
         subj_full.groupBy("regionkey", "study")
         .agg(
-            J.children_array(
-                F.collect_list(J.sorted_children(F.col("c_name"), F.col("subject_struct")))
-            ).alias("subjects")
+            J.sorted_children("c_name", "subject_struct").alias("subjects")
         )
         .join(
             groups.groupBy("regionkey", "study").agg(
-                J.children_array(
-                    F.collect_list(
-                        J.sorted_children(F.col("c_mktsegment"), F.col("group_struct"))
-                    )
-                ).alias("studyGroups")
+                J.sorted_children("c_mktsegment", "group_struct").alias("studyGroups")
             ),
             ["regionkey", "study"],
         )
@@ -211,9 +193,7 @@ def build_program_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     programs = (
         studies.groupBy("regionkey")
         .agg(
-            J.children_array(
-                F.collect_list(J.sorted_children(F.col("study"), F.col("study_struct")))
-            ).alias("hasPart")
+            J.sorted_children("study", "study_struct").alias("hasPart")
         )
         .join(F.broadcast(t["region"]), F.col("regionkey") == F.col("r_regionkey"))
         .select(

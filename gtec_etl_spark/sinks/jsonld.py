@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from gtec_etl_spark.functions.sqltext import ident, in_list, lit
 
 #: The closed DATS type vocabulary (ccmm/dats/datsobj.py:33-70): the
 #: reference's DatsObj constructor fatals on any type outside this set
@@ -51,23 +52,28 @@ DATS_TYPES = frozenset(
 )
 
 
-def content_id(entity_type: str, *natural_key: Column | str) -> Column:
-    """Deterministic @id: sha256 over (type, natural key), truncated to 32
-    hex chars. Replaces the reference's uuid4 (SURVEY.md §7.4).
+def content_id_sql(entity_type: str, *natural_key: str) -> str:
+    """SQL text of the deterministic @id over the named key columns:
+    sha256 over (type, natural key), truncated to 32 hex chars. Replaces
+    the reference's uuid4 (SURVEY.md §7.4).
 
     Null-propagating on purpose (concat, NOT concat_ws): a NULL key
     component yields a NULL id instead of silently vanishing from the
     hash input — concat_ws would give (NULL,'x') and ('x',NULL) the same
     id, merging distinct entities. Matches the SQL-oracle form
     type || chr(31) || key, where any NULL nulls the whole expression."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in natural_key]
-    parts: list[Column] = [F.lit(entity_type)]
-    for c in cols:
-        parts.extend([F.lit("\x1f"), c.cast("string")])
-    return F.concat(
-        F.lit(f"dats:{entity_type}/"),
-        F.substring(F.sha2(F.concat(*parts), 256), 1, 32),
+    parts = [lit(entity_type)]
+    for name in natural_key:
+        parts += [lit("\x1f"), f"CAST({ident(name)} AS STRING)"]
+    return (
+        f"concat({lit(f'dats:{entity_type}/')},"
+        f" substring(sha2(concat({', '.join(parts)}), 256), 1, 32))"
     )
+
+
+def content_id(entity_type: str, *natural_key: str) -> Column:
+    """content_id_sql as a Column, built in one call."""
+    return F.expr(content_id_sql(entity_type, *natural_key))
 
 
 def as_ref(struct_col: Column, schema: StructType) -> Column:
@@ -107,15 +113,15 @@ def full_or_ref(struct_col: Column, is_first: Column, schema: StructType) -> Col
     return F.when(is_first, struct_col).otherwise(as_ref(struct_col, schema))
 
 
-def sorted_children(sort_key: Column, child: Column) -> Column:
-    """Deterministically ordered child array for collect_list aggregation:
-    collect (key, child) pairs, sort by key, project the child — the
-    emitter's answer to collect_list's nondeterministic order."""
-    return F.struct(sort_key.alias("k"), child.alias("v"))
-
-
-def children_array(collected: Column) -> Column:
-    return F.transform(F.array_sort(collected), lambda x: x["v"])
+def sorted_children(sort_key: str, child: str) -> Column:
+    """Deterministically ordered child array, as an aggregate over SQL text
+    (`sort_key` and `child` are expressions): collect (key, child) pairs,
+    sort by key, project the child — the emitter's answer to
+    collect_list's nondeterministic order."""
+    return F.expr(
+        f"transform(array_sort(collect_list(struct({sort_key} AS k, {child} AS v))),"
+        " x -> x.v)"
+    )
 
 
 def to_document(root_struct: Column) -> Column:
@@ -136,14 +142,18 @@ RELEASE_DOC_SCHEMA = (
 )
 
 _ID_RE = "^dats:[A-Za-z]+/[0-9a-f]{32}$"
+#: An entity occurrence in the canonical serialization (see
+#: validate_release): a full embed (@id, @type), a full embed whose @id
+#: was nulled (the serializer drops null fields, so it starts with @type),
+#: and an @id-only reference.
+_FULL_RE = r'\{"@id":"([^"]+)","@type":"([^"]+)"'
+_IDLESS_RE = r'\{"@type":"[^"]+"'
+_REF_RE = r'\{"@id":"([^"]+)"\}'
 
 
-def _occurrence(kind: str, oid: Column, typ: Column) -> Column:
-    return F.struct(
-        F.lit(kind).alias("kind"),
-        oid.cast("string").alias("id"),
-        typ.cast("string").alias("typ"),
-    )
+def _occurrence_sql(kind: str, oid: str, typ: str) -> str:
+    """SQL text of one entity occurrence; `oid` and `typ` are SQL text."""
+    return f"named_struct('kind', {lit(kind)}, 'id', {oid}, 'typ', {typ})"
 
 
 _OCCURRENCES = "array<struct<kind:string,id:string,typ:string>>"
@@ -193,86 +203,68 @@ def validate_release(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
     one-row global sum. Every intermediate is release-sized (documents,
     not source data), so validation costs one scan of the release at any
     scale. Healthy releases report all-zero counters, and so does an
-    empty one."""
-    doc = F.col(doc_col)
-    none = F.lit(None)
-    full_re = F.lit(r'\{"@id":"([^"]+)","@type":"([^"]+)"')
-    occurrences = F.concat(
-        F.transform(
-            F.arrays_zip(
-                F.regexp_extract_all(doc, full_re, 1).alias("id"),
-                F.regexp_extract_all(doc, full_re, 2).alias("typ"),
-            ),
-            lambda e: _occurrence("full", e["id"], e["typ"]),
-        ),
-        # full objects whose @id is missing (nulled ids are DROPPED by the
-        # serializer, so the object starts with @type)
-        F.transform(
-            F.regexp_extract_all(doc, F.lit(r'\{"@type":"[^"]+"'), 0),
-            lambda _: _occurrence("full", none, none),
-        ),
-        F.transform(
-            F.regexp_extract_all(doc, F.lit(r'\{"@id":"([^"]+)"\}'), 1),
-            lambda i: _occurrence("ref", i, none),
-        ),
+    empty one.
+
+    Every expression is compiled to SQL text, one string per DataFrame
+    step (selectExpr, or F.expr in an aggregate): building the plan takes
+    ~110 py4j round trips instead of ~1,600 for the same Column tree."""
+    doc, none = ident(doc_col), lit(None)
+    full, idless, ref = (lit(r) for r in (_FULL_RE, _IDLESS_RE, _REF_RE))
+    occurrences = (
+        f"concat(zip_with(regexp_extract_all({doc}, {full}, 1),"
+        f" regexp_extract_all({doc}, {full}, 2),"
+        f" (i, t) -> {_occurrence_sql('full', 'i', 't')}),"
+        f" transform(regexp_extract_all({doc}, {idless}, 0),"
+        f" x -> {_occurrence_sql('full', none, none)}),"
+        f" transform(regexp_extract_all({doc}, {ref}, 1),"
+        f" i -> {_occurrence_sql('ref', 'i', none)}))"
     )
     # The marker's typ is the FAILFAST parse's root @type. No counter reads
     # a marker's typ, but referencing the parse keeps it in the plan:
     # pruned, malformed JSON would pass instead of aborting the release.
-    parsed = F.from_json(doc, RELEASE_DOC_SCHEMA, {"mode": "FAILFAST"})
-    marker = F.array(_occurrence("doc", none, parsed["@type"]))
-    # docno is numbered before the explode: in the same select, Spark
-    # would number the exploded rows instead of the documents.
-    occ = (
-        docs.select(F.monotonically_increasing_id().alias("docno"), doc)
-        .select(
-            "docno",
-            F.explode(
-                F.concat(marker, F.coalesce(occurrences, F.array().cast(_OCCURRENCES)))
-            ).alias("o"),
-        )
-        .select("docno", "o.*")
+    parsed = f"from_json({doc}, {lit(RELEASE_DOC_SCHEMA)}, map('mode', 'FAILFAST'))"
+    marker = _occurrence_sql("doc", none, f"{parsed}.`@type`")
+    # docno is numbered before the inline: in the same select, Spark would
+    # number the generated rows instead of the documents.
+    occ = docs.selectExpr("monotonically_increasing_id() AS docno", doc).selectExpr(
+        "docno",
+        f"inline(concat(array({marker}),"
+        f" coalesce({occurrences}, CAST(array() AS {_OCCURRENCES}))))",
     )
 
-    kind, oid, typ = F.col("kind"), F.col("id"), F.col("typ")
-    is_full = kind == "full"
-    bad_id = (kind != "doc") & (
-        oid.isNull()
-        | ~oid.rlike(_ID_RE)
-        | (is_full & (F.regexp_extract(oid, "^dats:([A-Za-z]+)/", 1) != typ))
+    is_full = "kind = 'full'"
+    bad_id = (
+        f"kind != 'doc' AND (id IS NULL OR NOT (id RLIKE {lit(_ID_RE)})"
+        f" OR ({is_full} AND regexp_extract(id, '^dats:([A-Za-z]+)/', 1) != typ))"
+    )
+    unknown_type = (
+        f"{is_full} AND typ IS NOT NULL AND NOT {in_list('typ', sorted(DATS_TYPES))}"
     )
     # Hash-partitioned by @id alone, so neither aggregate below (per
     # (@id, document), then per @id) needs a shuffle of its own.
+    counted = {
+        "docs": "kind = 'doc'",
+        "full": is_full,
+        "refs": "kind = 'ref'",
+        "unknown_type": unknown_type,
+        "bad_id": bad_id,
+    }
     per_doc = (
         occ.repartition("id")
         .groupBy("id", "docno")
-        .agg(
-            F.count_if(kind == "doc").alias("docs"),
-            F.count_if(is_full).alias("full"),
-            F.count_if(kind == "ref").alias("refs"),
-            F.count_if(
-                is_full & typ.isNotNull() & ~typ.isin(sorted(DATS_TYPES))
-            ).alias("unknown_type"),
-            F.count_if(bad_id).alias("bad_id"),
-        )
+        .agg(*[F.expr(f"count_if({c}) AS {ident(n)}") for n, c in counted.items()])
     )
-    summed = ["docs", "full", "refs", "unknown_type", "bad_id"]
     per_id = per_doc.groupBy("id").agg(
-        *[F.sum(c).alias(c) for c in summed],
+        *[F.expr(f"sum({ident(n)}) AS {ident(n)}") for n in counted],
         # per-document scope: the reference's DatsObjCache dedups within
         # one emitted document
-        F.count_if(oid.isNotNull() & (F.col("full") > 1)).alias("dup_full"),
+        F.expr("count_if(id IS NOT NULL AND `full` > 1) AS dup_full"),
     )
     # global scope: a ref is dangling when no document embeds its @id full
-    per_id = per_id.withColumn(
-        "dangling",
-        F.when(oid.isNotNull() & (F.col("full") == 0), F.col("refs")).otherwise(0),
-    )
-    return per_id.agg(
-        *[
-            F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(f"n_{c}")
-            for c in summed + ["dup_full", "dangling"]
-        ]
+    totals = {n: ident(n) for n in [*counted, "dup_full"]}
+    totals["dangling"] = "CASE WHEN id IS NOT NULL AND `full` = 0 THEN refs ELSE 0 END"
+    return per_id.selectExpr(
+        *[f"CAST(coalesce(sum({e}), 0) AS BIGINT) AS n_{n}" for n, e in totals.items()]
     )
 
 

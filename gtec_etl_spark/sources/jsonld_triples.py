@@ -40,16 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
 
+from gtec_etl_spark.functions.sqltext import ident, lit
+
 SKIP_FIELDS = ("@id", "@context")
 NO_TRIPLES = "cast(array() as array<struct<s:string,p:string,o:string>>)"
-
-
-def _ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _lit(text: str) -> str:
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _triple(s: str, p: str, o: str) -> str:
@@ -71,7 +65,7 @@ def _node(subject: str, node: str, schema: StructType, depth: int, edge: tuple |
     b = f"__b{depth}"
     parts = [f"array({_triple(*edge, f'{b}.s')})"] if edge else []
     parts += [
-        _value(f"{b}.s", _lit(f.name), f"{b}.n.{_ident(f.name)}", f.dataType, depth + 1)
+        _value(f"{b}.s", lit(f.name), f"{b}.n.{ident(f.name)}", f.dataType, depth + 1)
         for f in schema.fields
         if f.name not in SKIP_FIELDS
     ]
@@ -113,7 +107,7 @@ def jsonld_to_triples(docs: DataFrame) -> DataFrame:
     schema = docs.schema
     if all(f.name in SKIP_FIELDS for f in schema.fields):
         raise ValueError("document schema has no flattenable fields")
-    row = f"struct({', '.join(_ident(c) for c in docs.columns)})"
+    row = f"struct({', '.join(ident(c) for c in docs.columns)})"
     subject = "`@id`" if "@id" in schema.fieldNames() else _bnode(row)
     expr = _node(subject, row, schema, 0, None)
     return docs.selectExpr(f"inline({expr})").where("s IS NOT NULL AND o IS NOT NULL").distinct()

@@ -5,6 +5,7 @@ the S9/S12 restricted readers and bag determinism.
 
 from __future__ import annotations
 
+import gc
 import json
 import textwrap
 from pathlib import Path
@@ -199,27 +200,56 @@ def test_dump_demographics_come_from_pre_merge_subjects(spark, fixture_files, tm
 #: its lineage, so at release sizes the job count, not the row count, sets
 #: the cost; a change that adds a pass shows up here.
 RELEASE_JOB_BUDGET = 17
+#: py4j round trips of the same release. PySpark sends every Column-API
+#: call (F.col, alias, operators) to the JVM with call-site capture, one
+#: round trip or more per node, so the release path builds its expressions
+#: as SQL text, one string per DataFrame step; a Column tree that creeps
+#: back in shows here. py4j object releases move the count by about ±80
+#: from one release to the next.
+RELEASE_PY4J_BUDGET = 2000
 
 
-def test_release_job_budget(spark, fixture_files, tmp_path):
+def _release(spark, fixture_files, tmp_path):
     from gtec_etl_spark.sinks.jsonld import validate_release
 
     subjects, samples, restrictedf = fixture_files
+    res = pipelines.run_gtex_like_etl(
+        spark, subjects, samples, restrictedf, expected_group_sizes={"1": 2, "2": 1}
+    )
+    assert res.dangling_samples.count() == 1
+    assert res.conflicts.count() == 0
+    assert validate_release(res.documents).first().n_docs == 2
+    pipelines.export_release(res, str(tmp_path / "release"), str(tmp_path / "r.tgz"))
+
+
+def test_release_job_budget(spark, fixture_files, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("release-job-budget", "one release")
     try:
-        res = pipelines.run_gtex_like_etl(
-            spark, subjects, samples, restrictedf, expected_group_sizes={"1": 2, "2": 1}
-        )
-        assert res.dangling_samples.count() == 1
-        assert res.conflicts.count() == 0
-        assert validate_release(res.documents).first().n_docs == 2
-        pipelines.export_release(res, str(tmp_path / "release"), str(tmp_path / "r.tgz"))
+        _release(spark, fixture_files, tmp_path)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup("release-job-budget"))
     assert jobs <= RELEASE_JOB_BUDGET, f"{jobs} Spark jobs per release"
+
+
+def test_release_py4j_budget(spark, fixture_files, tmp_path, monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counting(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    gc.collect()  # release the py4j objects of earlier tests first
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    _release(spark, fixture_files, tmp_path)
+    monkeypatch.undo()
+    assert calls <= RELEASE_PY4J_BUDGET, f"{calls} py4j round trips per release"
 
 
 @pytest.fixture()

@@ -578,3 +578,103 @@ def test_ragged_row_always_fails_fast(spark, fields, at):
     (v,) = ei.value.sample
     assert (v["table"], v["value"], v["check"]) == ("t", ragged, "row_shape")
     assert v["row_key"].endswith("/t.tsv")
+
+
+# Names, patterns and values that need quoting or escaping in SQL text.
+_TRICKY_NAMES = ["plain", "two words", "back`tick", "it's", 'dq"name']
+_REGEX_ATOMS = [r"\d", r"\t", "'", r"\\", "a", r"\d+", "[a']"]
+_TRICKY_VALUES = ["a", "1", "2", "it's", "'", "\\", "a'\\b", "\t", "\\d"]
+_tricky_cells = st.sampled_from(["", None, "1", "12", "a1", "'", "\\", "a\\'", "\t7", "x"])
+
+
+@st.composite
+def _tricky_specs(draw):
+    names = draw(
+        st.lists(st.sampled_from(_TRICKY_NAMES), min_size=2, max_size=4, unique=True)
+    )
+    columns = []
+    for name in names:
+        regex = draw(
+            st.none()
+            | st.lists(st.sampled_from(_REGEX_ATOMS), min_size=1, max_size=3).map(
+                lambda atoms: "^" + "".join(atoms)
+            )
+        )
+        cv = draw(st.none() | st.lists(st.sampled_from(_TRICKY_VALUES), max_size=3))
+        integer_cv = draw(
+            st.none()
+            | st.dictionaries(
+                st.integers(min_value=1, max_value=3),
+                st.sampled_from(_TRICKY_VALUES),
+                min_size=1,
+                max_size=3,
+            )
+        )
+        empty_ok = draw(st.booleans())
+        columns.append(validated.ColumnSpec(name, regex, cv, integer_cv, empty_ok))
+    pk = names[: draw(st.integers(min_value=1, max_value=2))]
+    return validated.TableSpec(columns=columns, primary_key=pk, name="t'\\")
+
+
+def _python_violations(spec, rows):
+    """The reference's per-cell checks (ccmm/gtex/parsers/util.py:31-105),
+    row at a time, keyed like the engine: PK values joined by '|'
+    (nulls skipped), duplicates counted per distinct PK tuple."""
+    import re
+
+    out, per_pk = Counter(), Counter()
+    for row in rows:
+        cells = dict(zip(spec.names(), row))
+        pk = tuple(cells[k] for k in spec.primary_key)
+        key = "|".join(v for v in pk if v is not None)
+        per_pk[(pk, key)] += 1
+        for c in spec.columns:
+            v = cells[c.name]
+            if v is None or v == "":
+                if not c.empty_ok:
+                    out[(key, c.name, v, "not_null")] += 1
+                continue
+            if c.regex and not re.search(c.regex, v, re.ASCII):
+                out[(key, c.name, v, "regex")] += 1
+            if c.cv is not None and v not in c.cv:
+                out[(key, c.name, v, "cv")] += 1
+            if c.integer_cv is not None and v not in {str(k) for k in c.integer_cv}:
+                out[(key, c.name, v, "integer_cv")] += 1
+    for (_, key), n in per_pk.items():
+        if n > 1:
+            out[(key, spec.primary_key[0], str(n), "duplicate_pk")] += 1
+    return out
+
+
+@SLOW
+@given(_tricky_specs(), st.data())
+def test_validation_sql_text_quotes_names_patterns_and_values(spark, spec, data):
+    """The validation plan is SQL text: column names with spaces, backticks
+    and quotes, regexes with \\d, \\t, ' and \\\\, and vocabularies and
+    decode labels with ' and \\ must all reach Spark verbatim. The
+    violations equal a row-at-a-time Python check, and apply_mappings
+    decodes like a dict lookup."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    width = len(spec.columns)
+    rows = data.draw(
+        st.lists(st.tuples(*[_tricky_cells] * width), min_size=1, max_size=6)
+    )
+    schema = StructType([StructField(n, StringType()) for n in spec.names()])
+    df = spark.createDataFrame(rows, schema)
+
+    got = Counter(tuple(r) for r in validated.validate(df, spec).collect())
+    assert got == _python_violations(spec, rows)
+
+    def mapped(c, v):
+        v = None if v == "" else v
+        if c.integer_cv is None:
+            return v
+        return {str(k): x for k, x in c.integer_cv.items()}.get(v)
+
+    want = Counter(
+        tuple(mapped(c, v) for c, v in zip(spec.columns, row))
+        + tuple(v for c, v in zip(spec.columns, row) if c.integer_cv is not None)
+        for row in rows
+    )
+    assert Counter(tuple(r) for r in validated.apply_mappings(df, spec).collect()) == want

@@ -403,6 +403,34 @@ def test_validate_release_detects_each_violation(spark):
     assert row.n_dangling == 1
 
 
+def test_validate_release_adversarial_two_documents(spark):
+    """A malformed root @id, a dangling ref that is malformed too, an
+    id-less full object and an unknown @type, spread over two documents:
+    the counters are the ones the Column-built validator reported."""
+    from gtec_etl_spark.sinks.jsonld import validate_release
+
+    docs = spark.createDataFrame(
+        [
+            (
+                '{"@id":"urn:uuid:1234","@type":"Dataset",'
+                '"members":[{"@type":"Material","name":"no-id"}],'
+                '"hasPart":[{"@id":"urn:uuid:5678"}]}',
+            ),
+            ('{"@id":"dats:Gadget/%s","@type":"Gadget","name":"g"}' % ("d" * 32),),
+        ],
+        "doc string",
+    )
+    assert validate_release(docs).first().asDict() == {
+        "n_docs": 2,
+        "n_full": 3,
+        "n_refs": 1,
+        "n_unknown_type": 1,
+        "n_bad_id": 3,
+        "n_dup_full": 0,
+        "n_dangling": 1,
+    }
+
+
 def test_validate_release_failfast_on_malformed_json(spark):
     """FAILFAST semantics: a syntactically broken document aborts the
     validation run (the reference's fatal release gate), never a silent

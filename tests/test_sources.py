@@ -137,6 +137,24 @@ def test_validated_tsv_utf8_bom_header(spark, tmp_path):
     assert got == rows(plain) and len(got[1]) == 2
 
 
+def test_composite_pk_duplicates_group_on_pk_values(spark):
+    """Duplicate-PK detection groups on the PK values, not on the
+    '|'-joined display key: ('x|y', 'z') and ('x', 'y|z') join to the same
+    string, and concat_ws skips the NULL of ('p', NULL) and (NULL, 'p'),
+    yet neither pair is a duplicate. A repeated PK still is."""
+    spec = validated.TableSpec(
+        columns=[validated.ColumnSpec("a"), validated.ColumnSpec("b")],
+        primary_key=["a", "b"],
+        name="t",
+    )
+    df = spark.createDataFrame(
+        [("x|y", "z"), ("x", "y|z"), ("p", None), (None, "p"), ("q", "r"), ("q", "r")],
+        "a string, b string",
+    )
+    got = [tuple(r) for r in validated.validate(df, spec).collect()]
+    assert got == [("q|r", "a", "2", "duplicate_pk")]
+
+
 # ---------------------------------------------------------------- S10 GFF3
 
 GFF = """\
