@@ -30,7 +30,6 @@ HEADLINE = [
     "prof_event_value_stats",
     "ev_sliding_windows",
     "dedup_minhash_lsh",
-    "text_corpus_clean",
     "stream_stream_join",
 ]
 

@@ -52,14 +52,8 @@ def word_shingles(
     n: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, *carry, shingle).
-
-    `carry_cols` are passed through unchanged (e.g. `source` for
-    corpus-level signatures) without affecting the repartition key, so
-    grouping a shingle stream by a low-cardinality carried column keeps
-    the fan-out parallelism keyed on the high-cardinality id.
+    """Distinct word n-gram shingles per document: (id, shingle).
 
     Guarded against short docs — Spark's sequence(1, 0) yields a
     *descending* [1, 0], not an empty array, so docs with < n words get an
@@ -83,8 +77,7 @@ def word_shingles(
     docs = cpu_fanout_repartition(docs, id_col, min_bytes=0)
 
     words = F.split(F.lower(F.col(text_col)), " ")
-    carry = [F.col(c) for c in carry_cols]
-    with_words = docs.select(F.col(id_col), *carry, words.alias("w"))
+    with_words = docs.select(F.col(id_col), words.alias("w"))
     shingle_arr = F.when(F.size("w") < n, F.array().cast("array<string>")).otherwise(
         F.expr(
             f"transform(sequence(1, size(w) - {n - 1}),"
@@ -92,7 +85,7 @@ def word_shingles(
         )
     )
     return with_words.select(
-        F.col(id_col), *carry, F.explode(F.array_distinct(shingle_arr)).alias("shingle")
+        F.col(id_col), F.explode(F.array_distinct(shingle_arr)).alias("shingle")
     )
 
 

@@ -26,21 +26,17 @@ from pyspark.sql import functions as F
 # into map-side partial aggregation, so on a sub-2 MB scan the repartition's
 # fixed cost (extra stage + 32-task schedule) exceeds what it saves —
 # interleaved sf0.1 A/B: dedup_simhash 3.34 s floor-skipped vs 4.08 s
-# guarded, text_lm_familiarity 0.89 vs 1.34, text_tfidf_topterms 0.56 vs
-# 0.88, text_gopher_rules flat-to-better. HASH-HEAVY fan-outs (md5 per
-# shingle / per char-gram) are the opposite — over a second of single-core
-# map work even at 0.59 MB (dedup_substring_spans 1.29 s guarded vs 2.39 s
-# skipped) — so those call sites pass min_bytes=0 explicitly. Override per
-# session with spark.gtec.fanout.minBytes (0 disables the floor); at 100 TB
-# the floor is dead code — any real scan is orders of magnitude above it
-# and the guard no-ops on partition count instead. At sf1 (6.2 MB corpus)
-# and above every call site clears the floor, so the scale path is
-# identical to r14's.
+# guarded. HASH-HEAVY fan-outs (md5 per shingle / per char-gram) are the
+# opposite — over a second of single-core map work even at 0.59 MB
+# (dedup_substring_spans 1.29 s guarded vs 2.39 s skipped) — so those call
+# sites pass min_bytes=0 explicitly. At 100 TB the floor is dead code — any
+# real scan is orders of magnitude above it and the guard no-ops on
+# partition count instead.
 FANOUT_MIN_BYTES = 2 * 1024 * 1024
 
 
 def cpu_fanout_repartition(
-    df: DataFrame, key_col: str = "doc_id", min_bytes: int | None = None
+    df: DataFrame, key_col: str = "doc_id", min_bytes: int = FANOUT_MIN_BYTES
 ) -> DataFrame:
     """Repartition up to default parallelism when the scan is narrower —
     the guard for CPU-heavy pre-shuffle work (explodes, per-row scoring,
@@ -78,16 +74,11 @@ def cpu_fanout_repartition(
     fan-out is sub-second on one core, so the exchange is pure overhead
     (dedup_minhash_lsh paid ~0.24 s / 20% at sf0.1 for nothing). Skip the
     guard when the optimizer's size estimate for the input is under
-    `min_bytes` (default FANOUT_MIN_BYTES, conf-overridable). The fake-
-    slice regime the guard exists for starts at real data volumes (tens
-    of MB of compact parquet fanning out on 1-2 cores), far above the
-    floor, and a 100 TB scan never consults it."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if min_bytes is None:
-        min_bytes = int(
-            spark.conf.get("spark.gtec.fanout.minBytes", str(FANOUT_MIN_BYTES))
-        )
+    `min_bytes` (0 disables the floor). The fake-slice regime the guard
+    exists for starts at real data volumes (tens of MB of compact parquet
+    fanning out on 1-2 cores), far above the floor, and a 100 TB scan
+    never consults it."""
+    par = df.sparkSession.sparkContext.defaultParallelism
     if min_bytes > 0:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
         if est < min_bytes:

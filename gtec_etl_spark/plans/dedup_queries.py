@@ -1686,25 +1686,25 @@ def dedup_lsh_eval_scaled(spark, sf_dir):
 def dedup_aware_split(spark, sf_dir):
     """NEAR-DUP-CLUSTER-AWARE train/eval split — the leakage guard every
     serious training pipeline needs and doc-level splits silently lack:
-    hashing doc_id (text_train_test_split) puts near-duplicate documents
-    on OPPOSITE sides of the holdout ~2·p·(1-p) of the time, so the eval
-    set contains paraphrases of training documents and the benchmark is
-    contaminated by construction. This query splits by the near-dup
+    hashing doc_id puts near-duplicate documents on OPPOSITE sides of
+    the holdout ~2·p·(1-p) of the time, so the eval set contains
+    paraphrases of training documents and the benchmark is contaminated
+    by construction. This query splits by the near-dup
     CLUSTER instead: MinHash-LSH candidates (the gated 16-perm/4-band
     pipeline) → connected components → assignment =
     md5(seed || component) mod 100 (90/10), so an entire cluster lands
     on one side — per-split doc/cluster/char counts plus the audit
     column n_cross_pairs = LSH candidate pairs straddling the split,
     which this construction provably pins to ZERO (a doc-hash split
-    leaves it at the ~2·p·(1-p) expectation; run the same audit against
-    text_train_test_split's assignment to see the leak it prevents).
+    leaves it at the ~2·p·(1-p) expectation; dedup_split_leakage_audit
+    runs the same audit against both assignments).
 
     Plan shape: the banded-LSH + endpoint-restricted CC pipeline
     (dedup_clusters_cc's exact plan — per-round cost |near-dup docs|,
     not |corpus|), one broadcast-eligible join of the component map back
     to documents, one keyed join pair for the audit, and a 2-row
-    aggregate. The split hash is engine-exact (md5 prefix → integer mod,
-    the text_train_test_split precedent) and cluster-stable: re-running
+    aggregate. The split hash is engine-exact (md5 prefix → integer
+    mod, identical in Spark and DuckDB) and cluster-stable: re-running
     on a grown corpus moves a cluster only if its min-id member
     changed."""
     docs = catalog.table(spark, sf_dir, "documents")
@@ -1827,7 +1827,7 @@ def dedup_aware_split(spark, sf_dir):
 def dedup_split_leakage_audit(spark, sf_dir):
     """The MEASURED case for cluster-aware holdouts: the same
     cross-split audit run against BOTH assignment schemes — the naive
-    doc-hash split (text_train_test_split's exact md5 rule) and
+    doc-hash split (md5('seed42|' || doc_id) mod 100 < 90) and
     dedup_aware_split's cluster-hash rule — over the same MinHash-LSH
     candidate pairs. A near-dup pair straddling the split means an eval
     document has a paraphrase in training: the doc_hash row quantifies
@@ -1970,7 +1970,7 @@ def dedup_winnowing_pairs(spark, sf_dir):
     window's MINIMUM — the classic guarantee that any shared substring
     of length >= k + w - 1 contributes at least one shared fingerprint,
     while the selected set is ~2/(w+1) of all grams (position-robust,
-    unlike text_fingerprint's single global min; locality-guaranteed,
+    unlike a single global min-hash per document; locality-guaranteed,
     unlike MinHash's per-document sampling). Pairs sharing >=
     {WINNOW_MIN_SHARED} fingerprints are plagiarism/near-dup candidates.
 

@@ -843,12 +843,12 @@ def prof_drift_psi(spark, sf_dir):
     bucket the signed contribution (p_A - p_B)·ln(p_A/p_B) is emitted
     with add-one smoothing, plus the total.
 
-    Parity discipline (the text_kl_mixture_drift precedent): the only
-    transcendental is ln over INTEGER arguments, each quantized to
-    micro-nats (floor(ln·1e6 + 0.5)) — ln(p_A/p_B) decomposes as
-    ln(n_A+1) - ln(n_B+1) + ln(T_B+V) - ln(T_A+V), so every argument is
-    an exact BIGINT; the probabilities themselves are floored e9-scaled
-    integers, and every product stays < 2^63.
+    Parity discipline: the only transcendental is ln over INTEGER
+    arguments, each quantized to micro-nats (floor(ln·1e6 + 0.5)) —
+    ln(p_A/p_B) decomposes as ln(n_A+1) - ln(n_B+1) + ln(T_B+V) -
+    ln(T_A+V), so every argument is an exact BIGINT; the probabilities
+    themselves are floored e9-scaled integers, and every product stays
+    < 2^63.
     tests/test_float_guards.py asserts each distinct ln argument clears
     the rounding boundary. Plan: ONE scan of events with map-side
     combine into ≤{PSI_NBUCKETS} bucket rows; the (T_A, T_B, V) scalars

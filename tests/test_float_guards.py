@@ -35,76 +35,6 @@ def boundary_distance(pre_floor: float) -> float:
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_tfidf_idf_not_on_rounding_boundary(sf_dir):
-    """Every distinct (n, df) pair of text_tfidf_topterms: the quantized
-    idf_e6 = floor(ln(n/df)*1e6 + 0.5) must not sit on a flip point."""
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    pairs = con.execute(
-        """
-        WITH toks AS (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-          FROM documents
-        ),
-        t AS (SELECT doc_id, tok FROM toks WHERE len(tok) > 0),
-        df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM t GROUP BY tok),
-        nd AS (SELECT count(DISTINCT doc_id) AS n FROM t)
-        SELECT DISTINCT n, df FROM df CROSS JOIN nd
-        """
-    ).fetchall()
-    assert pairs
-    worst = min(
-        boundary_distance(math.log(n / df) * 1_000_000 + 0.5)
-        for n, df in pairs
-    )
-    assert worst > EPS, (
-        f"idf_e6 flip-point distance {worst:.3e} at {sf_dir} — quantized "
-        f"idf is ulp-flaky on this corpus; perturb the quantizer in both "
-        f"engines (see module docstring)"
-    )
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_kl_drift_lns_not_on_rounding_boundary(sf_dir):
-    """text_kl_mixture_drift quantizes ln over four integer-argument
-    families: n_a+1, n_b+1, T_a+V, T_b+V. Every distinct argument's
-    pre-floor value must clear the flip point."""
-    from gtec_etl_spark.plans.text_queries import TOKEN_RE
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    args = con.execute(
-        f"""
-        WITH toks AS (
-          SELECT doc_id % 2 AS part,
-                 unnest(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS token
-          FROM documents),
-        counts AS (SELECT token,
-            CAST(sum(CASE WHEN part = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-            CAST(sum(CASE WHEN part = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-          FROM toks GROUP BY token),
-        scal AS (SELECT CAST(sum(n_a) AS BIGINT) AS ta,
-                        CAST(sum(n_b) AS BIGINT) AS tb,
-                        CAST(count(*) AS BIGINT) AS v FROM counts)
-        SELECT DISTINCT arg FROM (
-          SELECT n_a + 1 AS arg FROM counts
-          UNION SELECT n_b + 1 FROM counts
-          UNION SELECT ta + v FROM scal
-          UNION SELECT tb + v FROM scal)
-        """
-    ).fetchall()
-    assert args
-    worst = min(
-        boundary_distance(math.log(a) * 1_000_000 + 0.5) for (a,) in args
-    )
-    assert worst > EPS, f"ln argument within {worst} of a flip point"
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_column_entropy_lns_not_on_rounding_boundary(sf_dir):
     """prof_column_entropy quantizes ln over per-value counts and column
     totals; every distinct argument must clear the flip point."""

@@ -74,12 +74,6 @@ BROADCAST_BOUNDED_BY_CONSTRUCTION: dict[str, str] = {
     "sim_ivf_probe": "K-row centroid table (fixed K) + single query vector",
     "sim_ivf_upsert": "K-row centroid table (fixed label enum) + 1-row added-total aggregate",
     "sim_ivf_multiprobe": "K-row centroid table (fixed K) + single query vector",
-    "text_bm25_topk": "idf restricted to the fixed literal query-term set",
-    "text_data_card": "per-source/lang summary — fixed enum key domain",
-    "text_dsir_select": "importance weights keyed by hash bucket mod B — fixed B buckets",
-    "text_dsir_weights": "importance weights keyed by hash bucket mod B — fixed B buckets",
-    "text_mixture_rebalance": "per-source sampling rates — fixed source enum",
-    "text_source_similarity": "per-source minhash signature table — one row per source (fixed enum key domain), regardless of corpus size",
 }
 
 
@@ -190,9 +184,13 @@ def test_selfcheck_coverage_preflight():
 
 
 def test_exemptions_name_registered_queries():
-    """Every key of the three full-registry exemption tables names a
-    registered query. A key left behind by a deleted query would silently
-    exempt any future query that reuses the name."""
+    """Every key of the three full-registry exemption tables, and every
+    name in bench.py's HEADLINE, names a registered query. A key left
+    behind by a deleted query would silently exempt any future query that
+    reuses the name; a stale headline name would drop out of the bench
+    report."""
+    import bench
+
     names = set(registry.specs())
     stale = {
         table: sorted(set(keys) - names)
@@ -200,6 +198,7 @@ def test_exemptions_name_registered_queries():
             ("CARTESIAN_ALLOWLIST", CARTESIAN_ALLOWLIST),
             ("NONEMPTY_EXEMPT", NONEMPTY_EXEMPT),
             ("BROADCAST_BOUNDED_BY_CONSTRUCTION", BROADCAST_BOUNDED_BY_CONSTRUCTION),
+            ("bench.HEADLINE", bench.HEADLINE),
         )
     }
     assert not any(stale.values()), f"exemptions for unregistered queries: {stale}"

@@ -470,20 +470,3 @@ def test_connected_components_raises_when_unconverged(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, chain, max_iter=1).collect()
-
-
-def test_dsir_weights_separate_target_from_raw(spark, sf_dir):
-    """The DSIR behavioral contract (the SQL oracle checks exactness; this
-    checks the estimator does its job): English-labeled docs must average
-    a higher hashed-bigram importance than the raw pool, with the en mean
-    at or above the 10000 parity line."""
-    from gtec_etl_spark.plans.text_queries import DSIR_SCALE, _dsir_doc_scores
-
-    rows = _dsir_doc_scores(spark, sf_dir).collect()
-    en = [r["importance_scaled"] for r in rows if r["lang"] == "en"]
-    raw = [r["importance_scaled"] for r in rows if r["lang"] != "en"]
-    assert en and raw
-    en_mean = sum(en) / len(en)
-    raw_mean = sum(raw) / len(raw)
-    assert en_mean > raw_mean
-    assert en_mean >= DSIR_SCALE

@@ -74,31 +74,6 @@ def test_no_python_udfs_in_relational_queries(spark):
         assert "EvalPython" not in plan, f"{name}: Python UDF leaked into the plan"
 
 
-def test_corpus_clean_two_hash_shuffles(spark):
-    # text_corpus_clean: scoring/langid are map-side; the only hash
-    # exchanges are the fingerprint groupBy + the canonical join, plus
-    # (at test scale only) the cpu_fanout_repartition guard's doc_id
-    # exchange — which at a real 100 TB scan never fires (scan
-    # partitions >> cores), so the production shape stays two shuffles.
-    # A refactor that adds a shuffle beyond those broke the shape.
-    df = registry.specs()["text_corpus_clean"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning")
-    fanout = plan.count("Exchange hashpartitioning(doc_id")
-    assert n - min(fanout, 1) <= 2, (
-        f"expected <=2 hash exchanges beyond the fanout guard, got {n} "
-        f"(doc_id fanout exchanges: {fanout})"
-    )
-    assert "EvalPython" not in plan
-
-
-def test_repetition_score_stays_jvm_side(spark):
-    # Bigram explode + two keyed aggregations; no Python in the hot path.
-    plan = _formatted_plan(spark, "text_repetition_score")
-    assert "EvalPython" not in plan
-    assert "Generate explode" in plan or "Generate" in plan
-
-
 def test_k2_docs_no_join_no_python(spark):
     # Per-entity document emission is scan -> project -> sort: no
     # exchange other than the presentation sort, nothing Python-side.
@@ -144,16 +119,6 @@ def test_flagship_ref_queries_plan_properties(spark):
             l for l in plan.splitlines() if "PushedFilters" in l and "[]" not in l
         ]
         assert pushed, f"{name}: no filters pushed to any scan"
-
-
-def test_contamination_check_semi_join_no_pairs(spark):
-    # Decontamination is set MEMBERSHIP, not pair generation: the train
-    # side must collapse to distinct shingles and reach the probe as a
-    # semi join — a refactor to an inner join + pair groupBy would
-    # reintroduce the O(df^2) blowup the near-dup queries guard against.
-    plan = _formatted_plan(spark, "text_contamination_check")
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_pq_adc_single_arrow_pass_then_topk(spark):
@@ -230,15 +195,6 @@ def test_incremental_apply_single_lsh_pass(spark):
     assert n_joins <= 2, f"expected band join + flag join only, got {n_joins}"
 
 
-def test_dsir_one_aggregation_tree_per_branch(spark):
-    """text_dsir_weights: corpus totals must ride a window over the bucket
-    stats, not a third aggregation branch — exactly two corpus scans
-    (filtered per-doc branch + unfiltered stats branch), not three."""
-    tree = _plan_tree(_formatted_plan(spark, "text_dsir_weights"))
-    scans = [l for l in tree.splitlines() if "Scan parquet" in l]
-    assert len(scans) == 2, f"expected 2 corpus scans, got {len(scans)}"
-
-
 def test_diversity_sample_arrow_assign_and_salts(spark):
     """sim_diversity_sample (r9 shape): nearest-centroid assignment is the
     Arrow kernel (constant-size codebook in the closure — no join at all
@@ -249,33 +205,6 @@ def test_diversity_sample_arrow_assign_and_salts(spark):
     assert "MapInPandas" in plan
     assert "Join" not in plan
     assert plan.count("Window") >= 2
-
-
-def test_gopher_rules_guard_keyed_single_exchange(spark):
-    """text_gopher_rules (r14 shape): when the fan-out guard fires, it
-    repartitions by doc_id BEFORE the explode, so both chained aggregations
-    reuse that one HashPartitioning(doc_id) — exactly one hash exchange in
-    the whole plan, and it is the guard's REPARTITION_BY_NUM on doc_id.
-    Still no count-distinct Expand, no join. The r15 bytes floor keeps the
-    guard out of sub-2MB scans (the test fixture qualifies), so pin the
-    guard-fired scale shape with the floor disabled; then check the
-    floor-skipped shape stays the plain two-agg plan."""
-    spark.conf.set("spark.gtec.fanout.minBytes", "0")
-    try:
-        plan = _formatted_plan(spark, "text_gopher_rules")
-    finally:
-        spark.conf.unset("spark.gtec.fanout.minBytes")
-    assert plan.count("Arguments: hashpartitioning") == 1
-    assert re.search(r"hashpartitioning\(doc_id#\d+L?, \d+\), REPARTITION_BY_NUM", plan)
-    assert "Expand" not in plan
-    assert "Join" not in plan
-
-    # Floor active (default): tiny scan → no guard exchange, the two
-    # chained aggregations each hash-partition as before r14.
-    plan2 = _formatted_plan(spark, "text_gopher_rules")
-    assert plan2.count("Arguments: hashpartitioning") == 2
-    assert "Expand" not in plan2
-    assert "Join" not in plan2
 
 
 def test_retention_cohorts_two_data_shuffles(spark):
@@ -311,26 +240,6 @@ def test_semdedup_arrow_kernels_no_joins(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_lm_familiarity_single_count_model_join(spark):
-    """text_lm_familiarity: one aggregation trains the bigram counts, one
-    left join applies them, one aggregation scores — and the words array
-    is materialized before the bigram lambda (no split() inside the
-    transform body, the O(words^2) re-tokenize trap)."""
-    plan = _formatted_plan(spark, "text_lm_familiarity")
-    assert "lambdafunction(split" not in plan.lower()
-    assert plan.lower().count("join") >= 1
-
-
-def test_bm25_prunes_then_takes_ordered(spark):
-    """text_bm25_topk: top-10 is TakeOrderedAndProject (no global sort),
-    the idf/stats sides broadcast, and no cartesian product sneaks in via
-    the 1-row crossJoins (they must stay broadcast nested loops)."""
-    plan = _formatted_plan(spark, "text_bm25_topk")
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_scd2_merge_broadcasts_batch_over_history(spark):
     """etl_scd2_merge: every join of history against the (small) batch is
     a broadcast — the dimension side never shuffles."""
@@ -349,16 +258,6 @@ def test_cdc_upsert_collapses_log_before_merge(spark):
     # has no full-outer support) — the dimension must never shuffle.
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_chunk_overlap_is_map_side_until_presentation_sort(spark):
-    """text_chunk_overlap: tokenize + series-explode + slice are all
-    map-side — zero hash exchanges (the only exchange is the ORDER BY's
-    range partitioning, an oracle-comparison convention)."""
-    df = registry.specs()["text_chunk_overlap"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 0
-    assert "EvalPython" not in plan
 
 
 def test_ivfpq_single_arrow_pass_then_topk(spark):

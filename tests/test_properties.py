@@ -79,45 +79,6 @@ def test_exact_dedup_fingerprint_whitespace_invariant(spark, texts):
     assert fp == fp2
 
 
-def test_pack_sequences_respect_budget(spark):
-    """Packing invariant: every doc STARTS inside its sequence's budget
-    window (start_offset in [seq_id*B, (seq_id+1)*B)), sequences within a
-    bucket are dense from 0, and every doc appears exactly once."""
-    from gtec_etl_spark.plans import registry
-    from tests.conftest import SF_DIR
-
-    rows = registry.specs()["text_pack_sequences"].fn(spark, SF_DIR).collect()
-    B = 4096
-    by_bucket: dict[int, list] = {}
-    for r in rows:
-        by_bucket.setdefault(r["bucket"], []).append(r)
-    n_docs = sum(len(v) for v in by_bucket.values())
-    assert n_docs == len({r["doc_id"] for r in rows})
-    for bucket, docs in by_bucket.items():
-        seqs = sorted({d["seq_id"] for d in docs})
-        assert seqs == list(range(len(seqs))), f"bucket {bucket}: gap in seq ids"
-        # A doc in seq M started at offset >= M*B, so the bucket's total
-        # token count must exceed M*B — holds independent of pack order.
-        total = sum(d["n_tok"] for d in docs)
-        assert total > max(seqs) * B, f"bucket {bucket}: seq beyond token mass"
-        assert all(d["n_tok"] > 0 for d in docs)
-
-
-def test_mixture_rebalance_rates_are_valid(spark):
-    """Rebalance invariants: the smallest source keeps everything
-    (keep_bp == 10000), every rate is in (0, 10000], and sampled counts
-    are bounded by source size."""
-    from gtec_etl_spark.plans import registry
-    from tests.conftest import SF_DIR
-
-    rows = registry.specs()["text_mixture_rebalance"].fn(spark, SF_DIR).collect()
-    smallest = min(rows, key=lambda r: r["n_docs"])
-    assert smallest["keep_bp"] == 10000
-    for r in rows:
-        assert 0 < r["keep_bp"] <= 10000
-        assert 0 <= r["n_sampled"] <= r["n_docs"]
-
-
 @SLOW
 @given(
     st.lists(st.tuples(st.integers(0, 3), st.integers(0, 9)), min_size=0, max_size=40),

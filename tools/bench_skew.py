@@ -17,11 +17,11 @@ This tool closes that gap (r5 verdict item 7):
 3. Prints one JSON line with wall times and the salted/plain + AQE/plain
    ratios, for PERF.md.
 
-Timing protocol (per the r5 bench_scale lesson): everything runs in ONE
-session, fact/dim are materialized and cached and counted first so
-generation cost never pollutes join timing, and each plan is timed as the
-min of `--reps` runs after one warm-up (min-of-N, as in bench.py, is
-robust to another JVM stealing cores mid-run).
+Timing protocol: everything runs in ONE session, fact/dim are
+materialized and cached and counted first so generation cost never
+pollutes join timing, and each plan is timed as the min of `--reps` runs
+after one warm-up (min-of-N, as in bench.py, is robust to another JVM
+stealing cores mid-run).
 
 Usage: python tools/bench_skew.py [--rows 8000000] [--users 100000]
        [--zipf 1.1] [--reps 3]
@@ -106,8 +106,7 @@ def run_timed(make_df, reps: int) -> tuple[float, tuple]:
     """Times `make_df()` end-to-end. A FRESH DataFrame per rep is load-
     bearing: re-collecting one Dataset object reuses its AQE-materialized
     shuffle query stages, so the 'join' would time at ~50ms regardless of
-    plan — the same measurement trap class as bench_scale's session
-    residue note."""
+    plan."""
     rows = None
     times = []
     for i in range(reps + 1):  # first run is warm-up
