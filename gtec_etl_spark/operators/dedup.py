@@ -804,3 +804,17 @@ def minhash_bands_rowwise(
     return sigs.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("bs")
     ).select(F.col(id_col), F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+
+
+def quantize_micros(vec: Column) -> Column:
+    """Elementwise float→int64 quantization to integer micros:
+    floor(x * 1e6 + 0.5). Every step (float→double cast, double multiply,
+    add, floor) is an IEEE-754 operation with one correct answer, so any
+    engine produces the same int64 — the foundation for cross-engine-exact
+    integer distance arithmetic (dedup_embedding_cosine's dot products)."""
+    return F.transform(
+        vec,
+        lambda x: F.floor(x.cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
+            "long"
+        ),
+    )

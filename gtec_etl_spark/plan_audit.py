@@ -16,7 +16,7 @@ explicit `F.broadcast`/hint survives as `ResolvedHint` in the analyzed plan,
 so auditing there flags precisely the forced class and nothing else.
 
 Bounding operators (make a corpus-scaled subtree fixed-size):
-  - GlobalLimit / LocalLimit (e.g. top-k, codebook samples)
+  - GlobalLimit / LocalLimit (e.g. top-k, fixed-size samples)
   - Sample (fractional training samples are sf-proportional — still flagged;
     absolute-size samples go through limit)
   - global Aggregate (no grouping keys — scalar min/max/count summaries)

@@ -19,7 +19,6 @@ from gtec_etl_spark.functions.hashing import (
     minhash_params,
 )
 from gtec_etl_spark.operators import dedup as D
-from gtec_etl_spark.operators import similarity as S
 from gtec_etl_spark.plans.registry import query
 
 # Shared oracle CTEs: distinct word 3-gram shingles per document.
@@ -621,7 +620,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     import pandas as pd
 
     emb = catalog.table(spark, sf_dir, "embeddings").withColumn(
-        "qe", S.quantize_micros(F.col("embedding"))
+        "qe", D.quantize_micros(F.col("embedding"))
     )
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1305,9 +1304,8 @@ def dedup_lsh_eval(spark, sf_dir):
     basis points, computed over shared 60-bit md5-prefix shingle hashes
     — NOT string shingles; a cross-doc hash collision is shared by both
     engines so parity stays exact, and the per-pair collision odds are
-    bounded < 2^-40) as one precision/recall row. sim_recall_report is the
-    ANN analog; this closes the loop for the dedup family — production
-    pipelines re-run it whenever bands/rows/shingle-width change, at a
+    bounded < 2^-40) as one precision/recall row. Production pipelines
+    re-run it whenever bands/rows/shingle-width change, at a
     SAMPLED scale (the truth side is the uncapped exact join, priced
     accordingly; the LSH side is the 100 TB path being certified).
     Precision counts banding's false positives (verify-pass workload),

@@ -1190,8 +1190,7 @@ def q47_spatial_grid_scaled(spark, sf_dir):
     corpus instead: cells-per-side = 2^k for the smallest k with
     n_points <= 64 * 4^k (integer ladder, exact in both engines), so
     per-cell occupancy — and with it candidates per point and matches
-    per point — stays bounded as N grows. Same K~sqrt(N) reasoning as
-    sim_semdedup_scaled (SEMDEDUP_K.json). The radius and cell edge stay
+    per point — stays bounded as N grows. The radius and cell edge stay
     {GRID_CELL} (cell >= radius keeps the 3x3 probe exact); only the
     plane, i.e. the coordinate modulus, scales. The two driver-side
     count() calls are bounded scalar collects (the planning statistic a

@@ -11,8 +11,8 @@ dedup side (operators/dedup.py:218); PageRank here completes the pair.
 
 Everything is integer fixed-point (ranks scaled by 1e12, floor at every
 division) so the unrolled-CTE DuckDB oracle reproduces the iteration
-bit-for-bit — the sim_pq_trained_codebook / text_bpe_train precedent for
-oracling a constant-iteration-count algorithm.
+bit-for-bit: with the iteration count pinned, the oracle unrolls each
+iteration as one CTE stage.
 """
 
 from __future__ import annotations
@@ -596,8 +596,8 @@ def graph_label_propagation(spark, sf_dir):
     label among its neighbors, ties broken toward the SMALLEST label —
     both rules exact integer argmax, so the unrolled-CTE DuckDB oracle
     reproduces the trajectory bit-for-bit (the constant-iteration
-    discipline of graph_pagerank/text_bpe_train; sync updates on a
-    bipartite graph can oscillate, which is immaterial here precisely
+    discipline of graph_pagerank; sync updates on a bipartite graph
+    can oscillate, which is immaterial here precisely
     because the iteration count is pinned). Output: one row per
     surviving community (size, smallest member, customer count).
 

@@ -100,10 +100,10 @@ def _driver_verified_rounds() -> dict[str, int]:
             # Require an explicit POSITIVE signal: hash_match True, or —
             # only when NO hash comparison was recorded (oracle-less
             # queries) — rows_match True. A hash-RED row must not count as
-            # verified even though its row counts matched (sim_pq_adc_topk
-            # sat rows-green/hash-red for three rounds; counting it would
-            # push it past the driver's sample prefix exactly when it most
-            # needs a retry slot). A timing-only or partially-written
+            # verified even though its row counts matched (a query can sit
+            # rows-green/hash-red for rounds; counting it would push it
+            # past the sampled query prefix exactly when it most needs a
+            # retry slot). A timing-only or partially-written
             # record (all fields absent/None) must not count either — that
             # would demote a never-actually-checked query, the r4 failure
             # mode this ordering guards against.
@@ -163,7 +163,6 @@ def _ensure_loaded() -> None:
         live_queries,
         profile_queries,
         relational,
-        similarity_queries,
         sink_queries,
         source_queries,
         sql_surface,

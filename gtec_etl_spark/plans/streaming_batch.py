@@ -1251,8 +1251,8 @@ def ev_attribution_markov(spark, sf_dir):
     Scale split: the corpus-sized work — per-user ordering, truncation
     at first purchase, transition counting — is one window + one
     bounded groupBy (the ev_top_paths cost); the chain itself is a
-    7x7 matrix, COLLECTED to the driver (codebook-sized, the PQ
-    precedent) and powered in exact Python ints. At 100 TB the matrix
+    7x7 matrix, COLLECTED to the driver (constant-size, independent of
+    the corpus) and powered in exact Python ints. At 100 TB the matrix
     is still 7x7 — the iteration cost is zero by construction."""
     from pyspark.sql import Window
 

@@ -110,45 +110,64 @@ def make_bag(
     }
 
 
+_MANIFESTS = ("bag/manifest-md5.txt", "bag/manifest-sha256.txt")
+
+
 def verify_bag(bag_path: str) -> bool:
-    """Re-check every LOCAL payload checksum inside a bag archive, and —
-    when the bag is holey (has fetch.txt) — check remote-entry
-    consistency: every fetch.txt path must be covered by the sha256
-    manifest (else a fetched file could never validate), must NOT also be
-    present in the archive payload (a path can't be both local and
-    remote), and must carry a well-formed `url<TAB>length<TAB>data/...`
-    line with a non-negative length."""
+    """BagIt-validate a bag archive, as the reference's bdbag tool does
+    for the bags make_bag writes. bagit.txt must be present, the md5 and
+    sha256 manifests must list the same paths, and the archive's payload
+    must be exactly the listed paths that are not remote, each matching
+    both digests. In a holey bag every fetch.txt line must be a
+    well-formed `url<TAB>length<TAB>data/...` with a non-negative length,
+    and its path must be manifested (else a fetched file could never
+    validate) but absent from the archive (a path can't be both local and
+    remote). Each member is read once, in archive order, hashing md5 and
+    sha256 in the same pass."""
+    tags: dict[str, bytes] = {}
+    payload: dict[str, tuple[str, str]] = {}  # data/... -> (md5, sha256)
     with tarfile.open(bag_path, "r:gz") as tar:
-        members = set(tar.getnames())
-        manifest = tar.extractfile("bag/manifest-sha256.txt").read().decode()
-        expected = {}
-        for line in manifest.strip().splitlines():
-            digest, name = line.split("  ", 1)
-            expected[f"bag/{name}"] = digest
+        for member in tar:
+            if not member.isfile():
+                continue
+            f = tar.extractfile(member)
+            if member.name.startswith("bag/data/"):
+                h5, h256 = hashlib.md5(), hashlib.sha256()
+                while chunk := f.read(1 << 20):
+                    h5.update(chunk)
+                    h256.update(chunk)
+                payload[member.name[4:]] = (h5.hexdigest(), h256.hexdigest())
+            elif member.name in (*_MANIFESTS, "bag/fetch.txt", "bag/bagit.txt"):
+                tags[member.name] = f.read()
+    if "bag/bagit.txt" not in tags:
+        return False
+    try:  # KeyError: a manifest is missing; ValueError: undecodable or malformed
+        md5s, sha256s = (
+            dict(ln.split("  ", 1)[::-1] for ln in tags[m].decode().splitlines() if ln)
+            for m in _MANIFESTS
+        )
+        fetch = tags.get("bag/fetch.txt", b"").decode().splitlines()
+    except (KeyError, ValueError):
+        return False
+    if md5s.keys() != sha256s.keys():
+        return False
 
-        remote = set()
-        if "bag/fetch.txt" in members:
-            fetch = tar.extractfile("bag/fetch.txt").read().decode()
-            for line in fetch.strip().splitlines():
-                parts = line.split("\t")
-                if len(parts) != 3:
-                    return False
-                url, length, path = parts
-                if not url or not path.startswith("data/"):
-                    return False
-                if not length.isdigit():  # non-negative integer
-                    return False
-                name = f"bag/{path}"
-                if name not in expected:  # unverifiable after fetch
-                    return False
-                if name in members:  # both local and remote
-                    return False
-                remote.add(name)
+    remote = set()
+    for line in fetch:
+        parts = line.split("\t")
+        if len(parts) != 3:
+            return False
+        url, length, path = parts
+        if not url or not path.startswith("data/"):
+            return False
+        if not length.isdigit():  # non-negative integer
+            return False
+        if path not in sha256s:  # unverifiable after fetch
+            return False
+        if path in payload:  # both local and remote
+            return False
+        remote.add(path)
 
-        for name, digest in expected.items():
-            if name in remote:
-                continue  # payload is remote — checksum applies post-fetch
-            data = tar.extractfile(name).read()
-            if hashlib.sha256(data).hexdigest() != digest:
-                return False
-    return True
+    if payload.keys() != sha256s.keys() - remote:
+        return False
+    return all(payload[p] == (md5s[p], sha256s[p]) for p in payload)

@@ -99,106 +99,6 @@ def test_asof_join_row_tag_deterministic_under_shuffle(spark):
         assert run(layout) == base
 
 
-def test_ivf_multiprobe_recall_not_below_single_probe(spark, sf_dir):
-    """Multi-probe scans a superset of single-probe's candidates, so its
-    overlap with the exact brute-force top-10 must be >= single-probe's —
-    the monotone-recall property that justifies the nprobe knob."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.operators import similarity as S
-    from gtec_etl_spark.plans.similarity_queries import (
-        sim_ivf_multiprobe,
-        sim_ivf_probe,
-        sim_topk_bruteforce,
-    )
-
-    exact = {r.vec_id for r in sim_topk_bruteforce(spark, sf_dir).collect()}
-    single = {r.vec_id for r in sim_ivf_probe(spark, sf_dir).collect()}
-    multi = {r.vec_id for r in sim_ivf_multiprobe(spark, sf_dir).collect()}
-    assert len(multi & exact) >= len(single & exact)
-
-
-def test_pq_kmeans_training_improves_distortion_and_recall(spark, sf_dir):
-    """The trained-PQ BEHAVIORAL contract (complementing the exact
-    unrolled-Lloyd's SQL oracle on sim_pq_trained_codebook): (1) Lloyd's
-    iterations must not worsen total quantization distortion vs the
-    seeded codebook on the training sample; (2) trained-ADC top-10 must
-    overlap exact integer-L2 top-10 at a floor; (3) training is
-    bit-reproducible (two runs, identical codebook)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.operators import similarity as S
-    from gtec_etl_spark.plans.similarity_queries import (
-        PQ_TRAIN_ITERS,
-        PQ_TRAIN_SAMPLE,
-        _pq_seed_codebook,
-        _pq_slice,
-        pq_adc_search,
-        sim_pq_trained_codebook,
-    )
-    from gtec_etl_spark.functions.hashing import hash60
-
-    emb = catalog.table(spark, sf_dir, "embeddings").withColumn(
-        "qe", S.quantize_micros(F.col("embedding"))
-    )
-    base = emb.filter(F.col("vec_id") != 0)
-    init = _pq_seed_codebook(base)
-    sample = (
-        base.select(
-            "vec_id", "qe", hash60(F.col("vec_id").cast("string")).alias("hh")
-        )
-        .orderBy("hh", "vec_id")
-        .limit(PQ_TRAIN_SAMPLE)
-    )
-    subs = _pq_slice(sample, "qe")
-
-    def distortion(cb):
-        return (
-            subs.join(F.broadcast(cb), "j")
-            .withColumn("d", S.sqdist_int(F.col("sub"), F.col("c")))
-            .groupBy("vec_id", "j")
-            .agg(F.min("d").alias("md"))
-            .agg(F.sum("md").alias("total"))
-            .first()["total"]
-        )
-
-    trained = S.pq_kmeans_codebook(subs, init, iters=PQ_TRAIN_ITERS)
-    d_seed, d_trained = distortion(init), distortion(trained)
-    assert d_trained <= d_seed, (d_trained, d_seed)
-
-    # Reproducibility: integer-space training has one possible answer.
-    trained2 = S.pq_kmeans_codebook(subs, init, iters=PQ_TRAIN_ITERS)
-    as_set = lambda cb: {(r.j, r.r, tuple(r.c)) for r in cb.collect()}
-    assert as_set(trained) == as_set(trained2)
-
-    # Recall floor vs exact integer-L2: PQ at 4x16 codewords is a
-    # SHORTLIST generator (rerank exactly afterwards), so the contract is
-    # candidate recall — the ADC top-10% shortlist must hold >=3 of the
-    # exact top-10 (measured 5/10 here; random chance is ~1/10, so 3
-    # still catches a broken encode/LUT). sim_pq_trained_codebook itself
-    # returns the top-10 head of exactly this shortlist ranking.
-    qrow = emb.filter(F.col("vec_id") == 0)
-    shortlist_k = max(10, base.count() // 10)
-    shortlist = {
-        r.vec_id for r in pq_adc_search(base, qrow, trained, k=shortlist_k).collect()
-    }
-    qe = qrow.select(F.col("qe").alias("qv"))
-    exact = {
-        r.vec_id
-        for r in base.crossJoin(F.broadcast(qe))
-        .select("vec_id", S.sqdist_int(F.col("qe"), F.col("qv")).alias("d"))
-        .orderBy("d", "vec_id")
-        .limit(10)
-        .collect()
-    }
-    assert len(shortlist & exact) >= 3, (shortlist, exact)
-    # And the registered query is the head of that same ranking.
-    head = {r.vec_id for r in sim_pq_trained_codebook(spark, sf_dir).collect()}
-    assert head <= shortlist and len(head) == 10
-
-
 def test_derived_key_join_and_dangling(spark):
     samples = spark.createDataFrame(
         [("GTEX-AB1-0001",), ("GTEX-AB1-0002",), ("GTEX-ZZ9-0001",)], "SAMPID string"
@@ -442,33 +342,6 @@ def test_duplicated_spans_disjoint_and_min_length(spark, sf_dir):
         ss.sort()
         for (s1, e1), (s2, e2) in zip(ss, ss[1:]):
             assert s2 > e1, f"doc {doc}: spans overlap/adjacent -> not maximal"
-
-
-def test_ivf_trained_rerank_recall_floor(spark, sf_dir):
-    """Trained-IVF (nprobe=2 of 8 cells) with exact re-rank: its top-10
-    must be exactly the integer-L2 top-10 RESTRICTED to the probed cells,
-    and overlap the unrestricted exact top-10 at a floor (candidates from
-    2/8ths of the corpus; random chance would be ~2.5/10)."""
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.operators import similarity as S
-    from gtec_etl_spark.plans.similarity_queries import sim_ivf_trained_rerank
-
-    emb = catalog.table(spark, sf_dir, "embeddings").withColumn(
-        "qe", S.quantize_micros(F.col("embedding"))
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("qe").alias("qqe"))
-    exact = [
-        r.vec_id
-        for r in emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", S.sqdist_int(F.col("qe"), F.col("qqe")).alias("d"))
-        .orderBy("d", "vec_id")
-        .limit(10)
-        .collect()
-    ]
-    got = [r.vec_id for r in sim_ivf_trained_rerank(spark, sf_dir).collect()]
-    assert len(got) == 10
-    assert len(set(got) & set(exact)) >= 4
 
 
 def test_bpe_train_classic_corpus(spark):

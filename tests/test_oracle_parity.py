@@ -65,15 +65,6 @@ BROADCAST_BOUNDED_BY_CONSTRUCTION: dict[str, str] = {
     "ev_cusum_alerts": "per-event-type median/MAD tables — key domain is the fixed event-type enum",
     "ev_trailing_distinct_users": "day spine = one row per calendar day in the queried range (rows = days, ~365/yr; a 10-year retention window is ~3.7k rows, a few KB broadcast) — grows with wall-clock time only, never with corpus size",
     "q06_derived_key_join": "customer filtered to derived_key < 100 — fixed key range, <=100 rows at any sf",
-    "sim_batch_topk": "query batch selected by key range (vec_id < 8) — fixed 8 rows at any sf",
-    "sim_topk_bruteforce": "single query vector selected by key equality",
-    "sim_sq8_rerank": "single query vector selected by key equality + 1-row global min/max aggregate (64-dim arrays)",
-    "sim_range_search": "single query vector selected by key equality",
-    "sim_recall_report": "composition of sim_topk_bruteforce/sim_ivf_probe/sim_ivf_multiprobe — every inherited hint is one of their allowlisted bounded sides (K-row centroid tables, single query vectors)",
-    "sim_filtered_search": "K-row centroid table (fixed K) + single query vector — sim_ivf_probe's bounded sides, plus the pre-filter arm's single query vector",
-    "sim_ivf_probe": "K-row centroid table (fixed K) + single query vector",
-    "sim_ivf_upsert": "K-row centroid table (fixed label enum) + 1-row added-total aggregate",
-    "sim_ivf_multiprobe": "K-row centroid table (fixed K) + single query vector",
 }
 
 

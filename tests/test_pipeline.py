@@ -6,6 +6,7 @@ the S9/S12 restricted readers and bag determinism.
 from __future__ import annotations
 
 import gc
+import hashlib
 import json
 import textwrap
 from pathlib import Path
@@ -405,6 +406,69 @@ def test_bag_remote_file_manifest_roundtrip(tmp_path):
         gz.write(raw_bad)
     (tmp_path / "b3.tgz").write_bytes(buf.getvalue())
     assert not verify_bag(str(tmp_path / "b3.tgz"))
+
+
+def _repack_bag(src, dst, edit) -> None:
+    """Copy the bag archive `src` to `dst` with its members passed through
+    `edit`, which maps {member name: bytes} to the members to write."""
+    import gzip
+    import io
+    import tarfile
+
+    with tarfile.open(src, "r:gz") as tar:
+        members = {
+            m.name: tar.extractfile(m).read() for m in tar if m.isfile()
+        }
+    with gzip.open(dst, "wb") as gz, tarfile.open(fileobj=gz, mode="w") as tar:
+        for name, data in edit(members).items():
+            info = tarfile.TarInfo(name)
+            info.size = len(data)
+            tar.addfile(info, io.BytesIO(data))
+
+
+@pytest.mark.parametrize(
+    "edit",
+    [
+        pytest.param(
+            lambda m: {**m, "bag/data/extra.txt": b"unlisted"},
+            id="unmanifested_payload_member",
+        ),
+        pytest.param(
+            lambda m: {k: v for k, v in m.items() if k != "bag/data/a.txt"},
+            id="manifested_file_missing",
+        ),
+        pytest.param(
+            lambda m: {
+                **m,
+                "bag/manifest-md5.txt": m["bag/manifest-md5.txt"].replace(
+                    hashlib.md5(b"hello").hexdigest().encode(), b"0" * 32
+                ),
+            },
+            id="wrong_md5_manifest",
+        ),
+        pytest.param(
+            lambda m: {k: v for k, v in m.items() if k != "bag/bagit.txt"},
+            id="bagit_txt_missing",
+        ),
+    ],
+)
+def test_verify_bag_rejects_invalid_bag(tmp_path, edit):
+    """verify_bag fails (False, no exception) where BagIt validation
+    fails: a payload file no manifest lists, a manifested local file
+    missing from the archive, an md5 manifest whose digest does not
+    match (the sha256 manifest alone is not enough), and a bag without
+    its bagit.txt declaration. The unedited repack
+    still verifies, so only the edit can make the bag invalid."""
+    payload = tmp_path / "payload"
+    payload.mkdir()
+    (payload / "a.txt").write_text("hello")
+    (payload / "b.txt").write_text("world")
+    bag = str(tmp_path / "bag.tgz")
+    make_bag(str(payload), bag)
+    _repack_bag(bag, str(tmp_path / "same.tgz"), lambda m: m)
+    assert verify_bag(str(tmp_path / "same.tgz"))
+    _repack_bag(bag, str(tmp_path / "bad.tgz"), edit)
+    assert verify_bag(str(tmp_path / "bad.tgz")) is False
 
 
 def test_multi_study_all_public(spark, multi_study_frames):

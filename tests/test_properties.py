@@ -196,11 +196,11 @@ def test_asof_join_equals_bruteforce(spark, fact_rows, event_rows):
 def test_quantize_micros_matches_python_ieee(spark, xs):
     """quantize_micros (floor(x*1e6 + 0.5) elementwise) is IEEE-exact: the
     JVM expression must produce the int64s Python's float arithmetic
-    produces for any float32 input — the property the PQ oracle parity
-    stands on."""
+    produces for any float32 input — the property dedup_embedding_cosine's
+    oracle parity stands on."""
     import math
 
-    from gtec_etl_spark.operators.similarity import quantize_micros
+    from gtec_etl_spark.operators.dedup import quantize_micros
 
     df = spark.createDataFrame([(xs,)], "v array<float>")
     got = df.select(quantize_micros(F.col("v")).alias("q")).first()["q"]
