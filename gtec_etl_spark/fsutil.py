@@ -9,11 +9,14 @@ every listing here goes through `Path.getFileSystem(hadoopConf)`: the
 same resolution Spark's own readers use, scheme-dispatched per-path, and
 identical on local paths (tests run against file://). The same holds for
 reading a source file's first line, the header check validated readers
-run before their schema'd read.
+run before their schema'd read, for the file signature that keys a
+read's inferred schema (catalog.read_inferred), and for the commit step
+that gives a sink's part files stable names.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 
@@ -24,23 +27,29 @@ def _fs_and_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(hconf), jpath
 
 
-def list_files_recursive(
-    spark: SparkSession, path: str, suffix: str | None = None
-) -> list[tuple[str, int]]:
-    """Recursive (path, length) listing under `path`; empty if the path
-    does not exist. O(#files) driver-side metadata, like any compaction
-    daemon's planning step."""
+def file_signature(
+    spark: SparkSession, path: str
+) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted (path, length, modification time) of every file a read of
+    `path` covers: the file itself, every file under a directory, or every
+    match of a glob, as Spark's readers resolve them. None if nothing is
+    there. One listing on the path's own filesystem, so two reads of an
+    unchanged s3a:// or hdfs:// input get the same signature, and a
+    rewritten file gets a new one."""
     fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().toString()
-        if suffix is None or name.endswith(suffix):
-            out.append((name, st.getLen()))
-    return out
+    out: list[tuple[str, int, int]] = []
+
+    def add(f) -> None:
+        out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+
+    for st in fs.globStatus(jpath) or []:
+        if st.isDirectory():
+            it = fs.listFiles(st.getPath(), True)
+            while it.hasNext():
+                add(it.next())
+        else:
+            add(st)
+    return tuple(sorted(out)) or None
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
@@ -53,50 +62,49 @@ def delete_path(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(jpath, True))
 
 
-def list_child_files(spark: SparkSession, path: str) -> list[str]:
-    """Immediate child FILE names (final path component) of `path`,
-    including dot-prefixed sidecars (.crc); empty if the path does not
-    exist. The commit-step companion of list_child_dirs."""
-    fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(jpath)
-        if st.isFile()
-    ]
+class RawDir:
+    """A directory on its raw filesystem, for a commit step that lists it
+    once and then deletes and renames children by name. Hadoop's LOCAL
+    filesystem is a ChecksumFileSystem whose listings HIDE the `.name.crc`
+    sidecars (and whose renames silently move them); the raw filesystem
+    under it shows them, so one listing sees every file a whole-directory
+    release checksum would. Object stores and HDFS are not
+    checksum-wrapped (no getRawFileSystem, no sidecars): their own
+    filesystem is used as is. The FileSystem, the Path class and the
+    children's paths are resolved once, not per operation."""
 
+    def __init__(self, spark: SparkSession, path: str):
+        self._path_cls = spark._jvm.org.apache.hadoop.fs.Path
+        self._dir = self._path_cls(path)
+        fs = self._dir.getFileSystem(spark._jsc.hadoopConfiguration())
+        try:
+            fs = fs.getRawFileSystem()
+        except Py4JError:  # not a FilterFileSystem
+            pass
+        self._fs = fs
+        self._children: dict = {}
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Rename `src` to `dst` on src's own filesystem; returns the
-    FileSystem.rename result (False if src is missing or dst exists).
-    On object stores this is the store's copy+delete, on HDFS/local a
-    metadata move — either way the scheme-dispatched call the driver-side
-    commit step needs (os.replace silently no-ops for s3a:// URIs)."""
-    fs, jsrc = _fs_and_path(spark, src)
-    jvm = spark._jvm
-    return bool(fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)))
+    def files(self) -> list[str]:
+        """Names of the child files, sidecars included; empty if the
+        directory does not exist."""
+        if self._fs.exists(self._dir):
+            for st in self._fs.listStatus(self._dir):
+                if st.isFile():
+                    jpath = st.getPath()
+                    self._children[jpath.getName()] = jpath
+        return list(self._children)
 
+    def delete(self, name: str) -> bool:
+        """Delete the child file `name` that files() listed."""
+        return bool(self._fs.delete(self._children[name], False))
 
-def delete_checksum_sidecars(spark: SparkSession, path: str) -> None:
-    """Delete `.name.crc` sidecars under `path`. Hadoop's LOCAL
-    filesystem is a ChecksumFileSystem whose listings HIDE the sidecars
-    (and whose renames silently move them), so a stable-name commit step
-    leaves stale-looking `.part-00000.ext.crc` files that break
-    whole-directory release checksums; they are reachable only through
-    getRawFileSystem(). Object stores and HDFS are not checksum-wrapped
-    (no getRawFileSystem / no sidecars) — a no-op there."""
-    fs, jpath = _fs_and_path(spark, path)
-    try:
-        raw = fs.getRawFileSystem()
-    except Exception:  # not a FilterFileSystem: nothing to clean
-        return
-    if not raw.exists(jpath):
-        return
-    for st in raw.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith(".") and name.endswith(".crc"):
-            raw.delete(st.getPath(), False)
+    def rename(self, src: str, dst: str) -> bool:
+        """Rename the child file `src` that files() listed to `dst` in the
+        same directory. FileSystem.rename's result: False if `src` is
+        missing or the filesystem refuses `dst` (os.replace silently
+        no-ops for s3a:// URIs, so the scheme-dispatched call is the one
+        to use)."""
+        return bool(self._fs.rename(self._children[src], self._path_cls(self._dir, dst)))
 
 
 def first_line(spark: SparkSession, path: str, comment: str | None = None) -> str | None:

@@ -104,44 +104,3 @@ def top_k_per_group(
     group = [group] if isinstance(group, str) else list(group)
     w = W.partitionBy(*group).orderBy(*order)
     return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-
-def topn_per_key_salted(
-    df: DataFrame,
-    group: str | list[str],
-    order: list[Column],
-    n: int,
-    salt_on: str,
-    n_salts: int = 32,
-) -> DataFrame:
-    """Top-n per key for LOW-CARDINALITY keys — the scale-safe variant of
-    top_k_per_group.
-
-    A single window partitioned by a handful of key values sends each
-    key's ENTIRE row set to one task: with K=8 clusters over a 100 TB
-    corpus that is 1/8th of the data sorting on one executor. The classic
-    remedy is two-level top-n: (1) a deterministic salt (hash of
-    `salt_on`, a unique row column — stable under retries, unlike rand())
-    splits each key into `n_salts` sub-partitions and a local window keeps
-    n per (key, salt); (2) a global window over the <= n*n_salts survivors
-    per key picks the final n. Result is identical to the single-window
-    plan (top-n of a union == top-n of per-part top-ns) while the big sort
-    spreads across n_salts tasks per key.
-
-    `order` must be a TOTAL order (include a unique tiebreak column) or
-    the result is only deterministic up to ties."""
-    group = [group] if isinstance(group, str) else list(group)
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_on)), F.lit(n_salts))
-    )
-    w_local = W.partitionBy(*group, "__salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("__rn", F.row_number().over(w_local))
-        .filter(F.col("__rn") <= n)
-        .drop("__salt", "__rn")
-    )
-    w_global = W.partitionBy(*group).orderBy(*order)
-    return (
-        survivors.withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= n)
-    )

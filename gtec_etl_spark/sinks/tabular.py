@@ -21,23 +21,21 @@ def finalize_deterministic_dir(spark: SparkSession, path: str, ext: str) -> None
     otherwise embed a per-job UUID — to stable sequential names in sorted
     (= row-range) order. Release artifacts are checksummed whole-directory
     (sinks/bdbag.py), so unstable NAMES break reproducibility even when
-    contents are deterministic. All metadata ops go through the Hadoop
-    FileSystem API (fsutil), so the commit step works unchanged on
-    s3a://hdfs:// sink paths — glob/os.replace would silently no-op
-    there (VERDICT r7 #6)."""
-    for name in fsutil.list_child_files(spark, path):
+    contents are deterministic. One listing of the raw directory
+    (fsutil.RawDir), then the deletes and renames, all through the Hadoop
+    FileSystem API, so the commit step works unchanged on s3a://hdfs://
+    sink paths — glob/os.replace would silently no-op there."""
+    d = fsutil.RawDir(spark, path)
+    names = d.files()
+    for name in names:
         if name == "_SUCCESS" or name.endswith(".crc"):
-            fsutil.delete_path(spark, f"{path}/{name}")
-    parts = sorted(
-        n
-        for n in fsutil.list_child_files(spark, path)
-        if n.startswith("part-")
-    )
+            d.delete(name)
+    parts = sorted(n for n in names if n.startswith("part-"))
     for i, name in enumerate(parts):
         dst = f"part-{i:05d}.{ext}"
         if name == dst:  # idempotent re-run: already finalized
             continue
-        if not fsutil.rename(spark, f"{path}/{name}", f"{path}/{dst}"):
+        if not d.rename(name, dst):
             # FileSystem.rename signals failure by RETURNING False (dst
             # exists / src vanished) rather than raising — unlike the
             # os.replace it replaced, which overwrote. Silently accepting
@@ -47,7 +45,6 @@ def finalize_deterministic_dir(spark: SparkSession, path: str, ext: str) -> None
                 f"finalize_deterministic_dir: rename {path}/{name} -> "
                 f"{dst} failed (destination exists or source vanished)"
             )
-    fsutil.delete_checksum_sidecars(spark, path)
 
 
 def write_tsv_dump(
@@ -136,10 +133,10 @@ def compact_parquet_dir(
     and HDFS sinks (s3a://, hdfs://) list correctly, not just local
     paths; row data itself moves through one executor-side
     repartition."""
-    from gtec_etl_spark.fsutil import list_files_recursive
-
     total = sum(
-        n for _p, n in list_files_recursive(spark, src, suffix=".parquet")
+        n
+        for p, n, _mtime in fsutil.file_signature(spark, src) or ()
+        if p.endswith(".parquet")
     )
     n_out = max(1, -(-total // target_bytes))
     df = spark.read.parquet(src)

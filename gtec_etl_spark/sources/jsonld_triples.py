@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
 
+from gtec_etl_spark.catalog import read_inferred
 from gtec_etl_spark.functions.sqltext import ident, lit
 
 SKIP_FIELDS = ("@id", "@context")
@@ -132,11 +133,15 @@ def read_jsonld(spark: SparkSession, path: str, multiline: bool = True) -> DataF
     out of the graph), which is what makes this work on documents the
     engine did NOT emit — the reference capability this module supplies.
     A malformed document raises ValueError naming `path` instead of
-    becoming a row with a null @id whose triples vanish. FAILFAST trips in
-    the schema-inference scan, which reads every record, so it adds no job."""
-    reader = spark.read.option("multiLine", multiline).option("mode", "FAILFAST")
+    becoming a row with a null @id whose triples vanish.
+
+    The schema is inferred once per file version (`catalog.read_inferred`):
+    the first read of the files scans every record, and FAILFAST trips in
+    that scan, at no extra job. A repeat read of the same files, unchanged
+    in length and mtime, reuses the schema and runs no inference job; a
+    rewritten file is inferred, and so checked, again."""
     try:
-        raw = reader.json(path)
+        raw = read_inferred(spark, "json", path, multiLine=multiline, mode="FAILFAST")
     except Py4JJavaError as err:
         cause = str(err.java_exception)
         if "MALFORMED_RECORD_IN_PARSING" not in cause:

@@ -107,3 +107,80 @@ def test_both_units_read_identically(spark, tmp_path, unit):
         .collect()
     ]
     assert got == micros
+
+
+def _events_table(unit: str) -> pa.Table:
+    ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    return pa.table(
+        {
+            "event_id": pa.array([1], type=pa.int64()),
+            "ts": pa.array([ts], type=pa.timestamp(unit)),
+        }
+    )
+
+
+def test_events_ts_unit_follows_rewrite_in_place(tmp_path):
+    """A file rewritten at the same path with another ts unit is probed
+    again. A cache by path alone kept 'us' for a nanos rewrite, and a
+    nanos -> micros rewrite would be read as `ts long` and divided by
+    1000, the bug the module docstring describes."""
+    path = tmp_path / "events.parquet"
+    pq.write_table(_events_table("us"), path)
+    assert catalog.events_ts_unit(str(path)) == "us"
+    pq.write_table(_events_table("ns"), path)
+    # A rewrite within one filesystem clock tick can keep the mtime; pin a
+    # later one so the test does not depend on the tick.
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert catalog.events_ts_unit(str(path)) == "ns"
+
+
+def _jobs_of(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_schema_inferred_once_per_file_version(spark, tmp_path):
+    """The first read of a table infers its schema (one footer job); a
+    repeat read of the unchanged file reuses it and runs no job."""
+    region = pa.table({"r_regionkey": pa.array([0, 1], type=pa.int64())})
+    pq.write_table(region, tmp_path / "region.parquet")
+
+    def read():
+        return catalog.table(spark, str(tmp_path), "region")
+
+    first, jobs1 = _jobs_of(spark, "catalog-first-read", read)
+    second, jobs2 = _jobs_of(spark, "catalog-repeat-read", read)
+    assert (jobs1, jobs2) == (1, 0)
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_table_rewritten_with_new_columns_returns_new_schema(spark, tmp_path):
+    path = tmp_path / "nation.parquet"
+    pq.write_table(pa.table({"n_nationkey": pa.array([0], type=pa.int64())}), path)
+    assert catalog.table(spark, str(tmp_path), "nation").columns == ["n_nationkey"]
+    pq.write_table(
+        pa.table({"n_nationkey": pa.array([0], type=pa.int64()), "n_name": pa.array(["x"])}),
+        path,
+    )
+    df = catalog.table(spark, str(tmp_path), "nation")
+    assert df.columns == ["n_nationkey", "n_name"]
+    assert df.collect()[0]["n_name"] == "x"
+
+
+def test_table_missing_path_raises_analysis_exception(spark, tmp_path):
+    """A missing table fails as Spark's own read does, on every call: a
+    failed read leaves nothing cached."""
+    from pyspark.errors import AnalysisException
+
+    for _ in range(2):
+        with pytest.raises(AnalysisException) as ei:
+            catalog.table(spark, str(tmp_path), "part")
+        assert ei.value.getCondition() == "PATH_NOT_FOUND"

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -178,6 +179,18 @@ def test_read_jsonld_malformed_line_fails_fast(spark, tmp_path):
     with pytest.raises(ValueError, match="malformed JSON-LD") as ei:
         read_jsonld(spark, str(path), multiline=False)
     assert str(path) in str(ei.value)
+
+
+def test_read_jsonld_rewritten_malformed_fails_fast(spark, tmp_path):
+    """A file read once and then rewritten with a broken line is inferred,
+    and so checked, again: the cached schema of the old version must not
+    skip the FAILFAST scan."""
+    path = tmp_path / "docs.jsonl"
+    path.write_text('{"@id": "e:1", "name": "one"}\n{"@id": "e:2", "name": "two"}\n')
+    assert read_jsonld(spark, str(path), multiline=False).count() == 2
+    path.write_text('{"@id": "e:1", "name": "one"}\n{"@id": "e:2", "name": \n')
+    with pytest.raises(ValueError, match="malformed JSON-LD in " + re.escape(str(path))):
+        read_jsonld(spark, str(path), multiline=False)
 
 
 def test_field_names_are_quoted_in_sql(spark, tmp_path):

@@ -79,33 +79,6 @@ def test_exact_dedup_fingerprint_whitespace_invariant(spark, texts):
     assert fp == fp2
 
 
-@SLOW
-@given(
-    st.lists(st.tuples(st.integers(0, 3), st.integers(0, 9)), min_size=0, max_size=40),
-    st.integers(1, 4),
-    st.integers(1, 5),
-)
-def test_topn_per_key_salted_equals_single_window(spark, rows, n, n_salts):
-    """The two-level salted top-n (local per (key, salt) then global per
-    key) returns EXACTLY the single-window top-n for any data, any n, any
-    salt count — including heavy ties broken by the unique id column."""
-    from gtec_etl_spark.operators.aggregates import top_k_per_group, topn_per_key_salted
-
-    df = spark.createDataFrame(
-        [(i, k, v) for i, (k, v) in enumerate(rows)], "id long, k long, v long"
-    )
-    order = [F.col("v"), F.col("id")]
-    want = sorted(
-        (r["k"], r["id"], r["v"], r["rn"])
-        for r in top_k_per_group(df, "k", order, n).collect()
-    )
-    got = sorted(
-        (r["k"], r["id"], r["v"], r["rn"])
-        for r in topn_per_key_salted(df, "k", order, n, "id", n_salts).collect()
-    )
-    assert got == want
-
-
 _iv = st.tuples(st.integers(-20, 20), st.integers(-20, 20)).map(
     lambda t: (min(t), max(t))
 )
