@@ -5,6 +5,18 @@ At 100 TB on a real cluster the same settings hold: AQE re-plans shuffles at
 runtime (coalescing small partitions, splitting skewed ones), shuffle
 partition count becomes a starting hint rather than a fixed fan-out, and the
 UTC session timezone keeps timestamp semantics engine-independent.
+
+Streaming checkpoints are committed through Hadoop's FileSystem API
+(`FileSystemBasedCheckpointFileManager`), not Spark's default FileContext
+manager. Every micro-batch writes its offset log, its commit log and one
+delta file per state store to a temp path and renames it into place.
+Without a native Hadoop library, FileContext's rename of a local file
+resolves symlinks by forking `readlink` twice per path (~4.6 ms per fork,
+~1,200 forks per benchmark stream replay). On `file:` paths both managers
+end in the same `java.io.File.renameTo`, and a non-overwriting commit still
+checks that the target does not exist, so the commit semantics are the
+same. A cluster session whose checkpoints live on HDFS should keep
+Spark's FileContext default, whose overwriting rename is atomic there.
 """
 
 from __future__ import annotations
@@ -78,6 +90,12 @@ def get_spark(app_name: str = "gtec_etl_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
+        # See the module docstring: no readlink fork per checkpoint rename.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # Managed-table warehouse (bucketed tables) outside the repo tree.
         .config(
             "spark.sql.warehouse.dir",

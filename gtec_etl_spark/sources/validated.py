@@ -147,8 +147,9 @@ def _cell_checks(spec: TableSpec) -> list[str]:
 
 def _tag_rows(df: DataFrame, spec: TableSpec, table_no: int) -> DataFrame:
     """One row per input row: (__t, table, __pk, __group, row_key,
-    violations). row_key is the PK joined by '|' (a row id when there is
-    none), for display only; __group is the array of PK values that
+    violations). row_key is the PK joined by '|' (without a PK, the row's
+    values joined by tabs, nulls as empty, so it repeats from run to run),
+    for display only; __group is the array of PK values that
     duplicate detection groups on, since the joined string is ambiguous
     ('x|y','z' vs 'x','y|z') and skips nulls. __pk names the duplicate-PK
     column, null without a PK; violations holds the row's cell and
@@ -162,7 +163,8 @@ def _tag_rows(df: DataFrame, spec: TableSpec, table_no: int) -> DataFrame:
         key = f"concat_ws('|', {', '.join(pk)})"
         group = f"array({', '.join(f'CAST({k} AS STRING)' for k in pk)})"
     else:
-        key = "CAST(monotonically_increasing_id() AS STRING)"
+        cells = ", ".join(f"coalesce(CAST({ident(c)} AS STRING), '')" for c in spec.names())
+        key = f"concat_ws(chr(9), {cells})"
         group = "array(__key)"
     checks = _cell_checks(spec)
     if CORRUPT_COL in df.columns:

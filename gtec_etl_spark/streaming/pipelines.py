@@ -18,6 +18,13 @@ idle_timeout_ms that evicts idle keys on continuous streams — finite
 replays leave it off because registered processing-time timeouts stall
 Trigger.AvailableNow termination. On a real cluster the same code runs
 against kafka/file sources unchanged — only read_events_stream swaps.
+
+Checkpoint cost: every trigger commits its offset log, its commit log and
+one delta file per state-store partition by write-then-rename; the engine
+session (session.py) does those renames through Hadoop's FileSystem API,
+because Spark's FileContext default forks `readlink` twice per renamed
+local file when no native Hadoop library is loaded (~1/3 of a benchmark
+stream replay).
 """
 
 from __future__ import annotations

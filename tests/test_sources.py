@@ -155,6 +155,34 @@ def test_composite_pk_duplicates_group_on_pk_values(spark):
     assert got == [("q|r", "a", "2", "duplicate_pk")]
 
 
+
+def test_pk_less_row_keys_repeat_across_runs(spark):
+    """A table without a PK keys its rows by their own values (tab-joined,
+    nulls as empty), so two validations of the same rows name the same
+    rows however they are split into partitions; identical rows share a
+    key and each keeps its violations."""
+    spec = validated.TableSpec(
+        columns=[
+            validated.ColumnSpec("a", regex=r"^[a-z]+$"),
+            validated.ColumnSpec("b", cv=["x", "y"], empty_ok=False),
+        ],
+        name="t",
+    )
+    df = spark.createDataFrame(
+        [("ok", "x"), ("B4D", "x"), ("c", None), ("B4D", "x"), ("d", "z")] * 3,
+        "a string, b string",
+    )
+    runs = [
+        sorted(tuple(r) for r in validated.validate(df.repartition(n), spec).collect())
+        for n in (1, 3)
+    ]
+    assert runs[0] == runs[1]
+    assert runs[0] == sorted(
+        [("B4D\tx", "a", "B4D", "regex")] * 6
+        + [("c\t", "b", None, "not_null")] * 3
+        + [("d\tz", "b", "z", "cv")] * 3
+    )
+
 # ---------------------------------------------------------------- S10 GFF3
 
 GFF = """\

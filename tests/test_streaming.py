@@ -258,6 +258,90 @@ def test_file_sink_checkpoint_resume_exactly_once(spark, tmp_path):
     assert ids == [0, 1, 2, 3, 4, 10, 11, 12], ids
 
 
+def test_session_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
+    """The engine session commits streaming checkpoints through Hadoop's
+    FileSystem API: Spark's FileContext default forks `readlink` twice per
+    renamed file without a native Hadoop library (session module
+    docstring). A Spark upgrade that moves or renames the class fails
+    here, not silently as a slower stream replay."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path("file:" + str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_session_counts_restart_reloads_state(spark, tmp_path):
+    """Stateful restart: session_counts into a parquet file sink, stopped
+    after chunk 1 and restarted from the same checkpoint after chunk 2
+    lands, holds exactly the rows of one run over both chunks. User 1's
+    session spans the restart (two events before it, one after), so its
+    row is right only if the state store's files were read back."""
+    import os
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "arrivals"
+    src.mkdir()
+    day = datetime(2024, 1, 10, tzinfo=timezone.utc)
+
+    def land(i, rows):
+        table = pa.table({
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array(
+                [day + timedelta(minutes=r[1]) for r in rows], pa.timestamp("us", "UTC")
+            ),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array(["click"] * len(rows)),
+            "value": pa.array([1.0] * len(rows)),
+            "props": pa.array(["{}"] * len(rows)),
+        })
+        dst = str(src / f"ev{i:03d}.parquet")
+        pq.write_table(table, dst)
+        # File sources replay in modification-time order.
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    def run(name):
+        with P.state_partitions(spark, 2):
+            stream = P.session_counts(
+                P.read_events_stream(spark, str(src), path_glob="ev*.parquet")
+            )
+            q = (
+                stream.writeStream.format("parquet")
+                .option("path", str(tmp_path / name / "sink"))
+                .option("checkpointLocation", str(tmp_path / name / "ck"))
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+        try:
+            assert q.awaitTermination(120), "replay did not finish"
+        finally:
+            if q.isActive:
+                q.stop()
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / name / "sink")).collect()
+        )
+
+    # (event_id, minutes after midnight, user_id). After chunk 1 the
+    # watermark is 10:10: user 2's 08:00 session is closed, user 1's
+    # 12:00 session is open.
+    land(0, [(1, 12 * 60, 1), (2, 12 * 60 + 10, 1), (3, 8 * 60, 2)])
+    run("restarted")
+    # Chunk 2 extends user 1's session and moves the watermark to 16:00,
+    # which closes it; the 18:00 session stays open in both runs.
+    land(1, [(4, 12 * 60 + 25, 1), (5, 13 * 60, 3), (6, 18 * 60, 1)])
+    got = run("restarted")
+    want = run("one_run")
+
+    assert got == want
+    # (user_id, n_events): chunk 2 holds one event of user 1's session.
+    assert [(r[0], r[3]) for r in got] == [(1, 3), (2, 1), (3, 1)], got
+
+
 def test_rowwise_bands_equal_groupby_bands(spark, sf_dir):
     """minhash_bands_rowwise (the streaming-legal, shuffle-free per-row
     formulation) must produce the exact band set of the batch
