@@ -9,12 +9,16 @@ every listing here goes through `Path.getFileSystem(hadoopConf)`: the
 same resolution Spark's own readers use, scheme-dispatched per-path, and
 identical on local paths (tests run against file://). The same holds for
 reading a source file's first line, the header check validated readers
-run before their schema'd read, for the file signature that keys a
-read's inferred schema (catalog.read_inferred), and for the commit step
-that gives a sink's part files stable names.
+run before their schema'd read, for reading the lines of a source file
+that failed validation, for the file signature that keys a read's
+inferred schema (catalog.read_inferred), and for the commit step that
+gives a sink's part files stable names.
 """
 
 from __future__ import annotations
+
+import re
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
@@ -107,21 +111,30 @@ class RawDir:
         return bool(self._fs.rename(self._children[src], self._path_cls(self._dir, dst)))
 
 
-def first_line(spark: SparkSession, path: str, comment: str | None = None) -> str | None:
-    """First line of the file at `path` that is neither blank nor starts
-    with `comment`, without its line terminator; None if there is none.
-    Streams only the head of the file on the driver (decompressing by
-    file extension, as Spark's text readers do), so a header check
-    costs no Spark job."""
+@contextmanager
+def _open(spark: SparkSession, path: str):
+    """An input stream over the file at `path`, decompressed by file
+    extension as Spark's text readers do; closed on exit."""
     fs, jpath = _fs_and_path(spark, path)
-    jvm = spark._jvm
     stream = fs.open(jpath)
     try:
-        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        codec = spark._jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
             spark._jsc.hadoopConfiguration()
         ).getCodec(jpath)
         if codec is not None:
             stream = codec.createInputStream(stream)
+        yield stream
+    finally:
+        stream.close()
+
+
+def first_line(spark: SparkSession, path: str, comment: str | None = None) -> str | None:
+    """First line of the file at `path` that is neither blank nor starts
+    with `comment`, without its line terminator; None if there is none.
+    Streams only the head of the file on the driver, so a header check
+    costs no Spark job."""
+    jvm = spark._jvm
+    with _open(spark, path) as stream:
         reader = jvm.java.io.BufferedReader(
             jvm.java.io.InputStreamReader(stream, "UTF-8")
         )
@@ -135,8 +148,17 @@ def first_line(spark: SparkSession, path: str, comment: str | None = None) -> st
                 return line
             line = reader.readLine()
         return None
-    finally:
-        stream.close()
+
+
+def read_lines(spark: SparkSession, path: str) -> list[str]:
+    """Every line of the file at `path` in file order, split where
+    Hadoop's LineRecordReader splits (\\n, \\r\\n or \\r) and without a
+    leading UTF-8 BOM. The whole file comes to the driver in one transfer:
+    for the diagnostics of a failing file, not for data."""
+    with _open(spark, path) as stream:
+        text = bytes(stream.readAllBytes()).decode("utf-8", errors="replace")
+    lines = re.split(r"\r\n|\r|\n", text.removeprefix("\ufeff"))
+    return lines[:-1] if lines[-1] == "" else lines
 
 
 def list_child_dirs(spark: SparkSession, path: str) -> list[str]:

@@ -128,6 +128,23 @@ def test_etl_fails_fast_on_bad_source(spark, fixture_files, tmp_path):
         pipelines.run_gtex_like_etl(spark, bad, samples)
 
 
+def test_etl_fails_fast_on_uncastable_dtype(spark, fixture_files, tmp_path):
+    # SMRIN is declared double: a value that does not cast is a violation
+    # of validation, not a CAST error in the later export.
+    subjects, samples, restrictedf = fixture_files
+    bad = tmp_path / "bad_samples.tsv"
+    bad.write_text(Path(samples).read_text() + "GTEX-CD2-0002\tBlood\tabc\n")
+    from gtec_etl_spark.sources.validated import ValidationError
+
+    with pytest.raises(ValidationError) as ei:
+        pipelines.run_gtex_like_etl(spark, subjects, str(bad), restrictedf)
+    (v,) = ei.value.sample
+    assert (v["table"], v["row_key"], v["column"], v["value"], v["check"]) == (
+        "samples", "GTEX-CD2-0002", "SMRIN", "abc", "dtype"
+    )
+    assert v["file"].endswith("/bad_samples.tsv") and v["line"] == 6
+
+
 def test_etl_count_reconciliation_fails(spark, fixture_files):
     subjects, samples, restrictedf = fixture_files
     with pytest.raises(ValueError, match="reconciliation"):

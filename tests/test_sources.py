@@ -183,6 +183,106 @@ def test_pk_less_row_keys_repeat_across_runs(spark):
         + [("d\tz", "b", "z", "cv")] * 3
     )
 
+
+def _release_sources(spark, tmp_path):
+    """The three release tables, valid, read as run_gtex_like_etl reads them."""
+    from gtec_etl_spark import pipelines
+
+    texts = [
+        (pipelines.SUBJECT_SPEC, "SUBJID\tSEX\tAGE\nGTEX-AB1\t1\t20-29\nGTEX-CD2\t2\t30-39\n"),
+        (pipelines.SAMPLE_SPEC, "SAMPID\tSMTS\tSMRIN\nGTEX-AB1-0001\tBlood\t7.2\nGTEX-CD2-0001\tSkin\t\n"),
+        (pipelines.RESTRICTED_SPEC, "SUBJID\tCONSENT\tAGE\nGTEX-AB1\t1\t20-29\nGTEX-CD2\t2\t\n"),
+    ]
+    sources = []
+    for spec, text in texts:
+        path = tmp_path / f"{spec.name}.tsv"
+        path.write_text(text)
+        sources.append((validated.read_tsv(spark, str(path), spec), spec))
+    return sources
+
+
+def test_clean_path_is_a_hash_aggregate(spark, tmp_path):
+    """The check that runs on every release groups fixed-width buffers
+    (count, sum), so Spark plans a HashAggregate: no SortAggregate, and no
+    ObjectHashAggregate, which sorts its rows once a task passes 128
+    keys."""
+    counts = validated._violation_counts(_release_sources(spark, tmp_path))
+    assert counts.collect() == []
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan
+    assert "ObjectHashAggregate" not in plan and "SortAggregate" not in plan
+
+
+def test_assert_valid_on_valid_release_sources_runs_two_jobs(spark, tmp_path):
+    """assert_valid over the release's three tables, valid, runs the clean
+    path's shuffle map stage and its bounded collect, nothing more."""
+    sources = _release_sources(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("assert-valid-clean", "clean path")
+    try:
+        validated.assert_valid(sources)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("assert-valid-clean")) == 2
+
+
+def test_validation_error_samples_carry_file_lines(spark, tmp_path):
+    """Each sample names its file and 1-based line as the file has them,
+    comment, blank and header lines counted: a cell violation, the second
+    occurrence of a duplicate PK, and a ragged row by its raw line."""
+    path = _write(
+        tmp_path / "lines.tsv",
+        """\
+        # exported 2017-01-01
+
+        SUBJID\tSEX\tAGE\tWEIGHT
+        GTEX-AB1\t1\t20-29\t70.5
+        GTEX-CD2\t7\t30-39\t1.0
+        GTEX-AB1\t2\t20-29\t2.0
+        GTEX-EF3\t1
+        """,
+    )
+    df = validated.read_tsv(spark, path, SPEC, comment="#")
+    with pytest.raises(validated.ValidationError) as ei:
+        validated.assert_valid(df, SPEC)
+    got = {v["check"]: (v["row_key"], v["file"], v["line"]) for v in ei.value.sample}
+    url = df.inputFiles()[0]
+    assert url.endswith("/lines.tsv")
+    assert got == {
+        "integer_cv": ("GTEX-CD2", url, 5),
+        "duplicate_pk": ("GTEX-AB1", url, 6),
+        "row_shape": (url, url, 7),
+    }
+
+
+def test_uncastable_dtype_is_a_violation(spark):
+    """A filled cell that apply_mappings could not cast to its dtype is a
+    dtype violation; a cell that already fails the column's value checks
+    gets no second one."""
+    spec = validated.TableSpec(
+        columns=[
+            validated.ColumnSpec("id"),
+            validated.ColumnSpec("x", dtype="double"),
+            validated.ColumnSpec("y", regex=r"^[0-9a-z]+$", dtype="int"),
+        ],
+        primary_key=["id"],
+    )
+    df = spark.createDataFrame(
+        [("a", "1.5", "7"), ("b", "abc", ""), ("c", "", "x1"), ("d", None, "-1")],
+        "id string, x string, y string",
+    )
+    got = sorted(tuple(r) for r in validated.validate(df, spec).collect())
+    assert got == [
+        ("b", "x", "abc", "dtype"),
+        ("c", "y", "x1", "dtype"),
+        ("d", "y", "-1", "regex"),
+    ]
+    with pytest.raises(validated.ValidationError) as ei:
+        validated.assert_valid(df, spec)
+    assert {v["check"] for v in ei.value.sample} == {"dtype", "regex"}
+    assert {(v["file"], v["line"]) for v in ei.value.sample} == {(None, None)}
+
 # ---------------------------------------------------------------- S10 GFF3
 
 GFF = """\
