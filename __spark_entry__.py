@@ -1,8 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry points over the gtec_etl_spark query registry.
 
-Backed by the gtec_etl_spark query registry: every implemented operator
-from SURVEY.md §2 registers a named (spark, sf_dir) -> DataFrame query and,
-where SQL-expressible, a DuckDB oracle with identically-aliased columns.
+Every implemented operator from SURVEY.md §2 registers a named
+(spark, sf_dir) -> DataFrame query and, where SQL-expressible, a DuckDB
+oracle with identically-aliased columns. `queries()` and `oracle_sql()`
+list them in registration order.
 """
 
 from __future__ import annotations
@@ -23,11 +24,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """Every registered query, in registration order."""
     return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for each query (omitted for genuinely
-    non-SQL-expressible operators — driver records a rows-only check)."""
+    """DuckDB-runnable oracle SQL of each query that has one, in
+    registration order (a query without one is checked for rows only)."""
     return registry.oracles()

@@ -7,8 +7,8 @@ Architecture (see SURVEY.md §7):
     produced at the edges.
   - Everything expressible as native Spark SQL expressions stays JVM-side
     (whole-stage codegen); Arrow-batched pandas functions only for
-    genuinely non-relational work (tokenization, per-block vector
-    scoring, custom streaming state).
+    genuinely non-relational work (per-block vector scoring, custom
+    streaming state).
   - Declared-schema sources with a constraint layer (regex / CV / decode /
     nullability / dup-PK / dangling-FK) returning violation DataFrames.
   - Query layer registered in `gtec_etl_spark.plans` — each query ships a

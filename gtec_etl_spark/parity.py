@@ -1,8 +1,7 @@
 """Canonicalization shared by every Spark-vs-DuckDB parity check
-(tests/test_oracle_parity.py and selfcheck.py import THIS — the rules
-must stay byte-identical or the local gates diverge from each other).
+(tests/test_oracle_parity.py imports it).
 
-Comparison model (mirrors the round driver): columns sorted by name,
+Comparison model: columns sorted by name,
 rows sorted after canonicalizing every value to a string — an
 order-insensitive exact comparison. Floats print as integers when
 integral, else repr(round(x, 9)); None sorts first via a \\x00 prefix.

@@ -558,8 +558,7 @@ def stream_lateness_report(spark, sf_dir):
 
     Deterministic time-sliced replay: each event gets a simulated arrival
     time ts + (hash60(event_id) mod 2h), the corpus is written as six
-    mtime-ordered single-file slices by equal-width ARRIVAL range
-    (the stream_steady_state slicing contract), and
+    mtime-ordered single-file slices by equal-width ARRIVAL range, and
     maxFilesPerTrigger=1 replays them one trigger per slice, so
     batch_id == slice and the whole report is reproducible. The batch
     twin (the DuckDB oracle) recomputes the identical histogram from

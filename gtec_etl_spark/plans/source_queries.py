@@ -1,10 +1,10 @@
-"""Driver-level queries over the SOURCE layer (S1, S11–S13) — fixture-backed.
+"""Registered queries over the SOURCE layer (S1, S11–S13) — fixture-backed.
 
-The S-layer readers were unit-test-only in round 1; these queries give them
-CORRECTNESS rows. Each query reads repo-local fixture files through the real
-source readers (spark.read.json / csv / wholetext line model), and the
-DuckDB oracle reads the SAME files via read_json_auto / read_csv — so the
-parse itself, not just downstream relational logic, is cross-checked.
+These queries put the S-layer readers under the oracle parity test.
+Each query reads repo-local fixture files through the real source
+readers (spark.read.json / csv / wholetext line model), and the DuckDB
+oracle reads the SAME files via read_json_auto / read_csv — so the parse
+itself, not just downstream relational logic, is cross-checked.
 
 The fixtures are external inputs (like the reference's dbGaP/AGR drops),
 so sf_dir is ignored; the queries are constant-size by design.

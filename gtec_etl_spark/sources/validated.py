@@ -232,8 +232,9 @@ def _tag_rows(df: DataFrame, spec: TableSpec, table_no: int) -> DataFrame:
 
 
 def _violations(tables: list[tuple[DataFrame, TableSpec]]) -> DataFrame:
-    """Violations of several tables in one pass: (table, row_key, column,
-    value, check), where table is the spec's name. Empty == all valid.
+    """Violations of several tables in one pass: (table, pk, row_key,
+    column, value, check), where table is the spec's name and pk the
+    row's PK values (its __group). Empty == all valid.
 
     The tagged rows of every table are unioned and grouped once by
     (table, PK values): a group holds one row per occurrence of its key,
@@ -252,6 +253,7 @@ def _violations(tables: list[tuple[DataFrame, TableSpec]]) -> DataFrame:
         )
         .selectExpr(
             "`table`",
+            "__group AS pk",
             "inline(filter(concat(violations,"
             f" array(CASE WHEN __pk IS NOT NULL AND n > 1 THEN {dup} END)),"
             " v -> v IS NOT NULL))",
@@ -291,7 +293,7 @@ def _violation_counts(tables: list[tuple[DataFrame, TableSpec]]) -> DataFrame:
 def validate(df: DataFrame, spec: TableSpec) -> DataFrame:
     """One-pass constraint check of one table: returns a violations
     DataFrame (row_key, column, value, check). Empty == table is valid."""
-    return _violations([(df, spec)]).drop("table")
+    return _violations([(df, spec)]).drop("table", "pk")
 
 
 def assert_valid(
@@ -304,8 +306,8 @@ def assert_valid(
     one pass, `assert_valid([(df, spec), ...])`. Valid input costs the
     clean path's two jobs and nothing more. Otherwise a bounded sample of
     violations is collected and raised; each sample dict names its table,
-    and the file and 1-based line of its row when the table was read by
-    read_tsv (both None otherwise)."""
+    its row's PK values (pk), and the file and 1-based line of its row
+    when the table was read by read_tsv (both None otherwise)."""
     if spec is not None:
         tables = [(tables, spec)]
     if not _violation_counts(tables).limit(1).collect():
@@ -316,11 +318,12 @@ def assert_valid(
 
 
 def _data_lines(lines: list[str], spec: TableSpec, sep: str, comment: str | None):
-    """(line number, raw line, row_key, cells) of each data line of a file
+    """(line number, raw line, pk, cells) of each data line of a file
     read_tsv read: the lines after the header that are neither blank nor
-    comments, numbered as the file has them (1-based). row_key and cells
-    are what _tag_rows sees of the row: empty fields are None, a ragged
-    row is cut or None-padded to the declared columns."""
+    comments, numbered as the file has them (1-based). pk and cells are
+    what _tag_rows sees of the row: pk is the tuple of its __group, empty
+    fields are None, a ragged row is cut or None-padded to the declared
+    columns."""
     names = spec.names()
     header = True
     for no, raw in enumerate(lines, 1):
@@ -332,10 +335,10 @@ def _data_lines(lines: list[str], spec: TableSpec, sep: str, comment: str | None
         fields = [f or None for f in next(csv.reader([raw], delimiter=sep), [])]
         cells = dict(zip(names, fields + [None] * (len(names) - len(fields))))
         if spec.primary_key:
-            key = "|".join(cells[k] for k in spec.primary_key if cells[k] is not None)
+            pk = tuple(cells[k] for k in spec.primary_key)
         else:
-            key = "\t".join(cells[c] or "" for c in names)
-        yield no, raw, key, cells
+            pk = ("\t".join(cells[c] or "" for c in names),)
+        yield no, raw, pk, cells
 
 
 def _locate(tables: list[tuple[DataFrame, TableSpec]], sample: list[dict]) -> None:
@@ -343,10 +346,9 @@ def _locate(tables: list[tuple[DataFrame, TableSpec]], sample: list[dict]) -> No
     reference's row-at-a-time reader reports them (parsers/util.py:16-18).
     Only the files of failing tables read by read_tsv are read, on the
     driver. A row_shape violation is matched by its raw line, a cell
-    violation by its row_key and value, a duplicate_pk by its row_key at
-    the key's second occurrence, where a row-at-a-time reader stops;
-    identical violations take successive matching lines. A composite key
-    whose values hold '|' can match a row with the same joined key."""
+    violation by its PK values and cell value, a duplicate_pk by its PK
+    values at their second occurrence, where a row-at-a-time reader
+    stops; identical violations take successive matching lines."""
     for v in sample:
         v.update(file=None, line=None)
     for df, spec in tables:
@@ -355,22 +357,23 @@ def _locate(tables: list[tuple[DataFrame, TableSpec]], sample: list[dict]) -> No
         if dialect is None or not todo:
             continue
         for path in df.inputFiles():
-            by_key, by_raw = {}, {}
+            by_pk, by_raw = {}, {}
             lines = fsutil.read_lines(df.sparkSession, path)
-            for no, raw, key, cells in _data_lines(lines, spec, *dialect):
-                by_key.setdefault(key, []).append((no, cells))
+            for no, raw, pk, cells in _data_lines(lines, spec, *dialect):
+                by_pk.setdefault(pk, []).append((no, cells))
                 by_raw.setdefault(raw, []).append(no)
             taken = Counter()
             for v in todo:
-                sig = (v["row_key"], v["column"], v["value"], v["check"])
+                pk = tuple(v["pk"])
+                sig = (pk, v["column"], v["value"], v["check"])
                 if v["check"] == "row_shape":
                     found = by_raw.get(v["value"], []) if v["row_key"] == path else []
                 elif v["check"] == "duplicate_pk":
-                    found = [no for no, _ in by_key.get(v["row_key"], [])][1:]
+                    found = [no for no, _ in by_pk.get(pk, [])][1:]
                 else:
                     found = [
                         no
-                        for no, cells in by_key.get(v["row_key"], [])
+                        for no, cells in by_pk.get(pk, [])
                         if cells.get(v["column"]) == v["value"]
                     ]
                 if taken[sig] < len(found):

@@ -73,9 +73,8 @@ def read_events_stream(
     """File-source stream over the events parquet. In production this is the
     one function that changes (kafka topic / cloud landing bucket); the
     downstream pipelines are source-agnostic. path_glob widens the replay
-    to a multi-file directory (tools/stream_steady_state.py feeds
-    time-sliced chunks through maxFilesPerTrigger=1 to measure per-batch
-    steady-state latency instead of one cold-start batch).
+    to a multi-file directory (with maxFilesPerTrigger=1, time-sliced
+    chunks replay one trigger per file).
 
     The ts unit (nanos vs micros) is detected from one parquet footer
     driver-side, same as catalog.table — a global unit assumption corrupts
@@ -398,7 +397,7 @@ def run_cdc_dimension_maintenance(
         if q.isActive:
             q.stop()
     # Stopped query handle: recentProgress stays readable, so callers
-    # (tools/stream_steady_state.py) can extract per-trigger telemetry.
+    # can read per-trigger telemetry.
     return q
 
 

@@ -57,44 +57,6 @@ def test_column_entropy_lns_not_on_rounding_boundary(sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_unigram_lp_not_on_rounding_boundary(sf_dir):
-    """text_unigram_em quantizes ln(cnt) and ln(total) (seed vocab) plus
-    ln(em_count) and ln(em_total) (M-step) to micro-nats; every ln
-    argument must sit clear of a flip point. Enumerates the seed-count
-    domain and the totals; EM counts are sums of seed-path frequencies —
-    covered by enumerating all BIGINTs up to the seed total would be
-    loose, so this checks the exact argument sets both engines evaluate
-    (vocab counts, both totals, and the realized em_counts from the
-    oracle's own CTE chain)."""
-    from gtec_etl_spark.plans import registry
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    oracle = registry.specs()["text_unigram_em"].oracle
-    rows = con.execute(oracle).fetchall()
-    assert rows
-    args = set()
-    seed_total = 0
-    em_total = 0
-    for piece, seed_count, _slp, em_count, _elp in rows:
-        args.add(int(seed_count))
-        seed_total += int(seed_count)
-        if em_count:
-            args.add(int(em_count))
-            em_total += int(em_count)
-    args.add(seed_total)
-    args.add(em_total)
-    worst = min(
-        boundary_distance(math.log(a) * 1_000_000 + 0.5) for a in args if a > 0
-    )
-    assert worst > EPS, (
-        f"unigram lp flip-point distance {worst:.3e} at {sf_dir}"
-    )
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_psi_drift_lns_not_on_rounding_boundary(sf_dir):
     """prof_drift_psi quantizes ln over four integer-argument families:
     n_a+1, n_b+1, T_a+V, T_b+V (the KL-drift decomposition). Every

@@ -344,33 +344,6 @@ def test_duplicated_spans_disjoint_and_min_length(spark, sf_dir):
             assert s2 > e1, f"doc {doc}: spans overlap/adjacent -> not maximal"
 
 
-def test_bpe_train_classic_corpus(spark):
-    """BPE on the textbook corpus: 'low' x2 + 'lowest' — the first merges
-    must follow the weighted pair counts with lexicographic tie-breaks,
-    and the final vocab tokenizes 'low' as one symbol."""
-    from gtec_etl_spark.operators import bpe as B
-
-    docs = spark.createDataFrame(
-        [(1, "low low lowest")], "doc_id long, text string"
-    )
-    merges, vocab = B.bpe_train(docs, 3)
-    try:
-        rows = {r["word"]: r["toks"] for r in vocab.collect()}
-    finally:
-        vocab.unpersist()
-    # Pair counts round 1: (l,o)=3, (o,w)=3, (w,e)=1, (e,s)=1, (s,t)=1
-    # -> tie on 3 breaks lexicographically: (l,o). Round 2: (lo,w)=3 wins.
-    # Round 3: 'low' is fused; remaining pairs in 'lowest' count 1 each,
-    # tie breaks to (e,s).
-    assert [(m[1], m[2], m[3]) for m in merges] == [
-        ("l", "o", 3),
-        ("lo", "w", 3),
-        ("e", "s", 1),
-    ]
-    assert rows["low"] == ["low"]
-    assert rows["lowest"] == ["low", "es", "t"]
-
-
 def test_pagerank_path_graph_symmetry_and_mass(spark):
     """Integer PageRank on the undirected path a—b—c: symmetry forces
     rank(a) == rank(c) < rank(b), and the total mass stays within
@@ -386,29 +359,6 @@ def test_pagerank_path_graph_symmetry_and_mass(spark):
     assert ranks["a"] == ranks["c"] < ranks["b"]
     total = sum(ranks.values())
     assert abs(total - PR_SCALE) < 1000
-
-
-def test_bpe_train_empty_and_degenerate_corpus(spark):
-    """BPE edge cases: an empty corpus trains zero merges; a corpus of
-    single-character words (no adjacent pairs) also trains zero merges
-    but still returns a usable vocab."""
-    from gtec_etl_spark.operators import bpe as B
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    merges, vocab = B.bpe_train(empty, 3)
-    try:
-        assert merges == [] and vocab.count() == 0
-    finally:
-        vocab.unpersist()
-
-    chars = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
-    merges, vocab = B.bpe_train(chars, 3)
-    try:
-        rows = {r["word"]: (r["freq"], r["toks"]) for r in vocab.collect()}
-    finally:
-        vocab.unpersist()
-    assert merges == []
-    assert rows == {"a": (2, ["a"]), "b": (1, ["b"])}
 
 
 def test_personalized_pagerank_seed_locality_and_mass(spark):

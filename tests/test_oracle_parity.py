@@ -1,7 +1,7 @@
-"""Local mirror of the driver's correctness gate: run every registered query
-on Spark and its oracle on DuckDB over the same parquet tables; compare row
-count, column names, and values (columns sorted by name, rows sorted by all
-columns — an order-insensitive exact comparison).
+"""Oracle parity: run every registered query on Spark and its oracle on
+DuckDB over the same parquet tables; compare row count, column names, and
+values (columns sorted by name, rows sorted by all columns — an
+order-insensitive exact comparison).
 """
 
 from __future__ import annotations
@@ -108,7 +108,7 @@ def test_query_matches_oracle(spark, name):
         )
 
     if spec.oracle is None:
-        assert len(spark_rows) >= 0  # rows-only check (driver's weaker gate)
+        assert len(spark_rows) >= 0  # rows-only check
         return
 
     con = duck_connection(SF_DIR)
@@ -131,57 +131,10 @@ def test_query_matches_oracle(spark, name):
     )
 
 
-def test_selfcheck_coverage_preflight():
-    """Structural version of the round-close full-sweep discipline
-    (VERDICT r9 #7): every registered query must hold a GREEN row
-    somewhere in the committed correctness-artifact union — the
-    full-registry sweep (CORRECTNESS_self.json), the merge-accumulating
-    partial file (CORRECTNESS_self_partial.json), or any driver round
-    file (CORRECTNESS_r*.json). A query that was registered but never
-    swept cannot ride to round close unchecked; the fix is one
-    `python selfcheck.py -k <name>` run (partials merge, never
-    clobber)."""
-    import glob
-    import json
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parents[1]
-    covered: set[str] = set()
-    paths = [root / "CORRECTNESS_self.json", root / "CORRECTNESS_self_partial.json"]
-    paths += [pathlib.Path(p) for p in glob.glob(str(root / "CORRECTNESS_r*.json"))]
-    for path in paths:
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or name == "__meta__":
-                continue
-            if row.get("err") not in (None, "no_oracle"):
-                continue
-            if row.get("hash_match") is True or (
-                row.get("hash_match") is None and row.get("rows_match") is True
-            ) or row.get("err") == "no_oracle":
-                covered.add(name)
-    missing = sorted(set(registry.specs()) - covered)
-    assert not missing, (
-        f"{len(missing)} registered queries have no committed green "
-        f"selfcheck/driver row: {missing} — run "
-        f"`python selfcheck.py -k <name>` for each"
-    )
-
-
 def test_exemptions_name_registered_queries():
-    """Every key of the three full-registry exemption tables, and every
-    name in bench.py's HEADLINE, names a registered query. A key left
-    behind by a deleted query would silently exempt any future query that
-    reuses the name; a stale headline name would drop out of the bench
-    report."""
-    import bench
-
+    """Every key of the three full-registry exemption tables names a
+    registered query. A key left behind by a deleted query would silently
+    exempt any future query that reuses the name."""
     names = set(registry.specs())
     stale = {
         table: sorted(set(keys) - names)
@@ -189,7 +142,18 @@ def test_exemptions_name_registered_queries():
             ("CARTESIAN_ALLOWLIST", CARTESIAN_ALLOWLIST),
             ("NONEMPTY_EXEMPT", NONEMPTY_EXEMPT),
             ("BROADCAST_BOUNDED_BY_CONSTRUCTION", BROADCAST_BOUNDED_BY_CONSTRUCTION),
-            ("bench.HEADLINE", bench.HEADLINE),
         )
     }
     assert not any(stale.values()), f"exemptions for unregistered queries: {stale}"
+
+
+def test_entry_lists_registry_in_registration_order():
+    """__spark_entry__ lists every registered query in registration order,
+    and oracle_sql() holds exactly the queries that have an oracle."""
+    import __spark_entry__ as entry
+
+    specs = registry.specs()
+    assert list(entry.queries()) == list(specs)
+    assert list(entry.oracle_sql().items()) == [
+        (name, spec.oracle) for name, spec in specs.items() if spec.oracle is not None
+    ]

@@ -184,43 +184,6 @@ def test_quantize_micros_matches_python_ieee(spark, xs):
 @SLOW
 @given(
     st.lists(
-        st.lists(st.sampled_from("ab"), min_size=1, max_size=8).map("".join),
-        min_size=1,
-        max_size=6,
-    ),
-    st.sampled_from(["aa", "ab", "ba", "bb"]),
-)
-def test_bpe_apply_merge_equals_python_greedy(spark, toks, pair):
-    """operators.bpe.apply_merge (the map-side carry fold) implements
-    greedy left-to-right non-overlapping pair merging — checked against a
-    direct Python scan for adversarial inputs ('aaa' overlap runs etc.)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import bpe as B
-
-    left, right = pair[0], pair[1]
-
-    def py_merge(ts):
-        out, i = [], 0
-        while i < len(ts):
-            if i + 1 < len(ts) and ts[i] == left and ts[i + 1] == right:
-                out.append(left + right)
-                i += 2
-            else:
-                out.append(ts[i])
-                i += 1
-        return out
-
-    df = spark.createDataFrame([(toks,)], "toks array<string>")
-    got = df.select(
-        B.apply_merge(F.col("toks"), left, right).alias("m")
-    ).collect()[0]["m"]
-    assert got == py_merge(toks)
-
-
-@SLOW
-@given(
-    st.lists(
         st.tuples(
             st.integers(min_value=1, max_value=6),              # key
             st.sampled_from(["I", "U", "D"]),                   # op

@@ -256,6 +256,32 @@ def test_validation_error_samples_carry_file_lines(spark, tmp_path):
     }
 
 
+def test_duplicate_pk_line_matches_pk_values_not_joined_key(spark, tmp_path):
+    """('x|y', 'z') and ('x', 'y|z') join to the same row_key; the
+    duplicate of the second is located by its PK values, at line 4, not
+    at the first row sharing its joined key."""
+    spec = validated.TableSpec(
+        columns=[validated.ColumnSpec("a"), validated.ColumnSpec("b")],
+        primary_key=["a", "b"],
+        name="t",
+    )
+    path = _write(
+        tmp_path / "pipes.tsv",
+        """\
+        a\tb
+        x|y\tz
+        x\ty|z
+        x\ty|z
+        """,
+    )
+    df = validated.read_tsv(spark, path, spec)
+    with pytest.raises(validated.ValidationError) as ei:
+        validated.assert_valid(df, spec)
+    (v,) = ei.value.sample
+    assert (v["check"], v["row_key"], v["line"]) == ("duplicate_pk", "x|y|z", 4)
+    assert v["pk"] == ["x", "y|z"]
+
+
 def test_uncastable_dtype_is_a_violation(spark):
     """A filled cell that apply_mappings could not cast to its dtype is a
     dtype violation; a cell that already fails the column's value checks

@@ -637,8 +637,7 @@ def test_dedup_watermark_state_evicts_expired_ids(spark, tmp_path):
     micro-batches a day apart in event time with a 1-hour watermark, the
     final state must hold ~one batch's ids, NOT the cumulative id count —
     the per-batch numRowsTotal curve plateaus instead of growing with
-    stream length (tools/stream_steady_state.py records the same curve
-    at sf0.1)."""
+    stream length."""
     import os
     import time
     import uuid

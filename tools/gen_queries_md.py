@@ -1,6 +1,6 @@
 """Regenerate QUERIES.md from the registry — one catalog row per query.
 
-'Oracle' = the query ships DuckDB SQL for the driver's correctness gate;
+'Oracle' = the query ships DuckDB SQL for the oracle parity test;
 'rows-only' = non-SQL-expressible surface (weaker rows-only check).
 The description is the first sentence of the query's docstring.
 
@@ -48,9 +48,10 @@ def render() -> str:
         "Generated by `tools/gen_queries_md.py` from",
         "`gtec_etl_spark.plans.registry` — do not edit by hand.",
         f"{n} queries; 'oracle' = DuckDB SQL cross-check in the",
-        "driver's correctness gate, 'rows-only' = non-SQL-expressible surface.",
+        "oracle parity test (tests/test_oracle_parity.py), 'rows-only' =",
+        "non-SQL-expressible surface.",
         "",
-        "**`spec-anchor` tag** (VERDICT r13 #5): deliberately scale-unsafe",
+        "**`spec-anchor` tag**: deliberately scale-unsafe",
         "specification anchors — each pins exact reference semantics (global",
         "ntile, uncapped truth join, exact triangle count, fixed-plane grid)",
         "and each has a registered scale-safe twin that is the production",
