@@ -3,7 +3,7 @@
 Every implemented operator from SURVEY.md §2 registers a named
 (spark, sf_dir) -> DataFrame query and, where SQL-expressible, a DuckDB
 oracle with identically-aliased columns. `queries()` and `oracle_sql()`
-list them in registration order.
+list them sorted by name, the same order in every process.
 """
 
 from __future__ import annotations
@@ -24,11 +24,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every registered query, in registration order."""
+    """Every registered query, sorted by name."""
     return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL of each query that has one, in
-    registration order (a query without one is checked for rows only)."""
+    """DuckDB-runnable oracle SQL of each query that has one, sorted by
+    name (a query without one is checked for rows only)."""
     return registry.oracles()

@@ -3,11 +3,11 @@
 The reference identifies objects with uuid4 (ccmm/dats/datsobj.py:109-116),
 which is nondeterministic and unhashable across runs; we use content hashes
 instead (SURVEY.md §7.4). All hashes here are reproducible in ANSI SQL
-(DuckDB oracle) and in Spark SQL, so dedup/LSH operators can be
-oracle-checked end-to-end:
+(DuckDB oracle) and in Spark SQL, so the sampling and partitioning queries
+built on them can be oracle-checked end-to-end:
 
   hash60(s)  = first 15 hex digits of md5(s) as a 60-bit non-negative BIGINT
-  minhash permutations: h_i(x) = (a_i * (x mod P) + b_i) mod P, P = 1e9+7
+  integer edge hashes: h(x) = (a * (x mod P) + b) mod P, P = 1e9+7
 
 Spark side stays entirely JVM (md5/conv/cast — whole-stage codegen); no
 Python UDFs.
@@ -18,26 +18,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Modulus for minhash permutations: small enough that a*(x%P)+b fits in
-# signed 64-bit (P^2 ~ 1e18 < 2^63-1), large enough for low collision rates.
+# Modulus of the 2-universal integer hashes: small enough that
+# a*(x%P)+b fits in signed 64-bit (P^2 ~ 1e18 < 2^63-1), large enough for
+# low collision rates.
 MINHASH_P = 1_000_000_007
-
-# Fixed permutation parameters (a_i, b_i) — deterministic across engines.
-# Generated once from a fixed LCG so both the Spark operator and the SQL
-# oracle embed identical literals.
-
-
-def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
-    seed = 0x5DEECE66D
-    params = []
-    x = seed
-    for _ in range(num_hashes):
-        x = (x * 6364136223846793005 + 1442695040888963407) % (2**63)
-        a = x % (MINHASH_P - 1) + 1  # a != 0
-        x = (x * 6364136223846793005 + 1442695040888963407) % (2**63)
-        b = x % MINHASH_P
-        params.append((a, b))
-    return params
 
 
 def hash60(col: Column) -> Column:

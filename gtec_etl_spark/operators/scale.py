@@ -21,17 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Below this estimated input size the fan-out guard stays out of the way
-# FOR AGGREGATION-REDUCED TOKEN FAN-OUTS: their post-explode work collapses
-# into map-side partial aggregation, so on a sub-2 MB scan the repartition's
-# fixed cost (extra stage + 32-task schedule) exceeds what it saves —
-# interleaved sf0.1 A/B: dedup_simhash 3.34 s floor-skipped vs 4.08 s
-# guarded. HASH-HEAVY fan-outs (md5 per shingle / per char-gram) are the
-# opposite — over a second of single-core map work even at 0.59 MB
-# (dedup_substring_spans 1.29 s guarded vs 2.39 s skipped) — so those call
-# sites pass min_bytes=0 explicitly. At 100 TB the floor is dead code — any
-# real scan is orders of magnitude above it and the guard no-ops on
-# partition count instead.
+# Below this estimated input size the fan-out guard stays out of the way:
+# when a fan-out's post-explode work collapses into map-side partial
+# aggregation, a sub-2 MB scan pays more for the repartition's fixed cost
+# (extra stage + one task per core) than it saves. Hash-heavy fan-outs
+# (a hash per exploded element) are the opposite, over a second of
+# single-core map work even below a megabyte, so such call sites pass
+# min_bytes=0 explicitly. At 100 TB the floor is dead code — any real scan
+# is orders of magnitude above it and the guard no-ops on partition count
+# instead.
 FANOUT_MIN_BYTES = 2 * 1024 * 1024
 
 
@@ -43,41 +41,35 @@ def cpu_fanout_repartition(
     decode) whose cost is pinned to the SCAN's partition count, which
     Spark sizes for I/O bytes (maxPartitionBytes), not downstream CPU.
 
-    Measured twice before being generalized: substring-span dedup 15.9 s
-    -> 2.4 s and the shingle family 6.2x -> 2.1x at 10x data, both from
-    exactly this one change (PERF.md round 7/8). A real 100 TB scan
-    already has orders of magnitude more partitions than cores, so in
-    production the branch is a no-op; it only fires when a compact file
-    would otherwise pin a fan-out to a couple of cores. Keyed on the id
-    column so downstream per-id work is already co-located.
+    A real 100 TB scan already has orders of magnitude more partitions
+    than cores, so in production the branch is a no-op; it only fires
+    when a compact file would otherwise pin a fan-out to a couple of
+    cores. Keyed on the id column so downstream per-id work is already
+    co-located.
 
     The guard trips on PARTITION COUNT, but scan partitions are BYTE
     SLICES, not row groups — and a parquet ROW GROUP is the atomic read
     unit: every slice that doesn't contain a row group's midpoint reads
-    ZERO rows. A compact single-file corpus (one ~128 MB row group)
+    ZERO rows. A compact single-file input (one ~128 MB row group)
     sliced into exactly `par` pieces reports par partitions while all
-    rows sit in one task (measured r14: the sf10 shingle explode ran
-    35.8 s on 2 effective cores vs 6.8 s repartitioned — the whole
-    superlinear second decade of the text/dedup family). Spark's slice
-    size is min(maxPartitionBytes, max(openCost, bytes/par)), so in the
-    entire fake-slice regime (total < par x maxPartitionBytes) the
-    partition count sits AT par, never above it; the `< 2 * par`
-    threshold therefore covers the regime exactly, while any healthy
-    scan big enough to have real row-group parallelism (total >= par x
-    maxPartitionBytes) reports > 2x par partitions only when it truly
-    has them — and at that size the extra exchange is bounded by
-    2 x par x maxPartitionBytes (~8 GB at 32 cores), noise against the
-    fan-out it unblocks.
+    rows sit in one task. Spark's slice size is min(maxPartitionBytes,
+    max(openCost, bytes/par)), so in the entire fake-slice regime
+    (total < par x maxPartitionBytes) the partition count sits AT par,
+    never above it; the `< 2 * par` threshold therefore covers the regime
+    exactly, while any healthy scan big enough to have real row-group
+    parallelism (total >= par x maxPartitionBytes) reports > 2x par
+    partitions only when it truly has them — and at that size the extra
+    exchange is bounded by 2 x par x maxPartitionBytes (~8 GB at 32
+    cores), noise against the fan-out it unblocks.
 
-    BYTES FLOOR (r15): the partition-count trigger alone taxes TINY scans
-    — a sub-megabyte corpus is also "narrower than 2*par", but its whole
-    fan-out is sub-second on one core, so the exchange is pure overhead
-    (dedup_minhash_lsh paid ~0.24 s / 20% at sf0.1 for nothing). Skip the
-    guard when the optimizer's size estimate for the input is under
-    `min_bytes` (0 disables the floor). The fake-slice regime the guard
-    exists for starts at real data volumes (tens of MB of compact parquet
-    fanning out on 1-2 cores), far above the floor, and a 100 TB scan
-    never consults it."""
+    BYTES FLOOR: the partition-count trigger alone taxes TINY scans — a
+    sub-megabyte input is also "narrower than 2*par", but its whole
+    fan-out is sub-second on one core, so the exchange is pure overhead.
+    Skip the guard when the optimizer's size estimate for the input is
+    under `min_bytes` (0 disables the floor). The fake-slice regime the
+    guard exists for starts at real data volumes (tens of MB of compact
+    parquet fanning out on 1-2 cores), far above the floor, and a 100 TB
+    scan never consults it."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if min_bytes > 0:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))

@@ -67,8 +67,8 @@ def ref_q2_dataset_variables(spark, sf_dir):
     parameterized by study id (initBindings → a constant-folded filter),
     join chain to the variable dimension, DISTINCT + 2-key ORDER BY.
 
-    Plan shape (r11, verdict r10 #3): fact-first with shuffle_hash hints
-    on the FILTERED study chain. The static planner's size estimates had
+    Plan shape: fact-first with shuffle_hash hints on the FILTERED
+    study chain. The static planner's size estimates had
     it backwards — orders/lineitem pruned to 2 columns land under the
     64 MB broadcast threshold, so it built driver-side hashed relations
     of the FACTS while streaming the ~1/25-selectivity study slice past
@@ -77,7 +77,8 @@ def ref_q2_dataset_variables(spark, sf_dir):
     side that is smaller at EVERY scale — without promising it is
     bounded (a forced broadcast would; the study slice is still
     corpus-proportional, so shuffle-hash is the honest strategy).
-    Measured sf1 8.95 s -> 3.78 s, sf0.1 1.10 s -> 0.73 s (PERF.md)."""
+    Measured sf1 8.95 s -> 3.78 s, sf0.1 1.10 s -> 0.73 s against the
+    broadcast-the-facts plan."""
     t = catalog.load_tables(spark, sf_dir)
     study_cust = (
         t["nation"]

@@ -522,10 +522,10 @@ def q41_fuzzy_blocked_match(spark, sf_dir):
     Scale shape: the join is BLOCKED on a 3-char prefix key, so edit
     distance — O(mn) per pair, never pushed into the join condition
     without a block — runs only within prefix buckets: candidate count
-    tracks bucket sizes, not |dirty| x |vocab| (the same never-all-pairs
-    discipline as the LSH dedup family). Blocking recall loss is part of
-    the declared semantics (a corruption inside the first 3 chars exits
-    the block), identically on both engines."""
+    tracks bucket sizes, not |dirty| x |vocab| (never all-pairs).
+    Blocking recall loss is part of the declared semantics (a corruption
+    inside the first 3 chars exits the block), identically on both
+    engines."""
     part = catalog.table(spark, sf_dir, "part")
     names = part.select(F.col("p_name").alias("name")).distinct()
     dirty = names.select(
@@ -1018,9 +1018,8 @@ def q46_dormant_rich_customers(spark, sf_dir):
     schema lacks) — count and integer-cents balance total per nation.
 
     Plan: the scalar threshold is a 1-row aggregate broadcast into the
-    filter (no second full scan at the consumer — the
-    dedup_apply_keep_canonical pattern); the threshold compare is pure
-    BIGINT (`c_cents * n_pos > total_cents`) so no cross-engine
+    filter (no second full scan at the consumer); the threshold compare
+    is pure BIGINT (`c_cents * n_pos > total_cents`) so no cross-engine
     float-summation order can flip a boundary row — a double avg()
     raced DuckDB's summation order before (the q17 discipline, now that
     the gate exercises real rows). The NOT EXISTS decorrelates to a

@@ -6,8 +6,8 @@ plans/triples_queries.py) plus the GFF parent/child hierarchy; this pack
 adds the iterative-propagation family a data-curation pipeline uses for
 source-authority weighting (PageRank over a citation/link graph is the
 classic quality prior for web-crawl corpora, e.g. the Common Crawl
-harmonic-centrality filter). Connected components already exist on the
-dedup side (operators/dedup.py:218); PageRank here completes the pair.
+harmonic-centrality filter). Its propagation operators (PageRank,
+personalized PageRank, connected components) live in operators/graph.py.
 
 Everything is integer fixed-point (ranks scaled by 1e12, floor at every
 division) so the unrolled-CTE DuckDB oracle reproduces the iteration
@@ -321,8 +321,8 @@ def graph_khop_reachability(spark, sf_dir):
     set accumulates by unionByName + distinct, so total cost is
     O(depth x frontier x avg-degree), never materializing paths. The
     oracle is DuckDB's recursive-CTE fixpoint over the same edge CTEs
-    (depth-bounded, UNION-deduplicated) — the dedup_clusters_cc
-    precedent for oracling iterative graph passes."""
+    (depth-bounded, UNION-deduplicated), the same way
+    graph_connected_components oracles its iterative pass."""
     orders = catalog.table(spark, sf_dir, "orders")
     lineitem = catalog.table(spark, sf_dir, "lineitem")
     customer = catalog.table(spark, sf_dir, "customer")
@@ -467,7 +467,7 @@ def graph_triangle_estimate(spark, sf_dir):
 
     Cross-engine exactness rides the family discipline: sample
     membership is a 2-universal INTEGER hash of the canonical edge key
-    (A*a + B*b + C mod P, the minhash-permutation family) —
+    (A*a + B*b + C mod P, functions/hashing.MINHASH_P) —
     bit-identical in both engines and under task retries (never
     rand()), all products bounded by P^2 < 2^63, and p chosen so the
     p^-1/p^-3 scale factors are exact integers: the whole estimate is
@@ -725,20 +725,17 @@ def graph_label_propagation(spark, sf_dir):
     tags=("graph", "scale"),
 )
 def graph_connected_components(spark, sf_dir):
-    """GENERIC connected components as a first-class graph query (the
-    dedup pipeline's operators/dedup.py:connected_components lifted off
-    the LSH pair graph onto an arbitrary edge table): the rare
-    high-quantity co-purchase graph (l_quantity >= 49 keeps it sparse,
-    so components are non-trivial instead of one giant blob), min-label
-    propagation to the fixpoint with per-round localCheckpoint, one row
-    per component (size, customer count). Oracle = recursive-CTE
+    """GENERIC connected components as a first-class graph query
+    (operators/graph.py:connected_components over an arbitrary edge
+    table): the rare high-quantity co-purchase graph (l_quantity >= 49
+    keeps it sparse, so components are non-trivial instead of one giant
+    blob), min-label propagation to the fixpoint with per-round
+    localCheckpoint, one row per component (size, customer count). Oracle = recursive-CTE
     reachability fixpoint — tractable exactly because the filtered graph
     is sparse; the Spark side's round count is the component diameter,
     data-independent of this choice."""
     orders = catalog.table(spark, sf_dir, "orders")
     lineitem = catalog.table(spark, sf_dir, "lineitem")
-    from gtec_etl_spark.operators import dedup as D
-
     pairs = (
         orders.join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
         .filter(F.col("l_quantity") >= 49)
@@ -753,7 +750,7 @@ def graph_connected_components(spark, sf_dir):
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    comp = D.connected_components(nodes, pairs)
+    comp = G.connected_components(nodes, pairs)
     return (
         comp.groupBy("component")
         .agg(
@@ -981,14 +978,13 @@ def graph_common_neighbors(spark, sf_dir):
     common-neighbors similarity (Liben-Nowell & Kleinberg 2003) a
     recommendation or entity-resolution pass computes over a bipartite
     graph: two customers are similar when their supplier neighborhoods
-    overlap. Candidate pairs come from the INVERTED neighbor index (the
-    dedup jaccard_pairs shape — an equi-join on the shared supplier,
-    never all-pairs); similarity is exact integer basis points; output
-    is the top-20 predicted links (TakeOrderedAndProject). The sparse
-    high-quantity spine (l_quantity >= 48, the kcore/CC graph) keeps
-    per-supplier fan-out bounded at test scale; at 100 TB the df-capped
-    posting-list variant applies verbatim (a hub supplier is the hot
-    shingle)."""
+    overlap. Candidate pairs come from the INVERTED neighbor index (an
+    equi-join on the shared supplier, never all-pairs); similarity is
+    exact integer basis points; output is the top-20 predicted links
+    (TakeOrderedAndProject). The sparse high-quantity spine
+    (l_quantity >= 48, the kcore/CC graph) keeps per-supplier fan-out
+    bounded at test scale; at 100 TB a hub supplier is the hot key, and
+    a degree cap on the shared supplier bounds its pairs."""
     orders = catalog.table(spark, sf_dir, "orders")
     lineitem = catalog.table(spark, sf_dir, "lineitem")
     e = (

@@ -3,8 +3,7 @@ merge and CDC latest-wins upsert — the two MERGE-shaped passes every
 warehouse pipeline runs on dimension tables (the reference's pipelines
 rebuild dimensions from scratch each run, e.g. the study/subject rebuild
 in gtec/topmed/etl.py; at 100 TB a rebuild is not an option, so the
-engine provides the incremental forms as first-class queries, the same
-posture as dedup_incremental_batch for the fact side).
+engine provides the incremental forms as first-class queries).
 
 Both derive a deterministic "incoming batch" from the customer table with
 pure modular-arithmetic rules, so the Spark plan and the DuckDB oracle

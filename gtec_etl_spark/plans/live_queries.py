@@ -3,12 +3,12 @@ driver's correctness gate.
 
 Every stream_* entry runs a REAL Structured Streaming job (readStream →
 watermark / state → sink, Trigger.AvailableNow) over replayed events or
-documents files and returns the materialized result. Its oracle is
+changelog files and returns the materialized result. Its oracle is
 plain SQL, because a finite replayed stream must agree exactly with the
 batch computation: windowed and session aggregates, watermark
 dedup, stateful per-key totals, stream-stream and stream-static joins,
-the dedup admission filter, CDC snapshots, lateness accounting, and the
-PSI bucket grid maintained as bounded streaming state.
+CDC snapshots, lateness accounting, and the PSI bucket grid maintained
+as bounded streaming state.
 """
 
 from __future__ import annotations
@@ -98,8 +98,8 @@ def stream_dedup_watermark(spark, sf_dir):
     streams unioned together (every event arrives twice), and the dedup
     operator must emit each event_id exactly once with bounded state. On
     a finite replay the result is exactly the distinct source rows, which
-    is what the batch oracle states. The streaming counterpart of the
-    dedup_exact batch pass."""
+    is what the batch oracle states: the events table read once, each
+    event_id appearing a single time."""
     from gtec_etl_spark.streaming import pipelines as P
 
     with P.state_partitions(spark, 8):
@@ -315,71 +315,6 @@ def stream_stream_left_join(spark, sf_dir):
         )
         .orderBy("click_id", "purchase_id")
     )
-
-
-from gtec_etl_spark.plans.dedup_queries import _minhash_ctes  # noqa: E402
-
-
-@query(
-    "stream_dedup_admission",
-    oracle=f"""
-    WITH {_minhash_ctes(16, 4)}
-    SELECT DISTINCT a.doc_id AS doc_id
-    FROM banded a JOIN banded b ON a.band = b.band AND a.sig = b.sig
-    WHERE a.doc_id % 10 = 7 AND b.doc_id % 10 <> 7
-    ORDER BY doc_id
-    """,
-    tags=("streaming", "dedup", "live"),
-)
-def stream_dedup_admission(spark, sf_dir):
-    """The incremental dedup admission filter AS A STREAM — the shape a
-    production crawl ingest actually runs (dedup_incremental_* are its
-    batch twins): new documents arrive on a file-source stream, each
-    micro-batch computes MinHash-LSH bands PER ROW (operators/dedup.py:
-    minhash_bands_rowwise — array_min over in-row shingle hashes, no
-    groupBy, so it is append-mode-legal and SHUFFLE-FREE on the stream
-    side), and a stream-static left-semi join against the persisted
-    index's banded signatures emits the duplicate-suspect doc ids.
-
-    Scale design: per-trigger cost is O(batch bands + matched index
-    buckets) — the static side is the bucketed/persisted artifact
-    (rebuilt here from the %10<>7 corpus; in production loaded, not
-    rebuilt), the stream side never shuffles before the join, and state
-    is empty (no watermark needed — semi-join against a static table is
-    stateless). Output: rejected doc_ids, deduped and sorted AFTER the
-    memory sink (batch-side distinct on the finite replay). Exactly
-    equals the batch match set — minhash_bands_rowwise is proven
-    band-identical to the groupBy path (tests/test_streaming.py)."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.operators import dedup as D
-    from gtec_etl_spark.streaming import pipelines as P
-
-    docs = catalog.table(spark, sf_dir, "documents")
-    index_bands = (
-        D.lsh_banded(
-            D.minhash_signatures(
-                D.word_shingles(docs.filter(F.col("doc_id") % 10 != 7), 3), 16
-            ),
-            16,
-            4,
-        )
-        .select("band", "sig")
-        .distinct()
-    )
-    stream_bands = D.minhash_bands_rowwise(
-        P.read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 7),
-        3,
-        16,
-        4,
-    )
-    rejected = stream_bands.join(index_bands, ["band", "sig"], "left_semi")
-    # Explicit append: run_to_memory's mode heuristic sees the STATIC
-    # side's distinct() as an Aggregate and would pick complete mode, but
-    # the streaming side itself is stateless row flow.
-    out = P.run_to_memory(rejected.select("doc_id"), output_mode="append")
-    return out.distinct().orderBy("doc_id")
 
 
 from gtec_etl_spark.plans.incremental_queries import CDC_ORACLE_SQL

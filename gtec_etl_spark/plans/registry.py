@@ -3,7 +3,8 @@ named query (Spark DataFrame implementation) plus, where SQL-expressible, a
 DuckDB-runnable ANSI-SQL oracle over the same parquet tables.
 
 `queries()` returns the Spark callables and `oracles()` the oracle strings,
-both in registration order; `__spark_entry__.py` exposes the two. Column
+both sorted by query name, so every process lists them in the same order
+whatever it imported first; `__spark_entry__.py` exposes the two. Column
 names are aliased identically on both sides: the parity test
 (tests/test_oracle_parity.py) compares values after sorting columns by
 name.
@@ -46,7 +47,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 def specs() -> dict[str, QuerySpec]:
     _ensure_loaded()
-    return dict(_REGISTRY)
+    return {name: _REGISTRY[name] for name in sorted(_REGISTRY)}
 
 
 def queries() -> dict[str, QueryFn]:
@@ -70,7 +71,6 @@ def _ensure_loaded() -> None:
     if _LOADED:
         return
     from gtec_etl_spark.plans import (  # noqa: F401
-        dedup_queries,
         etl_queries,
         extended_queries,
         graph_queries,

@@ -189,7 +189,7 @@ def q05_customers_without_orders(spark, sf_dir):
     id-reconciliation 'missing' direction. Date-bounded rather than
     no-orders-ever because this corpus gives every customer at least one
     historical order at the small SFs, which left the gate checking an
-    always-empty result (the vacuous-gate class, VERDICT r8 #3); the
+    always-empty result (a vacuous gate that checks nothing); the
     cutoff yields 1/8/84 lapsed customers at sf0.001/0.01/0.1, so the
     anti join is exercised on real rows at every gate scale."""
     t = catalog.load_tables(spark, sf_dir)

@@ -353,7 +353,7 @@ def k7_orc_roundtrip(spark, sf_dir):
     tags=("sinks", "jsonld", "contract"),
 )
 def k8_release_validation(spark, sf_dir):
-    """K8 release-gate schema validation (VERDICT r11 #4): the reference
+    """K8 release-gate schema validation: the reference
     validates every emitted JSON-LD instance against the datatagsuite
     DATS schemas before bagging (README.md:150-163,
     make-crosscut-instance-bdbag.sh:81-91) and its DatsObj constructor

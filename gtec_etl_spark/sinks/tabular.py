@@ -117,8 +117,9 @@ def compact_parquet_dir(
     sort_key: str | None = None,
 ) -> int:
     """Small-file compaction — the maintenance pass every incremental
-    sink eventually needs (streaming.run_dedup_ingest appends one
-    partition directory per trigger; object stores and NameNodes both
+    sink eventually needs (a foreachBatch sink that writes one
+    partition directory per trigger leaves many small files; object
+    stores and NameNodes both
     degrade under file-count, and tiny row groups defeat footer
     statistics). Reads the directory, picks the output file count from
     TOTAL BYTES / target_bytes (size-based, not partition-count-based,

@@ -145,7 +145,7 @@ def session_counts(
 def deduped_events(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Exactly-once-per-event_id within the watermark horizon
     (dropDuplicatesWithinWatermark) — streaming exact dedup with bounded
-    state, the streaming counterpart of the dedup_exact batch pass."""
+    state; on a finite replay it equals a batch distinct on event_id."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
@@ -184,131 +184,6 @@ def run_to_memory(
             f"memory table would be partial"
         )
     return stream_df.sparkSession.table(name)
-
-
-def read_documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "documents.parquet",
-) -> DataFrame:
-    """File-source stream over the documents parquet — the crawl-landing
-    feed of a training-data ingest pipeline. Schema comes from one batch
-    footer probe (a streaming source requires an explicit schema); in
-    production this is the kafka topic / landing bucket, exactly like
-    read_events_stream."""
-    schema = spark.read.parquet(os.path.join(sf_dir, path_glob)).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.option("pathGlobFilter", path_glob).parquet(sf_dir)
-
-
-def dedup_ingest_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    admitted_dir: str,
-    n_shingle: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> None:
-    """One micro-batch of the self-maintaining dedup ingest (the
-    foreachBatch body of run_dedup_ingest, module-level so restart/replay
-    semantics are directly testable). Idempotent AND replay-safe: the
-    admission filter reads the banded index through partition discovery
-    and keeps only deltas with `batch_id < current batch_id` — a replayed
-    batch therefore sees exactly the index its first attempt saw, never
-    its own first-attempt delta (which would turn every one of its
-    documents into a self-suspect and overwrite both outputs with empty
-    sets). Same strict-inequality discipline as
-    run_cdc_dimension_maintenance's `version < batch_id` guard."""
-    from pyspark.sql.utils import AnalysisException
-
-    from gtec_etl_spark.operators.dedup import minhash_bands_rowwise
-
-    s = batch_df.sparkSession
-    bands_df = minhash_bands_rowwise(batch_df, n_shingle, num_hashes, bands)
-    try:
-        index = (
-            s.read.parquet(index_dir)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .select("band", "sig")
-        )
-    except AnalysisException:
-        index = s.createDataFrame([], bands_df.select("band", "sig").schema)
-    suspects = (
-        bands_df.join(index, ["band", "sig"], "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
-    admitted = batch_df.join(suspects, "doc_id", "left_anti")
-    admitted.write.mode("overwrite").parquet(
-        f"{admitted_dir}/batch_id={batch_id}"
-    )
-    bands_df.join(suspects, "doc_id", "left_anti").select(
-        "doc_id", "band", "sig"
-    ).write.mode("overwrite").parquet(f"{index_dir}/batch_id={batch_id}")
-
-
-def run_dedup_ingest(
-    docs_stream: DataFrame,
-    index_dir: str,
-    admitted_dir: str,
-    checkpoint_dir: str,
-    n_shingle: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    await_secs: int = 120,
-) -> None:
-    """SELF-MAINTAINING streaming dedup ingest — the missing half of
-    stream_dedup_admission (which filters against a FROZEN index): each
-    micro-batch is admission-filtered against the persisted banded index
-    AND the admitted documents' bands are appended back to that index, so
-    a document duplicated across two later batches is caught by the
-    second even though the bootstrap index never saw either. This is the
-    complete production crawl-ingest loop: admit, record, repeat.
-
-    foreachBatch is the right tool because the index is both a join input
-    and a sink within one trigger — something no single-pass streaming
-    plan can express. Exactly-once across restarts comes from idempotent
-    writes, not sink transactions: every batch writes its admitted rows
-    and its index delta to `batch_id=N` subdirectories with
-    mode("overwrite"), so a replayed batch (checkpoint says it was
-    in-flight) overwrites its own partition instead of duplicating it —
-    the standard idempotent-foreachBatch pattern. REPLAY SAFETY requires
-    one more guard (mirroring run_cdc_dimension_maintenance's strict
-    `version < batch_id`): the index read filters to
-    `batch_id < current batch_id`, because a replayed batch N would
-    otherwise see its own first-attempt delta, match its own documents
-    as suspects, and overwrite admitted/batch_id=N and index/batch_id=N
-    with EMPTY sets — silent permanent loss on a crash between the
-    writes and the checkpoint commit.
-
-    Scale: per-trigger cost is O(batch bands + matched buckets) for the
-    semi-join (the index side is a parquet scan pruned to matching band
-    buckets when the index is bucketed on (band, sig)); the index append
-    is one partition directory per trigger — compact periodically with
-    the K5 range-bucketed writer. Intra-batch duplicates are NOT removed
-    here (the batch dedup operators compose in front when needed)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df, batch_id, index_dir, admitted_dir,
-            n_shingle=n_shingle, num_hashes=num_hashes, bands=bands,
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(await_secs)
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def read_changelog_stream(

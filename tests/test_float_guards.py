@@ -1,5 +1,5 @@
-"""Ulp-boundary guards for the repo's single-transcendental parity paths
-(ADVICE r7): `floor(ln(x) * 1e6 + 0.5)` relies on DuckDB's and the JVM's
+"""Ulp-boundary guards for the repo's single-transcendental parity paths:
+`floor(ln(x) * 1e6 + 0.5)` relies on DuckDB's and the JVM's
 libm agreeing on ln to well under the quantization step. IEEE does not
 require correctly rounded ln, so a 1-ulp divergence is possible — it
 only MATTERS if the pre-floor value sits essentially ON a rounding

@@ -168,32 +168,6 @@ def test_interval_overlap_join_excludes_empty_intervals(spark):
     assert got == [(2, 11)]  # only the real interval pair survives
 
 
-def test_frequency_cap_preserves_low_freq_pairs(spark):
-    from gtec_etl_spark.operators import dedup as D
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),
-            (2, "a b c d f"),    # high overlap with 1
-            (3, "x y z w v"),
-        ],
-        "doc_id long, text string",
-    )
-    sh = D.word_shingles(docs, 3)
-    uncapped = sorted(
-        (r["doc_a"], r["doc_b"]) for r in D.jaccard_pairs(sh, min_jaccard=0.3).collect()
-    )
-    # A generous cap changes nothing; every shingle here has df <= 2.
-    capped = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in D.jaccard_pairs(sh, min_jaccard=0.3, max_doc_freq=10).collect()
-    )
-    assert uncapped == capped == [(1, 2)]
-    # A cap of 1 removes all shared shingles -> no candidates at all.
-    none = D.jaccard_pairs(sh, min_jaccard=0.0, max_doc_freq=1).collect()
-    assert none == []
-
-
 def test_found_counters(spark):
     df = spark.createDataFrame([(1,), (2,), (3,), (4,)], "x long")
     out = A.found_counters(df, F.col("x") <= 3).collect()[0]
@@ -201,7 +175,7 @@ def test_found_counters(spark):
 
 
 def test_connected_components_chain_and_isolate(spark):
-    from gtec_etl_spark.operators.dedup import connected_components
+    from gtec_etl_spark.operators.graph import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     # Chain 1-2-3-4 (diameter 3, needs >1 propagation round), pair 5-6,
@@ -260,88 +234,6 @@ def test_asof_nearest_join_keeps_duplicate_left_rows(spark):
         value_cols=["rid"], tolerance_us=60_000_000,
     ).collect()
     assert [r["rid"] for r in rows] == [100, 100]
-
-
-def test_lsh_incremental_pairs_partition_of_full_pairs(spark):
-    """Batch-vs-index candidates + batch-internal + index-internal
-    candidates must exactly partition the full corpus pair set — nothing
-    lost, nothing double-counted, no batch-internal leakage."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.operators import dedup as D
-
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon zeta"),      # dup of 1
-        (7, "alpha beta gamma delta epsilon eta"),       # near-dup, "batch"
-        (17, "alpha beta gamma delta epsilon eta"),      # dup of 7, "batch"
-        (4, "totally different words here entirely now"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = D.minhash_signatures(D.word_shingles(docs, 3), 16)
-    batch = sigs.filter(F.col("doc_id") % 10 == 7)
-    index = sigs.filter(F.col("doc_id") % 10 != 7)
-
-    full = {
-        (r.doc_a, r.doc_b) for r in D.lsh_candidate_pairs(sigs, 16, 4).collect()
-    }
-    cross = {
-        tuple(sorted((r.new_doc, r.index_doc)))
-        for r in D.lsh_pairs_against_index(batch, index, 16, 4).collect()
-    }
-    batch_only = {
-        (r.doc_a, r.doc_b)
-        for r in D.lsh_candidate_pairs(batch, 16, 4).collect()
-    }
-    index_only = {
-        (r.doc_a, r.doc_b)
-        for r in D.lsh_candidate_pairs(index, 16, 4).collect()
-    }
-    assert cross | batch_only | index_only == full
-    assert cross.isdisjoint(batch_only) and cross.isdisjoint(index_only)
-    assert (7, 17) in batch_only and (7, 17) not in cross
-
-
-def test_duplicated_spans_detects_and_merges(spark):
-    """duplicated_spans (Lee-et-al k-gram substring dedup): a phrase shared
-    verbatim across docs is reported as ONE merged maximal span per doc;
-    unshared text produces nothing; spans are disjoint and >= k tokens."""
-    from gtec_etl_spark.operators.dedup import duplicated_spans
-
-    shared = "the quick brown fox jumps over the lazy dog tonight"  # 10 tokens
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha beta {shared} gamma delta"),
-            (2, f"{shared} unrelated tail words here now"),
-            (3, "completely different text with no overlap at all whatsoever"),
-        ],
-        "doc_id long, text string",
-    )
-    spans = {
-        r["doc_id"]: (r["span_start"], r["span_end"])
-        for r in duplicated_spans(docs, 4).collect()
-    }
-    # doc 1: shared phrase starts after 2 tokens -> [2, 12); doc 2: [0, 10)
-    assert spans[1] == (2, 12)
-    assert spans[2] == (0, 10)
-    assert 3 not in spans
-
-
-def test_duplicated_spans_disjoint_and_min_length(spark, sf_dir):
-    from gtec_etl_spark.operators.dedup import duplicated_spans
-    from gtec_etl_spark import catalog
-
-    docs = catalog.table(spark, sf_dir, "documents")
-    rows = duplicated_spans(docs, 8).collect()
-    assert rows, "test corpus has cross-doc 8-gram dups"
-    by_doc: dict = {}
-    for r in rows:
-        assert r["span_end"] - r["span_start"] >= 8
-        by_doc.setdefault(r["doc_id"], []).append((r["span_start"], r["span_end"]))
-    for doc, ss in by_doc.items():
-        ss.sort()
-        for (s1, e1), (s2, e2) in zip(ss, ss[1:]):
-            assert s2 > e1, f"doc {doc}: spans overlap/adjacent -> not maximal"
 
 
 def test_pagerank_path_graph_symmetry_and_mass(spark):

@@ -32,10 +32,10 @@ def spec_ids():
     return sorted(registry.specs().keys())
 
 
-# Full-registry plan guard (VERDICT r6 #3): no registered query may plan a
-# CartesianProduct — the per-name guards in test_plans.py only covered an
-# enumerated list, which is how a since-deleted image near-dup query
-# shipped a 1024-task cartesian in round 6. Any deliberate tiny-fixture
+# Full-registry plan guard: no registered query may plan a
+# CartesianProduct — per-name guards in test_plans.py cover only an
+# enumerated list, and a query outside it once shipped a 1024-task
+# cartesian unnoticed. Any deliberate tiny-fixture
 # exception must be allowlisted HERE with a justification; currently
 # there are none.
 # Limitation: queries returning an eagerly-materialized result (graph
@@ -43,12 +43,12 @@ def spec_ids():
 # plan — their internal shapes are pinned by dedicated tests instead.
 CARTESIAN_ALLOWLIST: frozenset[str] = frozenset()
 
-# Full-registry vacuous-gate allowlist (VERDICT r8 #3): queries whose
-# EMPTY result at the gate SF is itself the correct, meaningful answer.
-# Empty today — both r8 audit hits were reseeded instead.
+# Full-registry vacuous-gate allowlist: queries whose EMPTY result at the
+# gate SF is itself the correct, meaningful answer. Empty today — every
+# query that came back empty was reseeded to a non-vacuous shape instead.
 NONEMPTY_EXEMPT: frozenset[str] = frozenset()
 
-# Full-registry forced-broadcast guard (VERDICT r7 #1/#7): no registered
+# Full-registry forced-broadcast guard: no registered
 # query may `F.broadcast` a subtree that scans an sf-scaled table without a
 # limit / global aggregate bounding its cardinality — the class that let
 # graph_triangle_count ship a forced |V|-row degree-table broadcast in
@@ -93,13 +93,13 @@ def test_query_matches_oracle(spark, name):
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = list(sdf.columns)
 
-    # Full-registry vacuous-gate guard (VERDICT r8 #3, generalizing the q46
-    # ADVICE fix): a query that returns 0 rows at the gate SF is a gate
-    # that checks nothing — rows/schema/hash all "match" trivially. Every
+    # Full-registry vacuous-gate guard: a query that returns 0 rows at the
+    # gate SF is a gate that checks nothing — rows/schema/hash all "match"
+    # trivially. Every
     # query must produce at least one row here; a legitimately-empty
     # result needs an allowlist entry with a justification (currently
-    # none: the r8 audit's two hits, dedup_exact and
-    # q05_customers_without_orders, were reseeded to non-vacuous shapes).
+    # none: q05_customers_without_orders, once empty, was reseeded to a
+    # non-vacuous shape).
     if name not in NONEMPTY_EXEMPT:
         assert len(spark_rows) >= 1, (
             f"{name}: 0 rows at the gate SF — the correctness gate is "
@@ -148,11 +148,15 @@ def test_exemptions_name_registered_queries():
 
 
 def test_entry_lists_registry_in_registration_order():
-    """__spark_entry__ lists every registered query in registration order,
-    and oracle_sql() holds exactly the queries that have an oracle."""
+    """__spark_entry__ lists every registered query in the registry's
+    order, which is sorted by name, so the order does not depend on what
+    the process imported first; oracle_sql() holds exactly the queries
+    that have an oracle. (The registry once listed queries in
+    registration order; the test keeps that name so its id stays stable.)"""
     import __spark_entry__ as entry
 
     specs = registry.specs()
+    assert list(specs) == sorted(specs)
     assert list(entry.queries()) == list(specs)
     assert list(entry.oracle_sql().items()) == [
         (name, spec.oracle) for name, spec in specs.items() if spec.oracle is not None

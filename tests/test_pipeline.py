@@ -543,7 +543,7 @@ def test_multi_study_reconciliation_catches_absent_group(spark, multi_study_fram
 
 
 def test_connected_components_raises_when_unconverged(spark):
-    from gtec_etl_spark.operators.dedup import connected_components
+    from gtec_etl_spark.operators.graph import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
     chain = spark.createDataFrame(

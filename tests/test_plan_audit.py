@@ -1,4 +1,4 @@
-"""Unit tests for the forced-broadcast plan audit (VERDICT r7 #7): the
+"""Unit tests for the forced-broadcast plan audit: the
 guard must flag round 7's `graph_triangle_count` shape (forced broadcast of
 a KEYED aggregate over an sf-scaled table — |V|-row degree dim) and must
 pass the legitimate bounded shapes (global aggregate, limit, fixed-size

@@ -164,22 +164,6 @@ def test_no_oracle_emits_hugeint(spark):
     assert not offenders, f"oracles with int128 output columns: {offenders}"
 
 
-def _plan_tree(plan: str) -> str:
-    """The tree section of explain('formatted') — node names appear once
-    per node there, while the details section repeats every node."""
-    return plan.split("\n\n")[0]
-
-
-def test_incremental_apply_single_lsh_pass(spark):
-    """dedup_incremental_apply's counters must come from ONE flagged join
-    over ONE LSH banding pass — a second band-join subtree means a counter
-    branch regressed to re-planning the match-set lineage (the round-6
-    fix: 2.0s -> 1.2s at sf0.1)."""
-    tree = _plan_tree(_formatted_plan(spark, "dedup_incremental_apply"))
-    n_joins = tree.count("SortMergeJoin") + tree.count("ShuffledHashJoin")
-    assert n_joins <= 2, f"expected band join + flag join only, got {n_joins}"
-
-
 def test_retention_cohorts_two_data_shuffles(spark):
     """ev_retention_cohorts: the collect_set formulation — one shuffle on
     user_id, one on the (cohort, offset) matrix, plus the window over the
@@ -188,16 +172,6 @@ def test_retention_cohorts_two_data_shuffles(spark):
     plan = _formatted_plan(spark, "ev_retention_cohorts")
     assert plan.count("Arguments: hashpartitioning") <= 3
     assert "Join" not in plan
-
-
-def test_paragraph_chunks_no_window_over_chunk(spark):
-    """dedup_paragraph_chunks: keep-first is a min-aggregate + join back,
-    NOT a window partitioned by chunk (a boilerplate chunk shared by a
-    million docs would single-task a window sort); chunking itself is
-    array slicing, so the only Generate is the chunk posexplode."""
-    plan = _formatted_plan(spark, "dedup_paragraph_chunks")
-    assert "Window" not in plan
-    assert plan.count("Arguments: hashpartitioning") <= 3
 
 
 def test_scd2_merge_broadcasts_batch_over_history(spark):
@@ -372,58 +346,6 @@ def test_psi_drift_single_scan_bucket_rollup(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_winnowing_hash_is_codegen_column_not_lambda(spark):
-    """dedup_winnowing_pairs: the md5/conv gram hash must be a plain
-    projected column (whole-stage codegen), NEVER inside a higher-order
-    transform() lambda — Spark evaluates lambda bodies on the
-    interpreted expression path, which ran this query 21x slower
-    (202 s -> 9.4 s at sf0.001, PERF.md round 12). The pin: the plan
-    contains md5 but no lambdafunction wrapping it."""
-    df = registry.specs()["dedup_winnowing_pairs"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "md5" in plan
-    assert "lambdafunction" not in plan.lower()
-    assert "CartesianProduct" not in plan
-
-
-def test_winnowing_posting_list_no_self_join(spark):
-    """dedup_winnowing_pairs (r15 shape): per-doc fingerprint dedup is an
-    exchange-free collect_set under the window's doc_id clustering (the
-    old (doc_id, f) .distinct() re-shuffled every selected window row),
-    and candidate pairs stream from the df-capped posting-list explode —
-    the fingerprint self-join and its join-back are gone. Pins: NO join
-    operator anywhere, and at most 3 hash exchanges total (doc_id for
-    the window, f for the postings, the pair aggregate)."""
-    df = registry.specs()["dedup_winnowing_pairs"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    joins = re.findall(
-        r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|CartesianProduct", plan
-    )
-    assert not joins, f"expected no joins, found {joins}"
-    assert "posexplode" in plan
-    n = plan.count("Exchange hashpartitioning")
-    assert n <= 3, f"expected <=3 hash exchanges, got {n}"
-
-
-def test_ngram_jaccard_posting_no_shingle_self_join(spark):
-    """dedup_ngram_jaccard (r15 shape): the exact uncapped variant now
-    generates candidates from posting lists (one groupBy(shingle) +
-    upper-triangle explode), so the only joins left are the two size
-    lookups — the a⋈b shingle equi-join (two extra shingle-table
-    shuffles) is gone."""
-    df = registry.specs()["dedup_ngram_jaccard"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    joins = re.findall(
-        r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|CartesianProduct", plan
-    )
-    assert len(joins) == 2, f"expected exactly the 2 size-lookup joins, got {joins}"
-    assert "posexplode" in plan
-
-
 def test_degree_distribution_dedups_unmirrored_pairs(spark):
     """graph_degree_distribution (r15 shape): the distinct runs on the
     UN-mirrored (c, s) pair — the mirror explode sits ABOVE the dedup
@@ -439,7 +361,7 @@ def test_degree_distribution_dedups_unmirrored_pairs(spark):
 
 
 def test_graph_edge_build_single_shuffle_presorted(spark):
-    """Round-14 graph-family edge build (VERDICT r13 #2): the iterative
+    """Graph-family edge build: the iterative
     queries persist edges as repartition(key) -> dropDuplicates ->
     sortWithinPartitions(key). Two properties this pins:
 

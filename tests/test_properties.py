@@ -63,22 +63,6 @@ def test_salted_join_equals_plain_join(spark, fact_rows, dim_keys):
     assert salted == plain
 
 
-@SLOW
-@given(st.lists(st.text(alphabet="abcdef ", min_size=0, max_size=30), min_size=1, max_size=10))
-def test_exact_dedup_fingerprint_whitespace_invariant(spark, texts):
-    """The exact-dedup fingerprint is invariant under leading/trailing and
-    repeated internal whitespace (the normalization contract)."""
-    from gtec_etl_spark.operators.dedup import normalized_text
-
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fp = {r["doc_id"]: r["fp"] for r in df.select("doc_id", F.md5(normalized_text(F.col("text"))).alias("fp")).collect()}
-    messy = [(i, "  " + t.replace(" ", "   ") + " ") for i, t in rows]
-    df2 = spark.createDataFrame(messy, "doc_id long, text string")
-    fp2 = {r["doc_id"]: r["fp"] for r in df2.select("doc_id", F.md5(normalized_text(F.col("text"))).alias("fp")).collect()}
-    assert fp == fp2
-
-
 _iv = st.tuples(st.integers(-20, 20), st.integers(-20, 20)).map(
     lambda t: (min(t), max(t))
 )
@@ -149,35 +133,6 @@ def test_asof_join_equals_bruteforce(spark, fact_rows, event_rows):
     for pk, (k, t) in enumerate(fact_rows):
         cands = [(et, p) for (ek, et, p) in ev_rows if ek == k and et <= t]
         want[pk] = max(cands)[::-1] if cands else (None, None)
-    assert got == want
-
-
-@SLOW
-@given(
-    st.lists(
-        st.floats(
-            min_value=-100.0,
-            max_value=100.0,
-            allow_nan=False,
-            allow_infinity=False,
-            width=32,
-        ),
-        min_size=1,
-        max_size=16,
-    )
-)
-def test_quantize_micros_matches_python_ieee(spark, xs):
-    """quantize_micros (floor(x*1e6 + 0.5) elementwise) is IEEE-exact: the
-    JVM expression must produce the int64s Python's float arithmetic
-    produces for any float32 input — the property dedup_embedding_cosine's
-    oracle parity stands on."""
-    import math
-
-    from gtec_etl_spark.operators.dedup import quantize_micros
-
-    df = spark.createDataFrame([(xs,)], "v array<float>")
-    got = df.select(quantize_micros(F.col("v")).alias("q")).first()["q"]
-    want = [math.floor(float(x) * 1000000.0 + 0.5) for x in xs]
     assert got == want
 
 

@@ -137,7 +137,7 @@ def test_fanout_guard_fires_in_fake_slice_regime(spark):
 
 
 def test_fanout_guard_bytes_floor_skips_tiny_scans(spark):
-    """r15: a narrow frame whose estimated size is below the bytes floor
+    """A narrow frame whose estimated size is below the bytes floor
     must pass through UNTOUCHED (the exchange costs more than the fan-out
     it would unblock at that size), while the same frame clears the guard
     once the floor is below its size estimate. spark.range(1000) of one

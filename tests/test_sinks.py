@@ -111,7 +111,7 @@ def test_tsv_dump_roundtrip(spark, tmp_path):
 
 
 def test_tsv_dump_finalize_is_scheme_dispatched(spark, tmp_path):
-    """VERDICT r7 #6: the stable-name commit step must go through the
+    """The stable-name commit step must go through the
     Hadoop FileSystem API, not glob/os.replace — pinned by writing the
     dump to an explicit file:// URI, which os.path/glob cannot list but
     scheme-dispatched Path.getFileSystem resolves (the same way an

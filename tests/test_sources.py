@@ -427,7 +427,7 @@ def test_dbgap_var_report_cases_controls_subsections(spark, tmp_path):
 
 
 def test_dbgap_var_report_rejects_data_dict_with_clear_error(spark, tmp_path):
-    """ADVICE r7: a document with NONE of the total/cases/controls
+    """A document with NONE of the total/cases/controls
     subsections (e.g. a data_dict passed by mistake) must raise a
     descriptive ValueError naming the missing subsections, not an
     IndexError on parts[0]."""

@@ -342,139 +342,6 @@ def test_session_counts_restart_reloads_state(spark, tmp_path):
     assert [(r[0], r[3]) for r in got] == [(1, 3), (2, 1), (3, 1)], got
 
 
-def test_rowwise_bands_equal_groupby_bands(spark, sf_dir):
-    """minhash_bands_rowwise (the streaming-legal, shuffle-free per-row
-    formulation) must produce the exact band set of the batch
-    word_shingles -> minhash_signatures -> lsh_banded path — the property
-    stream_dedup_admission's oracle parity stands on."""
-    from gtec_etl_spark import catalog
-    from gtec_etl_spark.operators import dedup as D
-
-    docs = catalog.table(spark, sf_dir, "documents")
-    a = D.lsh_banded(D.minhash_signatures(D.word_shingles(docs, 3), 16), 16, 4)
-    b = D.minhash_bands_rowwise(docs, 3, 16, 4)
-    sa = {(r.doc_id, r.band, r.sig) for r in a.collect()}
-    sb = {(r.doc_id, r.band, r.sig) for r in b.collect()}
-    assert sa == sb and sa
-
-
-def test_stream_dedup_admission_matches_batch_incremental(spark, sf_dir):
-    """The streaming admission filter's rejected set equals the batch
-    incremental path's distinct matched new_docs on the same finite
-    input."""
-    from pyspark.sql import functions as F
-
-    from gtec_etl_spark.plans import registry
-
-    stream_rejected = {
-        r.doc_id
-        for r in registry.specs()["stream_dedup_admission"].fn(spark, sf_dir).collect()
-    }
-    batch_matched = {
-        r.new_doc
-        for r in registry.specs()["dedup_incremental_batch"].fn(spark, sf_dir).collect()
-    }
-    assert stream_rejected == batch_matched
-
-
-def test_dedup_ingest_maintains_its_own_index(spark, tmp_path):
-    """run_dedup_ingest: the admitted docs of batch N join the index that
-    batch N+1 filters against — a duplicate ACROSS two streamed batches is
-    rejected by the second even though no bootstrap index existed; and a
-    restart from the same checkpoint neither reprocesses nor duplicates
-    (idempotent batch_id-partitioned writes)."""
-    from gtec_etl_spark.streaming.pipelines import run_dedup_ingest
-
-    land_dir = tmp_path / "landing"
-    land_dir.mkdir()
-    schema = "doc_id long, text string"
-
-    def land(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(land_dir / name)
-        )
-
-    t_unique = "alpha beta gamma delta epsilon zeta"
-    t_dup = "one two three four five six seven"
-    t_late = "red orange yellow green blue indigo"
-    land("b1", [(1, t_unique), (2, t_dup)])
-    land("b2", [(3, t_dup), (4, t_late)])  # 3 duplicates 2 across batches
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", True)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(land_dir))
-        )
-        run_dedup_ingest(
-            stream,
-            str(tmp_path / "index"),
-            str(tmp_path / "admitted"),
-            str(tmp_path / "ck"),
-        )
-
-    run()
-    admitted = {
-        r["doc_id"] for r in spark.read.parquet(str(tmp_path / "admitted")).collect()
-    }
-    # 3 must be rejected: its duplicate (2) was admitted by an EARLIER
-    # micro-batch of the same run, so only the maintained index can know.
-    assert admitted == {1, 2, 4}
-
-    # Restart with one more batch: a dup of doc 4 (indexed in the prior
-    # RUN) and a fresh doc. Prior batches must not reprocess.
-    land("b3", [(5, t_late), (6, "lorem ipsum dolor sit amet consectetur")])
-    run()
-    rows = spark.read.parquet(str(tmp_path / "admitted")).collect()
-    ids = sorted(r["doc_id"] for r in rows)
-    assert ids == [1, 2, 4, 6]
-
-
-def test_dedup_ingest_replay_of_uncommitted_batch_is_lossless(spark, tmp_path):
-    """Crash-replay safety: if batch N's parquet writes landed but the
-    checkpoint commit did NOT (crash in between), the restarted stream
-    re-runs batch N with the SAME batch_id. The replayed batch must see
-    the index as of batch N-1 — not its own first-attempt delta — or every
-    one of its documents becomes a self-suspect and the replay overwrites
-    admitted/batch_id=N and index/batch_id=N with EMPTY sets (silent
-    permanent loss). Simulated by invoking the foreachBatch body twice
-    with the same batch_id, exactly what the checkpoint replays."""
-    from gtec_etl_spark.streaming.pipelines import dedup_ingest_batch
-
-    schema = "doc_id long, text string"
-    index_dir = str(tmp_path / "index")
-    admitted_dir = str(tmp_path / "admitted")
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")], schema
-    )
-    b1 = spark.createDataFrame(
-        [
-            (2, "one two three four five six seven"),
-            (3, "red orange yellow green blue indigo"),
-        ],
-        schema,
-    )
-    dedup_ingest_batch(b0, 0, index_dir, admitted_dir)
-    dedup_ingest_batch(b1, 1, index_dir, admitted_dir)  # first attempt
-    dedup_ingest_batch(b1, 1, index_dir, admitted_dir)  # crash replay
-
-    admitted = sorted(
-        r["doc_id"] for r in spark.read.parquet(admitted_dir).collect()
-    )
-    assert admitted == [1, 2, 3], "replayed batch lost its own documents"
-    # The replayed index delta must also survive, so a LATER batch still
-    # rejects duplicates of batch 1's documents.
-    b2 = spark.createDataFrame(
-        [(4, "one two three four five six seven")], schema
-    )
-    dedup_ingest_batch(b2, 2, index_dir, admitted_dir)
-    admitted = sorted(
-        r["doc_id"] for r in spark.read.parquet(admitted_dir).collect()
-    )
-    assert admitted == [1, 2, 3], "dup of a replayed batch's doc admitted"
-
-
 def test_cdc_dimension_maintenance_versions_and_final_state(spark, tmp_path):
     """Streaming CDC maintenance: two changelog files -> two micro-batches
     (maxFilesPerTrigger=1); the intermediate snapshot reflects batch A
@@ -631,8 +498,8 @@ def test_lateness_report_watermark_matches_engine(spark, tmp_path):
 
 
 def test_dedup_watermark_state_evicts_expired_ids(spark, tmp_path):
-    """The bounded-state claim for streaming exact dedup, made measurable
-    (VERDICT r11 #5): dropDuplicatesWithinWatermark keeps one state row
+    """The bounded-state claim for streaming exact dedup, made
+    measurable: dropDuplicatesWithinWatermark keeps one state row
     per event_id only WITHIN the watermark horizon. Replaying three
     micro-batches a day apart in event time with a 1-hour watermark, the
     final state must hold ~one batch's ids, NOT the cumulative id count —
@@ -713,7 +580,7 @@ def test_dedup_watermark_state_evicts_expired_ids(spark, tmp_path):
 
 def test_left_join_state_evicts_and_emits_on_expiry(spark, tmp_path):
     """Bounded-state proof for the stream-stream LEFT OUTER interval join
-    (VERDICT r12 #2) — the topology where a watermark defect is most
+    — the topology where a watermark defect is most
     dangerous because unmatched rows are EMITTED on state expiry: if
     eviction never fires, the join silently withholds every null-extended
     row AND grows state monotonically. Replaying three day-apart

@@ -32,16 +32,15 @@ def render() -> str:
     """The QUERIES.md text for the current registry."""
     from gtec_etl_spark.plans import registry
 
-    specs = registry.specs()
+    specs = registry.specs()  # sorted by name
     rows = []
-    for name in sorted(specs):
-        spec = specs[name]
+    for name, spec in specs.items():
         oracle = "yes" if spec.oracle else "rows-only"
         tags = ",".join(spec.tags)
         rows.append(f"| {name} | {oracle} | {tags} | {first_sentence(spec.fn.__doc__)} |")
 
     n = len(specs)
-    anchors = sorted(n_ for n_, s in specs.items() if "spec-anchor" in s.tags)
+    anchors = [n_ for n_, s in specs.items() if "spec-anchor" in s.tags]
     out = [
         "# QUERIES — the registered query catalog",
         "",
